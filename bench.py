@@ -116,7 +116,7 @@ def build_pipeline(spark, n_pages: int, idx_dir: str, n_shards: int,
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     # big enough that fixed job latency doesn't dominate the docs/sec
     # headline (throughput roughly doubles from 20k to 60k pages)
     n_pages = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "60000"))

@@ -26,6 +26,7 @@ import time
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -34,6 +35,7 @@ from pyspark.sql.window import Window
 from .analyze import tokenize_texts
 from .catalog import ManifestCatalog, PartitionEntry
 from .codec import encode_blocks_flat  # used in _build_shard_fn
+from .session import unpersist_quietly
 
 # FLAT index layout: one row per posting block. Nested array<struct>
 # was ~10× slower through Arrow (per-block Python dicts); flat rows are
@@ -123,8 +125,10 @@ def assign_doc_ids(docs: DataFrame, url_col: str = "url") -> DataFrame:
     # subtree — on an opaque source (mapInPandas synthesis, a UDF-derived
     # column) that is TWO full passes for one assignment. The cache holds
     # just the projected url rows and is dropped as soon as the offsets
-    # job has materialized the range-partitioned copy below.
-    src = docs.persist()
+    # job has materialized the range-partitioned copy below. A caller's
+    # own cache is used as is and left alone.
+    owned = docs.storageLevel == StorageLevel.NONE
+    src = docs.persist() if owned else docs
     parted = (
         src.repartitionByRange(
             max(docs.sparkSession.sparkContext.defaultParallelism, 2), F.col(url_col)
@@ -139,9 +143,15 @@ def assign_doc_ids(docs: DataFrame, url_col: str = "url") -> DataFrame:
         # read it back rather than keep recomputing this plan.
         .persist()
     )
-    counts = parted.groupBy("_pid").count().collect()
-    # parted is materialized now; consumers read ITS cache, never src
-    src.unpersist()
+    try:
+        counts = parted.groupBy("_pid").count().collect()
+    except BaseException:
+        unpersist_quietly(parted)
+        raise
+    finally:
+        # src served only the offsets job; consumers read parted's cache
+        if owned:
+            unpersist_quietly(src)
     offsets = {}
     acc = 0
     for row in sorted(counts, key=lambda r: r["_pid"]):
@@ -233,12 +243,12 @@ def release_doc_id_caches(result: DataFrame | None = None) -> None:
                 "call release_doc_id_caches() with no arguments to "
                 "release every outstanding assignment"
             )
-        parted.unpersist()
+        unpersist_quietly(parted)
         # identity, not ==: DataFrame __eq__ builds a Column
         _ID_PERSISTS[:] = [p for p in _ID_PERSISTS if p is not parted]
         return
     while _ID_PERSISTS:
-        _ID_PERSISTS.pop().unpersist()
+        unpersist_quietly(_ID_PERSISTS.pop())
 
 
 def _require_string_routing(docs, routing_field: str) -> None:

@@ -194,42 +194,22 @@ def ngram_jaccard_pairs(
 # sets) that its own downstream joins reference multiple times. The pool is
 # BOUNDED, oldest-released-first (r7; previously each new invocation dropped
 # the previous one's caches): keeping recent entries alive means a REPEATED
-# pipeline over the same input gets plan-matched cache hits — warm
-# steady-state serving, the _WarmIndex LRU philosophy — while the cap keeps
-# long sessions from accumulating. A released invocation's DataFrame stays
-# correct afterwards; it just recomputes if re-collected.
-from collections import OrderedDict
+# pipeline over the same input gets plan-matched cache hits (session.PersistPool).
+from .session import PersistPool
 
-_TRACKED_PERSISTS: "OrderedDict[int, DataFrame]" = OrderedDict()
 _MAX_TRACKED = 4
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    # Keyed by the analyzed plan's semantic hash: a REPEATED pipeline
-    # re-registers the same relation instead of adding a duplicate whose
-    # LRU eviction would (plan-matched) uncache the live entry. Storage
-    # is serialized (PySpark MEMORY_AND_DISK): compact blocks while the
-    # cache idles between reuses — less heap/GC drag on the unrelated
-    # queries running in between.
-    h = df._jdf.queryExecution().analyzed().semanticHash()
-    if h in _TRACKED_PERSISTS:
-        _TRACKED_PERSISTS.move_to_end(h)
-        return df  # the existing cached relation serves this plan
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _TRACKED_PERSISTS[h] = df
-    while len(_TRACKED_PERSISTS) > _MAX_TRACKED:
-        _TRACKED_PERSISTS.popitem(last=False)[1].unpersist()
-    return df
+_TRACKED_PERSISTS = PersistPool(_MAX_TRACKED)
+_persist_tracked = _TRACKED_PERSISTS.persist
 
 
 def release_dedup_caches() -> None:
     """Unpersist the relations the dedup pipelines keep cached for their
     own multi-reference joins and warm re-serving; call explicitly to
-    free cluster memory after the last dedup action of a session."""
-    while _TRACKED_PERSISTS:
-        _TRACKED_PERSISTS.popitem(last=False)[1].unpersist()
+    free cluster memory after the last dedup action of a session — and
+    after an EXTERNAL process rewrites an input path (in-session writes
+    invalidate by path; an outside rewrite can still plan-match a cached
+    relation of the old contents)."""
+    _TRACKED_PERSISTS.release()
 
 
 # --- MinHash + LSH -----------------------------------------------------------

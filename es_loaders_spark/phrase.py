@@ -24,6 +24,9 @@ evaluation order.
 
 from __future__ import annotations
 
+import functools
+import operator
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -107,10 +110,11 @@ def tf_postings(
     the docs/tfs payloads — works on positions=False (BM25-only) indexes
     too. This is the index-served building block for scoring arbitrary
     term leaves (query_string, terms_set, ...) without a corpus scan.
-    Multiple selectors (``terms`` + ``prefixes`` + ``like_patterns``)
-    combine as ONE disjunctive filter, so a boolean query's term, prefix
-    and wildcard leaves share a single decode pass over the index
-    (r7; previously one scan per leaf kind).
+    ``terms`` and the plural ``prefixes`` / ``like_patterns`` combine as
+    ONE disjunctive filter, so a boolean query's term, prefix and
+    wildcard leaves share a single decode pass over the index. The
+    singular ``prefix`` / ``like_pattern`` keep their conjunctive
+    meaning: each further narrows the rows the other selectors pick.
     """
     from .build import read_generations
 
@@ -119,23 +123,20 @@ def tf_postings(
         # routed read: the shard predicate reaches the shard=K-partitioned
         # parquet as a PartitionFilter — only the routed dirs are opened
         idx = idx.filter(F.col("shard").isin([int(s) for s in shards]))
-    conds = []
+    # wildcard expansion is a LIKE over the term column (leading
+    # wildcards scan the whole dictionary, same caveat as ES)
+    anyof = [F.col("term").startswith(p) for p in prefixes or []]
+    anyof += [F.col("term").like(pat) for pat in like_patterns or []]
     if terms is not None:
-        conds.append(F.col("term").isin(terms))
-    for p in ([prefix] if prefix is not None else []) + list(prefixes or []):
-        conds.append(F.col("term").startswith(p))
-    for pat in (
-        [like_pattern] if like_pattern is not None else []
-    ) + list(like_patterns or []):
-        # wildcard expansion: a LIKE over the term column (leading
-        # wildcards scan the whole dictionary, same caveat as ES)
-        conds.append(F.col("term").like(pat))
-    if not conds:
+        anyof.insert(0, F.col("term").isin(terms))
+    allof = [F.col("term").startswith(prefix)] if prefix is not None else []
+    if like_pattern is not None:
+        allof.append(F.col("term").like(like_pattern))
+    if anyof:
+        allof.insert(0, functools.reduce(operator.or_, anyof))
+    if not allof:
         raise ValueError("tf_postings needs terms, a prefix or a pattern")
-    cond = conds[0]
-    for c in conds[1:]:
-        cond = cond | c
-    idx = idx.filter(cond)
+    idx = idx.filter(functools.reduce(operator.and_, allof))
     idx = idx.select("term", "min_doc", "docs_payload", "tfs_payload")
 
     def decode(batches):

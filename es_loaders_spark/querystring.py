@@ -75,48 +75,22 @@ from .analyze import SPLIT_RE_DUCKDB, tokenize_text
 MUST, SHOULD, MUST_NOT = "MUST", "SHOULD", "MUST_NOT"
 MAX_LEAVES = 32  # joined leaf columns; beyond this the query is degenerate
 
-# Bounded pool of tracked persists (the _WarmIndex LRU philosophy
-# applied to query-derived relations): the fast scan path caches ONE
-# small projected relation per query — (doc_id, dl, query-relevant
-# tokens) — that several leaf subplans reference, and phrase serving
-# caches the decoded positional postings. Entries outlive the query so
-# a REPEATED identical query gets a plan-matched cache hit (warm
-# steady-state serving — the same reuse the exact-scorer suite relies
-# on); the pool is capped, oldest-released-first, so long sessions
-# never accumulate unboundedly. A released query's DataFrame stays
-# correct (it just recomputes if re-collected).
-from collections import OrderedDict
+# Bounded pool of tracked persists (session.PersistPool): the fast scan
+# path caches ONE small projected relation per query — (doc_id, dl,
+# query-relevant tokens) — that several leaf subplans reference, and
+# phrase serving caches the decoded positional postings.
+from .session import PersistPool
 
-_TRACKED_PERSISTS: "OrderedDict[int, DataFrame]" = OrderedDict()
 _MAX_TRACKED = 16
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    # Keyed by the analyzed plan's semantic hash: a REPEATED query
-    # re-registers the same relation instead of adding a duplicate whose
-    # LRU eviction would (plan-matched) uncache the live entry. Storage
-    # is serialized (PySpark MEMORY_AND_DISK): compact blocks while the
-    # cache idles between reuses — less heap/GC drag on the unrelated
-    # queries running in between.
-    h = df._jdf.queryExecution().analyzed().semanticHash()
-    if h in _TRACKED_PERSISTS:
-        _TRACKED_PERSISTS.move_to_end(h)
-        return df  # the existing cached relation serves this plan
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _TRACKED_PERSISTS[h] = df
-    while len(_TRACKED_PERSISTS) > _MAX_TRACKED:
-        _TRACKED_PERSISTS.popitem(last=False)[1].unpersist()
-    return df
+_TRACKED_PERSISTS = PersistPool(_MAX_TRACKED)
+_persist_tracked = _TRACKED_PERSISTS.persist
 
 
 def release_query_string_caches() -> None:
     """Unpersist the relations execute_tree keeps cached for its own
     multi-reference leaf joins and warm re-serving; call explicitly to
     free memory after the last query of a session."""
-    while _TRACKED_PERSISTS:
-        _TRACKED_PERSISTS.popitem(last=False)[1].unpersist()
+    _TRACKED_PERSISTS.release()
 
 
 @dataclass

@@ -8,8 +8,23 @@ broadcast thresholds), and the same builder works under spark-submit.
 from __future__ import annotations
 
 import os
+from collections import OrderedDict
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark import SparkContext, StorageLevel
+from pyspark.sql import DataFrame, SparkSession
+
+
+def default_driver_memory() -> str:
+    """Driver heap for local mode: ``SPARK_DRIVER_MEM`` if set, else a
+    quarter of physical RAM capped at 8g (local mode = the driver IS the
+    executor, and the rest of the box stays with the Python workers and
+    the OS page cache that serves the index files)."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(min(ram_mb // 4, 8192), 512)}m"
 
 
 def _auto_task_cpus(n_cores: int) -> str:
@@ -68,9 +83,9 @@ def get_spark(
         # fans out across all cores instead of coalescing into 2 tasks
         .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
-        # local mode = driver IS the executor: size the heap like one.
-        # 8g caused GC collapse (3x slowdown) at ~1M-doc builds on this box
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        # local mode = driver IS the executor: size the heap like one
+        # (~1M-doc builds want more than 8g — set SPARK_DRIVER_MEM)
+        .config("spark.driver.memory", default_driver_memory())
         # memory-bandwidth-bound Arrow-UDF kernels (posting build: lexsort/
         # factorize over token arrays) saturate ONE box's memory bus at
         # ~16 concurrent workers — beyond that, throughput REGRESSES
@@ -100,3 +115,65 @@ def get_spark(
             )
         )
     return builder.getOrCreate()
+
+
+def is_live(df: DataFrame) -> bool:
+    """True while ``df``'s SparkContext is running. Checked on the Python
+    side only, so it is safe for a DataFrame of a stopped session (any
+    JVM call on one raises)."""
+    sc = df.sparkSession.sparkContext
+    return sc._jsc is not None and SparkContext._active_spark_context is sc
+
+
+def unpersist_quietly(df: DataFrame | None) -> None:
+    """Best-effort ``unpersist``: a DataFrame of a stopped session is
+    dropped without calling into the JVM (its cache died with the
+    session), and a failing release never fails the caller's query."""
+    if df is None or not is_live(df):
+        return
+    try:
+        df.unpersist()
+    except Py4JError:  # e.g. the context stopped after the check above
+        pass
+
+
+class PersistPool:
+    """Bounded pool of persisted query-derived relations, keyed by the
+    analyzed plan's semantic hash, oldest released first.
+
+    Entries outlive the call that made them, so a REPEATED identical
+    query gets a plan-matched cache hit (warm steady-state serving); the
+    cap keeps long sessions from accumulating. A repeated plan
+    re-registers the existing entry instead of adding a duplicate whose
+    eviction would (plan-matched) uncache the live one. Storage is
+    serialized (MEMORY_AND_DISK): compact blocks while the cache idles
+    between reuses — less heap/GC drag on the queries in between. A
+    released entry's DataFrame stays correct; it just recomputes if
+    re-collected. Entries of a stopped session are forgotten without a
+    JVM call, so a process that restarts its session keeps working.
+    """
+
+    def __init__(self, cap: int):
+        self.cap = cap
+        self._entries: "OrderedDict[int, DataFrame]" = OrderedDict()
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        self._entries = OrderedDict(
+            (h, d) for h, d in self._entries.items() if is_live(d)
+        )
+        h = df._jdf.queryExecution().analyzed().semanticHash()
+        if h in self._entries:
+            self._entries.move_to_end(h)
+            return df  # the existing cached relation serves this plan
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        self._entries[h] = df
+        while len(self._entries) > self.cap:
+            unpersist_quietly(self._entries.popitem(last=False)[1])
+        return df
+
+    def release(self) -> None:
+        while self._entries:
+            unpersist_quietly(self._entries.popitem(last=False)[1])

@@ -3,9 +3,30 @@
 Architecture mirrors what Elasticsearch does for every ``search`` the
 reference issues (public ES/Lucene execution model; SURVEY §2.6 T3,
 §3.3): each shard computes a local top-k with block-max pruning, a
-coordinator merge takes the global top-k. Here: per-shard
-``applyInPandas`` kernels → ``orderBy(desc(score)).limit(k)``
-(TakeOrderedAndProject) — no collect of posting data on the driver.
+coordinator merge takes the global top-k.
+
+Serving (``topk(mode="serve")``) has two execution sites for the SAME
+per-shard body, ``_score_shard`` (direct parquet read of the query
+terms' posting rows → block-max kernel over the shard's live doclens):
+
+- **driver**: when the warm index's live doclens fit Spark's own
+  "small enough to hold whole" rule — 16 B/row × n_docs within
+  ``spark.sql.autoBroadcastJoinThreshold`` — and the index files are
+  visible from the driver, ``_WarmIndex`` keeps per-shard sorted
+  ``(doc_id, dl)`` arrays and the term → df map on the driver and
+  ``topk`` loops over the shards in-process: no Spark job at all,
+  where a Python-UDF job alone costs several hundred ms.
+- **executors**: otherwise one ``mapInPandas`` stage over the cached,
+  shard-partitioned doclens runs ``_score_shard`` per shard task.
+
+Both paths round in Spark: ``F.round`` renders the double through the
+JVM's decimal conversion (JDK 17's ``Double.toString`` is not the
+shortest repr), so a numpy HALF_UP emulation is not provably identical;
+on the driver path the round runs over a LocalRelation, which the
+optimizer folds without a job. Setting the threshold to -1 forces the
+executor path (its result is then rank- and score-identical —
+pytest-asserted). ``mode="cogroup"``, ``topk_merged`` and ``topk_batch``
+always run as Spark jobs.
 
 Pruning kernel: **Block-Max MaxScore** — the vectorizable member of the
 block-max WAND family (same skip guarantees as classic BMW:
@@ -28,6 +49,9 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,24 +59,36 @@ from .analyze import tokenize_text
 from .bm25 import SCORE_DECIMALS
 from .codec import decode_block
 from .postings import B, K1
+from .session import is_live, unpersist_quietly
 
 
 def idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
-def term_blocks_from_flat(idx_pdf: pd.DataFrame) -> dict[str, list[dict]]:
-    """Group flat block rows (build.INDEX_SCHEMA) into term → ordered blocks.
+def term_blocks_from_flat(idx: pd.DataFrame | pa.Table) -> dict[str, list[dict]]:
+    """Group flat block rows (build.INDEX_SCHEMA; a pandas DataFrame or an
+    Arrow table) into term → ordered blocks, one dict per block row.
 
     Ordered by min_doc (not block_id): appended generations contribute
     additional block rows with disjoint higher docID ranges, and cursor
-    skip logic needs blocks in global doc order.
+    skip logic needs blocks in global doc order. One stable Arrow sort on
+    (term, min_doc), then each term's blocks are a slice of the row list.
     """
-    out: dict[str, list[dict]] = {}
-    srt = idx_pdf.sort_values(["term", "min_doc"], kind="stable")
-    for term, g in srt.groupby("term", sort=False):
-        out[term] = g.to_dict("records")
-    return out
+    if isinstance(idx, pd.DataFrame):
+        idx = pa.Table.from_pandas(idx, preserve_index=False)
+    if idx.num_rows == 0:
+        return {}
+    idx = idx.take(pc.sort_indices(
+        idx, sort_keys=[("term", "ascending"), ("min_doc", "ascending")]
+    ))
+    names = idx.column_names
+    rows = [
+        dict(zip(names, r)) for r in zip(*(c.to_pylist() for c in idx.columns))
+    ]
+    terms = idx.column("term").to_numpy(zero_copy_only=False)
+    cuts = [0, *(np.flatnonzero(terms[1:] != terms[:-1]) + 1), len(rows)]
+    return {terms[a]: rows[a:b] for a, b in zip(cuts[:-1], cuts[1:])}
 
 
 class _TermCursor:
@@ -84,24 +120,31 @@ class _TermCursor:
         self.b = b
         from .codec import tf_norm, varint_decode
 
+        sky_t = [bytes(blk.get("sky_tfs_payload") or b"") for blk in blocks]
+        sky_d = [bytes(blk["sky_dls_payload"]) if t else b"" for blk, t in zip(blocks, sky_t)]
+        # every block's skyline decodes in ONE varint pass (varints
+        # self-delimit); a block's value count is its terminator bytes
+        buf = np.frombuffer(b"".join(sky_t), dtype=np.uint8)
+        n_ends = np.concatenate([[0], np.cumsum((buf & 0x80) == 0)])
+        counts = np.diff(n_ends[np.cumsum([0, *map(len, sky_t)])])
+        has = counts > 0
         ubs = np.empty(len(blocks))
-        for i, blk in enumerate(blocks):
-            sky_t = varint_decode(bytes(blk.get("sky_tfs_payload") or b""))
-            if sky_t.size:
-                sky_d = varint_decode(bytes(blk["sky_dls_payload"]))
-                # tight bound: max tf_norm over the (tf, dl) Pareto skyline
-                ubs[i] = tf_norm(
-                    sky_t.astype(np.float64), sky_d.astype(np.float64), avgdl,
-                    k1=k1, b=b,
-                ).max()
-            else:  # legacy rows without skylines: loose (max_tf, min_dl)
-                ubs[i] = tf_norm(
-                    np.asarray([blk["max_tf"]], dtype=np.float64),
-                    np.asarray([blk["min_dl"]], dtype=np.float64),
-                    avgdl,
-                    k1=k1,
-                    b=b,
-                )[0]
+        if has.any():
+            # tight bound: max tf_norm over the (tf, dl) Pareto skyline
+            norms = tf_norm(
+                varint_decode(b"".join(sky_t)).astype(np.float64),
+                varint_decode(b"".join(sky_d)).astype(np.float64),
+                avgdl, k1=k1, b=b,
+            )
+            starts = np.cumsum(counts) - counts
+            ubs[has] = np.maximum.reduceat(norms, starts[has])
+        legacy = np.flatnonzero(~has)
+        if legacy.size:  # rows without skylines: loose (max_tf, min_dl)
+            ubs[legacy] = tf_norm(
+                np.asarray([blocks[i]["max_tf"] for i in legacy], dtype=np.float64),
+                np.asarray([blocks[i]["min_dl"] for i in legacy], dtype=np.float64),
+                avgdl, k1=k1, b=b,
+            )
         self.block_ubs = term_idf * ubs if blocks else np.empty(0)
         self.min_docs = np.asarray([b["min_doc"] for b in blocks], dtype=np.int64)
         self.max_docs = np.asarray([b["max_doc"] for b in blocks], dtype=np.int64)
@@ -389,12 +432,16 @@ class _WarmIndex:
     (catalog.py commit discipline); nothing merged-table-derived is
     cached here — if that ever changes, the merged manifest must join
     the token. Scale note: the cache holds DataFrames (cluster memory
-    via .persist), never driver-side rows — the same pattern works on a
-    1000-executor cluster, where it is exactly Lucene/ES keeping segment
-    readers open between searches. At most ``_MAX_WARM`` indexes stay
+    via .persist) — the same pattern works on a 1000-executor cluster,
+    where it is exactly Lucene/ES keeping segment readers open between
+    searches. Only a small index also keeps driver-side copies (see
+    ``_driver_serves``): per-shard sorted ``(doc_id, dl)`` arrays, the
+    term → df map and per-shard pyarrow datasets, so ``topk`` can score
+    on the driver with no Spark job. At most ``_MAX_WARM`` indexes stay
     warm; beyond that the least-recently-used entry is unpersisted
     (long-lived sessions serving many indexes would otherwise pin every
-    index's doclens in cluster memory forever).
+    index's doclens in cluster memory forever). Entries of a stopped
+    session are dropped without a JVM call.
     """
 
     _by_dir: dict[str, "_WarmIndex"] = {}
@@ -432,10 +479,15 @@ class _WarmIndex:
         )
         batch_parts = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1)
         self.n_shards = int(props.get("n_shards") or 0)
+        # shard-dir roots per generation, for the serving path's direct
+        # parquet reads (Lucene-style: the shard searcher opens its own
+        # segment files)
+        from .build import generation_dirs
+
+        self.gen_dirs = generation_dirs(index_dir, "shards")
         self.dls_serve = (
             live.repartition(serve_parts, "shard").persist()
         )
-        self.dls_serve.count()  # materialize now; queries hit the cache
         # batch (cogroup) layout built LAZILY on the first batch query —
         # a cold interactive query pays only the serve layout. Pre-sorted
         # by the cogroup key: the cached plan's outputPartitioning AND
@@ -447,7 +499,16 @@ class _WarmIndex:
         self.terms = (
             spark.read.parquet(os.path.join(index_dir, "terms")).persist()
         )
-        self.terms.count()
+        # driver-side copies: taken with the SAME actions that materialize
+        # the two caches, so warm-up runs no extra job either way
+        self.shard_dls: dict[int, tuple[np.ndarray, np.ndarray]] | None = None
+        self.term_df: dict[str, int] | None = None
+        self._datasets: dict[int, list] = {}
+        if _driver_serves(spark, int(self.stats["n_docs"]), self.gen_dirs):
+            self._load_driver_side()
+        else:
+            self.dls_serve.count()  # materialize now; queries hit the cache
+            self.terms.count()
         # plan-only reuse (NOT persisted data): keeps the resolved file
         # index + schema so a warm query skips the per-call parquet
         # listing/footer jobs; the scan itself stays on disk with term
@@ -456,12 +517,36 @@ class _WarmIndex:
         self.shards = read_generations(spark, index_dir, "shards").select(
             *_SCORE_COLS[:-1]
         )
-        # shard-dir roots per generation, for the serving path's direct
-        # per-task parquet reads (Lucene-style: the shard task opens its
-        # own segment files)
-        from .build import generation_dirs
 
-        self.gen_dirs = generation_dirs(index_dir, "shards")
+    def _load_driver_side(self) -> None:
+        dls = self.dls_serve.toPandas()
+        shard = dls["shard"].to_numpy(np.int64)
+        doc = dls["doc_id"].to_numpy(np.int64)
+        order = np.lexsort((doc, shard))
+        shard, doc = shard[order], doc[order]
+        dl = dls["dl"].to_numpy(np.int64)[order]
+        cuts = [0, *(np.flatnonzero(shard[1:] != shard[:-1]) + 1), shard.size]
+        self.shard_dls = {
+            int(shard[a]): (doc[a:b], dl[a:b]) for a, b in zip(cuts[:-1], cuts[1:])
+        }
+        terms = self.terms.toPandas()
+        self.term_df = dict(zip(terms["term"].tolist(), terms["df"].tolist()))
+
+    def driver_side(self, spark: SparkSession) -> bool:
+        """Whether ``topk`` serves this index on the driver right now: the
+        gate is re-read per query, so setting the broadcast threshold to
+        -1 switches a warm index back to the Spark path at once."""
+        if not _driver_serves(spark, int(self.stats["n_docs"]), self.gen_dirs):
+            return False
+        if self.shard_dls is None:  # warmed while the gate was closed
+            self._load_driver_side()
+        return True
+
+    def shard_datasets(self, shard: int) -> list:
+        """The shard's posting datasets, discovered once per warm entry."""
+        if shard not in self._datasets:
+            self._datasets[shard] = _shard_datasets(self.gen_dirs, shard)
+        return self._datasets[shard]
 
     @staticmethod
     def _snapshot_token(index_dir: str) -> tuple:
@@ -489,17 +574,15 @@ class _WarmIndex:
         return self._dls
 
     def _unpersist(self) -> None:
-        if self._dls is not None:
-            self._dls.unpersist()
-        self.dls_serve.unpersist()
-        self.terms.unpersist()
+        for df in (self._dls, self.dls_serve, self.terms):
+            unpersist_quietly(df)
 
     @classmethod
     def get(cls, spark: SparkSession, index_dir: str) -> "_WarmIndex":
         key = os.path.abspath(index_dir)
         token = cls._snapshot_token(index_dir)
         cached = cls._by_dir.get(key)
-        if cached is not None and cached.token == token:
+        if cached is not None and cached.token == token and is_live(cached.terms):
             cls._by_dir[key] = cls._by_dir.pop(key)  # LRU touch (dict order)
             return cached
         if cached is not None:
@@ -517,6 +600,78 @@ _SERVE_COLS = [
     "term", "block_id", "min_doc", "max_doc", "n", "max_tf", "min_dl",
     "docs_payload", "tfs_payload", "sky_tfs_payload", "sky_dls_payload",
 ]
+
+# driver-side bytes per live doc: the (doc_id long, dl int, shard int) row
+_DRIVER_ROW_BYTES = 16
+
+
+def _driver_serves(spark: SparkSession, n_docs: int, gen_dirs: list[str]) -> bool:
+    """The driver-side serving gate: the live doclens fit Spark's own
+    "small enough to hold whole" rule (``autoBroadcastJoinThreshold``;
+    -1 disables it, and with it driver-side serving) and the index files
+    are visible from the driver process."""
+    threshold = spark._jconf.autoBroadcastJoinThreshold()
+    return (
+        0 <= _DRIVER_ROW_BYTES * n_docs <= threshold
+        and any(os.path.exists(root) for root in gen_dirs)
+    )
+
+
+def _shard_datasets(gen_dirs: list[str], shard: int) -> list:
+    """pyarrow datasets over one shard's posting files: one per
+    generation that holds the shard (``<root>/shard=K``)."""
+    out = []
+    for root in gen_dirs:
+        d = os.path.join(root, f"shard={int(shard)}")
+        if os.path.exists(d):
+            out.append(pads.dataset(d, format="parquet"))
+    return out
+
+
+def _score_shard(
+    datasets: list, term_idfs: dict[str, float], doc_sorted: np.ndarray,
+    dl_sorted: np.ndarray, avgdl: float, k: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """One shard's block-max top-k — the body both serve execution sites
+    (driver loop, ``mapInPandas`` task) call. Reads the query terms'
+    posting rows straight from the shard's parquet (term filter pushed
+    to row-group statistics), then runs the kernel over the shard's
+    sorted live doclens. Returns (doc_ids, raw float64 scores)."""
+    flt = pads.field("term").isin(sorted(term_idfs))
+    tables = [d.to_table(columns=_SERVE_COLS, filter=flt) for d in datasets]
+    tables = [t for t in tables if t.num_rows]
+    if not tables:
+        return np.empty(0, dtype=np.int64), np.empty(0)
+    blocks = term_blocks_from_flat(
+        pa.concat_tables(tables, promote_options="permissive")
+    )
+    cursors = [_TermCursor(b, term_idfs[t], avgdl) for t, b in blocks.items()]
+    docs, scores, _ = bmw_topk_cursors(cursors, doc_sorted, dl_sorted, avgdl, k)
+    return docs, scores
+
+
+def _local_topk(spark: SparkSession, docs: np.ndarray, scores: np.ndarray,
+                k: int) -> DataFrame:
+    """Global top-k of the per-shard candidates, as a LocalRelation.
+
+    Rounding is Spark's ``F.round`` (module docstring: why) over an
+    Arrow-backed LocalRelation, which the optimizer folds
+    (ConvertToLocalRelation) without a job; the ≤ k × shards rounded
+    candidates are then ordered by (score desc, doc_id asc) in Python."""
+    def relation(d: np.ndarray, sc: np.ndarray) -> DataFrame:
+        return spark.createDataFrame(pa.table({
+            "doc_id": pa.array(d, pa.int64()), "score": pa.array(sc, pa.float64()),
+        }))
+
+    rows = []
+    if docs.size:
+        rows = relation(docs, scores).select(
+            "doc_id", F.round("score", SCORE_DECIMALS).alias("score")
+        ).collect()
+    d = np.fromiter((r[0] for r in rows), dtype=np.int64, count=len(rows))
+    sc = np.fromiter((r[1] for r in rows), dtype=np.float64, count=len(rows))
+    top = np.lexsort((d, -sc))[:k]
+    return relation(d[top], sc[top])
 
 
 def warm_index(spark: SparkSession, index_dir: str) -> None:
@@ -556,15 +711,24 @@ def topk(
     mode: str = "serve",
     routing: list | str | None = None,
 ) -> DataFrame:
-    """Distributed BM25 top-k over the sharded compressed index.
+    """BM25 top-k (doc_id, score) over the sharded compressed index.
 
-    ``mode="serve"`` (default): the interactive path — ONE stage over the
-    warm-cached shard-partitioned doclens; each task reads its own
-    shard's posting rows for the query terms directly from the
-    partitioned parquet (pyarrow, term-filtered with row-group pushdown)
-    and runs the block-max kernel. No shuffle at all: this is the
-    Lucene/ES serving architecture, where the shard's searcher opens its
-    local segment files. Warm latency is the Spark job floor.
+    ``mode="serve"`` (default): the interactive path. Each shard's
+    searcher reads its own posting rows for the query terms directly
+    from the partitioned parquet (pyarrow, term-filtered with row-group
+    pushdown) and runs the block-max kernel — the Lucene/ES serving
+    architecture. Where that runs depends on the warm index:
+
+    - small index (16 B × n_docs within
+      ``spark.sql.autoBroadcastJoinThreshold``) visible from the driver:
+      the shards are scored in the driver process and the answer is a
+      LocalRelation — a warm query submits no Spark job;
+    - otherwise (or with the threshold at -1, which forces this path):
+      ONE ``mapInPandas`` stage over the warm-cached shard-partitioned
+      doclens, no shuffle; warm latency is the Spark job floor.
+
+    Both sites round with Spark's ``F.round`` and return identical
+    answers.
 
     ``mode="cogroup"``: the batch-analytics path — Catalyst parquet scan
     with pushed term filter, broadcast term stats, cogroup with the
@@ -594,6 +758,23 @@ def topk(
 
         shard_ids = routing_shard_ids(
             index_dir, routing, stats=stats, n_shards=warm.n_shards
+        )
+
+    if mode == "serve" and warm.driver_side(spark):
+        term_idfs = {
+            t: idf(n_docs, warm.term_df[t]) for t in terms if t in warm.term_df
+        }
+        found = [
+            _score_shard(warm.shard_datasets(shard), term_idfs, doc_sorted,
+                         dl_sorted, avgdl, k)
+            for shard, (doc_sorted, dl_sorted) in warm.shard_dls.items()
+            if term_idfs and (shard_ids is None or shard in shard_ids)
+        ]
+        return _local_topk(
+            spark,
+            np.concatenate([np.empty(0, np.int64), *(d for d, _ in found)]),
+            np.concatenate([np.empty(0), *(s for _, s in found)]),
+            k,
         )
 
     if mode == "serve":
@@ -670,18 +851,12 @@ def topk(
 
 def _serve_partition_fn(gen_dirs: list[str], term_dfs: dict[str, int],
                         n_docs: int, avgdl: float, k: int):
-    """Per-partition serving kernel: group the cached doclens rows by
-    shard, read that shard's posting rows for the query terms straight
-    from the partitioned parquet (one ``shard=K`` subdir per generation;
-    pyarrow applies the term filter at row-group granularity), run the
-    block-max kernel. Candidate docs absent from the live doclens are
-    skipped by the kernel (tombstones)."""
-    terms = sorted(term_dfs)
+    """Per-partition serving task: group the cached doclens rows by
+    shard and run ``_score_shard`` for each. Candidate docs absent from
+    the live doclens are skipped by the kernel (tombstones)."""
     term_idfs = {t: idf(n_docs, df_) for t, df_ in term_dfs.items()}
 
     def fn(batches):
-        import pyarrow.parquet as pq
-
         chunks = list(batches)
         if not chunks:
             return
@@ -700,32 +875,11 @@ def _serve_partition_fn(gen_dirs: list[str], term_dfs: dict[str, int],
                 'topk(..., mode="cogroup") otherwise'
             )
         for shard, g in pdf.groupby("shard", sort=False):
-            parts = []
-            for root in gen_dirs:
-                d = os.path.join(root, f"shard={int(shard)}")
-                if not os.path.exists(d):
-                    continue
-                parts.append(
-                    pq.read_table(
-                        d,
-                        columns=_SERVE_COLS,
-                        filters=[("term", "in", terms)],
-                    ).to_pandas()
-                )
-            if not parts:
-                continue
-            idx_pdf = pd.concat(parts, ignore_index=True)
-            if idx_pdf.empty:
-                continue
             order = np.argsort(g["doc_id"].to_numpy())
-            doc_sorted = g["doc_id"].to_numpy(dtype=np.int64)[order]
-            dl_sorted = g["dl"].to_numpy(dtype=np.int64)[order]
-            cursors = [
-                _TermCursor(blocks, term_idfs[term], avgdl)
-                for term, blocks in term_blocks_from_flat(idx_pdf).items()
-            ]
-            docs, scores, _ = bmw_topk_cursors(
-                cursors, doc_sorted, dl_sorted, avgdl, k
+            docs, scores = _score_shard(
+                _shard_datasets(gen_dirs, shard), term_idfs,
+                g["doc_id"].to_numpy(dtype=np.int64)[order],
+                g["dl"].to_numpy(dtype=np.int64)[order], avgdl, k,
             )
             if docs.size:
                 yield pd.DataFrame({"doc_id": docs, "score": scores})

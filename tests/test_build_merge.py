@@ -181,6 +181,39 @@ def test_assign_doc_ids_deterministic(spark, web_pages):
     assert [a[u] for u in urls_sorted] == list(range(len(a)))
 
 
+def test_assign_doc_ids_keeps_a_caller_cache(spark):
+    """A caller's own persist of the input is used, not dropped."""
+    from pyspark import StorageLevel
+
+    from es_loaders_spark.build import release_doc_id_caches
+
+    urls = spark.createDataFrame(
+        [(f"u{i:03d}",) for i in range(50)], "url string"
+    ).persist()
+    urls.count()
+    out = assign_doc_ids(urls)
+    assert sorted(r["doc_id"] for r in out.collect()) == list(range(50))
+    assert urls.storageLevel != StorageLevel.NONE
+    release_doc_id_caches(out)
+    urls.unpersist()
+
+
+def test_assign_doc_ids_releases_its_persists_on_failure(spark):
+    from pyspark import StorageLevel
+
+    from es_loaders_spark.build import _ID_PERSISTS
+
+    boom = F.udf(lambda u: str(1 // 0), "string")
+    urls = spark.createDataFrame(
+        [(f"u{i:03d}",) for i in range(20)], "url string"
+    ).select(boom("url").alias("url"))
+    n_before = len(_ID_PERSISTS)
+    with pytest.raises(Exception, match="ZeroDivisionError"):
+        assign_doc_ids(urls)
+    assert urls.storageLevel == StorageLevel.NONE
+    assert len(_ID_PERSISTS) == n_before
+
+
 def test_append_documents_matches_one_shot(spark, documents, tmp_path_factory):
     """Segment append: base index + appended generation == one-shot index
     over the union — same top-k docIDs AND scores (Lucene-segment parity,

@@ -193,18 +193,32 @@ def test_routed_plans_carry_the_shard_predicate(spark, documents, routed_idx):
     the posting scan) on the routed shard id — an implementation that
     merely tolerated missing shard dirs would show no such predicate."""
     from tests.test_plans import explain_str
+    from es_loaders_spark.wand import _WarmIndex
 
     sid = routing_shard_id("src1", 8)
-    for mode in ("serve", "cogroup"):
-        routed_plan = explain_str(
-            topk(spark, routed_idx, Q, k=5, routing="src1", mode=mode)
-        )
-        plain_plan = explain_str(topk(spark, routed_idx, Q, k=5, mode=mode))
-        assert f"shard#" in routed_plan
-        # the literal routed shard id appears in a filter condition
-        assert f"IN ({sid})" in routed_plan or f"= {sid}" in routed_plan, (
-            mode, routed_plan[:2000])
-        assert f"IN ({sid})" not in plain_plan and f"= {sid}" not in plain_plan
+    # serve mode has a Spark plan only on its mapInPandas path (a small
+    # warm index is otherwise served on the driver): force that path here
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for mode in ("serve", "cogroup"):
+            routed_plan = explain_str(
+                topk(spark, routed_idx, Q, k=5, routing="src1", mode=mode)
+            )
+            plain_plan = explain_str(topk(spark, routed_idx, Q, k=5, mode=mode))
+            assert f"shard#" in routed_plan
+            # the literal routed shard id appears in a filter condition
+            assert f"IN ({sid})" in routed_plan or f"= {sid}" in routed_plan, (
+                mode, routed_plan[:2000])
+            assert f"IN ({sid})" not in plain_plan and f"= {sid}" not in plain_plan
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    # the driver path's mechanism: a routed query opens only the routed
+    # shard's posting datasets
+    evict_index(routed_idx)
+    topk(spark, routed_idx, Q, k=5, routing="src1").collect()
+    warm = _WarmIndex.get(spark, routed_idx)
+    assert warm.driver_side(spark) and set(warm._datasets) == {sid}
 
 
 def test_non_string_routing_column_refused(spark, documents, tmp_path):
