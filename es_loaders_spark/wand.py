@@ -13,8 +13,9 @@ terms' posting rows → block-max kernel over the shard's live doclens):
   "small enough to hold whole" rule — 16 B/row × n_docs within
   ``spark.sql.autoBroadcastJoinThreshold`` — and the index files are
   visible from the driver, ``_WarmIndex`` keeps per-shard sorted
-  ``(doc_id, dl)`` arrays and the term → df map on the driver and
-  ``topk`` loops over the shards in-process: no Spark job at all,
+  ``(doc_id, dl)`` arrays on the driver, reads the query terms' dfs
+  from ``terms/`` with a filtered pyarrow scan, and ``topk`` loops over
+  the shards in-process: no Spark job at all,
   where a Python-UDF job alone costs several hundred ms.
 - **executors**: otherwise one ``mapInPandas`` stage over the cached,
   shard-partitioned doclens runs ``_score_shard`` per shard task.
@@ -435,10 +436,11 @@ class _WarmIndex:
     via .persist) — the same pattern works on a 1000-executor cluster,
     where it is exactly Lucene/ES keeping segment readers open between
     searches. Only a small index also keeps driver-side copies (see
-    ``_driver_serves``): per-shard sorted ``(doc_id, dl)`` arrays, the
-    term → df map and per-shard pyarrow datasets, so ``topk`` can score
-    on the driver with no Spark job. At most ``_MAX_WARM`` indexes stay
-    warm; beyond that the least-recently-used entry is unpersisted
+    ``_driver_serves``): per-shard sorted ``(doc_id, dl)`` arrays and
+    per-shard pyarrow datasets, so ``topk`` can score on the driver with
+    no Spark job; query-term dfs are read per query from ``terms/``. At
+    most ``_MAX_WARM`` indexes stay warm; beyond that the
+    least-recently-used entry is unpersisted
     (long-lived sessions serving many indexes would otherwise pin every
     index's doclens in cluster memory forever). Entries of a stopped
     session are dropped without a JVM call.
@@ -499,16 +501,17 @@ class _WarmIndex:
         self.terms = (
             spark.read.parquet(os.path.join(index_dir, "terms")).persist()
         )
-        # driver-side copies: taken with the SAME actions that materialize
-        # the two caches, so warm-up runs no extra job either way
+        # driver-side doclens: taken with the SAME action that
+        # materializes the serve cache, so warm-up runs no extra job
+        self.index_dir = index_dir
         self.shard_dls: dict[int, tuple[np.ndarray, np.ndarray]] | None = None
-        self.term_df: dict[str, int] | None = None
+        self._terms_ds = None
         self._datasets: dict[int, list] = {}
         if _driver_serves(spark, int(self.stats["n_docs"]), self.gen_dirs):
             self._load_driver_side()
         else:
             self.dls_serve.count()  # materialize now; queries hit the cache
-            self.terms.count()
+        self.terms.count()
         # plan-only reuse (NOT persisted data): keeps the resolved file
         # index + schema so a warm query skips the per-call parquet
         # listing/footer jobs; the scan itself stays on disk with term
@@ -526,11 +529,25 @@ class _WarmIndex:
         shard, doc = shard[order], doc[order]
         dl = dls["dl"].to_numpy(np.int64)[order]
         cuts = [0, *(np.flatnonzero(shard[1:] != shard[:-1]) + 1), shard.size]
+        # a < b skips the one empty slice of an index whose docs are all
+        # tombstoned (cuts == [0, 0])
         self.shard_dls = {
-            int(shard[a]): (doc[a:b], dl[a:b]) for a, b in zip(cuts[:-1], cuts[1:])
+            int(shard[a]): (doc[a:b], dl[a:b])
+            for a, b in zip(cuts[:-1], cuts[1:]) if a < b
         }
-        terms = self.terms.toPandas()
-        self.term_df = dict(zip(terms["term"].tolist(), terms["df"].tolist()))
+
+    def term_dfs(self, terms: list[str]) -> dict[str, int]:
+        """Global dfs of the query terms, by a term-filtered pyarrow read
+        of ``terms/`` (row-group pushdown, no Spark job): the driver keeps
+        no resident term map, whose size would grow with the vocabulary."""
+        if self._terms_ds is None:
+            self._terms_ds = pads.dataset(
+                os.path.join(self.index_dir, "terms"), format="parquet"
+            )
+        t = self._terms_ds.to_table(
+            columns=["term", "df"], filter=pads.field("term").isin(terms)
+        )
+        return dict(zip(t.column("term").to_pylist(), t.column("df").to_pylist()))
 
     def driver_side(self, spark: SparkSession) -> bool:
         """Whether ``topk`` serves this index on the driver right now: the
@@ -761,9 +778,7 @@ def topk(
         )
 
     if mode == "serve" and warm.driver_side(spark):
-        term_idfs = {
-            t: idf(n_docs, warm.term_df[t]) for t in terms if t in warm.term_df
-        }
+        term_idfs = {t: idf(n_docs, df_) for t, df_ in warm.term_dfs(terms).items()}
         found = [
             _score_shard(warm.shard_datasets(shard), term_idfs, doc_sorted,
                          dl_sorted, avgdl, k)

@@ -18,7 +18,7 @@ import pytest
 from es_loaders_spark.analyze import AnalysisChain
 from es_loaders_spark.bm25 import bm25_topk
 from es_loaders_spark.build import append_documents, build_index, routing_shard_id
-from es_loaders_spark.deletes import delete_by_term, tombstones
+from es_loaders_spark.deletes import delete_by_term, delete_ids, tombstones
 from es_loaders_spark.postings import corpus_stats, doc_lengths, postings_long, term_df
 from es_loaders_spark.wand import _WarmIndex, evict_index, term_blocks_from_flat, topk, warm_index
 
@@ -120,6 +120,21 @@ def test_tombstones_after_delete_by_term(spark, documents, tmp_path_factory):
         got = both_paths(spark, d, q, k=20)
         assert not {i for i, _ in got} & gone
         assert got == exact(spark, docs, q, 20, drop=gone), q
+    evict_index(d)
+
+
+def test_every_doc_tombstoned(spark, documents, tmp_path_factory):
+    """With no live doclens left, warm-up still succeeds and every serve
+    path returns an empty top-k (n_docs keeps its pre-delete value, so
+    the driver gate stays open)."""
+    d = str(tmp_path_factory.mktemp("drv_all_deleted") / "idx")
+    docs = documents.select("doc_id", "text")
+    build_index(spark, docs, d, n_shards=4)
+    warm_index(spark, d)
+    assert delete_ids(spark, d, docs.select("doc_id")) == docs.count()
+    for q in QUERIES:
+        assert both_paths(spark, d, q) == [], q
+        assert rows(topk(spark, d, q, mode="cogroup")) == [], q
     evict_index(d)
 
 
