@@ -244,6 +244,22 @@ def decode_payloads_flat(payloads) -> tuple[np.ndarray, np.ndarray]:
     return out, offsets
 
 
+def decode_doc_ids_flat_batch(
+    min_docs: np.ndarray, docs_payloads
+) -> tuple[np.ndarray, np.ndarray]:
+    """The doc-id half of :func:`decode_blocks_flat_batch`: ``(doc_ids
+    int64 flat, offsets len+1)``, for callers that need no tfs."""
+    deltas, off = decode_payloads_flat(docs_payloads)
+    deltas = deltas.astype(np.int64)
+    if deltas.size == 0:
+        return deltas, off
+    counts = np.diff(off)
+    cs = np.cumsum(deltas)
+    safe_starts = np.minimum(off[:-1], cs.size - 1)
+    min_docs = np.asarray(min_docs, dtype=np.int64)
+    return cs - np.repeat(cs[safe_starts], counts) + np.repeat(min_docs, counts), off
+
+
 def decode_blocks_flat_batch(
     min_docs: np.ndarray,
     docs_payloads,
@@ -255,15 +271,9 @@ def decode_blocks_flat_batch(
     block i's postings are the slice ``[offsets[i], offsets[i+1])``.
     Byte-identical to per-block :func:`decode_block` calls.
     """
-    deltas, off = decode_payloads_flat(docs_payloads)
-    deltas = deltas.astype(np.int64)
-    counts = np.diff(off)
-    min_docs = np.asarray(min_docs, dtype=np.int64)
-    if deltas.size == 0:
-        return deltas, deltas.copy(), off
-    cs = np.cumsum(deltas)
-    safe_starts = np.minimum(off[:-1], cs.size - 1)
-    doc_ids = cs - np.repeat(cs[safe_starts], counts) + np.repeat(min_docs, counts)
+    doc_ids, off = decode_doc_ids_flat_batch(min_docs, docs_payloads)
+    if doc_ids.size == 0:
+        return doc_ids, doc_ids.copy(), off
     tfs_raw, toff = decode_payloads_flat(tfs_payloads)
     if not np.array_equal(toff, off):
         raise ValueError("docs/tfs payload counts disagree within a block batch")

@@ -671,6 +671,23 @@ def _index_query_terms(index_dir: str | None, text: str) -> list[str]:
     return chain.tokens(text) if chain is not None else tokenize_text(text)
 
 
+def _indexed_match(
+    q: dict, index_dir: str | None, text_col: str
+) -> tuple[list[str], bool] | None:
+    """(analyzed terms, conjunctive) of a lone ``match`` on the indexed
+    column — the leaf ``wand.match_docs`` serves — else None."""
+    if index_dir is None or len(q) != 1 or "match" not in q:
+        return None
+    (fld, v), = q["match"].items()
+    if fld != text_col:
+        return None
+    op = "or"
+    if isinstance(v, dict):
+        op = str(v.get("operator", "or")).lower()
+        v = v["query"]
+    return _index_query_terms(index_dir, str(v)), op == "and"
+
+
 def _hl_terms_for(index_dir: str | None, text: str, chain=...) -> list[str]:
     """Highlight terms for a match over a possibly-chained index. ES's
     plain highlighter re-analyzes the field text, so a stemmed query
@@ -743,6 +760,11 @@ def _split_scoring(query: dict | None) -> tuple[dict | None, dict]:
             else:
                 musts.append(sub)
         rest["must"] = musts
+        if "minimum_should_match" not in rest and not any(
+            _as_list(rest.get(k)) for k in ("must", "filter", "should", "must_not")
+        ):
+            # a bool wrapping only the scoring clause filters nothing
+            return scoring, {}
         return scoring, {"bool": rest}
     return None, query
 
@@ -1814,23 +1836,31 @@ def search(
     ``routing=`` (ES ``?routing=`` query param): on an index built with
     ``build_index(routing_field=...)``, prune the search to the routing
     keys' shards — wand.topk(routing=...) never opens the other shards'
-    posting files. Served paths only (plain match on the indexed column,
-    no filters): anything else refuses loudly rather than silently scan
-    every shard.
+    posting files. Served paths only (a match on the indexed column,
+    with or without filters): anything else refuses loudly rather than
+    silently scan every shard.
 
-    Relevance (``match``) rides the compressed index when ``index_dir``
-    is given (block-max WAND), else the exact join scorer; pure filters
-    return the matching rows; ``aggs`` return aggregation rows
-    (``size: 0`` bodies, as the reference always uses for aggs).
-    ``knn`` bodies ride a built ANN index (similarity.build_ivf_index /
-    build_ann_index) when ``ann_index_dir`` is given — the same
-    indexed-serving posture ``index_dir`` gives text.
+    Relevance (``match`` on ``text_col``) rides the compressed index
+    when ``index_dir`` is given: block-max WAND (``wand.topk``) with
+    either operator, with or without filters. Filters and the
+    ``operator: "and"`` conjunction restrict the candidates
+    (``topk(allowed=...)``; the conjunction from ``wand.match_docs``)
+    while scores keep the index's global stats (ES filter context). The
+    served match scores the INDEX's live doc set: tombstones drop,
+    appended generations count, and ``docs`` supplies only the filter
+    columns and the returned fields. Pure filters return the matching
+    rows; ``aggs`` return aggregation rows (``size: 0`` bodies, as the
+    reference always uses for aggs), a lone indexed match taking its
+    doc set from ``wand.match_docs``. ``knn`` bodies ride a built ANN
+    index (similarity.build_ivf_index / build_ann_index) when
+    ``ann_index_dir`` is given — the same indexed-serving posture
+    ``index_dir`` gives text.
 
-    SCALE WARNING: a ``match`` on a field other than the indexed
-    ``text_col`` (or with no ``index_dir``) is correct ES-parity
-    behavior for an unmapped field, but it scores from raw token arrays
-    at query time — a full corpus scan PER QUERY. At 100 TB that is an
-    anti-pattern: build an index over the field you search
+    SCALE WARNING: only a ``match`` on a field other than the indexed
+    ``text_col``, or one with no ``index_dir``, scans. That is correct
+    ES-parity behavior for an unmapped field, but it scores from raw
+    token arrays at query time — a full corpus scan PER QUERY. At 100 TB
+    that is an anti-pattern: build an index over the field you search
     (``build.build_index``) so ``match`` serves from compressed
     postings (VERDICT r04 "What's wrong" #4).
     """
@@ -1992,40 +2022,19 @@ def search(
             )
         qd = body.get("query", {}) or {}
         base = _parent_child_query(docs, qd, id_col)
-        if base is None and index_dir is not None and len(qd) == 1 and "match" in qd:
+        served = _indexed_match(qd, index_dir, text_col) if base is None else None
+        if served is not None:
             # Faceted search (aggs restricted by a text query) — the ES
-            # hot path. Serve the match's doc set from the index: decode
-            # only the query terms' posting blocks and semi-join, instead
+            # hot path. The match's doc set comes from the index's
+            # postings (wand.match_docs) and semi-joins into docs, instead
             # of tokenizing the whole corpus per request. Aggregation
             # itself is unchanged; only the candidate set comes cheaper.
-            (fld, v), = qd["match"].items()
-            op = "or"
-            if isinstance(v, dict):
-                op = str(v.get("operator", "or")).lower()
-                v = v["query"]
-            if fld == text_col:
-                from .deletes import filter_deleted
-                from .phrase import tf_postings
+            from .wand import match_docs
 
-                qterms = _index_query_terms(index_dir, str(v))
-                if qterms:
-                    tp = tf_postings(spark, index_dir, sorted(set(qterms)))
-                    if op == "and":
-                        hits = (
-                            tp.groupBy("doc_id")
-                            .agg(F.count_distinct("term").alias("_nt"))
-                            .filter(F.col("_nt") == F.lit(len(set(qterms))))
-                            .select("doc_id")
-                        )
-                    else:
-                        hits = tp.select("doc_id").distinct()
-                    hits = filter_deleted(spark, index_dir, hits)
-                    base = docs.join(
-                        hits.withColumnRenamed("doc_id", id_col),
-                        id_col, "left_semi",
-                    )
-                else:
-                    base = docs.filter(F.lit(False))
+            hits = match_docs(spark, index_dir, *served)
+            base = docs.join(
+                hits.withColumnRenamed("doc_id", id_col), id_col, "left_semi"
+            )
         if base is None:
             base = docs.filter(filter_expr(qd, id_col))
         # background = the UNFILTERED table: significant_terms contrasts
@@ -2497,43 +2506,45 @@ def search(
         operator = str(opts.get("operator", "or")).lower()
         if operator not in ("or", "and"):
             raise ValueError(f"match operator {operator!r} (use 'or' or 'and')")
-        if (
-            index_dir is not None
-            and not filters
-            and field == text_col
-            and operator == "or"
-        ):
-            from .wand import topk
+        # ES filter-context semantics: corpus stats / dfs / avgdl come from
+        # the UNFILTERED corpus; the filter and the operator=and
+        # conjunction only restrict the candidate set (ADVICE r02 — stats
+        # over the filtered set shifted idf/avgdl and diverged from ES).
+        # A conjunction keeps scores: BM25 sums the same contributions; a
+        # term absent from the corpus yields zero hits, as in ES.
+        if index_dir is not None and field == text_col:
+            from .wand import match_docs, topk
 
+            allowed = None
+            if filters:
+                allowed = docs.filter(filter_expr(filters, id_col)).select(
+                    F.col(id_col).alias("doc_id")
+                )
+            if operator == "and":
+                have_all = match_docs(
+                    spark, index_dir, _index_query_terms(index_dir, text),
+                    conjunctive=True,
+                )
+                allowed = have_all if allowed is None else allowed.join(
+                    have_all, "doc_id", "left_semi"
+                )
             return page(
                 topk(spark, index_dir, text, k=offset + size,
-                     routing=routing),
+                     routing=routing, allowed=allowed),
                 hl_terms=_hl_terms_for(index_dir, text, chain=idx_chain),
             )
         if routing is not None:
             raise ValueError(
-                "routing= needs the index-served match path (indexed "
-                "column, operator=or, no filters) — this request would "
-                "scan every shard"
+                "routing= needs the index-served match path (a match on "
+                "the indexed column) — this request would scan every shard"
             )
         from .analyze import tokenize_text
         from .bm25 import bm25_topk
         from .postings import corpus_stats, doc_lengths, postings_long, term_df
 
-        # ES filter-context semantics: corpus stats / dfs / avgdl come from
-        # the UNFILTERED corpus; the filter only restricts the candidate
-        # set (ADVICE r02 — stats over the filtered set shifted idf/avgdl
-        # and diverged from ES; same shape as bm25_topk_filtered).
-        # A chained index's analysis applies to THIS scan fallback too
-        # (filters / operator=and route here even with an index): the
-        # indexed column scores with the index's own chain, so the or-
-        # path (wand, chain-aware) and this path rank identically.
-        chain = idx_chain if field == text_col else None
-        p = postings_long(docs.select(id_col, field), text_col=field,
-                          id_col=id_col, chain=chain)
-        dl = doc_lengths(docs.select(id_col, field), text_col=field,
-                         id_col=id_col, chain=chain)
-        q_input = chain.tokens(text) if chain is not None else text
+        # no index over this field: score from the raw token arrays
+        p = postings_long(docs.select(id_col, field), text_col=field, id_col=id_col)
+        dl = doc_lengths(docs.select(id_col, field), text_col=field, id_col=id_col)
         cand = p
         if filters:
             allowed = docs.filter(filter_expr(filters, id_col)).select(
@@ -2541,15 +2552,7 @@ def search(
             )
             cand = p.join(allowed.hint("broadcast"), "doc_id", "left_semi")
         if operator == "and":
-            # ES operator=and: only docs containing EVERY query term score
-            # (scores unchanged — BM25 sums the same contributions).
-            # Conjunction from the postings themselves: count distinct
-            # query terms per doc == number of distinct query terms; a
-            # term absent from the corpus therefore yields zero hits,
-            # exactly ES's behavior.
-            qterms = sorted(set(
-                q_input if isinstance(q_input, list) else tokenize_text(text)
-            ))
+            qterms = sorted(set(tokenize_text(text)))
             have_all = (
                 p.filter(F.col("term").isin(qterms))
                 .groupBy("doc_id")
@@ -2560,13 +2563,10 @@ def search(
             cand = cand.join(have_all, "doc_id", "left_semi")
         return page(
             bm25_topk(
-                spark, cand, dl, term_df(p), corpus_stats(dl), q_input,
+                spark, cand, dl, term_df(p), corpus_stats(dl), text,
                 k=offset + size,
             ),
-            hl_terms=(
-                _hl_terms_for(index_dir, text, chain=chain)
-                if chain is not None else _hl_tokens(text)
-            ),
+            hl_terms=_hl_tokens(text),
         )
 
     if body.get("highlight"):
@@ -2767,17 +2767,22 @@ def count(
 ) -> DataFrame:
     """``es.count`` analogue → one-row DataFrame (n bigint).
 
-    With ``index_dir``, a MATCH query on the indexed column counts from
-    the query terms' POSTING BLOCKS (distinct live doc_ids) — never a
-    corpus scan; everything else filters ``docs``. (term stays on the
-    scan path: filter_expr's term is exact keyword equality engine-wide,
-    and an index-served token count would silently change that.)
+    With ``index_dir``, a MATCH query on the indexed column counts the
+    live docs holding any (``operator: "and"``: every) query term, from
+    the query terms' posting blocks (``wand.match_docs``) — never a
+    corpus scan. A warm small index counts on the driver and answers
+    with a one-row LocalRelation, so no Spark job runs; otherwise (or
+    with ``spark.sql.autoBroadcastJoinThreshold`` at -1) one decode job
+    counts on the executors. Everything else filters ``docs``. (term
+    stays on the scan path: filter_expr's term is exact keyword equality
+    engine-wide, and an index-served token count would silently change
+    that.)
 
     ``routing=`` (ES ``GET /idx/_count?routing=``): prune the posting
-    read to the routing keys' shards (PartitionFilters on the shard=K
-    dirs; conjunction stays exact — a routed doc's postings live wholly
-    in its shard). Index-served match path only; the scan fallback
-    refuses rather than silently counting every shard.
+    read to the routing keys' shards (conjunction stays exact — a routed
+    doc's postings live wholly in its shard). Index-served match path
+    only; the scan fallback refuses rather than silently counting every
+    shard.
     """
     q = (body or {}).get("query", {})
     shard_ids: list[int] | None = None
@@ -2788,35 +2793,11 @@ def count(
         from .build import routing_shard_ids
 
         shard_ids = routing_shard_ids(index_dir, routing)
-    if index_dir is not None and len(q) == 1:
-        (kind, sub), = q.items()
-        terms_q, op = None, "or"
-        if kind == "match":
-            (fld, v), = sub.items()
-            if isinstance(v, dict):
-                op = str(v.get("operator", "or")).lower()
-                v = v["query"]
-            if fld == text_col:
-                terms_q = _index_query_terms(index_dir, str(v))
-        if terms_q is not None:
-            if not terms_q:
-                return spark.range(0).agg(F.count(F.lit(1)).alias("n"))
-            from .deletes import filter_deleted
-            from .phrase import tf_postings
+    served = _indexed_match(q, index_dir, text_col)
+    if served is not None:
+        from .wand import match_count
 
-            tp = tf_postings(spark, index_dir, sorted(set(terms_q)),
-                             shards=shard_ids)
-            if op == "and" and len(set(terms_q)) > 1:
-                hits = (
-                    tp.groupBy("doc_id")
-                    .agg(F.count_distinct("term").alias("_nt"))
-                    .filter(F.col("_nt") == F.lit(len(set(terms_q))))
-                    .select("doc_id")
-                )
-            else:
-                hits = tp.select("doc_id").distinct()
-            hits = filter_deleted(spark, index_dir, hits)
-            return hits.agg(F.count(F.lit(1)).alias("n"))
+        return match_count(spark, index_dir, *served, shard_ids=shard_ids)
     if routing is not None:
         raise ValueError(
             "routing= supports the index-served match count (match on the "

@@ -147,9 +147,17 @@ _PY_OPAQUE_NODES = ("MapInPandas", "MapInArrow", "EvalPython", "PythonUDTF")
 def _has_python_source(df) -> bool:
     """True when the input subtree contains an opaque Python node —
     re-scanning such a source re-runs the Python stage in full (no
-    column pruning reaches inside it)."""
-    plan = df._jdf.queryExecution().analyzed().toString()
-    return any(k in plan for k in _PY_OPAQUE_NODES)
+    column pruning reaches inside it). Walks the analyzed plan's node
+    names, so a column or literal that merely spells a node name does
+    not count."""
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if any(k in node.nodeName() for k in _PY_OPAQUE_NODES):
+            return True
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False
 
 
 def with_extracted_text(df, html_col: str = "html", out_col: str = "text"):

@@ -27,7 +27,11 @@ on the driver path the round runs over a LocalRelation, which the
 optimizer folds without a job. Setting the threshold to -1 forces the
 executor path (its result is then rank- and score-identical —
 pytest-asserted). ``mode="cogroup"``, ``topk_merged`` and ``topk_batch``
-always run as Spark jobs.
+always run as Spark jobs. The DSL's match leaves use the same gate:
+``topk(allowed=...)`` (filtered and ``operator: "and"`` matches) and
+``match_docs`` / ``match_count`` (the doc set behind ``dsl.count`` and
+faceted aggs), which on the driver decodes only the query terms' doc-id
+payloads.
 
 Pruning kernel: **Block-Max MaxScore** — the vectorizable member of the
 block-max WAND family (same skip guarantees as classic BMW:
@@ -44,6 +48,7 @@ bound; final scores rounded to SCORE_DECIMALS like the exact scorer.
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
@@ -58,7 +63,7 @@ from pyspark.sql import functions as F
 
 from .analyze import tokenize_text
 from .bm25 import SCORE_DECIMALS
-from .codec import decode_block
+from .codec import decode_block, decode_doc_ids_flat_batch
 from .postings import B, K1
 from .session import is_live, unpersist_quietly
 
@@ -559,6 +564,14 @@ class _WarmIndex:
             self._load_driver_side()
         return True
 
+    def live_shards(self, shard_ids: list[int] | None = None) -> dict:
+        """Driver-side ``shard → (sorted doc_ids, dls)``, restricted to
+        the routed shards when ``shard_ids`` is given."""
+        return {
+            shard: v for shard, v in self.shard_dls.items()
+            if shard_ids is None or shard in shard_ids
+        }
+
     def shard_datasets(self, shard: int) -> list:
         """The shard's posting datasets, discovered once per warm entry."""
         if shard not in self._datasets:
@@ -723,10 +736,22 @@ def _query_terms(stats: dict, query: str) -> list[str]:
 
 
 
+def _collect_ids(df: DataFrame) -> np.ndarray:
+    """Sorted distinct values of a one-column id relation, on the driver:
+    a LocalRelation is read without a job, anything else with one Arrow
+    collect."""
+    if df.isLocal():
+        ids = np.fromiter((r[0] for r in df.collect()), dtype=np.int64)
+    else:
+        ids = df.toArrow().column(0).to_numpy().astype(np.int64)
+    return np.unique(ids)
+
+
 def topk(
     spark: SparkSession, index_dir: str, query: str, k: int = 10,
     mode: str = "serve",
     routing: list | str | None = None,
+    allowed: DataFrame | None = None,
 ) -> DataFrame:
     """BM25 top-k (doc_id, score) over the sharded compressed index.
 
@@ -751,12 +776,23 @@ def topk(
     with pushed term filter, broadcast term stats, cogroup with the
     cached doclens (only the query terms' posting rows shuffle), kernel,
     TakeOrderedAndProject. Rank-identical to serve (pytest-asserted).
+
+    ``allowed``: a relation with a ``doc_id`` column that restricts the
+    candidates (ES filter context — ``dsl.search`` passes a match's
+    filter set here). Scores keep the global n_docs, avgdl and dfs. On
+    the driver the ids are collected once (one job, none for a
+    LocalRelation) and mask each shard's live doclens before the kernel,
+    which skips docs missing from them like tombstones; block-max bounds
+    stay upper bounds on a subset, so the top-k is exact. The Spark
+    paths semi-join it into the cached doclens.
     """
     warm = _WarmIndex.get(spark, index_dir)
     stats = warm.stats
     terms = _query_terms(stats, query)
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
+    if allowed is not None:
+        allowed = allowed.select("doc_id")
     n_docs = int(stats["n_docs"])
     avgdl = float(stats["avgdl"])
 
@@ -779,11 +815,18 @@ def topk(
 
     if mode == "serve" and warm.driver_side(spark):
         term_idfs = {t: idf(n_docs, df_) for t, df_ in warm.term_dfs(terms).items()}
+        shard_dls = warm.live_shards(shard_ids) if term_idfs else {}
+        if allowed is not None and shard_dls:
+            ids = _collect_ids(allowed)
+            shard_dls = {
+                shard: (doc[keep], dl[keep])
+                for shard, (doc, dl) in shard_dls.items()
+                if (keep := np.isin(doc, ids, assume_unique=True)).any()
+            }
         found = [
             _score_shard(warm.shard_datasets(shard), term_idfs, doc_sorted,
                          dl_sorted, avgdl, k)
-            for shard, (doc_sorted, dl_sorted) in warm.shard_dls.items()
-            if term_idfs and (shard_ids is None or shard in shard_ids)
+            for shard, (doc_sorted, dl_sorted) in shard_dls.items()
         ]
         return _local_topk(
             spark,
@@ -804,6 +847,10 @@ def topk(
             # filter the cached doclens to the routed shards; the serving
             # fn below then only opens those shards' posting dirs
             src = src.filter(F.col("shard").isin(shard_ids))
+        if allowed is not None:
+            # a task may then hold part of a shard's docs: its top-k of
+            # that part is exact, and the global merge below is too
+            src = src.join(allowed, "doc_id", "left_semi")
         local = src.mapInPandas(
             _serve_partition_fn(warm.gen_dirs, term_dfs, n_docs, avgdl, k),
             "doc_id long, score double",
@@ -833,6 +880,8 @@ def topk(
         # the doclens side filters the warm cache in place
         idx = idx.filter(F.col("shard").isin(shard_ids))
         dls = dls.filter(F.col("shard").isin(shard_ids))
+    if allowed is not None:
+        dls = dls.join(allowed, "doc_id", "left_semi")
 
     def score_shard(key, idx_pdf: pd.DataFrame, dl_pdf: pd.DataFrame) -> pd.DataFrame:
         if idx_pdf.empty or dl_pdf.empty:
@@ -900,6 +949,99 @@ def _serve_partition_fn(gen_dirs: list[str], term_dfs: dict[str, int],
                 yield pd.DataFrame({"doc_id": docs, "score": scores})
 
     return fn
+
+
+def _driver_match_ids(
+    spark: SparkSession, index_dir: str, terms: list[str], conjunctive: bool,
+    shard_ids: list[int] | None,
+) -> np.ndarray | None:
+    """Sorted live doc ids holding any (every, if ``conjunctive``) of the
+    distinct ``terms``, computed on the driver from the query terms'
+    ``docs_payload`` alone; None when the index is not served on the
+    driver right now."""
+    if not terms:
+        return np.empty(0, dtype=np.int64)
+    warm = _WarmIndex.get(spark, index_dir)
+    if not warm.driver_side(spark):
+        return None
+    flt = pads.field("term").isin(terms)
+    per_term: dict[str, list[np.ndarray]] = {}
+    for shard, (live, _) in warm.live_shards(shard_ids).items():
+        for ds in warm.shard_datasets(shard):
+            t = ds.to_table(columns=["term", "min_doc", "docs_payload"], filter=flt)
+            if not t.num_rows:
+                continue
+            docs, off = decode_doc_ids_flat_batch(
+                t.column("min_doc").to_numpy(), t.column("docs_payload").to_pylist()
+            )
+            term_of = np.repeat(
+                t.column("term").to_numpy(zero_copy_only=False), np.diff(off)
+            )
+            keep = np.isin(docs, live)
+            for term in np.unique(term_of[keep]):
+                per_term.setdefault(term, []).append(docs[keep & (term_of == term)])
+    sets = [np.unique(np.concatenate(v)) for v in per_term.values()]
+    if not sets or (conjunctive and len(sets) < len(terms)):
+        return np.empty(0, dtype=np.int64)
+    if conjunctive:
+        return functools.reduce(np.intersect1d, sets)
+    return np.unique(np.concatenate(sets))
+
+
+def match_docs(
+    spark: SparkSession, index_dir: str, terms: list[str],
+    conjunctive: bool = False, shard_ids: list[int] | None = None,
+) -> DataFrame:
+    """Live doc ids (``doc_id``) that hold any of the analyzed ``terms``
+    — every one of them when ``conjunctive`` (ES match ``operator``
+    or/and) — from the index's postings, never a corpus scan.
+    ``shard_ids`` restricts the read to routed shards.
+
+    Same two sites as ``topk``: on the driver, only the query terms'
+    docs payloads are decoded from the cached per-shard datasets, and
+    the answer is a LocalRelation (no job); otherwise (threshold -1) a
+    ``tf_postings`` decode job with a distinct / count-distinct and the
+    tombstone anti-join."""
+    terms = sorted(set(terms))
+    ids = _driver_match_ids(spark, index_dir, terms, conjunctive, shard_ids)
+    if ids is not None:
+        return spark.createDataFrame(pa.table({"doc_id": pa.array(ids, pa.int64())}))
+    return _spark_match_docs(spark, index_dir, terms, conjunctive, shard_ids)
+
+
+def _spark_match_docs(
+    spark: SparkSession, index_dir: str, terms: list[str], conjunctive: bool,
+    shard_ids: list[int] | None,
+) -> DataFrame:
+    from .deletes import filter_deleted
+    from .phrase import tf_postings
+
+    tp = tf_postings(spark, index_dir, terms, shards=shard_ids)
+    if conjunctive and len(terms) > 1:
+        hits = (
+            tp.groupBy("doc_id")
+            .agg(F.count_distinct("term").alias("_nt"))
+            .filter(F.col("_nt") == F.lit(len(terms)))
+            .select("doc_id")
+        )
+    else:
+        hits = tp.select("doc_id").distinct()
+    return filter_deleted(spark, index_dir, hits)
+
+
+def match_count(
+    spark: SparkSession, index_dir: str, terms: list[str],
+    conjunctive: bool = False, shard_ids: list[int] | None = None,
+) -> DataFrame:
+    """One-row ``n``: the size of ``match_docs``. On the driver site it
+    is a LocalRelation, so a warm small index counts with no Spark job."""
+    terms = sorted(set(terms))
+    ids = _driver_match_ids(spark, index_dir, terms, conjunctive, shard_ids)
+    if ids is not None:
+        return spark.createDataFrame(pa.table({"n": pa.array([ids.size], pa.int64())}))
+    return _spark_match_docs(spark, index_dir, terms, conjunctive, shard_ids).agg(
+        F.count(F.lit(1)).alias("n")
+    )
 
 
 def topk_merged(

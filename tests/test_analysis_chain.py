@@ -331,8 +331,8 @@ def test_dsl_aggs_fastpath_uses_index_chain(spark, chain_idx_ro):
 
 
 def test_dsl_match_and_operator_chain_consistent(spark, chain_idx_ro):
-    """operator=and routes to the scan fallback even with an index —
-    it must apply the index's chain so or/and differ only by the
+    """operator=and is index-served: the conjunction (wand.match_docs)
+    analyzes with the index's chain, so or/and differ only by the
     conjunction, not by analyzer grammar."""
     from es_loaders_spark import dsl
 

@@ -173,6 +173,27 @@ def test_extraction_single_scan_matches_split(spark):
     assert got2 == got
 
 
+def test_python_source_check_reads_plan_nodes_not_names(spark, tmp_path):
+    """A table-backed frame whose column name or literal spells an opaque
+    node name is not opaque; a Python node under other operators is."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from es_loaders_spark.extract import _has_python_source
+
+    path = str(tmp_path / "t")
+    spark.range(4).write.parquet(path)
+    table = spark.read.parquet(path)
+    assert not _has_python_source(table.withColumn("MapInPandas", F.lit(1)))
+    assert not _has_python_source(table.select(F.lit("MapInArrow").alias("x")))
+
+    def ident(batches):
+        yield from (pd.DataFrame({"id": b["id"]}) for b in batches)
+
+    nested = table.mapInPandas(ident, "id long").filter("id > 0").join(table, "id")
+    assert _has_python_source(nested)
+
+
 def test_tracked_persist_pool_dedupes_and_caps(spark, docs):
     from es_loaders_spark import querystring as qs
 

@@ -117,11 +117,28 @@ def test_dsl_search_routing(spark, documents, routed_idx):
             for r in topk(spark, routed_idx, Q, k=10,
                           routing="src1").collect()]
     assert got == want
+    # operator=and and filtered matches are index-served too: routed ==
+    # unrouted restricted to the routed shard, with identical scores
+    source = dict(documents.select("doc_id", "source").collect())
+    sid = routing_shard_id("src1", 8)
+    for query in (
+        {"match": {"text": {"query": "spark query", "operator": "and"}}},
+        {"bool": {"must": {"match": {"text": Q}},
+                  "filter": {"term": {"lang": "en"}}}},
+    ):
+        unrouted = [(r.doc_id, r.score) for r in dsl.search(
+            spark, documents, {"query": query, "size": 10**6},
+            index_dir=routed_idx).collect()]
+        routed = [(r.doc_id, r.score) for r in dsl.search(
+            spark, documents, {"query": query, "size": 5},
+            index_dir=routed_idx, routing="src1").collect()]
+        assert routed == [h for h in unrouted
+                          if routing_shard_id(source[h[0]], 8) == sid][:5]
+        assert routed, query
     # refusals: non-served shapes must not silently scan all shards
     with pytest.raises(ValueError, match="routing"):
         dsl.search(spark, documents, {
-            "query": {"match": {"text": {"query": Q, "operator": "and"}}},
-            "size": 5,
+            "query": {"match": {"lang": "en"}}, "size": 5,
         }, index_dir=routed_idx, routing="src1")
     with pytest.raises(ValueError, match="routing"):
         dsl.search(spark, documents, {
