@@ -965,7 +965,7 @@ def _driver_match_ids(
     if not warm.driver_side(spark):
         return None
     flt = pads.field("term").isin(terms)
-    per_term: dict[str, list[np.ndarray]] = {}
+    found_docs, found_terms = [np.empty(0, np.int64)], [np.empty(0, object)]
     for shard, (live, _) in warm.live_shards(shard_ids).items():
         for ds in warm.shard_datasets(shard):
             t = ds.to_table(columns=["term", "min_doc", "docs_payload"], filter=flt)
@@ -974,18 +974,18 @@ def _driver_match_ids(
             docs, off = decode_doc_ids_flat_batch(
                 t.column("min_doc").to_numpy(), t.column("docs_payload").to_pylist()
             )
-            term_of = np.repeat(
-                t.column("term").to_numpy(zero_copy_only=False), np.diff(off)
-            )
             keep = np.isin(docs, live)
-            for term in np.unique(term_of[keep]):
-                per_term.setdefault(term, []).append(docs[keep & (term_of == term)])
-    sets = [np.unique(np.concatenate(v)) for v in per_term.values()]
-    if not sets or (conjunctive and len(sets) < len(terms)):
-        return np.empty(0, dtype=np.int64)
-    if conjunctive:
-        return functools.reduce(np.intersect1d, sets)
-    return np.unique(np.concatenate(sets))
+            found_docs.append(docs[keep])
+            found_terms.append(np.repeat(
+                t.column("term").to_numpy(zero_copy_only=False), np.diff(off)
+            )[keep])
+    docs = np.concatenate(found_docs)
+    if not conjunctive:
+        return np.unique(docs)
+    term_of = np.concatenate(found_terms)
+    return functools.reduce(
+        np.intersect1d, [np.unique(docs[term_of == t]) for t in terms]
+    )
 
 
 def match_docs(

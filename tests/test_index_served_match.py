@@ -25,21 +25,17 @@ from es_loaders_spark.wand import _WarmIndex, evict_index, match_docs, warm_inde
 
 THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
 Q = "spark query data table"
-FILTERS = {
-    "term": {"term": {"lang": "en"}},
-    "range": {"range": {"n_chars": {"gte": 300}}},
-    "must_not": None,  # bool.must_not, built in filtered()
-    "nothing": {"term": {"lang": "xx"}},
+FILTERS = {  # the bool clauses next to the scoring match
+    "term": {"filter": {"term": {"lang": "en"}}},
+    "range": {"filter": {"range": {"n_chars": {"gte": 300}}}},
+    "must_not": {"must_not": {"term": {"lang": "en"}}},
+    "nothing": {"filter": {"term": {"lang": "xx"}}},
 }
 
 
 def filtered(text, name, operator="or", size=10) -> dict:
     match = {"match": {"text": {"query": text, "operator": operator}}}
-    if name == "must_not":
-        clause = {"must": match, "must_not": {"term": {"lang": "en"}}}
-    else:
-        clause = {"must": match, "filter": FILTERS[name]}
-    return {"query": {"bool": clause}, "size": size}
+    return {"query": {"bool": {"must": match, **FILTERS[name]}}, "size": size}
 
 
 def rows(df) -> list[tuple]:
