@@ -221,28 +221,16 @@ def main(argv: list[str] | None = None) -> None:
 
             index_dir = resolve_alias(args.alias_registry, args.index_dir)
         batch = {f"q{i}": text for i, text in enumerate(args.query)}
-        if args.routing:
-            # routed queries serve per-query through topk (the batch path
-            # melts all queries into one job over every shard); no early
-            # return — flow must reach the shared spark.stop() below
-            from .wand import topk
-
-            for qid, text in batch.items():
-                for rank, r in enumerate(
-                    topk(spark, index_dir, text, k=args.k,
-                         routing=args.routing).collect(), 1
-                ):
-                    print(json.dumps({
-                        "query": text, "rank": rank,
-                        "doc_id": r["doc_id"], "score": r["score"],
-                        "routing": args.routing,
-                    }))
-        else:
-            rows = topk_batch(spark, index_dir, batch, k=args.k).collect()
-            for r in rows:
-                print(json.dumps({
-                    "query": batch[r["query_id"]], "rank": r["rank"],
-                    "doc_id": r["doc_id"], "score": r["score"]}))
+        order = {qid: i for i, qid in enumerate(batch)}
+        rows = topk_batch(
+            spark, index_dir, batch, k=args.k, routing=args.routing
+        ).collect()
+        for r in sorted(rows, key=lambda r: (order[r["query_id"]], r["rank"])):
+            hit = {"query": batch[r["query_id"]], "rank": r["rank"],
+                   "doc_id": r["doc_id"], "score": r["score"]}
+            if args.routing:
+                hit["routing"] = args.routing
+            print(json.dumps(hit))
     elif args.cmd == "phrase":
         from .phrase import phrase_docs
 

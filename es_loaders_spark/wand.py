@@ -5,29 +5,35 @@ reference issues (public ES/Lucene execution model; SURVEY §2.6 T3,
 §3.3): each shard computes a local top-k with block-max pruning, a
 coordinator merge takes the global top-k.
 
-Serving (``topk(mode="serve")``) has two execution sites for the SAME
-per-shard body, ``_score_shard`` (direct parquet read of the query
-terms' posting rows → block-max kernel over the shard's live doclens):
+``topk`` and ``topk_batch`` share ONE per-shard body, ``_score_shard``:
+a direct parquet read of the union of the queries' terms' posting rows,
+then the block-max kernel per query over the shard's live doclens, the
+queries sharing the shard's term cursors and so their decoded blocks.
+The query terms' dfs come from ``terms/`` with a term-filtered pyarrow
+scan on the driver (no Spark job). The body runs on two sites:
 
 - **driver**: when the warm index's live doclens fit Spark's own
   "small enough to hold whole" rule — 16 B/row × n_docs within
   ``spark.sql.autoBroadcastJoinThreshold`` — and the index files are
   visible from the driver, ``_WarmIndex`` keeps per-shard sorted
-  ``(doc_id, dl)`` arrays on the driver, reads the query terms' dfs
-  from ``terms/`` with a filtered pyarrow scan, and ``topk`` loops over
-  the shards in-process: no Spark job at all,
-  where a Python-UDF job alone costs several hundred ms.
+  ``(doc_id, dl)`` arrays on the driver and ``topk`` loops over the
+  shards in-process: no Spark job at all, where a Python-UDF job alone
+  costs several hundred ms.
 - **executors**: otherwise one ``mapInPandas`` stage over the cached,
-  shard-partitioned doclens runs ``_score_shard`` per shard task.
+  shard-partitioned doclens runs ``_score_shard`` per shard. A
+  ``topk_batch`` (msearch) always runs here; a per-query window then
+  takes each query's global top-k.
 
-Both paths round in Spark: ``F.round`` renders the double through the
-JVM's decimal conversion (JDK 17's ``Double.toString`` is not the
-shortest repr), so a numpy HALF_UP emulation is not provably identical;
-on the driver path the round runs over a LocalRelation, which the
-optimizer folds without a job. Setting the threshold to -1 forces the
-executor path (its result is then rank- and score-identical —
-pytest-asserted). ``mode="cogroup"``, ``topk_merged`` and ``topk_batch``
-always run as Spark jobs. The DSL's match leaves use the same gate:
+Both sites need the index on storage that the driver and every
+executor can see (POSIX paths), as the build already does. Both round
+in Spark: ``F.round`` renders the double through the JVM's decimal
+conversion (JDK 17's ``Double.toString`` is not the shortest repr), so
+a numpy HALF_UP emulation is not provably identical; on the driver
+path the round runs over a LocalRelation, which the optimizer folds
+without a job. Setting the threshold to -1 forces the executor site
+(its result is then rank- and score-identical — pytest-asserted).
+``topk_merged`` scores the merged table in a Spark job of its own. The
+DSL's match leaves use the same gate:
 ``topk(allowed=...)`` (filtered and ``operator: "and"`` matches) and
 ``match_docs`` / ``match_count`` (the doc set behind ``dsl.count`` and
 faceted aggs), which on the driver decodes only the query terms' doc-id
@@ -399,16 +405,6 @@ def bmw_topk_cursors(
     return top_docs, top_scores, metrics
 
 
-# columns the scoring kernels need — explicitly selected so the parquet
-# scan never reads the positional payload (phrase-only data; pruning is
-# visible as ReadSchema in .explain)
-_SCORE_COLS = [
-    "shard", "term", "block_id", "min_doc", "max_doc", "n", "max_tf",
-    "min_dl", "docs_payload", "tfs_payload", "sky_tfs_payload",
-    "sky_dls_payload", "gdf",
-]
-
-
 def load_index_meta(spark: SparkSession, index_dir: str):
     # validates the on-disk format version — pre-marker (format-1) payloads
     # must fail loudly here, not silently mis-decode (ADVICE r02)
@@ -422,14 +418,13 @@ class _WarmIndex:
 
     The r02 single-query floor (~1.5 s/query) was dominated by fixed
     per-job work that is identical across queries on the same index:
-    re-reading the doclens and terms parquet AND re-shuffling every
-    doclens row into the cogroup (VERDICT r02 #6). This cache persists
+    re-reading the doclens parquet and re-shuffling every doclens row
+    (VERDICT r02 #6). This cache holds
 
-    - ``dls``: live doclens, repartitioned by shard and persisted — the
-      cogroup's required hash distribution is satisfied by the cached
-      plan's outputPartitioning, so a warm query shuffles ONLY the query
-      terms' posting rows (a few blocks), not the corpus;
-    - ``terms``: the (tiny) term→df table;
+    - ``dls_serve``: the live doclens, one partition per shard
+      (``repartition(n_shards, "shard")``) and persisted — the one
+      DataFrame the cache pins; the executor site's ``mapInPandas``
+      stage reads it without a shuffle;
     - ``stats``: parsed stats.json.
 
     Invalidation is by snapshot identity: (stats.json mtime+size, deletes
@@ -455,76 +450,32 @@ class _WarmIndex:
     _MAX_WARM = 8
 
     def __init__(self, spark: SparkSession, index_dir: str, token: tuple):
-        from .build import read_generations
+        from .build import generation_dirs, read_generations
+        from .catalog import ManifestCatalog
         from .deletes import filter_deleted
 
         self.token = token
+        self.index_dir = index_dir
         self.stats = load_index_meta(spark, index_dir)
-        live = filter_deleted(
-            spark, index_dir, read_generations(spark, index_dir, "doclens")
-        )
-        # TWO cached layouts of the (small) doclens table, one per workload:
-        # - serve: FEW, FAT partitions — for a warm interactive query the
-        #   task launch + Python round-trip dominate the sub-ms per-shard
-        #   kernel, so fewer tasks win (measured local[32]/32 shards:
-        #   8 parts ≈ 0.48 s/query vs 0.75 s at 32). Env-tunable; on a
-        #   multi-executor cluster set ≈ the executor count.
-        # - batch (cogroup): one partition per shuffle slot, so a 50-query
-        #   batch fans across every core (capping THIS at 8 cost 2.7× on
-        #   batch100 at local[32]).
-        from .catalog import ManifestCatalog
-
         props = ManifestCatalog(index_dir).load("shards").props
-        serve_parts = max(
-            1,
-            int(
-                os.environ.get(
-                    "SPARK_GRAFT_SERVE_PARTITIONS",
-                    min(int(props.get("n_shards", 8)) or 8, 8),
-                )
-            ),
-        )
-        batch_parts = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1)
         self.n_shards = int(props.get("n_shards") or 0)
         # shard-dir roots per generation, for the serving path's direct
         # parquet reads (Lucene-style: the shard searcher opens its own
         # segment files)
-        from .build import generation_dirs
-
         self.gen_dirs = generation_dirs(index_dir, "shards")
-        self.dls_serve = (
-            live.repartition(serve_parts, "shard").persist()
+        live = filter_deleted(
+            spark, index_dir, read_generations(spark, index_dir, "doclens")
         )
-        # batch (cogroup) layout built LAZILY on the first batch query —
-        # a cold interactive query pays only the serve layout. Pre-sorted
-        # by the cogroup key: the cached plan's outputPartitioning AND
-        # outputOrdering both satisfy the cogroup's requirements, so a
-        # warm batch neither shuffles nor re-sorts the corpus doclens.
-        self._live = live
-        self._batch_parts = batch_parts
-        self._dls = None
-        self.terms = (
-            spark.read.parquet(os.path.join(index_dir, "terms")).persist()
-        )
-        # driver-side doclens: taken with the SAME action that
-        # materializes the serve cache, so warm-up runs no extra job
-        self.index_dir = index_dir
+        self.dls_serve = live.repartition(max(self.n_shards, 1), "shard").persist()
         self.shard_dls: dict[int, tuple[np.ndarray, np.ndarray]] | None = None
         self._terms_ds = None
         self._datasets: dict[int, list] = {}
+        # driver-side doclens: taken with the SAME action that
+        # materializes the serve cache, so warm-up runs no extra job
         if _driver_serves(spark, int(self.stats["n_docs"]), self.gen_dirs):
             self._load_driver_side()
         else:
             self.dls_serve.count()  # materialize now; queries hit the cache
-        self.terms.count()
-        # plan-only reuse (NOT persisted data): keeps the resolved file
-        # index + schema so a warm query skips the per-call parquet
-        # listing/footer jobs; the scan itself stays on disk with term
-        # pushdown (the index is served from the OS page cache, like
-        # Lucene segment files)
-        self.shards = read_generations(spark, index_dir, "shards").select(
-            *_SCORE_COLS[:-1]
-        )
 
     def _load_driver_side(self) -> None:
         dls = self.dls_serve.toPandas()
@@ -541,10 +492,11 @@ class _WarmIndex:
             for a, b in zip(cuts[:-1], cuts[1:]) if a < b
         }
 
-    def term_dfs(self, terms: list[str]) -> dict[str, int]:
-        """Global dfs of the query terms, by a term-filtered pyarrow read
-        of ``terms/`` (row-group pushdown, no Spark job): the driver keeps
-        no resident term map, whose size would grow with the vocabulary."""
+    def term_idfs(self, terms: list[str]) -> dict[str, float]:
+        """Global idfs of the indexed ones among ``terms``, from a
+        term-filtered pyarrow read of ``terms/`` (row-group pushdown, no
+        Spark job): the driver keeps no resident term map, whose size
+        would grow with the vocabulary."""
         if self._terms_ds is None:
             self._terms_ds = pads.dataset(
                 os.path.join(self.index_dir, "terms"), format="parquet"
@@ -552,7 +504,11 @@ class _WarmIndex:
         t = self._terms_ds.to_table(
             columns=["term", "df"], filter=pads.field("term").isin(terms)
         )
-        return dict(zip(t.column("term").to_pylist(), t.column("df").to_pylist()))
+        n_docs = int(self.stats["n_docs"])
+        return {
+            term: idf(n_docs, df_)
+            for term, df_ in zip(t.column("term").to_pylist(), t.column("df").to_pylist())
+        }
 
     def driver_side(self, spark: SparkSession) -> bool:
         """Whether ``topk`` serves this index on the driver right now: the
@@ -592,27 +548,15 @@ class _WarmIndex:
             stamp(os.path.join(index_dir, "deletes", "_manifest.json")),
         )
 
-    @property
-    def dls(self):
-        if self._dls is None:
-            self._dls = (
-                self._live.repartition(self._batch_parts, "shard")
-                .sortWithinPartitions("shard")
-                .persist()
-            )
-            self._dls.count()
-        return self._dls
-
     def _unpersist(self) -> None:
-        for df in (self._dls, self.dls_serve, self.terms):
-            unpersist_quietly(df)
+        unpersist_quietly(self.dls_serve)
 
     @classmethod
     def get(cls, spark: SparkSession, index_dir: str) -> "_WarmIndex":
         key = os.path.abspath(index_dir)
         token = cls._snapshot_token(index_dir)
         cached = cls._by_dir.get(key)
-        if cached is not None and cached.token == token and is_live(cached.terms):
+        if cached is not None and cached.token == token and is_live(cached.dls_serve):
             cls._by_dir[key] = cls._by_dir.pop(key)  # LRU touch (dict order)
             return cached
         if cached is not None:
@@ -659,25 +603,33 @@ def _shard_datasets(gen_dirs: list[str], shard: int) -> list:
 
 
 def _score_shard(
-    datasets: list, term_idfs: dict[str, float], doc_sorted: np.ndarray,
-    dl_sorted: np.ndarray, avgdl: float, k: int,
-) -> tuple[np.ndarray, np.ndarray]:
-    """One shard's block-max top-k — the body both serve execution sites
-    (driver loop, ``mapInPandas`` task) call. Reads the query terms'
-    posting rows straight from the shard's parquet (term filter pushed
-    to row-group statistics), then runs the kernel over the shard's
-    sorted live doclens. Returns (doc_ids, raw float64 scores)."""
+    datasets: list, term_idfs: dict[str, float], queries: dict[str, list[str]],
+    doc_sorted: np.ndarray, dl_sorted: np.ndarray, avgdl: float, k: int,
+) -> dict[str, tuple[np.ndarray, np.ndarray]]:
+    """One shard's block-max top-k of each query — the body both serve
+    execution sites (driver loop, ``mapInPandas`` task) call. Reads the
+    posting rows of ``term_idfs``' terms (the union of the queries'
+    indexed terms) once, straight from the shard's parquet (term filter
+    pushed to row-group statistics); the queries (id → sorted terms)
+    then share the shard's term cursors, so a term several queries hold
+    decodes each block once. Returns id → (doc_ids, raw float64 scores)
+    for the queries with a hit among the shard's sorted live doclens."""
     flt = pads.field("term").isin(sorted(term_idfs))
     tables = [d.to_table(columns=_SERVE_COLS, filter=flt) for d in datasets]
     tables = [t for t in tables if t.num_rows]
     if not tables:
-        return np.empty(0, dtype=np.int64), np.empty(0)
+        return {}
     blocks = term_blocks_from_flat(
         pa.concat_tables(tables, promote_options="permissive")
     )
-    cursors = [_TermCursor(b, term_idfs[t], avgdl) for t, b in blocks.items()]
-    docs, scores, _ = bmw_topk_cursors(cursors, doc_sorted, dl_sorted, avgdl, k)
-    return docs, scores
+    cursors = {t: _TermCursor(b, term_idfs[t], avgdl) for t, b in blocks.items()}
+    found = {}
+    for qid, terms in queries.items():
+        qc = [cursors[t] for t in terms if t in cursors]
+        docs, scores, _ = bmw_topk_cursors(qc, doc_sorted, dl_sorted, avgdl, k)
+        if docs.size:
+            found[qid] = (docs, scores)
+    return found
 
 
 def _local_topk(spark: SparkSession, docs: np.ndarray, scores: np.ndarray,
@@ -715,7 +667,7 @@ def warm_index(spark: SparkSession, index_dir: str) -> None:
 
 def evict_index(index_dir: str) -> None:
     """Release the serving cache for an index — call before dropping its
-    directory. Unpersists the cached doclens/terms DataFrames and forgets
+    directory. Unpersists the cached doclens DataFrame and forgets
     the entry, so a dead index never pins cluster memory until LRU
     pressure (and a dropped-then-queried path can't try to recompute
     evicted cached partitions from deleted files). No-op if not warm."""
@@ -747,19 +699,38 @@ def _collect_ids(df: DataFrame) -> np.ndarray:
     return np.unique(ids)
 
 
+def _routed_shards(warm: "_WarmIndex", routing: list | str | None) -> list[int] | None:
+    """ES routed search: the routing keys' shard ids (None: unrouted).
+
+    Candidates come only from those shards' doclens/posting files (the
+    serve sites literally never open the other shard=K dirs — the
+    ES/Lucene shard-pruning contract at 10^12 docs); scores stay GLOBAL
+    (stats.json n/avgdl + the corpus-wide terms table), so a routed hit
+    scores identically to the unrouted query — a documented improvement
+    over ES's per-shard-dfs default. As in ES, the routed search sees
+    the WHOLE shard: other routing keys hashing to the same shard remain
+    visible."""
+    if routing is None:
+        return None
+    from .build import routing_shard_ids
+
+    return routing_shard_ids(
+        warm.index_dir, routing, stats=warm.stats, n_shards=warm.n_shards
+    )
+
+
 def topk(
     spark: SparkSession, index_dir: str, query: str, k: int = 10,
-    mode: str = "serve",
     routing: list | str | None = None,
     allowed: DataFrame | None = None,
 ) -> DataFrame:
     """BM25 top-k (doc_id, score) over the sharded compressed index.
 
-    ``mode="serve"`` (default): the interactive path. Each shard's
-    searcher reads its own posting rows for the query terms directly
-    from the partitioned parquet (pyarrow, term-filtered with row-group
-    pushdown) and runs the block-max kernel — the Lucene/ES serving
-    architecture. Where that runs depends on the warm index:
+    Each shard's searcher reads its own posting rows for the query terms
+    directly from the partitioned parquet (pyarrow, term-filtered with
+    row-group pushdown) and runs the block-max kernel — the Lucene/ES
+    serving architecture, as a batch of one of ``topk_batch``'s body.
+    Where that runs depends on the warm index:
 
     - small index (16 B × n_docs within
       ``spark.sql.autoBroadcastJoinThreshold``) visible from the driver:
@@ -770,12 +741,8 @@ def topk(
       doclens, no shuffle; warm latency is the Spark job floor.
 
     Both sites round with Spark's ``F.round`` and return identical
-    answers.
-
-    ``mode="cogroup"``: the batch-analytics path — Catalyst parquet scan
-    with pushed term filter, broadcast term stats, cogroup with the
-    cached doclens (only the query terms' posting rows shuffle), kernel,
-    TakeOrderedAndProject. Rank-identical to serve (pytest-asserted).
+    answers. ``routing`` restricts the search to the routing keys'
+    shards (``_routed_shards``).
 
     ``allowed``: a relation with a ``doc_id`` column that restricts the
     candidates (ES filter context — ``dsl.search`` passes a match's
@@ -783,39 +750,24 @@ def topk(
     the driver the ids are collected once (one job, none for a
     LocalRelation) and mask each shard's live doclens before the kernel,
     which skips docs missing from them like tombstones; block-max bounds
-    stay upper bounds on a subset, so the top-k is exact. The Spark
-    paths semi-join it into the cached doclens.
+    stay upper bounds on a subset, so the top-k is exact. The executor
+    site semi-joins it into the cached doclens.
     """
     warm = _WarmIndex.get(spark, index_dir)
-    stats = warm.stats
-    terms = _query_terms(stats, query)
+    terms = _query_terms(warm.stats, query)
     if not terms:
+        return spark.createDataFrame([], "doc_id long, score double")
+    shard_ids = _routed_shards(warm, routing)
+    term_idfs = warm.term_idfs(terms)
+    if not term_idfs:
         return spark.createDataFrame([], "doc_id long, score double")
     if allowed is not None:
         allowed = allowed.select("doc_id")
-    n_docs = int(stats["n_docs"])
-    avgdl = float(stats["avgdl"])
+    queries = {query: terms}
 
-    shard_ids: list[int] | None = None
-    if routing is not None:
-        # ES routed search: prune to the routing keys' shards. Candidates
-        # come only from those shards' doclens/posting files (serve mode
-        # literally never opens the other shard=K dirs — the ES/Lucene
-        # shard-pruning contract at 10^12 docs); scores stay GLOBAL
-        # (stats.json n/avgdl + the corpus-wide terms table), so a routed
-        # hit scores identically to the unrouted query — a documented
-        # improvement over ES's per-shard-dfs default. As in ES, the
-        # routed search sees the WHOLE shard: other routing keys hashing
-        # to the same shard remain visible.
-        from .build import routing_shard_ids
-
-        shard_ids = routing_shard_ids(
-            index_dir, routing, stats=stats, n_shards=warm.n_shards
-        )
-
-    if mode == "serve" and warm.driver_side(spark):
-        term_idfs = {t: idf(n_docs, df_) for t, df_ in warm.term_dfs(terms).items()}
-        shard_dls = warm.live_shards(shard_ids) if term_idfs else {}
+    if warm.driver_side(spark):
+        avgdl = float(warm.stats["avgdl"])
+        shard_dls = warm.live_shards(shard_ids)
         if allowed is not None and shard_dls:
             ids = _collect_ids(allowed)
             shard_dls = {
@@ -824,9 +776,12 @@ def topk(
                 if (keep := np.isin(doc, ids, assume_unique=True)).any()
             }
         found = [
-            _score_shard(warm.shard_datasets(shard), term_idfs, doc_sorted,
-                         dl_sorted, avgdl, k)
+            hit
             for shard, (doc_sorted, dl_sorted) in shard_dls.items()
+            for hit in _score_shard(
+                warm.shard_datasets(shard), term_idfs, queries, doc_sorted,
+                dl_sorted, avgdl, k,
+            ).values()
         ]
         return _local_topk(
             spark,
@@ -835,90 +790,43 @@ def topk(
             k,
         )
 
-    if mode == "serve":
-        term_dfs = {
-            r["term"]: int(r["df"])
-            for r in warm.terms.filter(F.col("term").isin(terms)).collect()
-        }
-        if not term_dfs:
-            return spark.createDataFrame([], "doc_id long, score double")
-        src = warm.dls_serve
-        if shard_ids is not None:
-            # filter the cached doclens to the routed shards; the serving
-            # fn below then only opens those shards' posting dirs
-            src = src.filter(F.col("shard").isin(shard_ids))
-        if allowed is not None:
-            # a task may then hold part of a shard's docs: its top-k of
-            # that part is exact, and the global merge below is too
-            src = src.join(allowed, "doc_id", "left_semi")
-        local = src.mapInPandas(
-            _serve_partition_fn(warm.gen_dirs, term_dfs, n_docs, avgdl, k),
-            "doc_id long, score double",
-        )
-        return (
-            local.select(
-                "doc_id", F.round(F.col("score"), SCORE_DECIMALS).alias("score")
-            )
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-
-    # global df rides into the shard kernels as a broadcast-joined column
-    # (`gdf`) — no separate driver round-trip job for term stats
-    tdf = warm.terms.filter(F.col("term").isin(terms)).withColumnRenamed("df", "gdf")
-    idx = (
-        warm.shards.filter(F.col("term").isin(terms))
-        .join(F.broadcast(tdf), "term")
-        .select(*_SCORE_COLS)
-    )
-    # warm cached doclens: pre-partitioned by shard, so the cogroup below
-    # shuffles only the query terms' posting rows
-    dls = warm.dls
-    if shard_ids is not None:
-        # routed: the posting scan's shard predicate reaches the
-        # partitioned parquet as a PartitionFilter (shard=K dirs pruned);
-        # the doclens side filters the warm cache in place
-        idx = idx.filter(F.col("shard").isin(shard_ids))
-        dls = dls.filter(F.col("shard").isin(shard_ids))
-    if allowed is not None:
-        dls = dls.join(allowed, "doc_id", "left_semi")
-
-    def score_shard(key, idx_pdf: pd.DataFrame, dl_pdf: pd.DataFrame) -> pd.DataFrame:
-        if idx_pdf.empty or dl_pdf.empty:
-            return pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
-            )
-        order = np.argsort(dl_pdf["doc_id"].to_numpy())
-        doc_sorted = dl_pdf["doc_id"].to_numpy(dtype=np.int64)[order]
-        dl_sorted = dl_pdf["dl"].to_numpy(dtype=np.int64)[order]
-        term_idfs = {
-            t: idf(n_docs, int(g))
-            for t, g in idx_pdf.groupby("term")["gdf"].first().items()
-        }
-        term_blocks = term_blocks_from_flat(idx_pdf)
-        docs, scores, _ = bmw_topk_kernel(
-            term_blocks, term_idfs, doc_sorted, dl_sorted, avgdl, k
-        )
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    local = (
-        idx.groupBy("shard")
-        .cogroup(dls.groupBy("shard"))
-        .applyInPandas(score_shard, "doc_id long, score double")
-    )
     return (
-        local.select("doc_id", F.round(F.col("score"), SCORE_DECIMALS).alias("score"))
+        _executor_candidates(warm, term_idfs, queries, k, shard_ids, allowed)
+        .select("doc_id", "score")
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
 
 
-def _serve_partition_fn(gen_dirs: list[str], term_dfs: dict[str, int],
-                        n_docs: int, avgdl: float, k: int):
+def _executor_candidates(
+    warm: "_WarmIndex", term_idfs: dict[str, float],
+    queries: dict[str, list[str]], k: int,
+    shard_ids: list[int] | None = None, allowed: DataFrame | None = None,
+) -> DataFrame:
+    """Every shard's top-k of each query as (query_id, doc_id, rounded
+    score): ONE ``mapInPandas`` stage over the warm shard-partitioned
+    doclens. Routed (``shard_ids``) tasks only open those shards'
+    posting dirs."""
+    src = warm.dls_serve
+    if shard_ids is not None:
+        src = src.filter(F.col("shard").isin(shard_ids))
+    if allowed is not None:
+        # a task may then hold part of a shard's docs: its top-k of
+        # that part is exact, and the global merge is too
+        src = src.join(allowed, "doc_id", "left_semi")
+    return src.mapInPandas(
+        _serve_partition_fn(
+            warm.gen_dirs, term_idfs, queries, float(warm.stats["avgdl"]), k
+        ),
+        "query_id string, doc_id long, score double",
+    ).select("query_id", "doc_id", F.round("score", SCORE_DECIMALS).alias("score"))
+
+
+def _serve_partition_fn(gen_dirs: list[str], term_idfs: dict[str, float],
+                        queries: dict[str, list[str]], avgdl: float, k: int):
     """Per-partition serving task: group the cached doclens rows by
     shard and run ``_score_shard`` for each. Candidate docs absent from
     the live doclens are skipped by the kernel (tombstones)."""
-    term_idfs = {t: idf(n_docs, df_) for t, df_ in term_dfs.items()}
 
     def fn(batches):
         chunks = list(batches)
@@ -930,23 +838,27 @@ def _serve_partition_fn(gen_dirs: list[str], term_dfs: dict[str, int],
         # serving does direct POSIX reads of the index files (the Lucene
         # model: each searcher opens its local segments). If NO generation
         # root is visible from this task, the index path isn't shared
-        # storage — fail loudly instead of silently returning empty top-k
-        # (mode="cogroup" serves non-POSIX stores through Catalyst scans).
+        # storage — fail loudly instead of silently returning empty top-k.
         if not any(os.path.exists(root) for root in gen_dirs):
             raise FileNotFoundError(
                 f"index generations not visible from executor: {gen_dirs}; "
-                "serve mode needs the index on shared storage — use "
-                'topk(..., mode="cogroup") otherwise'
+                "serving needs the index on storage that the driver and "
+                "every executor can see"
             )
+        frames = []
         for shard, g in pdf.groupby("shard", sort=False):
             order = np.argsort(g["doc_id"].to_numpy())
-            docs, scores = _score_shard(
-                _shard_datasets(gen_dirs, shard), term_idfs,
+            found = _score_shard(
+                _shard_datasets(gen_dirs, shard), term_idfs, queries,
                 g["doc_id"].to_numpy(dtype=np.int64)[order],
                 g["dl"].to_numpy(dtype=np.int64)[order], avgdl, k,
             )
-            if docs.size:
-                yield pd.DataFrame({"doc_id": docs, "score": scores})
+            frames += [
+                pd.DataFrame({"query_id": qid, "doc_id": docs, "score": scores})
+                for qid, (docs, scores) in found.items()
+            ]
+        if frames:  # one Arrow batch per task, not one per query and shard
+            yield pd.concat(frames, ignore_index=True)
 
     return fn
 
@@ -1068,18 +980,12 @@ def topk_merged(
     terms = _query_terms(stats, query)
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
-    n_docs = int(stats["n_docs"])
     avgdl = float(stats["avgdl"])
     props = ManifestCatalog(index_dir).load("merged").props
-    span = int(props.get("span", max(1, n_docs)))
-
-    term_dfs = {
-        r["term"]: int(r["df"])
-        for r in warm.terms.filter(F.col("term").isin(terms)).collect()
-    }
-    if not term_dfs:
+    span = int(props.get("span", max(1, int(stats["n_docs"]))))
+    term_idfs = warm.term_idfs(terms)
+    if not term_idfs:
         return spark.createDataFrame([], "doc_id long, score double")
-    term_idfs = {t: idf(n_docs, d) for t, d in term_dfs.items()}
 
     merged = (
         spark.read.parquet(os.path.join(index_dir, "merged"))
@@ -1095,7 +1001,7 @@ def topk_merged(
             ),
         )
     )
-    dls = warm.dls.select(
+    dls = warm.dls_serve.select(
         "doc_id", "dl", (F.col("doc_id") / F.lit(span)).cast("long").alias("rng")
     )
 
@@ -1131,81 +1037,41 @@ def topk_batch(
     index_dir: str,
     queries: dict[str, str] | list[str],
     k: int = 10,
+    routing: list | str | None = None,
 ) -> DataFrame:
-    """Batched multi-query BM25 top-k — ONE distributed pass for N queries.
+    """Batched multi-query BM25 top-k — ONE Spark stage for N queries.
 
     The Spark answer to the reference's ES ``msearch`` batching (SURVEY
     §2.5 A9, mira_loader.py:267-300): the 7-queries-one-round-trip trick
-    becomes N queries in one cogroup job. Per-shard, all queries share
-    one block-decode cache (a hot term decodes once for the whole batch),
-    then a window per query_id takes the global top-k.
+    becomes N queries in one ``mapInPandas`` stage over the warm
+    doclens, always on the executor site. Each shard runs ``topk``'s
+    body, ``_score_shard``, over the whole batch: it reads the union of
+    the queries' posting rows once and the queries share one
+    block-decode cache (a hot term decodes once for the whole batch);
+    then a window per query_id takes the global top-k. Each query's
+    answer equals its own ``topk``. ``routing`` restricts every query
+    to the routing keys' shards, as in ``topk``.
 
     Returns (query_id, rank, doc_id, score).
     """
     if isinstance(queries, list):
         queries = {f"q{i}": q for i, q in enumerate(queries)}
+    schema = "query_id string, rank int, doc_id long, score double"
     warm = _WarmIndex.get(spark, index_dir)
-    stats = warm.stats
-    n_docs = int(stats["n_docs"])
-    avgdl = float(stats["avgdl"])
-    qterms = {qid: _query_terms(stats, text) for qid, text in queries.items()}
+    qterms = {qid: _query_terms(warm.stats, text) for qid, text in queries.items()}
     all_terms = sorted({t for ts in qterms.values() for t in ts})
     if not all_terms:
-        return spark.createDataFrame([], "query_id string, rank int, doc_id long, score double")
-    from .build import read_generations
-
-    tdf = warm.terms.filter(F.col("term").isin(all_terms)).withColumnRenamed("df", "gdf")
-    idx = (
-        warm.shards.filter(F.col("term").isin(all_terms))
-        .join(F.broadcast(tdf), "term")
-        .select(*_SCORE_COLS)
-    )
-    dls = warm.dls
-
-    def score_shard(key, idx_pdf: pd.DataFrame, dl_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="object"),
-                "doc_id": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            }
-        )
-        if idx_pdf.empty or dl_pdf.empty:
-            return empty
-        order = np.argsort(dl_pdf["doc_id"].to_numpy())
-        doc_sorted = dl_pdf["doc_id"].to_numpy(dtype=np.int64)[order]
-        dl_sorted = dl_pdf["dl"].to_numpy(dtype=np.int64)[order]
-        term_idfs = {
-            t: idf(n_docs, int(g))
-            for t, g in idx_pdf.groupby("term")["gdf"].first().items()
-        }
-        cursors = {
-            term: _TermCursor(blocks, term_idfs[term], avgdl)
-            for term, blocks in term_blocks_from_flat(idx_pdf).items()
-            if term in term_idfs
-        }
-        frames = []
-        for qid, terms in qterms.items():
-            qc = [cursors[t] for t in terms if t in cursors]
-            if not qc:
-                continue
-            docs, scores, _ = bmw_topk_cursors(qc, doc_sorted, dl_sorted, avgdl, k)
-            if docs.size:
-                frames.append(pd.DataFrame({"query_id": qid, "doc_id": docs, "score": scores}))
-        return pd.concat(frames, ignore_index=True) if frames else empty
-
-    local = (
-        idx.groupBy("shard")
-        .cogroup(dls.groupBy("shard"))
-        .applyInPandas(score_shard, "query_id string, doc_id long, score double")
-    ).select(
-        "query_id", "doc_id", F.round(F.col("score"), SCORE_DECIMALS).alias("score")
-    )
+        return spark.createDataFrame([], schema)
+    shard_ids = _routed_shards(warm, routing)
+    term_idfs = warm.term_idfs(all_terms)
+    if not term_idfs:
+        return spark.createDataFrame([], schema)
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
-        local.withColumn("rank", F.row_number().over(w))
+        _executor_candidates(warm, term_idfs, qterms, k, shard_ids)
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "doc_id", "score")
     )

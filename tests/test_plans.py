@@ -73,16 +73,19 @@ def test_q1_uses_partial_aggregation(spark, sf_dir):
 
 
 def test_scoring_scan_prunes_positions(spark, documents, tmp_path_factory):
-    """The BM25 scoring path must NOT read pos_payload (phrase-only
-    bytes). Cogroup path: wand's explicit column select reaches the
-    parquet ReadSchema. Serve path: the per-task pyarrow read uses the
-    explicit _SERVE_COLS list, which excludes pos_payload."""
+    """The BM25 scoring paths must NOT read pos_payload (phrase-only
+    bytes). Merged-table path: ``topk_merged``'s explicit column select
+    reaches the ``merged/`` parquet ReadSchema. Serve path: the per-shard
+    pyarrow read uses the explicit _SERVE_COLS list, which excludes
+    pos_payload."""
     from es_loaders_spark.build import build_index
-    from es_loaders_spark.wand import _SERVE_COLS, topk
+    from es_loaders_spark.merge import merge_index
+    from es_loaders_spark.wand import _SERVE_COLS, topk_merged
 
     d = str(tmp_path_factory.mktemp("plan_pos_idx"))
     build_index(spark, documents, d, n_shards=2)
-    plan = explain_str(topk(spark, d, "spark data", k=5, mode="cogroup"))
+    merge_index(spark, d, n_salts=2, n_buckets=4)
+    plan = explain_str(topk_merged(spark, d, "spark data", k=5))
     read_schemas = [
         line for line in plan.splitlines() if "ReadSchema" in line and "docs_payload" in line
     ]

@@ -53,17 +53,29 @@ def test_routed_topk_is_shard_restricted_global_scores(
     """Routed == unrouted restricted to the routing key's shard, with
     IDENTICAL scores (global stats — the whole shard stays visible,
     including other keys hashing to it, exactly ES's semantics)."""
-    full = [(r.doc_id, r.score)
-            for r in topk(spark, routed_idx, Q, k=10**6).collect()]
+    from es_loaders_spark.bm25 import bm25_topk
+    from es_loaders_spark.postings import (
+        corpus_stats, doc_lengths, postings_long, term_df,
+    )
+
+    docs = documents.select("doc_id", "text")
+    p, dl = postings_long(docs), doc_lengths(docs)
+    full = [(r.doc_id, r.score) for r in bm25_topk(
+        spark, p, dl, term_df(p), corpus_stats(dl), Q, k=10**6).collect()]
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     for value in ("src1", "src3"):
         got = [(r.doc_id, r.score)
                for r in topk(spark, routed_idx, Q, k=10,
                              routing=value).collect()]
         assert got == _routed_want(documents, full, value)
-        cg = [(r.doc_id, r.score)
-              for r in topk(spark, routed_idx, Q, k=10, routing=value,
-                            mode="cogroup").collect()]
-        assert cg == got
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            on_executors = [(r.doc_id, r.score)
+                            for r in topk(spark, routed_idx, Q, k=10,
+                                          routing=value).collect()]
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        assert on_executors == got
 
 
 def test_multi_value_routing_unions_shards(spark, documents, routed_idx):
@@ -206,28 +218,27 @@ def test_build_guards(spark, documents, tmp_path):
 
 def test_routed_plans_carry_the_shard_predicate(spark, documents, routed_idx):
     """The deletion test above shows behavior; this pins the MECHANISM:
-    the routed plan filters the doclens source (and, in cogroup mode,
-    the posting scan) on the routed shard id — an implementation that
-    merely tolerated missing shard dirs would show no such predicate."""
+    the routed plan filters the doclens source on the routed shard id —
+    an implementation that merely tolerated missing shard dirs would
+    show no such predicate."""
     from tests.test_plans import explain_str
     from es_loaders_spark.wand import _WarmIndex
 
     sid = routing_shard_id("src1", 8)
-    # serve mode has a Spark plan only on its mapInPandas path (a small
-    # warm index is otherwise served on the driver): force that path here
+    # the serve path has a Spark plan only on its executor site (a small
+    # warm index is otherwise served on the driver): force that site here
     threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        for mode in ("serve", "cogroup"):
-            routed_plan = explain_str(
-                topk(spark, routed_idx, Q, k=5, routing="src1", mode=mode)
-            )
-            plain_plan = explain_str(topk(spark, routed_idx, Q, k=5, mode=mode))
-            assert f"shard#" in routed_plan
-            # the literal routed shard id appears in a filter condition
-            assert f"IN ({sid})" in routed_plan or f"= {sid}" in routed_plan, (
-                mode, routed_plan[:2000])
-            assert f"IN ({sid})" not in plain_plan and f"= {sid}" not in plain_plan
+        routed_plan = explain_str(
+            topk(spark, routed_idx, Q, k=5, routing="src1")
+        )
+        plain_plan = explain_str(topk(spark, routed_idx, Q, k=5))
+        assert f"shard#" in routed_plan
+        # the literal routed shard id appears in a filter condition
+        assert f"IN ({sid})" in routed_plan or f"= {sid}" in routed_plan, (
+            routed_plan[:2000])
+        assert f"IN ({sid})" not in plain_plan and f"= {sid}" not in plain_plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     # the driver path's mechanism: a routed query opens only the routed
@@ -236,6 +247,31 @@ def test_routed_plans_carry_the_shard_predicate(spark, documents, routed_idx):
     topk(spark, routed_idx, Q, k=5, routing="src1").collect()
     warm = _WarmIndex.get(spark, routed_idx)
     assert warm.driver_side(spark) and set(warm._datasets) == {sid}
+
+
+def test_cli_routed_query_equals_per_query_topk(
+    spark, routed_idx, monkeypatch, capsys
+):
+    """CLI ``query --routing`` with two texts answers as one routed
+    ``topk_batch``: each text's lines equal its own routed ``topk``."""
+    import json
+
+    from es_loaders_spark import cli, session
+
+    texts = [Q, "the hash join"]
+    monkeypatch.setattr(session, "get_spark", lambda *a, **kw: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)  # the session is shared
+    cli.main(["query", "--index-dir", routed_idx, "--routing", "src1",
+              "--query", texts[0], "--query", texts[1], "-k", "5"])
+    got = [json.loads(line) for line in capsys.readouterr().out.splitlines()]
+    want = [
+        {"query": q, "rank": rank, "doc_id": r.doc_id, "score": r.score,
+         "routing": ["src1"]}
+        for q in texts
+        for rank, r in enumerate(
+            topk(spark, routed_idx, q, k=5, routing="src1").collect(), 1)
+    ]
+    assert got == want and {h["query"] for h in got} == set(texts)
 
 
 def test_non_string_routing_column_refused(spark, documents, tmp_path):

@@ -208,19 +208,31 @@ def test_topk_merged_rank_identical(spark, documents, tmp_path_factory):
         assert a == b, q
 
 
-def test_serve_matches_cogroup_and_survives_mutations(spark, documents, built):
-    """The single-stage serving path (warm cache + per-task shard reads)
-    is rank-identical to the cogroup path, and the warm cache invalidates
-    on deletes (snapshot-token check)."""
-    d, *_ = built
-    for q in QUERIES:
-        a = [(r["doc_id"], r["score"])
-             for r in topk(spark, d, q, k=10, mode="serve").collect()]
-        b = [(r["doc_id"], r["score"])
-             for r in topk(spark, d, q, k=10, mode="cogroup").collect()]
-        assert a == b, q
+def test_serve_sites_match_exact_and_survive_mutations(spark, documents, built):
+    """The driver site and the single-stage executor site (threshold -1)
+    are rank- and score-identical to the exact join scorer, and the warm
+    cache invalidates on deletes (snapshot-token check)."""
+    d, postings, dl, tdf, stats = built
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
 
-    from pyspark.sql import functions as F
+    def both_sites(q: str) -> list:
+        on_driver = [(r["doc_id"], r["score"]) for r in topk(spark, d, q, k=10).collect()]
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            on_executors = [(r["doc_id"], r["score"])
+                            for r in topk(spark, d, q, k=10).collect()]
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        assert on_driver == on_executors, q
+        return on_driver
+
+    def exact(q: str, drop=frozenset()) -> list:
+        hits = [(r["doc_id"], r["score"])
+                for r in bm25_topk(spark, postings, dl, tdf, stats, q, k=10**6).collect()]
+        return [h for h in hits if h[0] not in drop][:10]
+
+    for q in QUERIES:
+        assert both_sites(q) == exact(q), q
 
     from es_loaders_spark.deletes import delete_ids
 
@@ -229,11 +241,8 @@ def test_serve_matches_cogroup_and_survives_mutations(spark, documents, built):
     delete_ids(spark, d, spark.createDataFrame([(i,) for i in victims], "doc_id long"))
     after = {r["doc_id"] for r in topk(spark, d, "spark query data", k=30).collect()}
     assert not (after & set(victims))
-    a = [(r["doc_id"], r["score"])
-         for r in topk(spark, d, "spark query data", k=10, mode="serve").collect()]
-    b = [(r["doc_id"], r["score"])
-         for r in topk(spark, d, "spark query data", k=10, mode="cogroup").collect()]
-    assert a == b
+    # corpus stats keep their pre-delete values (Lucene live-docs model)
+    assert both_sites("spark query data") == exact("spark query data", frozenset(victims))
 
 
 def test_merged_kernel_prunes_blocks(spark, documents, tmp_path_factory):

@@ -1,10 +1,12 @@
-"""Driver-side serving of warm small indexes (wand.topk mode="serve").
+"""Driver-side serving of warm small indexes (wand.topk).
 
 Every query runs twice: on the driver path (the default for an index
 whose live doclens fit ``spark.sql.autoBroadcastJoinThreshold``) and,
 with the threshold at -1, on the ``mapInPandas`` path. Both answers must
 be identical (ids and scores) and equal the exact join scorer
-``bm25.bm25_topk``.
+``bm25.bm25_topk``. A ``topk_batch`` of the same queries, which always
+runs on the executor site, must equal the per-query answers on both
+threshold settings.
 """
 
 from __future__ import annotations
@@ -20,7 +22,9 @@ from es_loaders_spark.bm25 import bm25_topk
 from es_loaders_spark.build import append_documents, build_index, routing_shard_id
 from es_loaders_spark.deletes import delete_by_term, delete_ids, tombstones
 from es_loaders_spark.postings import corpus_stats, doc_lengths, postings_long, term_df
-from es_loaders_spark.wand import _WarmIndex, evict_index, term_blocks_from_flat, topk, warm_index
+from es_loaders_spark.wand import (
+    _WarmIndex, evict_index, term_blocks_from_flat, topk, topk_batch, warm_index,
+)
 
 QUERIES = ["spark query data", "the fast table scan", "hash join", "window merge order"]
 THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
@@ -50,6 +54,19 @@ def both_paths(spark, d, q, k=10, **kw) -> list[tuple]:
         on_spark = rows(topk(spark, d, q, k=k, **kw))
     assert on_driver == on_spark, q
     return on_driver
+
+
+def batch_matches(spark, d, queries, k=10, **kw) -> None:
+    """``topk_batch`` over ``queries`` equals each query's own ``topk``,
+    with the driver gate open and closed."""
+    want = {f"q{i}": both_paths(spark, d, q, k=k, **kw) for i, q in enumerate(queries)}
+    for forced in (False, True):
+        with spark_path(spark) if forced else contextlib.nullcontext():
+            got = {qid: [] for qid in want}
+            for r in sorted(topk_batch(spark, d, queries, k=k, **kw).collect(),
+                            key=lambda r: (r["query_id"], r["rank"])):
+                got[r["query_id"]].append((r["doc_id"], r["score"]))
+        assert got == want, forced
 
 
 def exact(spark, docs, q, k, chain=None, drop=frozenset()) -> list[tuple]:
@@ -87,6 +104,39 @@ def test_warm_driver_topk_submits_no_spark_job(spark, plain_idx):
     assert list(sc.statusTracker().getJobIdsForGroup("driver-serve-probe")) == []
 
 
+def test_warm_executor_topk_submits_one_spark_job(spark, plain_idx):
+    """At threshold -1 a warm ``topk`` is the one ``mapInPandas`` job:
+    the query terms' dfs come from a pyarrow read on the driver."""
+    sc = spark.sparkContext
+    warm_index(spark, plain_idx)
+    with spark_path(spark):
+        topk(spark, plain_idx, "spark data", k=5).collect()  # first-call planning
+        sc.setJobGroup("executor-serve-probe", "warm executor-site topk")
+        try:
+            got = topk(spark, plain_idx, "spark query data", k=10).collect()
+        finally:
+            sc._jsc.clearJobGroup()
+    assert len(got) == 10
+    assert len(sc.statusTracker().getJobIdsForGroup("executor-serve-probe")) == 1
+
+
+def test_warm_index_pins_one_dataframe(spark, plain_idx):
+    """Warming an index persists exactly one DataFrame (the shard-
+    partitioned live doclens); batch and single queries add none."""
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    evict_index(plain_idx)
+    before = persisted()  # warming may evict another index's entry (LRU)
+    warm_index(spark, plain_idx)
+    added = persisted() - before
+    assert len(added) == 1
+    topk_batch(spark, plain_idx, QUERIES, k=5).collect()
+    with spark_path(spark):
+        topk(spark, plain_idx, "spark data", k=5).collect()
+    assert persisted() - before == added
+
+
 def test_k_larger_than_hit_count_and_unindexed_terms(spark, documents, plain_idx):
     docs = documents.select("doc_id", "text")
     got = both_paths(spark, plain_idx, "hash join", k=10_000)
@@ -105,6 +155,7 @@ def test_appended_generations(spark, documents, tmp_path_factory):
     assert os.path.exists(os.path.join(d, "shards_gen1"))
     for q in QUERIES:
         assert both_paths(spark, d, q) == exact(spark, docs, q, 10), q
+    batch_matches(spark, d, QUERIES)
     evict_index(d)
 
 
@@ -120,6 +171,7 @@ def test_tombstones_after_delete_by_term(spark, documents, tmp_path_factory):
         got = both_paths(spark, d, q, k=20)
         assert not {i for i, _ in got} & gone
         assert got == exact(spark, docs, q, 20, drop=gone), q
+    batch_matches(spark, d, ["spark query data", "the data", "hash join"], k=20)
     evict_index(d)
 
 
@@ -134,7 +186,7 @@ def test_every_doc_tombstoned(spark, documents, tmp_path_factory):
     assert delete_ids(spark, d, docs.select("doc_id")) == docs.count()
     for q in QUERIES:
         assert both_paths(spark, d, q) == [], q
-        assert rows(topk(spark, d, q, mode="cogroup")) == [], q
+    batch_matches(spark, d, QUERIES)
     evict_index(d)
 
 
@@ -148,6 +200,7 @@ def test_routing(spark, documents, tmp_path_factory):
     want = [h for h in exact(spark, docs, q, 10**6)
             if routing_shard_id(source[h[0]], 8) == sid][:10]
     assert both_paths(spark, d, q, routing="src1") == want
+    batch_matches(spark, d, [q, "the hash join"], routing="src1")
     evict_index(d)
 
 
@@ -161,12 +214,14 @@ def test_stemming_analysis_chain(spark, documents, tmp_path_factory):
         assert both_paths(spark, d, q) == exact(spark, docs, q, 10, chain=chain), q
     # an all-stopword query analyzes to nothing on both paths
     assert both_paths(spark, d, "the of and") == []
+    batch_matches(spark, d, ["the tables queries", "spark joins data", "the of and"])
     evict_index(d)
 
 
 def test_term_blocks_from_arrow_equals_pandas(plain_idx):
-    """The driver reads posting rows as Arrow, the cogroup path hands the
-    kernel pandas frames: both group into the same block lists."""
+    """The serve sites read posting rows as Arrow, ``topk_merged``'s
+    cogroup hands the kernel pandas frames: both group into the same
+    block lists."""
     shard = next(n for n in sorted(os.listdir(os.path.join(plain_idx, "shards")))
                  if n.startswith("shard="))
     t = pq.read_table(os.path.join(plain_idx, "shards", shard))
