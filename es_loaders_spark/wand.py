@@ -729,8 +729,9 @@ def topk(
     Each shard's searcher reads its own posting rows for the query terms
     directly from the partitioned parquet (pyarrow, term-filtered with
     row-group pushdown) and runs the block-max kernel — the Lucene/ES
-    serving architecture, as a batch of one of ``topk_batch``'s body.
-    Where that runs depends on the warm index:
+    serving architecture. The per-shard body, ``_score_shard``, is the
+    one ``topk_batch`` runs; here it scores a batch of one query. Where
+    it runs depends on the warm index:
 
     - small index (16 B × n_docs within
       ``spark.sql.autoBroadcastJoinThreshold``) visible from the driver:
