@@ -37,7 +37,9 @@ DSL's match leaves use the same gate:
 ``topk(allowed=...)`` (filtered and ``operator: "and"`` matches) and
 ``match_docs`` / ``match_count`` (the doc set behind ``dsl.count`` and
 faceted aggs), which on the driver decodes only the query terms' doc-id
-payloads.
+payloads. ``querystring`` trees of term, prefix and wildcard leaves use
+the gate too; on the driver they and ``match_docs`` read postings
+through one reader, ``_driver_postings``.
 
 Pruning kernel: **Block-Max MaxScore** — the vectorizable member of the
 block-max WAND family (same skip guarantees as classic BMW:
@@ -58,6 +60,7 @@ import functools
 import json
 import math
 import os
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -69,13 +72,25 @@ from pyspark.sql import functions as F
 
 from .analyze import tokenize_text
 from .bm25 import SCORE_DECIMALS
-from .codec import decode_block, decode_doc_ids_flat_batch
+from .codec import decode_block, decode_blocks_flat_batch, decode_doc_ids_flat_batch
 from .postings import B, K1
 from .session import is_live, unpersist_quietly
 
 
 def idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def bm25_contrib(
+    term_idf: float, tf: np.ndarray, dl: np.ndarray, avgdl: float,
+    k1: float = K1, b: float = B,
+) -> np.ndarray:
+    """Per-posting BM25 contribution of one term (float64, 0 where tf is
+    0): ``bm25.bm25_score_expr``'s arithmetic, operation for operation,
+    so the numpy scorers and the Spark plans sum identical doubles."""
+    tf = tf.astype(np.float64)
+    norm = k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl)
+    return np.where(tf > 0, term_idf * tf * (k1 + 1.0) / (tf + norm), 0.0)
 
 
 def term_blocks_from_flat(idx: pd.DataFrame | pa.Table) -> dict[str, list[dict]]:
@@ -297,12 +312,10 @@ def bmw_topk_cursors(
         return dls_sorted[pos]
 
     def full_score(docs: np.ndarray) -> np.ndarray:
-        dl = dl_lookup(docs).astype(np.float64)
-        norm = k1 * (1.0 - b + b * dl / avgdl)
+        dl = dl_lookup(docs)
         total = np.zeros(docs.size)
         for c in cursors:
-            tf = c.tf_for(docs).astype(np.float64)
-            total += np.where(tf > 0, c.idf * tf * (k1 + 1.0) / (tf + norm), 0.0)
+            total += bm25_contrib(c.idf, c.tf_for(docs), dl, avgdl, k1, b)
         return total
 
     theta = -np.inf
@@ -492,8 +505,8 @@ class _WarmIndex:
             for a, b in zip(cuts[:-1], cuts[1:]) if a < b
         }
 
-    def term_idfs(self, terms: list[str]) -> dict[str, float]:
-        """Global idfs of the indexed ones among ``terms``, from a
+    def term_dfs(self, terms: list[str]) -> dict[str, int]:
+        """Global dfs of the indexed ones among ``terms``, from a
         term-filtered pyarrow read of ``terms/`` (row-group pushdown, no
         Spark job): the driver keeps no resident term map, whose size
         would grow with the vocabulary."""
@@ -504,11 +517,12 @@ class _WarmIndex:
         t = self._terms_ds.to_table(
             columns=["term", "df"], filter=pads.field("term").isin(terms)
         )
+        return dict(zip(t.column("term").to_pylist(), t.column("df").to_pylist()))
+
+    def term_idfs(self, terms: list[str]) -> dict[str, float]:
+        """``term_dfs`` as idfs over the stats.json ``n_docs``."""
         n_docs = int(self.stats["n_docs"])
-        return {
-            term: idf(n_docs, df_)
-            for term, df_ in zip(t.column("term").to_pylist(), t.column("df").to_pylist())
-        }
+        return {term: idf(n_docs, df_) for term, df_ in self.term_dfs(terms).items()}
 
     def driver_side(self, spark: SparkSession) -> bool:
         """Whether ``topk`` serves this index on the driver right now: the
@@ -634,26 +648,35 @@ def _score_shard(
 
 def _local_topk(spark: SparkSession, docs: np.ndarray, scores: np.ndarray,
                 k: int) -> DataFrame:
-    """Global top-k of the per-shard candidates, as a LocalRelation.
+    """Global top-k of driver-site candidates, as a LocalRelation.
 
     Rounding is Spark's ``F.round`` (module docstring: why) over an
     Arrow-backed LocalRelation, which the optimizer folds
-    (ConvertToLocalRelation) without a job; the ≤ k × shards rounded
-    candidates are then ordered by (score desc, doc_id asc) in Python."""
-    def relation(d: np.ndarray, sc: np.ndarray) -> DataFrame:
-        return spark.createDataFrame(pa.table({
-            "doc_id": pa.array(d, pa.int64()), "score": pa.array(sc, pa.float64()),
-        }))
-
-    rows = []
-    if docs.size:
-        rows = relation(docs, scores).select(
-            "doc_id", F.round("score", SCORE_DECIMALS).alias("score")
-        ).collect()
-    d = np.fromiter((r[0] for r in rows), dtype=np.int64, count=len(rows))
-    sc = np.fromiter((r[1] for r in rows), dtype=np.float64, count=len(rows))
-    top = np.lexsort((d, -sc))[:k]
-    return relation(d[top], sc[top])
+    (ConvertToLocalRelation) without a job. Only the distinct raw scores
+    that can still reach the top k go through it: rounding moves a score
+    by at most half a quantum, so a candidate more than two quanta below
+    the k-th raw score cannot tie into the top k (the kernel's guard
+    band, widened). The rounded candidates are then ordered by (score
+    desc, doc_id asc) in Python."""
+    if 0 < k < docs.size:
+        kth = np.partition(scores, docs.size - k)[docs.size - k]
+        keep = scores >= kth - 2 * 10.0 ** (-SCORE_DECIMALS)
+        docs, scores = docs[keep], scores[keep]
+    uniq, inv = np.unique(scores, return_inverse=True)
+    rounded = np.empty(uniq.size)
+    if uniq.size:
+        rows = spark.createDataFrame(pa.table({
+            "i": pa.array(np.arange(uniq.size), pa.int64()),
+            "score": pa.array(uniq, pa.float64()),
+        })).select("i", F.round("score", SCORE_DECIMALS)).collect()
+        for i, r in rows:
+            rounded[i] = r
+    sc = rounded[inv]
+    top = np.lexsort((docs, -sc))[:k]
+    return spark.createDataFrame(pa.table({
+        "doc_id": pa.array(docs[top], pa.int64()),
+        "score": pa.array(sc[top], pa.float64()),
+    }))
 
 
 def warm_index(spark: SparkSession, index_dir: str) -> None:
@@ -864,6 +887,60 @@ def _serve_partition_fn(gen_dirs: list[str], term_idfs: dict[str, float],
     return fn
 
 
+class _LivePostings(NamedTuple):
+    """Live postings read on the driver (``_driver_postings``)."""
+
+    terms: np.ndarray  # the distinct terms read, sorted
+    term_ix: np.ndarray  # per posting: its term's index in ``terms``
+    doc_ids: np.ndarray
+    dls: np.ndarray
+    tfs: np.ndarray | None  # None unless read ``with_tfs``
+
+
+def _driver_postings(
+    warm: "_WarmIndex", flt, shard_ids: list[int] | None = None,
+    with_tfs: bool = False,
+) -> _LivePostings:
+    """The live postings of the term rows the pyarrow filter ``flt``
+    selects, on the driver: one read of each (routed) shard's posting
+    datasets, one batch decode of the rows (doc ids only unless
+    ``with_tfs``), and the shard's sorted live doclens as the live-docs
+    mask, which also gives each posting its ``dl``. The driver sites of
+    ``match_docs`` and of ``querystring.execute_tree`` read through
+    here."""
+    cols = ["term", "min_doc", "docs_payload"] + (["tfs_payload"] if with_tfs else [])
+    row_terms: list[str] = []
+    rows, docs_out, dls_out, tfs_out = ([np.empty(0, np.int64)] for _ in range(4))
+    for shard, (live, live_dl) in warm.live_shards(shard_ids).items():
+        for ds in warm.shard_datasets(shard):
+            t = ds.to_table(columns=cols, filter=flt)
+            if not t.num_rows:
+                continue
+            min_docs = t.column("min_doc").to_numpy()
+            payloads = t.column("docs_payload").to_pylist()
+            if with_tfs:
+                docs, tfs, off = decode_blocks_flat_batch(
+                    min_docs, payloads, t.column("tfs_payload").to_pylist()
+                )
+            else:
+                docs, off = decode_doc_ids_flat_batch(min_docs, payloads)
+            at = np.minimum(np.searchsorted(live, docs), live.size - 1)
+            keep = live[at] == docs
+            rows.append(np.repeat(
+                np.arange(len(row_terms), len(row_terms) + t.num_rows), np.diff(off)
+            )[keep])
+            row_terms += t.column("term").to_pylist()
+            docs_out.append(docs[keep])
+            dls_out.append(live_dl[at[keep]])
+            if with_tfs:
+                tfs_out.append(tfs[keep])
+    terms, row_ix = np.unique(np.asarray(row_terms, dtype=object), return_inverse=True)
+    return _LivePostings(
+        terms, row_ix[np.concatenate(rows)], np.concatenate(docs_out),
+        np.concatenate(dls_out), np.concatenate(tfs_out) if with_tfs else None,
+    )
+
+
 def _driver_match_ids(
     spark: SparkSession, index_dir: str, terms: list[str], conjunctive: bool,
     shard_ids: list[int] | None,
@@ -877,27 +954,14 @@ def _driver_match_ids(
     warm = _WarmIndex.get(spark, index_dir)
     if not warm.driver_side(spark):
         return None
-    flt = pads.field("term").isin(terms)
-    found_docs, found_terms = [np.empty(0, np.int64)], [np.empty(0, object)]
-    for shard, (live, _) in warm.live_shards(shard_ids).items():
-        for ds in warm.shard_datasets(shard):
-            t = ds.to_table(columns=["term", "min_doc", "docs_payload"], filter=flt)
-            if not t.num_rows:
-                continue
-            docs, off = decode_doc_ids_flat_batch(
-                t.column("min_doc").to_numpy(), t.column("docs_payload").to_pylist()
-            )
-            keep = np.isin(docs, live)
-            found_docs.append(docs[keep])
-            found_terms.append(np.repeat(
-                t.column("term").to_numpy(zero_copy_only=False), np.diff(off)
-            )[keep])
-    docs = np.concatenate(found_docs)
+    p = _driver_postings(warm, pads.field("term").isin(terms), shard_ids)
     if not conjunctive:
-        return np.unique(docs)
-    term_of = np.concatenate(found_terms)
+        return np.unique(p.doc_ids)
+    if p.terms.size < len(terms):  # a term with no posting rows at all
+        return np.empty(0, dtype=np.int64)
     return functools.reduce(
-        np.intersect1d, [np.unique(docs[term_of == t]) for t in terms]
+        np.intersect1d,
+        [np.unique(p.doc_ids[p.term_ix == i]) for i in range(p.terms.size)],
     )
 
 
