@@ -23,10 +23,11 @@ import json
 import os
 import tempfile
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
-from pyspark import StorageLevel
+from pyspark import SparkContext, StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -182,21 +183,37 @@ def assign_doc_ids(docs: DataFrame, url_col: str = "url") -> DataFrame:
 _ID_PERSISTS: list[DataFrame] = []
 
 # Shared driver-side thread pool for overlapping INDEPENDENT Spark jobs
-# inside a build (corpus-stats agg vs the posting write; the lineage
-# aggregates vs the terms-table build — guide §2.6). Module-level and
-# lazily created: no per-build executor churn, nothing to shut down on
-# error paths (an orphaned future is just a Spark job that completes).
+# (a build's corpus-stats agg vs the posting write, the lineage
+# aggregates vs the terms-table build, query_string's keyword dfs vs its
+# leaf jobs — guide §2.6). Module-level and lazily created: no per-build
+# executor churn, nothing to shut down on error paths (an orphaned
+# future is just a Spark job that completes).
 _AUX_POOL = None
+
+# Spark local properties are per thread: a pool job carries the
+# submitter's label and scheduler pool only if they are copied over
+_INHERITED_PROPERTIES = ("spark.job.description", "spark.scheduler.pool")
+
+
+class _AuxPool(ThreadPoolExecutor):
+    def submit(self, fn, /, *args, **kwargs):
+        sc = SparkContext._active_spark_context
+        props = {} if sc is None else {
+            k: sc.getLocalProperty(k) for k in _INHERITED_PROPERTIES
+        }
+
+        def run():
+            for k, v in props.items():  # None clears a stale value
+                sc.setLocalProperty(k, v)
+            return fn(*args, **kwargs)
+
+        return super().submit(run)
 
 
 def _aux_pool():
     global _AUX_POOL
     if _AUX_POOL is None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        _AUX_POOL = ThreadPoolExecutor(
-            max_workers=4, thread_name_prefix="build-aux"
-        )
+        _AUX_POOL = _AuxPool(max_workers=4, thread_name_prefix="build-aux")
     return _AUX_POOL
 
 

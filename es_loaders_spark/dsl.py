@@ -649,6 +649,32 @@ def _as_list(x) -> list:
     return x if isinstance(x, list) else [x]
 
 
+def _in_filter(
+    rel: DataFrame, docs: DataFrame, filters: dict[str, Any] | None, id_col: str
+) -> DataFrame:
+    """``rel`` restricted to the doc_ids ``filters`` admit, by a broadcast
+    semi-join — ES filter context: candidates narrow, while corpus stats
+    and dfs stay corpus-wide."""
+    if not filters:
+        return rel
+    allowed = docs.filter(filter_expr(filters, id_col)).select(
+        F.col(id_col).alias("doc_id")
+    )
+    return rel.join(allowed.hint("broadcast"), "doc_id", "left_semi")
+
+
+def _having_all(tf: DataFrame, terms: list[str]) -> DataFrame:
+    """doc_ids whose (term, doc_id, tf) rows hold every one of ``terms``
+    — the conjunctive candidate set."""
+    return (
+        tf.filter(F.col("term").isin(terms))
+        .groupBy("doc_id")
+        .agg(F.count_distinct("term").alias("_nt"))
+        .filter(F.col("_nt") == F.lit(len(terms)))
+        .select("doc_id")
+    )
+
+
 def _index_chain(index_dir: str | None):
     """The index's analysis chain (stats.json "analysis"), or None.
 
@@ -790,8 +816,9 @@ def _multi_match_topk(
     therefore contains the global top-k; fields are scored independently
     (own dfs/avgdl per field, ES per-field statistics) and max-combined.
     """
+    from .analyze import tokenize_text
     from .bm25 import bm25_topk
-    from .postings import corpus_stats, doc_lengths, postings_long, term_df
+    from .postings import scan_inputs
 
     text = sub["query"]
     raw_fields = list(sub.get("fields") or [text_col])
@@ -814,27 +841,16 @@ def _multi_match_topk(
     for f in raw_fields:
         name, _, boost = f.partition("^")
         fields.append((name, float(boost) if boost else 1.0))
-    allowed = None
-    if filters:
-        allowed = docs.filter(filter_expr(filters, id_col)).select(
-            F.col(id_col).alias("doc_id")
-        )
     per_field = []
     for fld, boost in fields:
         # the index's analysis chain covers ONLY the indexed column;
         # other fields keep the default grammar (unmapped-field parity)
         ch = chain if (chain is not None and fld == text_col) else None
-        p = postings_long(docs.select(id_col, fld), text_col=fld,
-                          id_col=id_col, chain=ch)
-        dl = doc_lengths(docs.select(id_col, fld), text_col=fld,
-                         id_col=id_col, chain=ch)
-        cand = (
-            p if allowed is None
-            else p.join(allowed.hint("broadcast"), "doc_id", "left_semi")
-        )
+        q = ch.tokens(text) if ch is not None else tokenize_text(text)
+        si = scan_inputs(docs, text_col=fld, id_col=id_col, chain=ch, terms=q)
         scored = bm25_topk(
-            spark, cand, dl, term_df(p), corpus_stats(dl),
-            ch.tokens(text) if ch is not None else text, k=k,
+            spark, _in_filter(si.tf, docs, filters, id_col), si.dl, si.tdf,
+            si.stats, q, k=k,
         )
         if boost != 1.0:
             scored = scored.withColumn(
@@ -932,16 +948,8 @@ def _combined_fields_topk(
     stats = corpus_stats(cdl)
     tdf = ctf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     qterms = spark.createDataFrame([(t,) for t in terms], "term string")
-    cand = ctf
-    if filters:
-        # collection statistics stay corpus-wide (ES semantics); only
-        # the scored candidate set narrows
-        allowed = docs.filter(filter_expr(filters, id_col)).select(
-            F.col(id_col).alias("doc_id")
-        )
-        cand = cand.join(allowed.hint("broadcast"), "doc_id", "left_semi")
     scored = (
-        cand.join(F.broadcast(qterms), "term")
+        _in_filter(ctf, docs, filters, id_col).join(F.broadcast(qterms), "term")
         .join(F.broadcast(tdf.join(qterms, "term")), "term")
         .join(cdl, "doc_id")
         .withColumn("contrib", bm25_score_expr(stats))
@@ -1084,12 +1092,15 @@ def _sqs_topk(
     doc_id order (the phrase-query paging convention).
 
     Candidate plan shape: every restriction is a semi/anti-join on
-    doc_id against a postings- or token-derived id set — no text
-    re-scan when an index_dir serves phrases and prefix expansion.
+    doc_id against an id set from the scan inputs' tf rows (their
+    selectors are the scoring, excluded and prefix terms) or, for
+    phrases, from positions — no text re-scan for phrases and prefix
+    expansion when an index_dir serves them. Without a scoring term
+    the candidates start from every doc with a token (``dl > 0``).
     """
     from .analyze import tokens_df
     from .bm25 import bm25_topk
-    from .postings import corpus_stats, doc_lengths, postings_long, term_df
+    from .postings import scan_inputs
 
     parsed = _parse_sqs(sub["query"])
     fields = list(sub.get("fields") or [text_col])
@@ -1100,35 +1111,38 @@ def _sqs_topk(
     if default_op not in ("or", "and"):
         raise ValueError(f"default_operator {default_op!r}")
 
-    p = postings_long(docs.select(id_col, field), text_col=field, id_col=id_col)
-    dl = doc_lengths(docs.select(id_col, field), text_col=field, id_col=id_col)
-    cand = p
-    if filters:
-        allowed = docs.filter(filter_expr(filters, id_col)).select(
-            F.col(id_col).alias("doc_id")
-        )
-        cand = cand.join(allowed.hint("broadcast"), "doc_id", "left_semi")
+    on_index = index_dir is not None and field == text_col
+    # the required terms are scoring terms too; over an index each
+    # prefix matches its term-dictionary expansion
+    scoring_terms = sorted(set(parsed["plain"]) | set(parsed["required"]))
+    excluded = sorted(set(parsed["excluded"]))
+    selectors = {"terms": scoring_terms + excluded}
+    if on_index:
+        from .phrase import expand_prefix
+
+        expansions = [expand_prefix(spark, index_dir, pfx, max_expansions=50)
+                      for pfx in parsed["prefixes"]]
+        selectors["terms"] += sum(expansions, [])
+        prefix_hits = [F.col("term").isin(e) for e in expansions]
+    else:
+        selectors["prefixes"] = parsed["prefixes"]
+        prefix_hits = [F.col("term").startswith(x) for x in parsed["prefixes"]]
+    si = scan_inputs(docs, text_col=field, id_col=id_col, **selectors)
+    p = si.tf
+    cand = p if scoring_terms else si.dl.filter(F.col("dl") > 0)
+    cand = _in_filter(cand, docs, filters, id_col)
 
     required = sorted(
         set(parsed["required"])
         | (set(parsed["plain"]) if default_op == "and" else set())
     )
     if required:
-        have_all = (
-            p.filter(F.col("term").isin(required))
-            .groupBy("doc_id")
-            .agg(F.count_distinct("term").alias("_nt"))
-            .filter(F.col("_nt") == F.lit(len(required)))
-            .select("doc_id")
-        )
-        cand = cand.join(have_all, "doc_id", "left_semi")
-    if parsed["excluded"]:
-        bad = p.filter(F.col("term").isin(sorted(set(parsed["excluded"])))).select(
-            "doc_id"
-        )
+        cand = cand.join(_having_all(p, required), "doc_id", "left_semi")
+    if excluded:
+        bad = p.filter(F.col("term").isin(excluded)).select("doc_id")
         cand = cand.join(bad, "doc_id", "left_anti")
     for phrase_terms in parsed["phrases"]:
-        if index_dir is not None and field == text_col:
+        if on_index:
             from .phrase import phrase_docs
 
             hits = phrase_docs(spark, index_dir, " ".join(phrase_terms))
@@ -1149,21 +1163,14 @@ def _sqs_topk(
                 )
             hits = cur.select("doc_id").distinct()
         cand = cand.join(hits, "doc_id", "left_semi")
-    for prefix in parsed["prefixes"]:
-        if index_dir is not None and field == text_col:
-            from .phrase import expand_prefix
+    for hit in prefix_hits:
+        cand = cand.join(
+            p.filter(hit).select("doc_id").distinct(), "doc_id", "left_semi"
+        )
 
-            exps = expand_prefix(spark, index_dir, prefix, max_expansions=50)
-            hits = p.filter(F.col("term").isin(exps)).select("doc_id")
-        else:
-            hits = p.filter(F.col("term").startswith(prefix)).select("doc_id")
-        cand = cand.join(hits.distinct(), "doc_id", "left_semi")
-
-    scoring_terms = sorted(set(parsed["plain"]) | set(parsed["required"]))
     if scoring_terms:
         out = bm25_topk(
-            spark, cand, dl, term_df(p), corpus_stats(dl),
-            " ".join(scoring_terms), k=k,
+            spark, cand, si.dl, si.tdf, si.stats, " ".join(scoring_terms), k=k,
         )
         return out, scoring_terms
     hits = cand.select("doc_id").distinct()
@@ -1208,8 +1215,9 @@ def _match_scores(
     chained index must analyze exactly like plain match does (review
     r6: they silently used the default grammar).
     """
+    from .analyze import tokenize_text
     from .bm25 import bm25_scores
-    from .postings import corpus_stats, doc_lengths, postings_long, term_df
+    from .postings import scan_inputs
 
     if field is None:
         (field, text), = sub.items()
@@ -1218,20 +1226,11 @@ def _match_scores(
     if isinstance(text, dict):
         text = text["query"]
     ch = chain if (chain is not None and field == chain_field) else None
-    p = postings_long(docs.select(id_col, field), text_col=field,
-                      id_col=id_col, chain=ch)
-    dl = doc_lengths(docs.select(id_col, field), text_col=field,
-                     id_col=id_col, chain=ch)
-    cand = p
-    if filters:
-        allowed = docs.filter(filter_expr(filters, id_col)).select(
-            F.col(id_col).alias("doc_id")
-        )
-        cand = p.join(allowed.hint("broadcast"), "doc_id", "left_semi")
-    q_input = ch.tokens(text) if ch is not None else text
+    q = ch.tokens(text) if ch is not None else tokenize_text(text)
+    si = scan_inputs(docs, text_col=field, id_col=id_col, chain=ch, terms=q)
     return bm25_scores(
-        spark, cand, dl, term_df(p), corpus_stats(dl), q_input,
-        rounded=rounded,
+        spark, _in_filter(si.tf, docs, filters, id_col), si.dl, si.tdf,
+        si.stats, q, rounded=rounded,
     )
 
 
@@ -1616,7 +1615,7 @@ def _terms_set_topk(
     column is supported, loudly.
     """
     from .bm25 import bm25_score_expr
-    from .postings import corpus_stats, doc_lengths, postings_long, term_df
+    from .postings import index_inputs, scan_inputs
 
     (field, spec), = sub.items()
     if field != text_col:
@@ -1635,33 +1634,15 @@ def _terms_set_topk(
         )
     if index_dir is not None:
         # index-served (r5): decode only the query terms' posting blocks
-        import os as _os
-
-        from .build import load_stats, read_generations
-        from .phrase import tf_postings
-        from .postings import CorpusStats
-
-        st = load_stats(index_dir)
-        stats = CorpusStats(n_docs=int(st["n_docs"]), avgdl=float(st["avgdl"]))
-        dl = read_generations(spark, index_dir, "doclens").select("doc_id", "dl")
-        tdf = spark.read.parquet(_os.path.join(index_dir, "terms"))
-        p = tf_postings(spark, index_dir, sorted(set(terms)))
+        si = index_inputs(spark, index_dir, terms=terms)
     else:
-        p = postings_long(docs.select(id_col, field), text_col=field, id_col=id_col)
-        dl = doc_lengths(docs.select(id_col, field), text_col=field, id_col=id_col)
-        stats, tdf = corpus_stats(dl), term_df(p)
+        si = scan_inputs(docs, text_col=field, id_col=id_col, terms=terms)
     qterms = spark.createDataFrame([(t,) for t in terms], "term string")
-    cand = p
-    if filters:
-        allowed = docs.filter(filter_expr(filters, id_col)).select(
-            F.col(id_col).alias("doc_id")
-        )
-        cand = cand.join(allowed.hint("broadcast"), "doc_id", "left_semi")
     scored = (
-        cand.join(F.broadcast(qterms), "term")
-        .join(F.broadcast(tdf.join(qterms, "term")), "term")
-        .join(dl, "doc_id")
-        .withColumn("_c", bm25_score_expr(stats))
+        _in_filter(si.tf, docs, filters, id_col)
+        .join(F.broadcast(si.tdf.join(qterms, "term")), "term")
+        .join(si.dl, "doc_id")
+        .withColumn("_c", bm25_score_expr(si.stats))
         .groupBy("doc_id")
         .agg(
             F.sum("_c").alias("_raw"),
@@ -2540,31 +2521,17 @@ def search(
             )
         from .analyze import tokenize_text
         from .bm25 import bm25_topk
-        from .postings import corpus_stats, doc_lengths, postings_long, term_df
+        from .postings import scan_inputs
 
         # no index over this field: score from the raw token arrays
-        p = postings_long(docs.select(id_col, field), text_col=field, id_col=id_col)
-        dl = doc_lengths(docs.select(id_col, field), text_col=field, id_col=id_col)
-        cand = p
-        if filters:
-            allowed = docs.filter(filter_expr(filters, id_col)).select(
-                F.col(id_col).alias("doc_id")
-            )
-            cand = p.join(allowed.hint("broadcast"), "doc_id", "left_semi")
+        qterms = sorted(set(tokenize_text(text)))
+        si = scan_inputs(docs, text_col=field, id_col=id_col, terms=qterms)
+        cand = _in_filter(si.tf, docs, filters, id_col)
         if operator == "and":
-            qterms = sorted(set(tokenize_text(text)))
-            have_all = (
-                p.filter(F.col("term").isin(qterms))
-                .groupBy("doc_id")
-                .agg(F.count_distinct("term").alias("_nt"))
-                .filter(F.col("_nt") == F.lit(len(qterms)))
-                .select("doc_id")
-            )
-            cand = cand.join(have_all, "doc_id", "left_semi")
+            cand = cand.join(_having_all(si.tf, qterms), "doc_id", "left_semi")
         return page(
             bm25_topk(
-                spark, cand, dl, term_df(p), corpus_stats(dl), text,
-                k=offset + size,
+                spark, cand, si.dl, si.tdf, si.stats, text, k=offset + size,
             ),
             hl_terms=_hl_tokens(text),
         )
@@ -2746,14 +2713,13 @@ def explain(
     (field, text), = sub.items()
     if isinstance(text, dict):
         text = text["query"]
+    from .analyze import tokenize_text
     from .bm25 import bm25_explain
-    from .postings import corpus_stats, doc_lengths, postings_long, term_df
+    from .postings import scan_inputs
 
-    p = postings_long(docs.select(id_col, field), text_col=field, id_col=id_col)
-    dl = doc_lengths(docs.select(id_col, field), text_col=field, id_col=id_col)
-    return bm25_explain(
-        spark, p, dl, term_df(p), corpus_stats(dl), text, doc_id
-    )
+    si = scan_inputs(docs, text_col=field, id_col=id_col,
+                     terms=tokenize_text(text))
+    return bm25_explain(spark, si.tf, si.dl, si.tdf, si.stats, text, doc_id)
 
 
 def count(
@@ -4800,17 +4766,12 @@ def more_like_this(
         # driver materialization is the selected-term list itself
         # (≤ max_query_terms short strings — query metadata, the same
         # class as wand.py's query-term stats collect).
-        import os as _os
-
         from .analyze import terms_array
-        from .build import load_stats, read_generations
         from .phrase import tf_postings
-        from .postings import CorpusStats
+        from .postings import index_inputs
 
-        st = load_stats(index_dir)
-        stats = CorpusStats(n_docs=int(st["n_docs"]), avgdl=float(st["avgdl"]))
-        dl = read_generations(spark, index_dir, "doclens").select("doc_id", "dl")
-        tdf = spark.read.parquet(_os.path.join(index_dir, "terms"))
+        si = index_inputs(spark, index_dir)
+        stats, dl, tdf = si.stats, si.dl, si.tdf
         idf = F.log(
             F.lit(1.0)
             + (F.lit(float(stats.n_docs)) - F.col("df") + F.lit(0.5))

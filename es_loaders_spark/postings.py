@@ -1,24 +1,47 @@
-"""Long-format posting lists + corpus statistics.
+"""Long-format posting lists, corpus statistics and the BM25 scoring
+inputs every scorer reads.
 
-This is the uncompressed logical form of the inverted index the
-reference delegates to Elasticsearch/Lucene (SURVEY §2.9 X1): the
-MatrixMarket COO triples the reference streams (gene_idx, cell_idx,
-log_count — mira/mira_loader.py:141-146) have exactly this shape with
-(term, doc_id, tf).
+Two forms live here:
 
-All plans here are pure Catalyst: tokenize (JVM), groupBy partial+final
-hash agg, no Python in the hot path. The compressed block form lives in
-codec.py/build.py.
+- **The reference long form** (``postings_long`` / ``doc_lengths`` /
+  ``term_df`` / ``corpus_stats``): the uncompressed logical form of the
+  inverted index the reference delegates to Elasticsearch/Lucene (SURVEY
+  §2.9 X1). The MatrixMarket COO triples the reference streams
+  (gene_idx, cell_idx, log_count — mira/mira_loader.py:141-146) have
+  exactly this shape with (term, doc_id, tf). It covers the FULL
+  vocabulary: the oracle rows, ``suggest`` and ``more_like_this``'s scan
+  side (whose seed needs its whole vocabulary) read it.
+- **Query-scoped scoring inputs** (``ScoringInputs``): the four BM25
+  inputs of one query — tf rows of the terms its selectors match, doc
+  lengths, dfs and n/avgdl — from one of two constructors.
+  ``scan_inputs`` tokenizes the corpus ONCE into a persisted
+  ``(doc_id, dl, tokens a selector matches)`` relation; one aggregate
+  over it gives n/avgdl, and the tf rows and the selected terms' dfs
+  come from the same relation. ``index_inputs`` reads stats.json,
+  the doclens generations and ``terms/`` of a built index, with
+  ``phrase.tf_postings`` decoding the selected terms' rows. Every scan
+  or index scorer (match, multi_match, simple_query_string, terms_set,
+  explain, the compound scorers, query_string, more_like_this's index
+  side) takes its inputs from one of them, so tf/df/dl/avgdl are equal
+  to the long form's by construction.
+
+All scan plans here are pure Catalyst: tokenize (JVM), groupBy partial +
+final hash agg, no Python in the hot path. The compressed block form
+lives in codec.py/build.py.
 """
 
 from __future__ import annotations
 
+import functools
+import operator
+import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .analyze import tokens_df
+from .analyze import terms_array, tokens_df
+from .session import PersistPool
 
 K1 = 1.2
 B = 0.75
@@ -52,8 +75,6 @@ def doc_lengths(
 
     With ``chain``, dl counts SURVIVING tokens (stopwords removed), the
     Lucene norm semantics."""
-    from .analyze import terms_array
-
     return docs.select(
         F.col(id_col).alias("doc_id"),
         F.size(terms_array(F.col(text_col), chain=chain)).alias("dl"),
@@ -76,3 +97,122 @@ def corpus_stats(doc_lens: DataFrame) -> CorpusStats:
         F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
     ).collect()[0]
     return CorpusStats(n_docs=int(row["n"]), avgdl=float(row["avgdl"] or 0.0))
+
+
+# Bounded pool of tracked persists (session.PersistPool): each scan-side
+# scorer caches ONE small query-scoped relation — (doc_id, dl, tokens a
+# selector matches) — that its tf, df and dl inputs all read, and
+# query_string's phrase leaves cache their decoded positional postings.
+_MAX_TRACKED = 16
+_TRACKED_PERSISTS = PersistPool(_MAX_TRACKED)
+_persist_tracked = _TRACKED_PERSISTS.persist
+
+
+def release_scoring_caches() -> None:
+    """Unpersist the query-scoped relations the scorers keep cached for
+    their multi-reference joins and warm re-serving; call explicitly to
+    free memory after the last query of a session."""
+    _TRACKED_PERSISTS.release()
+
+
+@dataclass(frozen=True)
+class ScoringInputs:
+    """The four BM25 inputs of one query, the shapes ``bm25.bm25_scores``
+    takes: ``tf`` (term, doc_id, tf) rows of the selected terms (none
+    without a selector), ``dl`` (doc_id, dl), ``tdf`` (term, df) — at
+    least every selected term — and ``stats``."""
+
+    tf: DataFrame
+    dl: DataFrame
+    tdf: DataFrame
+    stats: CorpusStats
+
+
+def scan_inputs(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    chain=None,
+    terms=(),
+    prefixes=(),
+    like_patterns=(),
+    fuzzy=(),
+) -> ScoringInputs:
+    """Scoring inputs from ONE tokenize pass over ``docs``.
+
+    The selectors pick the tokens kept: exact ``terms``, ``prefixes``,
+    LIKE ``like_patterns`` and ``fuzzy`` (base, edits) pairs matching
+    tokens within that plain Levenshtein distance. The relation
+    (doc_id, dl, selected tokens) is persisted through the query-derived
+    pool; it is small, since only tokens a selector matches survive
+    in-row. ``stats`` is one aggregate over it, ``tf`` one explode +
+    (term, doc_id) count of the selected tokens and ``tdf`` their dfs —
+    the same values ``postings_long`` / ``doc_lengths`` / ``term_df`` /
+    ``corpus_stats`` give for those terms, without a full-vocabulary
+    shuffle. ``dl`` has a row for every doc, with or without tokens, so
+    a candidate set that no selector seeds starts from ``dl > 0``."""
+    conds = []
+    if terms:
+        conds.append(lambda t, vals=sorted(set(terms)): t.isin(*vals))
+    conds += [lambda t, v=v: t.startswith(v) for v in prefixes]
+    conds += [lambda t, v=v: t.like(v) for v in like_patterns]
+    conds += [
+        lambda t, b=b, e=e: F.levenshtein(t, F.lit(b)) <= F.lit(int(e))
+        for b, e in fuzzy
+    ]
+
+    def selected(t):
+        return functools.reduce(operator.or_, [c(t) for c in conds], F.lit(False))
+
+    # _toks in its OWN projection: referenced by both dl and the selected
+    # tokens, CollapseProject keeps the non-cheap tokenize evaluated once
+    # per row (dedup.py discipline)
+    toks = docs.select(
+        F.col(id_col).alias("doc_id"),
+        terms_array(F.col(text_col), chain=chain).alias("_toks"),
+    )
+    rel = _persist_tracked(toks.select(
+        "doc_id",
+        F.size("_toks").alias("dl"),
+        F.filter("_toks", selected).alias("_sel"),
+    ))
+    dl = rel.select("doc_id", "dl")
+    tf = (
+        rel.select("doc_id", F.explode("_sel").alias("term"))
+        .groupBy("term", "doc_id")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    return ScoringInputs(tf=tf, dl=dl, tdf=term_df(tf), stats=corpus_stats(dl))
+
+
+def index_inputs(
+    spark: SparkSession,
+    index_dir: str,
+    terms=(),
+    prefixes=(),
+    like_patterns=(),
+) -> ScoringInputs:
+    """Scoring inputs of a built index: n/avgdl from stats.json, ``dl``
+    from the doclens generations, ``tdf`` the whole ``terms/`` table and
+    ``tf`` the compressed postings of the selected terms, prefixes and
+    LIKE patterns (one pushdown-pruned ``phrase.tf_postings`` decode;
+    no read without a selector). Like Lucene, not-yet-compacted deletes
+    still count in df/avgdl; callers drop tombstoned hits."""
+    from .build import load_stats, read_generations
+    from .phrase import tf_postings
+
+    st = load_stats(index_dir)
+    if terms or prefixes or like_patterns:
+        tf = tf_postings(
+            spark, index_dir, terms=list(terms) or None,
+            prefixes=list(prefixes) or None,
+            like_patterns=list(like_patterns) or None,
+        )
+    else:
+        tf = spark.createDataFrame([], "term string, doc_id long, tf long")
+    return ScoringInputs(
+        tf=tf,
+        dl=read_generations(spark, index_dir, "doclens").select("doc_id", "dl"),
+        tdf=spark.read.parquet(os.path.join(index_dir, "terms")),
+        stats=CorpusStats(n_docs=int(st["n_docs"]), avgdl=float(st["avgdl"])),
+    )

@@ -59,14 +59,17 @@ Two execution sites share the parse tree and its compilation:
   dataset, one numpy array per leaf, and ``_compile_arrays`` over them.
   No Spark job runs (a ``bool`` filter adds its one id collect).
 - **Spark site** (every other tree: keyword, range, phrase or fuzzy
-  leaves, the scan side, the driver gate closed). Plan shape (all
-  Catalyst): ONE postings pass scores every text-term leaf (conditional
-  aggregation — no per-term jobs); each phrase leaf is a positional
-  self-join; prefix leaves are vocabulary-pushdown semi-join sets;
-  keyword/range leaves are in-row predicates with idfs from ONE metadata
-  aggregate over the corpus. The boolean tree compiles
-  (``_compile_columns``) into a single whole-stage-codegen expression
-  over the joined leaf columns — zero Python in the executed plan.
+  leaves, the scan side, the driver gate closed). Its text leaves read
+  one ``postings.ScoringInputs``: the index's posting blocks, doclens,
+  ``terms/`` and stats.json, or on the scan side ONE tokenize pass that
+  keeps the tokens a term, prefix, wildcard or fuzzy leaf can match.
+  Plan shape (all Catalyst): ONE pass over those tf rows scores every
+  term, prefix and wildcard leaf (conditional aggregation — no per-term
+  jobs); each fuzzy leaf takes its expansions from the same rows' dfs;
+  each phrase leaf is a positional self-join; keyword/range leaves are
+  in-row predicates with idfs from ONE metadata aggregate over the
+  corpus. The boolean tree compiles (``_compile_columns``) into a
+  single whole-stage-codegen expression over the joined leaf columns.
 
 ``query_string_oracle_sql`` replays the identical compilation
 (``_compile_sql``) into DuckDB SQL from the same parse tree; the three
@@ -90,26 +93,15 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .analyze import SPLIT_RE_DUCKDB, tokenize_text
+# the scorers' shared pool of tracked persists: the scan input relation
+# and the phrase leaves' positional postings live there
+from .postings import (  # noqa: F401
+    _MAX_TRACKED, _TRACKED_PERSISTS, _persist_tracked, index_inputs,
+    release_scoring_caches as release_query_string_caches, scan_inputs,
+)
 
 MUST, SHOULD, MUST_NOT = "MUST", "SHOULD", "MUST_NOT"
 MAX_LEAVES = 32  # joined leaf columns; beyond this the query is degenerate
-
-# Bounded pool of tracked persists (session.PersistPool): the fast scan
-# path caches ONE small projected relation per query — (doc_id, dl,
-# query-relevant tokens) — that several leaf subplans reference, and
-# phrase serving caches the decoded positional postings.
-from .session import PersistPool
-
-_MAX_TRACKED = 16
-_TRACKED_PERSISTS = PersistPool(_MAX_TRACKED)
-_persist_tracked = _TRACKED_PERSISTS.persist
-
-
-def release_query_string_caches() -> None:
-    """Unpersist the relations execute_tree keeps cached for its own
-    multi-reference leaf joins and warm re-serving; call explicitly to
-    free memory after the last query of a session."""
-    _TRACKED_PERSISTS.release()
 
 
 @dataclass
@@ -650,17 +642,22 @@ def execute_tree(
     """Execute a parsed boolean tree (shared by query_string and
     match_bool_prefix, which IS a bool of term clauses + one prefix).
 
-    With ``index_dir``, every TEXT leaf serves from the compressed index
-    instead of re-tokenizing the corpus: term contributions decode only
-    the query terms' posting blocks (parquet term-pushdown →
-    ``phrase.tf_postings``), phrase tf comes from positional-postings
-    intersections, prefixes expand against the term dictionary, dl /
-    df / corpus stats come from the index's doclens/terms tables and
-    stats.json. Tombstoned docs are filtered from the result; like
-    Lucene, not-yet-compacted deletes still count in df/avgdl until
-    ``compact_index``. Without ``index_dir`` the leaves score from raw
-    token arrays — correct, but a corpus scan per query (the documented
-    anti-pattern at scale; SURVEY scale warning).
+    Every text leaf reads ONE ``postings.ScoringInputs``. With
+    ``index_dir`` it comes from the compressed index
+    (``postings.index_inputs``): term, prefix and wildcard leaves share
+    one pushdown-pruned decode of their posting blocks, fuzzy leaves
+    expand against the term dictionary, phrase tf comes from
+    positional-postings intersections, and dl / df / corpus stats come
+    from the index's doclens/terms tables and stats.json. Tombstoned
+    docs are filtered from the result; like Lucene, not-yet-compacted
+    deletes still count in df/avgdl until ``compact_index``. Without
+    ``index_dir`` (``postings.scan_inputs``) ONE tokenize pass over the
+    corpus keeps the tokens a term, prefix, wildcard or fuzzy leaf can
+    match, persisted, and serves tf, dl, the dfs and n/avgdl; phrase
+    leaves add one positional tokenize pass. Correct, but a corpus scan
+    per query (the documented anti-pattern at scale; SURVEY scale
+    warning). Keyword dfs come from one ``docs`` aggregate on either
+    side.
 
     ``serve="auto"`` (default) picks the faster side from the index's
     own stats.json N (INDEX_SERVE_MIN_DOCS); tombstones are honored
@@ -675,17 +672,13 @@ def execute_tree(
     the indexed table. Setting ``spark.sql.autoBroadcastJoinThreshold``
     to -1 forces the Spark site below, whose answer is identical."""
     from .dsl import filter_expr
-    from .postings import (
-        CorpusStats, corpus_stats, doc_lengths, postings_long, term_df,
-    )
 
     if serve not in ("auto", "index", "scan"):
         raise ValueError(f"serve must be auto|index|scan, got {serve!r}")
     chain = None
     st = None
     if index_dir is not None:
-        # ONE stats.json parse per query (chain + crossover + corpus
-        # stats all read from it)
+        # one stats.json parse for the chain and the crossover
         from .analyze import AnalysisChain
         from .build import load_stats
 
@@ -711,7 +704,6 @@ def execute_tree(
     # tombstones apply whichever side scores (the scan fallback must not
     # resurrect docs the index deleted)
     deletes_dir = index_dir
-    p = None
     if need_text and index_dir is not None:
         if serve == "scan" or (
             serve == "auto" and int(st["n_docs"]) < INDEX_SERVE_MIN_DOCS
@@ -723,149 +715,57 @@ def execute_tree(
         if served is not None:
             return served
     kw_leaves = [l for l in leaves if l.kind == "kwterm"]
+    kw_row_f = None
+    if kw_leaves:
+        # keyword idfs need one metadata aggregate over the corpus:
+        # submit it NOW from a driver thread so it overlaps the text
+        # leaves' jobs below (guide §2.6)
+        from .build import _aux_pool
+
+        cnt_exprs = [F.count(F.lit(1)).alias("_n")] + [
+            F.sum(
+                F.when(F.col(l.field) == F.lit(l.value), 1).otherwise(0)
+            ).alias(f"_d{l.id}")
+            for l in kw_leaves
+        ]
+        kw_row_f = _aux_pool().submit(docs.agg(*cnt_exprs).first)
     term_vals = sorted({l.value for l in leaves if l.kind == "term"})
-    # fast scan path (guide §2.3 "project before the exchange" / §1.2
-    # "remove unnecessary passes"): the r5 scan side re-tokenized the
-    # corpus once PER derived relation — postings for term leaves, again
-    # per prefix/wildcard leaf, a full term_df for query-term dfs, a
-    # doc_lengths pass for stats and another for the dl join (~5 corpus
-    # passes for a terms+prefix query). Here ONE projected relation
-    # (doc_id, dl, query-relevant tokens only) is computed in a single
-    # tokenize pass and persisted (it is tiny: the in-array filter keeps
-    # only tokens a leaf can match); corpus stats, keyword-idf counts,
-    # term tfs/dfs and prefix/wildcard hits are all served from it.
-    # Fuzzy leaves need the full vocabulary, so they keep the general
-    # path. Results are value-identical: same tf/df/dl/avgdl inputs into
-    # the same expressions.
-    fast_scan = (
-        need_text and index_dir is None
-        and not any(l.kind == "fuzzy" for l in leaves)
-    )
-    rel = None
-    kw_idf: dict[int, float] = {}
+    prefixes = [l.value for l in leaves if l.kind == "prefix"]
+    likes = [_wild_to_like(l.value) for l in leaves if l.kind == "wildcard"]
+    # ONE input relation for every text leaf (postings.ScoringInputs):
+    # the index's stats.json/doclens/terms with one pushdown-pruned
+    # decode of the term, prefix and wildcard leaves' postings, or one
+    # tokenize pass over the corpus keeping only the tokens a term,
+    # prefix, wildcard or fuzzy leaf can match. The scan side of a
+    # CHAINED index analyzes with the same chain, so the crossover stays
+    # invisible.
+    si = None
     if need_text and index_dir is not None:
-        from .build import read_generations
-
-        stats = CorpusStats(n_docs=int(st["n_docs"]), avgdl=float(st["avgdl"]))
-        dl = read_generations(spark, index_dir, "doclens").select("doc_id", "dl")
-        import os as _os
-
-        tdf = spark.read.parquet(_os.path.join(index_dir, "terms"))
-    elif need_text and not fast_scan:
-        # the scan side of a CHAINED index analyzes with the same chain
-        # (postings/dl/vocab all chained), so crossover stays invisible
-        text_side = docs.select(id_col, text_col)
-        p = postings_long(text_side, text_col=text_col, id_col=id_col,
-                          chain=chain)
-        dl = doc_lengths(text_side, text_col=text_col, id_col=id_col,
-                         chain=chain)
-        stats = corpus_stats(dl)
-        tdf = term_df(p)
-    elif fast_scan:
-        from .analyze import terms_array as _terms_array
-
-        tok_conds = []
-        if term_vals:
-            tok_conds.append(lambda t: t.isin(*term_vals))
-        for l in leaves:
-            if l.kind == "prefix":
-                v = l.value
-                tok_conds.append(lambda t, v=v: t.startswith(v))
-            elif l.kind == "wildcard":
-                pat = _wild_to_like(l.value)
-                tok_conds.append(lambda t, pat=pat: t.like(pat))
-
-        def _tok_pred(t):
-            out = tok_conds[0](t)
-            for c in tok_conds[1:]:
-                out = out | c(t)
-            return out
-
-        kw_fields = sorted({l.field for l in kw_leaves})
-        # _toks in its OWN projection: referenced by both dl and the
-        # filtered-token column, CollapseProject keeps the non-cheap
-        # tokenize evaluated once per row (dedup.py discipline)
-        base_proj = docs.select(
-            F.col(id_col).alias("doc_id"),
-            _terms_array(F.col(text_col), chain=chain).alias("_toks"),
-            *[F.col(f).alias(f"_kw_{f}") for f in kw_fields],
+        si = index_inputs(spark, index_dir, terms=term_vals,
+                          prefixes=prefixes, like_patterns=likes)
+    elif need_text:
+        si = scan_inputs(
+            docs, text_col=text_col, id_col=id_col, chain=chain,
+            terms=term_vals, prefixes=prefixes, like_patterns=likes,
+            fuzzy=[l.value for l in leaves if l.kind == "fuzzy"],
         )
-        rel_cols = [F.col("doc_id"), F.size("_toks").alias("dl")]
-        if tok_conds:
-            rel_cols.append(F.filter(F.col("_toks"), _tok_pred).alias("_ftoks"))
-        rel = _persist_tracked(
-            base_proj.select(*rel_cols, *[F.col(f"_kw_{f}") for f in kw_fields])
-        )
-        # ONE action computes corpus stats AND every keyword df (the
-        # r5 path ran a separate docs.agg job for the keyword idfs)
-        agg_exprs = [F.count(F.lit(1)).alias("_n"), F.avg("dl").alias("_avgdl")]
-        for l in kw_leaves:
-            agg_exprs.append(
-                F.sum(
-                    F.when(F.col(f"_kw_{l.field}") == F.lit(l.value), 1).otherwise(0)
-                ).alias(f"_d{l.id}")
-            )
-        row0 = rel.agg(*agg_exprs).first()
-        stats = CorpusStats(
-            n_docs=int(row0["_n"]), avgdl=float(row0["_avgdl"] or 0.0)
-        )
-        for l in kw_leaves:
-            df_kw = float(row0[f"_d{l.id}"])
-            kw_idf[l.id] = math.log(
-                1.0 + (float(row0["_n"]) - df_kw + 0.5) / (df_kw + 0.5)
-            )
-        dl = rel.select("doc_id", "dl")
 
     base = docs
     if filters:
         # ES filter context: restricts candidates only — corpus stats,
-        # dfs and keyword idfs above come from the UNFILTERED corpus
+        # dfs and keyword idfs come from the UNFILTERED corpus
         base = base.filter(filter_expr(filters, id_col))
     if id_col != "doc_id":
         base = base.withColumnRenamed(id_col, "doc_id")
     sel = base
 
     grp_leaves = [l for l in leaves if l.kind in ("term", "prefix", "wildcard")]
-    grp_src = None
-    if grp_leaves and fast_scan:
-        # one explode over the PRE-FILTERED token arrays (only tokens
-        # a leaf can match survive), one (doc, term) tf agg, dfs of
-        # the query terms derived from the same relation, and ONE
-        # groupBy(doc_id) computing every term/prefix/wildcard leaf
-        # column — replaces the per-leaf corpus passes and joins
-        grp_src = (
-            rel.select("doc_id", "dl", F.explode("_ftoks").alias("term"))
-            .groupBy("doc_id", "dl", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-        if term_vals:
-            from .bm25 import bm25_score_expr
-
-            dfs = (
-                grp_src.filter(F.col("term").isin(term_vals))
-                .groupBy("term")
-                .agg(F.count(F.lit(1)).alias("df"))
-            )
-            grp_src = grp_src.join(F.broadcast(dfs), "term", "left").withColumn(
-                "_c", bm25_score_expr(stats)
-            )
-    elif grp_leaves and index_dir is not None:
-        # index-served twin of the fast path: term, prefix AND wildcard
-        # leaves share ONE pushdown-pruned posting decode (r7; each leaf
-        # kind previously ran its own scan + distinct + join), then the
-        # same single groupBy(doc_id) computes every leaf column. df
-        # attaches as a LEFT broadcast join (prefix/wildcard rows carry
-        # no df and score constant 1.0 under the when() guards).
-        from .phrase import tf_postings
-
-        grp_src = tf_postings(
-            spark, index_dir,
-            terms=term_vals or None,
-            prefixes=[l.value for l in leaves if l.kind == "prefix"] or None,
-            like_patterns=[
-                _wild_to_like(l.value) for l in leaves if l.kind == "wildcard"
-            ] or None,
-        )
+    if grp_leaves:
+        # the term, prefix and wildcard leaves share the input's tf rows:
+        # df attaches as a LEFT broadcast join (prefix/wildcard rows
+        # carry no df and score constant 1.0 under the when() guards)
+        # and ONE groupBy(doc_id) computes every leaf column
+        grp_src = si.tf
         if term_vals:
             from .bm25 import bm25_score_expr
 
@@ -874,30 +774,11 @@ def execute_tree(
             )
             grp_src = (
                 grp_src.join(
-                    F.broadcast(tdf.join(qterms, "term")), "term", "left"
+                    F.broadcast(si.tdf.join(qterms, "term")), "term", "left"
                 )
-                .join(dl, "doc_id")
-                .withColumn("_c", bm25_score_expr(stats))
+                .join(si.dl, "doc_id")
+                .withColumn("_c", bm25_score_expr(si.stats))
             )
-    elif term_vals:
-        # general path (fuzzy leaves present on the scan side): term
-        # contributions from the long postings relation
-        from .bm25 import bm25_score_expr
-
-        qterms = spark.createDataFrame([(t,) for t in term_vals], "term string")
-        src = p.join(F.broadcast(qterms), "term")
-        contrib = (
-            src
-            .join(F.broadcast(tdf.join(qterms, "term")), "term")
-            .join(dl, "doc_id")
-            .withColumn("_c", bm25_score_expr(stats))
-        )
-        aggs = [
-            F.max(F.when(F.col("term") == l.value, F.col("_c"))).alias(f"_qs{l.id}")
-            for l in leaves if l.kind == "term"
-        ]
-        sel = sel.join(contrib.groupBy("doc_id").agg(*aggs), "doc_id", "left")
-    if grp_src is not None:
         aggs = []
         for l in grp_leaves:
             if l.kind == "term":
@@ -924,21 +805,6 @@ def execute_tree(
         sel = sel.join(grp_src.groupBy("doc_id").agg(*aggs), "doc_id", "left")
 
     from .analyze import tokens_df
-
-    # keyword idfs need one metadata aggregate over the corpus; on the
-    # non-fast paths submit it NOW from a driver thread so it overlaps
-    # the phrase-df count and broadcast-build jobs below (guide §2.6)
-    kw_row_f = None
-    if kw_leaves and not fast_scan:
-        from .build import _aux_pool
-
-        cnt_exprs = [F.count(F.lit(1)).alias("_n")] + [
-            F.sum(
-                F.when(F.col(l.field) == F.lit(l.value), 1).otherwise(0)
-            ).alias(f"_d{l.id}")
-            for l in kw_leaves
-        ]
-        kw_row_f = _aux_pool().submit(docs.agg(*cnt_exprs).first)
 
     toks = None
     for l in leaves:
@@ -1021,45 +887,18 @@ def execute_tree(
             df_ph = tf_rel.count()
             from .postings import B, K1
 
-            idf = math.log(1.0 + (stats.n_docs - df_ph + 0.5) / (df_ph + 0.5))
-            ph = tf_rel.join(dl, "doc_id").select(
+            idf = math.log(1.0 + (si.stats.n_docs - df_ph + 0.5) / (df_ph + 0.5))
+            ph = tf_rel.join(si.dl, "doc_id").select(
                 "doc_id",
                 (
                     F.lit(idf) * F.col("tf") * F.lit(K1 + 1.0)
                     / (F.col("tf") + F.lit(K1) * (
                         F.lit(1.0 - B)
-                        + F.lit(B) * F.col("dl") / F.lit(float(stats.avgdl))
+                        + F.lit(B) * F.col("dl") / F.lit(float(si.stats.avgdl))
                     ))
                 ).alias(f"_qs{l.id}"),
             )
             sel = sel.join(ph, "doc_id", "left")
-        elif l.kind == "prefix" and grp_src is None:
-            if index_dir is not None:
-                from .phrase import tf_postings
-
-                src = tf_postings(spark, index_dir, prefix=l.value)
-            else:
-                src = p.filter(F.col("term").startswith(l.value))
-            hits = (
-                src.select("doc_id").distinct()
-                .withColumn(f"_qs{l.id}", F.lit(1.0))
-            )
-            sel = sel.join(hits, "doc_id", "left")
-        elif l.kind == "wildcard" and grp_src is None:
-            # constant-score multi-term rewrite over the vocabulary
-            # (Lucene's default for wildcard), like prefix
-            pat = _wild_to_like(l.value)
-            if index_dir is not None:
-                from .phrase import tf_postings
-
-                src = tf_postings(spark, index_dir, like_pattern=pat)
-            else:
-                src = p.filter(F.col("term").like(pat))
-            hits = (
-                src.select("doc_id").distinct()
-                .withColumn(f"_qs{l.id}", F.lit(1.0))
-            )
-            sel = sel.join(hits, "doc_id", "left")
         elif l.kind == "fuzzy":
             # Lucene fuzzy, deterministic variant: expansions = the
             # ≤ 50 vocabulary terms within `edits` (ES max_expansions),
@@ -1072,7 +911,7 @@ def execute_tree(
 
             base_t, edits = l.value
             exp = (
-                tdf.withColumn(
+                si.tdf.withColumn(
                     "dist", F.levenshtein(F.col("term"), F.lit(base_t))
                 )
                 .filter(F.col("dist") <= F.lit(int(edits)))
@@ -1089,7 +928,8 @@ def execute_tree(
                     if terms_l else None
                 )
             else:
-                fsrc = p.join(F.broadcast(exp.select("term")), "term")
+                # the scan relation kept every token within `edits`
+                fsrc = si.tf.join(F.broadcast(exp.select("term")), "term")
             if fsrc is None:
                 sel = sel.withColumn(
                     f"_qs{l.id}", F.lit(None).cast("double")
@@ -1101,23 +941,16 @@ def execute_tree(
                 )
                 fcontrib = (
                     fsrc.join(F.broadcast(exp), "term")
-                    .join(dl, "doc_id")
-                    .withColumn("_c", bm25_score_expr(stats) * boost)
+                    .join(si.dl, "doc_id")
+                    .withColumn("_c", bm25_score_expr(si.stats) * boost)
                     .groupBy("doc_id")
                     .agg(F.max("_c").alias(f"_qs{l.id}"))
                 )
                 sel = sel.join(fcontrib, "doc_id", "left")
 
-    if kw_leaves and fast_scan:
-        # idfs precomputed by the fused rel aggregate above
-        for l in kw_leaves:
-            sel = sel.withColumn(
-                f"_qs{l.id}",
-                F.when(F.col(l.field) == F.lit(l.value), F.lit(kw_idf[l.id])),
-            )
-    elif kw_leaves:
+    if kw_leaves:
         # ONE metadata aggregate computes every keyword df + the row
-        # count (submitted above, overlapping the phrase/broadcast jobs)
+        # count (submitted above, overlapping the text leaves' jobs)
         row = kw_row_f.result()
         n_total = float(row["_n"])
         for l in kw_leaves:

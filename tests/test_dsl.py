@@ -1041,6 +1041,38 @@ def test_simple_query_string_prefix_uses_index(spark, documents, tmp_path_factor
     assert scan == idx and scan
 
 
+def test_simple_query_string_candidate_base(spark, documents, tmp_path_factory):
+    """A body with no scoring term returns EVERY doc it admits: the
+    candidates start from all docs with a token, and an exclusion, a
+    prefix or a phrase only narrows them — same doc-id set with and
+    without an index, equal to a tokens_df reference."""
+    from es_loaders_spark.analyze import tokens_df
+    from es_loaders_spark.build import build_index
+
+    d = str(tmp_path_factory.mktemp("sqs_base_idx"))
+    build_index(spark, documents, d, n_shards=2)
+    toks = tokens_df(documents)
+
+    def ids(rel):
+        return {r["doc_id"] for r in rel.select("doc_id").distinct().collect()}
+
+    a = toks.filter(F.col("term") == "the").select("doc_id", F.col("pos").alias("p"))
+    b = toks.filter(F.col("term") == "data").select(
+        "doc_id", (F.col("pos") - 1).alias("p"))
+    want = {
+        "-merge": ids(toks) - ids(toks.filter(F.col("term") == "merge")),
+        "quer*": ids(toks.filter(F.col("term").startswith("quer"))),
+        '"the data"': ids(a.join(b, ["doc_id", "p"])),
+    }
+    for q, expect in want.items():
+        assert expect, q
+        body = {"query": {"simple_query_string": {"query": q}}, "size": 10_000}
+        for index_dir in (None, d):
+            got = [r["doc_id"] for r in dsl.search(
+                spark, documents, body, index_dir=index_dir).collect()]
+            assert got == sorted(expect), (q, index_dir)
+
+
 # ---------------------------------------------------------------------------
 # Compound scoring queries: dis_max / constant_score / boosting /
 # function_score, plus collapse & rescore (r5 second wave). Value-level

@@ -6,6 +6,8 @@ term row for a 3-term query, is wrong at scale even if results match.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -120,3 +122,34 @@ def test_dedup_fingerprints_need_no_key_shuffle(spark, sf_dir):
     for df in (minhash_signatures(wide), simhash(wide)):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
+
+
+def _tokenize_nodes(df) -> set[str]:
+    """The distinct nodes of ``df``'s executed plan that tokenize text.
+    A persisted relation prints under every scan that reads it, so the
+    tree prefixes are stripped before the nodes are compared."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return {
+        re.sub(r"^[\s:+\-|*()0-9]*", "", line)
+        for line in plan.splitlines() if "split(lower(" in line
+    }
+
+
+@pytest.mark.parametrize("query", [
+    {"match": {"text": "spark data"}},
+    {"function_score": {"query": {"match": {"text": "spark data"}},
+                        "field_value_factor": {"field": "n_chars"}}},
+    {"query_string": {"query": "spark~1 OR data"}},
+])
+def test_scan_scorer_tokenizes_once(spark, documents, query):
+    """A scan-side scorer reads ONE query-scoped relation: a single
+    tokenize projection over the docs scan feeds tf, dl, df and the
+    corpus stats. No Generate explodes the raw token array, so there is
+    no full-vocabulary (term, doc_id) aggregate — only tokens a query
+    term (or a fuzzy leaf's edit distance) selects are exploded."""
+    from es_loaders_spark import dsl
+
+    nodes = _tokenize_nodes(dsl.search(spark, documents, {"query": query}))
+    assert len(nodes) == 1, nodes
+    assert next(iter(nodes)).startswith("Project"), nodes

@@ -80,3 +80,34 @@ def test_caches_survive_session_restart(tmp_path):
         capture_output=True, text=True, timeout=600, env=env,
     )
     assert "RESTART-OK" in proc.stdout, proc.stderr[-3000:]
+
+
+def test_aux_pool_carries_the_submitters_job_properties(spark):
+    """A job submitted through the shared driver-side pool runs under the
+    submitter's job description and scheduler pool, and a later submit
+    from a thread without them leaves none behind on the pool thread."""
+    import threading
+
+    from es_loaders_spark.build import _aux_pool
+
+    sc = spark.sparkContext
+    keys = ("spark.job.description", "spark.scheduler.pool")
+
+    def read():
+        return tuple(sc.getLocalProperty(k) for k in keys)
+
+    sc.setJobDescription("x")
+    sc.setLocalProperty("spark.scheduler.pool", "p1")
+    try:
+        for _ in range(8):  # idle pool threads are reused across submits
+            assert _aux_pool().submit(read).result(timeout=60) == ("x", "p1")
+    finally:
+        sc.setJobDescription(None)
+        sc.setLocalProperty("spark.scheduler.pool", None)
+    got = []
+    t = threading.Thread(target=lambda: got.extend(
+        _aux_pool().submit(read).result(timeout=60) for _ in range(8)))
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive()
+    assert got == [(None, None)] * 8
