@@ -38,15 +38,26 @@ SPLIT_RE_DUCKDB = r"[^\pL\pN]+"
 _TOKEN_RE_PY = re.compile(r"[^\W_]+", re.UNICODE)
 
 
-def terms_array(text_col: Column, chain: "AnalysisChain | None" = None) -> Column:
+def terms_array(
+    text_col: Column,
+    chain: "AnalysisChain | None" = None,
+    gaps: bool = False,
+) -> Column:
     """array<string> of analyzed terms for a text column (JVM-side).
 
     With ``chain``: stop tokens are dropped and survivors mapped
-    (synonym → stem) — the COMPACT shape (no position gaps); use
-    ``tokens_df`` where positions matter.
+    (synonym → stem) — the COMPACT shape (no position gaps). With
+    ``gaps=True`` each stop token is a null in place instead, so a
+    token's array index is its position with Lucene's stop gaps (the
+    positions ``tokens_df`` and the index store); dropping the nulls
+    gives the compact shape.
     """
     arr = F.split(F.lower(text_col), SPLIT_RE_JAVA)
     arr = F.filter(arr, lambda t: t != F.lit(""))
+    if chain is not None and gaps and chain.stopwords:
+        return F.transform(
+            arr, lambda t: F.when(chain.keep_col(t), chain.term_col(t))
+        )
     if chain is not None:
         if chain.stopwords:
             arr = F.filter(arr, chain.keep_col)

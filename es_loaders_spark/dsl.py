@@ -1094,13 +1094,16 @@ def _sqs_topk(
     Candidate plan shape: every restriction is a semi/anti-join on
     doc_id against an id set from the scan inputs' tf rows (their
     selectors are the scoring, excluded and prefix terms) or, for
-    phrases, from positions — no text re-scan for phrases and prefix
-    expansion when an index_dir serves them. Without a scoring term
-    the candidates start from every doc with a token (``dl > 0``).
+    phrases, ``phrase.phrase_ends`` over a positions input — the scan
+    inputs' own (same tokenize pass), or with an index_dir the index's,
+    whose phrases analyze through the index's chain and drop tombstoned
+    docs; prefix expansion is index-served there too. Without a scoring
+    term the candidates start from every doc with a token (``dl > 0``).
     """
-    from .analyze import tokens_df
     from .bm25 import bm25_topk
-    from .postings import scan_inputs
+    from .deletes import filter_deleted
+    from .phrase import phrase_ends
+    from .postings import index_positions, scan_inputs
 
     parsed = _parse_sqs(sub["query"])
     fields = list(sub.get("fields") or [text_col])
@@ -1118,16 +1121,24 @@ def _sqs_topk(
     excluded = sorted(set(parsed["excluded"]))
     selectors = {"terms": scoring_terms + excluded}
     if on_index:
-        from .phrase import expand_prefix
+        from .phrase import _phrase_terms, expand_prefix
 
         expansions = [expand_prefix(spark, index_dir, pfx, max_expansions=50)
                       for pfx in parsed["prefixes"]]
         selectors["terms"] += sum(expansions, [])
         prefix_hits = [F.col("term").isin(e) for e in expansions]
+        phrases = [_phrase_terms(index_dir, " ".join(ph))
+                   for ph in parsed["phrases"]]
     else:
         selectors["prefixes"] = parsed["prefixes"]
         prefix_hits = [F.col("term").startswith(x) for x in parsed["prefixes"]]
-    si = scan_inputs(docs, text_col=field, id_col=id_col, **selectors)
+        phrases = [list(enumerate(ph)) for ph in parsed["phrases"]]
+    words = [t for ph in phrases for _, t in ph]
+    si = scan_inputs(docs, text_col=field, id_col=id_col,
+                     phrase_words=() if on_index else words, **selectors)
+    positions = si.positions
+    if on_index and words:
+        positions = index_positions(spark, index_dir, words)
     p = si.tf
     cand = p if scoring_terms else si.dl.filter(F.col("dl") > 0)
     cand = _in_filter(cand, docs, filters, id_col)
@@ -1141,27 +1152,13 @@ def _sqs_topk(
     if excluded:
         bad = p.filter(F.col("term").isin(excluded)).select("doc_id")
         cand = cand.join(bad, "doc_id", "left_anti")
-    for phrase_terms in parsed["phrases"]:
-        if on_index:
-            from .phrase import phrase_docs
-
-            hits = phrase_docs(spark, index_dir, " ".join(phrase_terms))
+    for pairs in phrases:
+        if not pairs:  # every word of the phrase was a stopword
+            hits = spark.createDataFrame([], "doc_id long")
         else:
-            # token-adjacency scan (correct everywhere; index-served when
-            # an index over the field exists)
-            toks = tokens_df(docs.select(id_col, field), text_col=field,
-                             id_col=id_col)
-            cur = toks.filter(F.col("term") == phrase_terms[0]).select(
-                "doc_id", F.col("pos").alias("p")
-            )
-            for t in phrase_terms[1:]:
-                nxt = toks.filter(F.col("term") == t).select(
-                    "doc_id", (F.col("pos") - 1).alias("p")
-                )
-                cur = cur.join(nxt, ["doc_id", "p"]).select(
-                    "doc_id", (F.col("p") + 1).alias("p")
-                )
-            hits = cur.select("doc_id").distinct()
+            hits = phrase_ends(positions, pairs).select("doc_id")
+        if on_index:
+            hits = filter_deleted(spark, index_dir, hits)
         cand = cand.join(hits, "doc_id", "left_semi")
     for hit in prefix_hits:
         cand = cand.join(
@@ -1697,16 +1694,15 @@ def _proximity_docs(
     (p_last − p_first − (n−1) ≤ slop); unordered: the minimal window
     containing all terms has gaps ≤ slop (max − min − (n−1) ≤ slop).
     An n-way positional self-join — the positional-index analogue of
-    Lucene's SpanNearQuery. With ``index_dir`` each join leg explodes
-    the terms' POSITIONAL POSTINGS (one pushdown-pruned decode of just
-    these terms' blocks — r5); otherwise each leg is a term-filtered
-    tokenization of the corpus (the scan path; ``serve="scan"`` forces
-    it with ``index_dir`` kept for chain + tombstone fidelity). With
-    ``chain`` the scan side tokenizes through the index's analysis
-    chain, keeping stop-GAPPED positions so slop windows agree with the
-    chained index exactly.
+    Lucene's SpanNearQuery — whose legs explode the ``positions``
+    scoring input: with ``index_dir`` one pushdown-pruned decode of
+    just these terms' blocks, otherwise the scan inputs' one tokenize
+    pass (``serve="scan"`` forces it with ``index_dir`` kept for chain
+    + tombstone fidelity). With ``chain`` the scan side analyzes
+    through the index's analysis chain, keeping stop-GAPPED positions
+    so slop windows agree with the chained index exactly.
     """
-    from .analyze import tokens_df
+    from .postings import index_positions, scan_inputs
 
     if len(set(terms)) != len(terms):
         raise ValueError(
@@ -1716,26 +1712,16 @@ def _proximity_docs(
     if len(terms) < 2:
         raise ValueError("span_near/intervals needs at least two terms")
     if index_dir is not None and serve != "scan":
-        from .phrase import positional_postings
-
-        pp = positional_postings(spark, index_dir, sorted(set(terms))).cache()
-        legs = [
-            pp.filter(F.col("term") == t).select(
-                "doc_id", F.explode("positions").alias(f"p{i}")
-            )
-            for i, t in enumerate(terms)
-        ]
+        pos = index_positions(spark, index_dir, terms)
     else:
-        # chain=... keeps the index's stop-GAPPED positions on the scan
-        # side so slop windows agree with the chained index exactly
-        toks = tokens_df(docs.select(id_col, text_col), text_col=text_col,
-                         id_col=id_col, chain=chain)
-        legs = [
-            toks.filter(F.col("term") == t).select(
-                "doc_id", F.col("pos").alias(f"p{i}")
-            )
-            for i, t in enumerate(terms)
-        ]
+        pos = scan_inputs(docs, text_col=text_col, id_col=id_col, chain=chain,
+                          phrase_words=terms).positions
+    legs = [
+        pos.filter(F.col("term") == t).select(
+            "doc_id", F.explode("positions").alias(f"p{i}")
+        )
+        for i, t in enumerate(terms)
+    ]
     joined = legs[0]
     for leg in legs[1:]:
         joined = joined.join(leg, "doc_id")
@@ -2353,7 +2339,7 @@ def search(
             # the index's stop-GAPPED positions, exactly Lucene's
             # SpanNearQuery over a position-increment-preserving stop
             # filter; the scan twin reproduces those positions via
-            # tokens_df(chain=...).
+            # scan_inputs(chain=...).positions.
             hits = _proximity_docs(
                 spark, docs, terms, slop, in_order, id_col, text_col,
                 index_dir=index_dir, chain=_index_chain(index_dir),

@@ -11,10 +11,19 @@ Here the phrase is answered FROM THE COMPRESSED INDEX:
    (``term IN (...)`` reaches the scan; positions live in the same rows
    as ``pos_payload``, written by build.py/merge.py);
 2. a ``mapInPandas`` kernel decodes (doc_id, positions[]) per posting —
-   numpy delta-decode + C-level ``np.split``, no per-token Python;
-3. adjacency is pure Catalyst: iterative equi-join on doc_id with
-   ``array_intersect(transform(prev, p -> p+1), next)`` — the shuffle
-   carries one row per (term, doc), not one per occurrence.
+   numpy delta-decode + C-level ``np.split``, no per-token Python.
+   ``postings.index_positions`` hands this relation out as the
+   ``positions`` scoring input (persisted through the shared
+   query-scoped pool when it covers more than one word);
+3. ``phrase_ends`` is the one position-delta evaluator: an iterative
+   equi-join on doc_id with
+   ``array_intersect(transform(prev, p -> p + delta), next)`` — the
+   shuffle carries one row per (term, doc), not one per occurrence.
+   Every phrase and proximity query reads it or its positions: match
+   phrases, phrase prefixes, query_string and simple_query_string
+   phrase leaves and span_near/intervals, on the index side and on the
+   scan side, whose ``postings.scan_inputs(phrase_words=)`` derives
+   the same relation from its one tokenize projection.
 
 At 1000 executors: each phrase term's postings are one pushdown-pruned
 scan; the doc_id equi-joins start from the rarest term's df (join
@@ -34,6 +43,7 @@ from pyspark.sql import functions as F
 
 from .analyze import tokenize_text
 from .codec import decode_blocks_flat_batch, decode_positions_flat_batch
+from .postings import index_positions
 
 
 def positional_postings(
@@ -97,8 +107,6 @@ def tf_postings(
     index_dir: str,
     terms: list[str] | None = None,
     table: str = "shards",
-    prefix: str | None = None,
-    like_pattern: str | None = None,
     shards: list[int] | None = None,
     prefixes: list[str] | None = None,
     like_patterns: list[str] | None = None,
@@ -110,11 +118,9 @@ def tf_postings(
     the docs/tfs payloads — works on positions=False (BM25-only) indexes
     too. This is the index-served building block for scoring arbitrary
     term leaves (query_string, terms_set, ...) without a corpus scan.
-    ``terms`` and the plural ``prefixes`` / ``like_patterns`` combine as
-    ONE disjunctive filter, so a boolean query's term, prefix and
-    wildcard leaves share a single decode pass over the index. The
-    singular ``prefix`` / ``like_pattern`` keep their conjunctive
-    meaning: each further narrows the rows the other selectors pick.
+    ``terms``, ``prefixes`` and ``like_patterns`` combine as ONE
+    disjunctive filter, so a boolean query's term, prefix and wildcard
+    leaves share a single decode pass over the index.
     """
     from .build import read_generations
 
@@ -129,14 +135,9 @@ def tf_postings(
     anyof += [F.col("term").like(pat) for pat in like_patterns or []]
     if terms is not None:
         anyof.insert(0, F.col("term").isin(terms))
-    allof = [F.col("term").startswith(prefix)] if prefix is not None else []
-    if like_pattern is not None:
-        allof.append(F.col("term").like(like_pattern))
-    if anyof:
-        allof.insert(0, functools.reduce(operator.or_, anyof))
-    if not allof:
+    if not anyof:
         raise ValueError("tf_postings needs terms, a prefix or a pattern")
-    idx = idx.filter(functools.reduce(operator.and_, allof))
+    idx = idx.filter(functools.reduce(operator.or_, anyof))
     idx = idx.select("term", "min_doc", "docs_payload", "tfs_payload")
 
     def decode(batches):
@@ -176,49 +177,60 @@ def _phrase_terms(index_dir: str, phrase: str) -> list[tuple[int, str]]:
     return chain.tokens_pos(phrase)
 
 
-def phrase_docs(
-    spark: SparkSession, index_dir: str, phrase: str, table: str = "shards"
-) -> DataFrame:
-    """doc_ids containing the exact phrase (adjacent analyzer tokens).
+def phrase_ends(positions: DataFrame, pairs) -> DataFrame:
+    """(doc_id, ends): the end positions of the phrase in each doc that
+    holds it — the one position-delta evaluator of every phrase and
+    proximity query.
 
-    Conjunctive positional intersection: after joining term i+1, the
-    carried ``positions`` are the end positions of length-(i+1) phrase
-    matches; a doc survives while the intersection is non-empty.
-    """
-    qtoks = _phrase_terms(index_dir, phrase)
-    if not qtoks:
-        return spark.createDataFrame([], "doc_id long")
-    terms = [t for _, t in qtoks]
-    pp = positional_postings(spark, index_dir, sorted(set(terms)), table)
-    if len(set(terms)) > 1:
-        pp = pp.cache()  # one decode pass shared by all phrase-term filters
-    cur = pp.filter(F.col("term") == terms[0]).select(
-        "doc_id", F.col("positions").alias("cur")
+    ``positions`` is a ``ScoringInputs.positions`` relation (term,
+    doc_id, ascending positions) covering the phrase's words; ``pairs``
+    are its (query_position, term) pairs. Each step joins the next
+    term's positions on doc_id and keeps
+    ``array_intersect(transform(ends, p -> p + delta), next)``, where
+    ``delta`` is the query-position gap between successive surviving
+    terms: 1 in the default grammar, more where a stop filter removed a
+    query token (Lucene PhraseQuery keeps the gap, so the doc must hold
+    the surviving terms at the SAME spacing). A doc survives while the
+    intersection is non-empty; ``size(ends)`` is the phrase's tf. The
+    shuffle carries one row per (term, doc), not one per occurrence."""
+    (prev, first), rest = pairs[0], pairs[1:]
+    ends = positions.filter(F.col("term") == first).select(
+        "doc_id", F.col("positions").alias("ends")
     )
-    prev_pos = qtoks[0][0]
-    for qpos, t in qtoks[1:]:
-        # position delta between successive analyzed query tokens: 1 in
-        # the default grammar; >1 when the index's stop filter removed a
-        # query token (gap) — Lucene PhraseQuery keeps the gap, so the
-        # doc must have the surviving terms at the SAME spacing
-        delta = qpos - prev_pos
-        prev_pos = qpos
-        nxt = pp.filter(F.col("term") == t).select(
-            "doc_id", F.col("positions").alias("nxt")
+    for qpos, t in rest:
+        delta = qpos - prev
+        prev = qpos
+        nxt = positions.filter(F.col("term") == t).select(
+            "doc_id", F.col("positions").alias("_nxt")
         )
-        cur = (
-            cur.join(nxt, "doc_id")
+        ends = (
+            ends.join(nxt, "doc_id")
             .select(
                 "doc_id",
                 F.array_intersect(
-                    F.transform("cur", lambda p: p + delta), F.col("nxt")
-                ).alias("cur"),
+                    F.transform("ends", lambda p: p + delta), F.col("_nxt")
+                ).alias("ends"),
             )
-            .filter(F.size("cur") > 0)
+            .filter(F.size("ends") > 0)
         )
+    return ends
+
+
+def phrase_docs(
+    spark: SparkSession, index_dir: str, phrase: str, table: str = "shards"
+) -> DataFrame:
+    """doc_ids containing the exact phrase (adjacent analyzer tokens),
+    tombstones dropped: ``phrase_ends`` over the index's positions of
+    the phrase's analyzed words."""
     from .deletes import filter_deleted
 
-    return filter_deleted(spark, index_dir, cur.select("doc_id"))
+    pairs = _phrase_terms(index_dir, phrase)
+    if not pairs:
+        return spark.createDataFrame([], "doc_id long")
+    pos = index_positions(spark, index_dir, [t for _, t in pairs], table)
+    return filter_deleted(
+        spark, index_dir, phrase_ends(pos, pairs).select("doc_id")
+    )
 
 
 def expand_prefix(
@@ -265,9 +277,8 @@ def phrase_prefix_docs(
     ANY expansion of the prefix (expansions from the index term
     dictionary, capped at ``max_expansions`` in term order).
 
-    Same conjunctive positional plan as phrase_docs; the final step
-    joins the union of expansion-term postings, so the shuffle still
-    carries one row per (term, doc).
+    The expansions stand in as one term, so ``phrase_ends`` walks the
+    whole phrase and a doc matches when any expansion ends it.
     """
     from .deletes import filter_deleted
 
@@ -278,52 +289,10 @@ def phrase_prefix_docs(
     exps = expand_prefix(spark, index_dir, last, max_expansions, table)
     if not exps:
         return spark.createDataFrame([], "doc_id long")
-    head_terms = [t for _, t in head]
-    pp = positional_postings(
-        spark, index_dir, sorted(set(head_terms) | set(exps)), table
+    pos = index_positions(
+        spark, index_dir, [t for _, t in head] + exps, table
     )
-    if head or len(exps) > 1:
-        pp = pp.cache()
-    if not head:
-        return filter_deleted(
-            spark, index_dir,
-            pp.filter(F.col("term").isin(exps)).select("doc_id").distinct(),
-        )
-    cur = pp.filter(F.col("term") == head_terms[0]).select(
-        "doc_id", F.col("positions").alias("cur")
-    )
-    prev_pos = head[0][0]
-    for qpos, t in head[1:]:
-        delta = qpos - prev_pos
-        prev_pos = qpos
-        nxt = pp.filter(F.col("term") == t).select(
-            "doc_id", F.col("positions").alias("nxt")
-        )
-        cur = (
-            cur.join(nxt, "doc_id")
-            .select(
-                "doc_id",
-                F.array_intersect(
-                    F.transform("cur", lambda p: p + delta), F.col("nxt")
-                ).alias("cur"),
-            )
-            .filter(F.size("cur") > 0)
-        )
-    tail = pp.filter(F.col("term").isin(exps)).select(
-        "doc_id", F.col("positions").alias("nxt")
-    )
-    last_delta = last_pos - prev_pos
-    hits = (
-        cur.join(tail, "doc_id")
-        .filter(
-            F.size(
-                F.array_intersect(
-                    F.transform("cur", lambda p: p + last_delta), F.col("nxt")
-                )
-            )
-            > 0
-        )
-        .select("doc_id")
-        .distinct()
-    )
-    return filter_deleted(spark, index_dir, hits)
+    # "" is no analyzed term, so it names the expansions' union
+    tail = pos.filter(F.col("term").isin(exps)).withColumn("term", F.lit(""))
+    hits = phrase_ends(pos.unionByName(tail), head + [(last_pos, "")])
+    return filter_deleted(spark, index_dir, hits.select("doc_id").distinct())

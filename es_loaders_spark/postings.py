@@ -13,17 +13,16 @@ Two forms live here:
   side (whose seed needs its whole vocabulary) read it.
 - **Query-scoped scoring inputs** (``ScoringInputs``): the four BM25
   inputs of one query — tf rows of the terms its selectors match, doc
-  lengths, dfs and n/avgdl — from one of two constructors.
-  ``scan_inputs`` tokenizes the corpus ONCE into a persisted
-  ``(doc_id, dl, tokens a selector matches)`` relation; one aggregate
-  over it gives n/avgdl, and the tf rows and the selected terms' dfs
-  come from the same relation. ``index_inputs`` reads stats.json,
-  the doclens generations and ``terms/`` of a built index, with
-  ``phrase.tf_postings`` decoding the selected terms' rows. Every scan
-  or index scorer (match, multi_match, simple_query_string, terms_set,
-  explain, the compound scorers, query_string, more_like_this's index
-  side) takes its inputs from one of them, so tf/df/dl/avgdl are equal
-  to the long form's by construction.
+  lengths, dfs and n/avgdl — and the positions of its phrase words,
+  from one of two constructors. ``scan_inputs`` tokenizes the corpus
+  ONCE into a persisted ``(doc_id, dl, tokens a selector matches,
+  phrase-word positions)`` relation that every input reads.
+  ``index_inputs`` reads stats.json, the doclens generations and
+  ``terms/`` of a built index, with ``phrase.tf_postings`` and
+  ``phrase.positional_postings`` decoding the selected rows. Every
+  scorer and every phrase or proximity query takes its inputs from one
+  of them, so tf/df/dl/avgdl and positions equal the long form's and
+  ``tokens_df``'s by construction.
 
 All scan plans here are pure Catalyst: tokenize (JVM), groupBy partial +
 final hash agg, no Python in the hot path. The compressed block form
@@ -101,8 +100,9 @@ def corpus_stats(doc_lens: DataFrame) -> CorpusStats:
 
 # Bounded pool of tracked persists (session.PersistPool): each scan-side
 # scorer caches ONE small query-scoped relation — (doc_id, dl, tokens a
-# selector matches) — that its tf, df and dl inputs all read, and
-# query_string's phrase leaves cache their decoded positional postings.
+# selector matches, phrase-word positions) — that its tf, df, dl and
+# positions inputs all read, and an index-side phrase caches its decoded
+# positional postings.
 _MAX_TRACKED = 16
 _TRACKED_PERSISTS = PersistPool(_MAX_TRACKED)
 _persist_tracked = _TRACKED_PERSISTS.persist
@@ -115,17 +115,23 @@ def release_scoring_caches() -> None:
     _TRACKED_PERSISTS.release()
 
 
+_POSITIONS_SCHEMA = "term string, doc_id long, positions array<long>"
+
+
 @dataclass(frozen=True)
 class ScoringInputs:
-    """The four BM25 inputs of one query, the shapes ``bm25.bm25_scores``
+    """The BM25 inputs of one query, the shapes ``bm25.bm25_scores``
     takes: ``tf`` (term, doc_id, tf) rows of the selected terms (none
     without a selector), ``dl`` (doc_id, dl), ``tdf`` (term, df) — at
-    least every selected term — and ``stats``."""
+    least every selected term — and ``stats``; and ``positions``
+    (term, doc_id, ascending positions with the chain's stop gaps) of
+    the ``phrase_words``, which ``phrase.phrase_ends`` reads."""
 
     tf: DataFrame
     dl: DataFrame
     tdf: DataFrame
     stats: CorpusStats
+    positions: DataFrame
 
 
 def scan_inputs(
@@ -137,6 +143,7 @@ def scan_inputs(
     prefixes=(),
     like_patterns=(),
     fuzzy=(),
+    phrase_words=(),
 ) -> ScoringInputs:
     """Scoring inputs from ONE tokenize pass over ``docs``.
 
@@ -150,7 +157,10 @@ def scan_inputs(
     the same values ``postings_long`` / ``doc_lengths`` / ``term_df`` /
     ``corpus_stats`` give for those terms, without a full-vocabulary
     shuffle. ``dl`` has a row for every doc, with or without tokens, so
-    a candidate set that no selector seeds starts from ``dl > 0``."""
+    a candidate set that no selector seeds starts from ``dl > 0``.
+
+    ``positions`` of the ``phrase_words`` come from the same projection,
+    with no shuffle and no Generate over raw tokens."""
     conds = []
     if terms:
         conds.append(lambda t, vals=sorted(set(terms)): t.isin(*vals))
@@ -164,17 +174,36 @@ def scan_inputs(
     def selected(t):
         return functools.reduce(operator.or_, [c(t) for c in conds], F.lit(False))
 
-    # _toks in its OWN projection: referenced by both dl and the selected
-    # tokens, CollapseProject keeps the non-cheap tokenize evaluated once
+    # each array in its OWN projection: referenced twice by the next
+    # one, CollapseProject keeps the non-cheap tokenize evaluated once
     # per row (dedup.py discipline)
+    words = sorted(set(phrase_words))
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
-        terms_array(F.col(text_col), chain=chain).alias("_toks"),
+        terms_array(F.col(text_col), chain=chain, gaps=bool(words))
+        .alias("_toks"),
     )
+    pos_cols = []
+    if words:
+        # a word's positions are its indices in the stop-GAPPED array;
+        # without the nulls it is the compact array dl and tf count
+        toks = toks.select(
+            "doc_id",
+            F.filter("_toks", lambda t: t.isNotNull()).alias("_toks"),
+            F.filter(F.array(*[
+                F.struct(F.lit(w).alias("term"), F.filter(
+                    F.transform("_toks", lambda t, i: F.when(t == w, i.cast("long"))),
+                    lambda p: p.isNotNull(),
+                ).alias("positions"))
+                for w in words
+            ]), lambda s: F.size(s["positions"]) > 0).alias("_pos"),
+        )
+        pos_cols = ["_pos"]
     rel = _persist_tracked(toks.select(
         "doc_id",
         F.size("_toks").alias("dl"),
         F.filter("_toks", selected).alias("_sel"),
+        *pos_cols,
     ))
     dl = rel.select("doc_id", "dl")
     tf = (
@@ -182,7 +211,14 @@ def scan_inputs(
         .groupBy("term", "doc_id")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    return ScoringInputs(tf=tf, dl=dl, tdf=term_df(tf), stats=corpus_stats(dl))
+    if words:
+        positions = rel.select("doc_id", F.inline("_pos")).select(
+            "term", "doc_id", "positions"
+        )
+    else:
+        positions = docs.sparkSession.createDataFrame([], _POSITIONS_SCHEMA)
+    return ScoringInputs(tf=tf, dl=dl, tdf=term_df(tf), stats=corpus_stats(dl),
+                         positions=positions)
 
 
 def index_inputs(
@@ -191,13 +227,15 @@ def index_inputs(
     terms=(),
     prefixes=(),
     like_patterns=(),
+    phrase_words=(),
 ) -> ScoringInputs:
     """Scoring inputs of a built index: n/avgdl from stats.json, ``dl``
     from the doclens generations, ``tdf`` the whole ``terms/`` table and
     ``tf`` the compressed postings of the selected terms, prefixes and
     LIKE patterns (one pushdown-pruned ``phrase.tf_postings`` decode;
-    no read without a selector). Like Lucene, not-yet-compacted deletes
-    still count in df/avgdl; callers drop tombstoned hits."""
+    no read without a selector) and ``positions`` the phrase words'
+    (``index_positions``). Like Lucene, not-yet-compacted deletes still
+    count in df/avgdl; callers drop tombstoned hits."""
     from .build import load_stats, read_generations
     from .phrase import tf_postings
 
@@ -215,4 +253,22 @@ def index_inputs(
         dl=read_generations(spark, index_dir, "doclens").select("doc_id", "dl"),
         tdf=spark.read.parquet(os.path.join(index_dir, "terms")),
         stats=CorpusStats(n_docs=int(st["n_docs"]), avgdl=float(st["avgdl"])),
+        positions=index_positions(spark, index_dir, phrase_words),
     )
+
+
+def index_positions(
+    spark: SparkSession, index_dir: str, phrase_words=(), table: str = "shards"
+) -> DataFrame:
+    """The ``positions`` input of a built index: one
+    ``phrase.positional_postings`` decode of the ``phrase_words``,
+    persisted through the query-derived pool when it covers more than
+    one word (each phrase step reads it). Filters that score nothing
+    call it directly, skipping ``index_inputs``' doclens/terms reads."""
+    from .phrase import positional_postings
+
+    words = sorted(set(phrase_words))
+    if not words:
+        return spark.createDataFrame([], _POSITIONS_SCHEMA)
+    positions = positional_postings(spark, index_dir, words, table)
+    return _persist_tracked(positions) if len(words) > 1 else positions

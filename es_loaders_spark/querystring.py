@@ -63,10 +63,13 @@ Two execution sites share the parse tree and its compilation:
   one ``postings.ScoringInputs``: the index's posting blocks, doclens,
   ``terms/`` and stats.json, or on the scan side ONE tokenize pass that
   keeps the tokens a term, prefix, wildcard or fuzzy leaf can match.
+  The same input carries the phrase words' positions: one decode of
+  their positional postings, or the same tokenize pass.
   Plan shape (all Catalyst): ONE pass over those tf rows scores every
   term, prefix and wildcard leaf (conditional aggregation — no per-term
   jobs); each fuzzy leaf takes its expansions from the same rows' dfs;
-  each phrase leaf is a positional self-join; keyword/range leaves are
+  each phrase leaf is ``phrase.phrase_ends`` over the shared positions,
+  a positional self-join on doc_id; keyword/range leaves are
   in-row predicates with idfs from ONE metadata aggregate over the
   corpus. The boolean tree compiles (``_compile_columns``) into a
   single whole-stage-codegen expression over the joined leaf columns.
@@ -93,8 +96,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .analyze import SPLIT_RE_DUCKDB, tokenize_text
+from .phrase import phrase_ends
 # the scorers' shared pool of tracked persists: the scan input relation
-# and the phrase leaves' positional postings live there
+# and the index side's phrase positions live there
 from .postings import (  # noqa: F401
     _MAX_TRACKED, _TRACKED_PERSISTS, _persist_tracked, index_inputs,
     release_scoring_caches as release_query_string_caches, scan_inputs,
@@ -646,18 +650,22 @@ def execute_tree(
     ``index_dir`` it comes from the compressed index
     (``postings.index_inputs``): term, prefix and wildcard leaves share
     one pushdown-pruned decode of their posting blocks, fuzzy leaves
-    expand against the term dictionary, phrase tf comes from
-    positional-postings intersections, and dl / df / corpus stats come
+    expand against the term dictionary, and dl / df / corpus stats come
     from the index's doclens/terms tables and stats.json. Tombstoned
     docs are filtered from the result; like Lucene, not-yet-compacted
     deletes still count in df/avgdl until ``compact_index``. Without
     ``index_dir`` (``postings.scan_inputs``) ONE tokenize pass over the
     corpus keeps the tokens a term, prefix, wildcard or fuzzy leaf can
-    match, persisted, and serves tf, dl, the dfs and n/avgdl; phrase
-    leaves add one positional tokenize pass. Correct, but a corpus scan
-    per query (the documented anti-pattern at scale; SURVEY scale
-    warning). Keyword dfs come from one ``docs`` aggregate on either
-    side.
+    match, persisted, and serves tf, dl, the dfs and n/avgdl. Correct,
+    but a corpus scan per query (the documented anti-pattern at scale;
+    SURVEY scale warning). Keyword dfs come from one ``docs`` aggregate
+    on either side.
+
+    Phrase leaves read the input's ``positions`` of every phrase word
+    of the tree: one positional-postings decode on the index side, the
+    same tokenize pass (with the chain's stop gaps) on the scan side.
+    Each leaf's tf is the size of its ``phrase.phrase_ends``, its df
+    the number of docs holding it (one count job per phrase leaf).
 
     ``serve="auto"`` (default) picks the faster side from the index's
     own stats.json N (INDEX_SERVE_MIN_DOCS); tombstones are honored
@@ -732,22 +740,27 @@ def execute_tree(
     term_vals = sorted({l.value for l in leaves if l.kind == "term"})
     prefixes = [l.value for l in leaves if l.kind == "prefix"]
     likes = [_wild_to_like(l.value) for l in leaves if l.kind == "wildcard"]
+    ph_words = [t for l in leaves if l.kind == "phrase"
+                for _, t in _phrase_pairs(l.value)]
     # ONE input relation for every text leaf (postings.ScoringInputs):
     # the index's stats.json/doclens/terms with one pushdown-pruned
-    # decode of the term, prefix and wildcard leaves' postings, or one
-    # tokenize pass over the corpus keeping only the tokens a term,
-    # prefix, wildcard or fuzzy leaf can match. The scan side of a
-    # CHAINED index analyzes with the same chain, so the crossover stays
-    # invisible.
+    # decode of the term, prefix and wildcard leaves' postings and one
+    # of the phrase words' positions, or one tokenize pass over the
+    # corpus keeping only the tokens a term, prefix, wildcard or fuzzy
+    # leaf can match and the phrase words' positions. The scan side of
+    # a CHAINED index analyzes with the same chain (stop gaps included),
+    # so the crossover stays invisible.
     si = None
     if need_text and index_dir is not None:
         si = index_inputs(spark, index_dir, terms=term_vals,
-                          prefixes=prefixes, like_patterns=likes)
+                          prefixes=prefixes, like_patterns=likes,
+                          phrase_words=ph_words)
     elif need_text:
         si = scan_inputs(
             docs, text_col=text_col, id_col=id_col, chain=chain,
             terms=term_vals, prefixes=prefixes, like_patterns=likes,
             fuzzy=[l.value for l in leaves if l.kind == "fuzzy"],
+            phrase_words=ph_words,
         )
 
     base = docs
@@ -804,86 +817,21 @@ def execute_tree(
                 )
         sel = sel.join(grp_src.groupBy("doc_id").agg(*aggs), "doc_id", "left")
 
-    from .analyze import tokens_df
-
-    toks = None
     for l in leaves:
         if l.kind == "phrase":
-            # (query_position, term) pairs — adjacent for plain parses,
-            # gapped when _chain_tree dropped stopword slots; both paths
-            # (and the SQL twin) join on position DELTAS between
-            # successive surviving terms, the Lucene PhraseQuery rule
-            pairs = _phrase_pairs(l.value)
-            words = [t for _, t in pairs]
-            if index_dir is not None:
-                # index-served phrase tf: positional-postings adjacency
-                # intersection (phrase.py shape); the surviving array's
-                # size IS the occurrence count the scan path tallies
-                from .phrase import positional_postings
-
-                pp = positional_postings(
-                    spark, index_dir, sorted(set(words))
-                )
-                if len(set(words)) > 1:
-                    # tracked persist (released on the next query) — the
-                    # bare r5 .cache() pinned pp forever
-                    pp = _persist_tracked(pp)
-                cur = pp.filter(F.col("term") == words[0]).select(
-                    "doc_id", F.col("positions").alias("cur"))
-                prev_pos = pairs[0][0]
-                for qpos, w in pairs[1:]:
-                    delta = qpos - prev_pos
-                    prev_pos = qpos
-                    nxt = pp.filter(F.col("term") == w).select(
-                        "doc_id", F.col("positions").alias("nxt"))
-                    cur = (
-                        cur.join(nxt, "doc_id")
-                        .select(
-                            "doc_id",
-                            F.array_intersect(
-                                F.transform("cur", lambda x: x + delta),
-                                F.col("nxt"),
-                            ).alias("cur"),
-                        )
-                        .filter(F.size("cur") > 0)
-                    )
-                tf_rel = cur.select(
-                    "doc_id", F.size("cur").cast("double").alias("tf"))
-            else:
-                if toks is None:
-                    # chained scan side keeps the chain's position GAPS
-                    # (tokens_df drops stop tokens after posexplode)
-                    toks = tokens_df(docs.select(id_col, text_col),
-                                     text_col=text_col, id_col=id_col,
-                                     chain=chain)
-                    # ONE tokenize pass serves every phrase leaf: filter
-                    # the exploded tokens to the union of phrase words
-                    # and persist (tiny) — the per-word .filter branches
-                    # below each re-ran the full posexplode otherwise
-                    ph_words = sorted({
-                        t
-                        for ll in leaves
-                        if ll.kind == "phrase"
-                        for _, t in _phrase_pairs(ll.value)
-                    })
-                    toks = _persist_tracked(
-                        toks.filter(F.col("term").isin(ph_words))
-                    )
-                qpos0 = pairs[0][0]
-                cur = toks.filter(F.col("term") == words[0]).select(
-                    "doc_id", F.col("pos").alias("p"))
-                for qpos, w in pairs[1:]:
-                    nxt = toks.filter(F.col("term") == w).select(
-                        "doc_id", (F.col("pos") - (qpos - qpos0)).alias("p"))
-                    cur = cur.join(nxt, ["doc_id", "p"])
-                tf_rel = cur.groupBy("doc_id").agg(
-                    F.count(F.lit(1)).cast("double").alias("tf"))
+            # phrase tf = the number of phrase ends in the doc (Lucene
+            # PhraseQuery): phrase.phrase_ends over the positions input,
+            # stepping by the position DELTAS of the (query_position,
+            # term) pairs — adjacent for plain parses, gapped where
+            # _chain_tree dropped a stopword slot (so is the SQL twin)
+            tf_rel = phrase_ends(si.positions, _phrase_pairs(l.value)).select(
+                "doc_id", F.size("ends").cast("double").alias("tf"))
             # phrase df is a METADATA scalar (one tiny job per phrase —
             # phrases per query are few), like corpus_stats' collect.
             # (r7 note: persisting tf_rel here was measured SLOWER than
-            # recomputing the intersection from the persisted pp/toks
-            # caches — interleaved A/B +0.3 s on the indexed row — the
-            # cache write/read round-trip exceeds the tiny join recompute)
+            # recomputing the intersection from the persisted positions
+            # — interleaved A/B +0.3 s on the indexed row — the cache
+            # write/read round-trip exceeds the tiny join recompute)
             df_ph = tf_rel.count()
             from .postings import B, K1
 

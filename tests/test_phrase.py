@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from es_loaders_spark.analyze import tokens_df
@@ -203,3 +204,108 @@ def test_dsl_match_phrase_prefix(spark, documents, pidx):
     )
     with pytest.raises(ValueError, match="built index"):
         dsl.search(spark, documents, body)
+
+
+def test_phrase_positions_stay_in_the_bounded_pool(spark, documents, pidx):
+    """match_phrase, match_phrase_prefix and span_near persist their
+    decoded positions through the shared query-scoped pool: over
+    distinct term sets the persisted RDDs never pass the pool's cap, and
+    releasing the scoring caches returns to the starting count."""
+    from es_loaders_spark import dsl, postings
+
+    jsc = spark.sparkContext._jsc
+    postings.release_scoring_caches()
+    documents.count()
+    start = jsc.getPersistentRDDs().size()
+    bodies = [{"match_phrase": {"text": p}}
+              for p in ("the data", "data the", "the fast data", "key order")]
+    bodies += [{"match_phrase_prefix": {"text": p}}
+               for p in ("the s", "spark d")]
+    bodies += [
+        {"span_near": {"clauses": [{"span_term": {"text": a}},
+                                   {"span_term": {"text": b}}],
+                       "slop": 2, "in_order": True}}
+        for a, b in (("key", "sort"), ("the", "data"), ("spark", "data"))
+    ]
+    for q in bodies:
+        dsl.search(spark, documents, {"query": q, "size": 5},
+                   index_dir=pidx).collect()
+        assert jsc.getPersistentRDDs().size() <= start + postings._MAX_TRACKED
+    assert jsc.getPersistentRDDs().size() > start
+    postings.release_scoring_caches()
+    assert jsc.getPersistentRDDs().size() == start
+
+
+def _draw_phrases(documents, seed: int) -> list[str]:
+    """2–4-word phrases cut from the documents' own text, plus one with
+    a repeated word and one with a stopword inside."""
+    import random
+
+    from es_loaders_spark.analyze import ENGLISH_STOPWORDS, tokenize_text
+
+    rng = random.Random(seed)
+    texts = [tokenize_text(r["text"]) for r in documents.select("text")
+             .orderBy("doc_id").limit(200).collect()]
+    texts = [t for t in texts if len(t) >= 4]
+    out = []
+    for _ in range(6):
+        toks = rng.choice(texts)
+        n = rng.randint(2, 4)
+        i = rng.randrange(len(toks) - n + 1)
+        out.append(" ".join(toks[i:i + n]))
+    w = rng.choice(rng.choice(texts))
+    out.append(f"{w} {w}")
+    stop = set(ENGLISH_STOPWORDS)
+    gapped = [
+        " ".join(t[i - 1:i + 2])
+        for t in texts for i in range(1, len(t) - 1)
+        if t[i] in stop and t[i - 1] not in stop and t[i + 1] not in stop
+    ]
+    out.append(rng.choice(gapped))
+    return out
+
+
+@pytest.mark.parametrize("analysis", [
+    None, {"stopwords": "_english_", "stemmer": "minimal_english"},
+])
+def test_phrase_ends_index_equals_scan(spark, documents, tmp_path_factory,
+                                       analysis):
+    """``phrase_ends`` over the index's positions input gives the same
+    (doc_id, phrase tf) rows as over the scan input's positions, on a
+    default and on a stop+stem index with a tombstoned term."""
+    from functools import reduce
+
+    from es_loaders_spark.analyze import AnalysisChain
+    from es_loaders_spark.deletes import delete_by_term, filter_deleted
+    from es_loaders_spark.phrase import _phrase_terms, phrase_ends
+    from es_loaders_spark.postings import index_inputs, scan_inputs
+
+    d = str(tmp_path_factory.mktemp("phrase_parity"))
+    build_index(spark, documents, d, n_shards=2, analysis=analysis)
+    assert delete_by_term(spark, d, "spark") > 0
+    phrases = [_phrase_terms(d, p) for p in _draw_phrases(documents, 8)]
+    assert any(len({t for _, t in p}) < len(p) for p in phrases)
+    if analysis:
+        assert any(b - a > 1 for p in phrases for (a, _), (b, _) in zip(p, p[1:]))
+    words = [t for p in phrases for _, t in p]
+
+    def ends(pos, live=True):
+        rows = reduce(DataFrame.unionByName, [
+            phrase_ends(pos, p).select(
+                F.lit(i).alias("q"), "doc_id", F.size("ends").alias("tf"))
+            for i, p in enumerate(phrases)
+        ])
+        if live:
+            rows = filter_deleted(spark, d, rows).select("q", "doc_id", "tf")
+        return sorted(tuple(r) for r in rows.collect())
+
+    pos = index_inputs(spark, d, phrase_words=words).positions
+    every = ends(pos, live=False)
+    assert {q for q, _, _ in every} == set(range(len(phrases)))
+    got = ends(pos)
+    assert got and len(got) < len(every)  # the tombstones bite
+    want = ends(scan_inputs(
+        documents, chain=AnalysisChain.from_config(analysis),
+        phrase_words=words,
+    ).positions)
+    assert got == want

@@ -124,16 +124,22 @@ def test_dedup_fingerprints_need_no_key_shuffle(spark, sf_dir):
         assert "Exchange" not in plan, plan
 
 
-def _tokenize_nodes(df) -> set[str]:
-    """The distinct nodes of ``df``'s executed plan that tokenize text.
-    A persisted relation prints under every scan that reads it, so the
-    tree prefixes are stripped before the nodes are compared."""
+def _plan_nodes(df, *needles: str) -> set[str]:
+    """The distinct nodes of ``df``'s executed plan whose line holds
+    every needle. A persisted relation prints under every scan that
+    reads it, so the tree prefixes are stripped before the nodes are
+    compared."""
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     return {
         re.sub(r"^[\s:+\-|*()0-9]*", "", line)
-        for line in plan.splitlines() if "split(lower(" in line
+        for line in plan.splitlines() if all(n in line for n in needles)
     }
+
+
+def _tokenize_nodes(df) -> set[str]:
+    """The distinct nodes of ``df``'s executed plan that tokenize text."""
+    return _plan_nodes(df, "split(lower(")
 
 
 @pytest.mark.parametrize("query", [
@@ -141,15 +147,39 @@ def _tokenize_nodes(df) -> set[str]:
     {"function_score": {"query": {"match": {"text": "spark data"}},
                         "field_value_factor": {"field": "n_chars"}}},
     {"query_string": {"query": "spark~1 OR data"}},
+    {"simple_query_string": {"query": 'spark "the data"'}},
+    {"query_string": {"query": '"key order" OR spark'}},
+    {"span_near": {"clauses": [{"span_term": {"text": "key"}},
+                               {"span_term": {"text": "sort"}}],
+                   "slop": 2, "in_order": True}},
 ])
 def test_scan_scorer_tokenizes_once(spark, documents, query):
     """A scan-side scorer reads ONE query-scoped relation: a single
-    tokenize projection over the docs scan feeds tf, dl, df and the
-    corpus stats. No Generate explodes the raw token array, so there is
-    no full-vocabulary (term, doc_id) aggregate — only tokens a query
-    term (or a fuzzy leaf's edit distance) selects are exploded."""
+    tokenize projection over the docs scan feeds tf, dl, df, the corpus
+    stats and the phrase words' positions. No Generate explodes the raw
+    token array, so there is no full-vocabulary (term, doc_id) aggregate
+    — only tokens a query term (or a fuzzy leaf's edit distance) selects
+    are exploded."""
     from es_loaders_spark import dsl
 
     nodes = _tokenize_nodes(dsl.search(spark, documents, {"query": query}))
     assert len(nodes) == 1, nodes
     assert next(iter(nodes)).startswith("Project"), nodes
+
+
+def test_query_string_phrases_share_one_positional_decode(
+    spark, documents, tmp_path_factory
+):
+    """Index side: every phrase leaf of a query_string tree reads the
+    one positions input, so the plan decodes positional postings once,
+    however many phrase leaves the tree has."""
+    from es_loaders_spark import dsl
+    from es_loaders_spark.build import build_index
+
+    d = str(tmp_path_factory.mktemp("plan_qs_phrases"))
+    build_index(spark, documents, d, n_shards=2)
+    body = {"query": {"query_string": {
+        "query": '"the data" OR "key order" OR spark', "serve": "index"}}}
+    df = dsl.search(spark, documents, body, index_dir=d)
+    nodes = _plan_nodes(df, "MapInPandas", "positions#")
+    assert len(nodes) == 1, nodes

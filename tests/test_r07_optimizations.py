@@ -112,30 +112,10 @@ def test_tf_postings_multi_selector_equals_union(spark, docs, tmp_path_factory):
     )
     got = {(r.term, r.doc_id, r.tf) for r in combined.collect()}
     want = set()
-    for kw in (dict(terms=terms), dict(prefix="batc"), dict(like_pattern="ke_")):
+    for kw in (dict(terms=terms), dict(prefixes=["batc"]),
+               dict(like_patterns=["ke_"])):
         want |= {(r.term, r.doc_id, r.tf) for r in tf_postings(spark, idx, **kw).collect()}
     assert got == want and got
-
-
-def test_tf_postings_singular_selectors_stay_conjunctive(spark, docs, tmp_path_factory):
-    """terms / prefix / like_pattern narrow each other (AND); only the
-    plural prefixes / like_patterns join the disjunction with terms."""
-    from es_loaders_spark.build import build_index
-    from es_loaders_spark.phrase import tf_postings
-
-    idx = str(tmp_path_factory.mktemp("idx_r07") / "i2")
-    build_index(spark, docs.limit(800), idx, n_shards=4, positions=False)
-
-    def got(**kw):
-        return {(r.term, r.doc_id, r.tf) for r in tf_postings(spark, idx, **kw).collect()}
-
-    spark_only = got(terms=["spark"])
-    assert spark_only
-    assert got(terms=["spark", "data"], prefix="sp") == spark_only
-    assert got(terms=["spark", "data"], like_pattern="s_ark") == spark_only
-    assert got(prefix="spa", like_pattern="%rk") == got(like_pattern="spa%rk")
-    # the plural forms OR with terms, then a singular prefix narrows them
-    assert got(terms=["data"], prefixes=["spar"], prefix="s") == got(prefix="spar")
 
 
 def test_extraction_single_scan_matches_split(spark):
