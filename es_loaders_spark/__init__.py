@@ -21,8 +21,6 @@ Re-expresses the capabilities of the reference repo ``shahcompbio/es-loaders``
 - ``dedup``      exact / MinHash-LSH / SimHash / n-gram-Jaccard deduplication
 - ``similarity`` brute-force, LSH-bucketed and IVF cosine ANN over embeddings
 - ``textstats``  language-ID, quality scoring, token counting, fingerprinting
-- ``jpeg``       baseline JPEG codec (pure numpy/stdlib)
-- ``multimodal`` binary media columns; real PPM/PNG/JPEG/WAV codecs (video stubbed)
 - ``streaming``  watermarked windowed aggs; exactly-once index appends
 """
 

@@ -660,33 +660,6 @@ def decode_block_positions(block: Block | dict, tfs: np.ndarray) -> np.ndarray:
     return cs - np.repeat(cs[starts], tfs) + np.repeat(deltas[starts], tfs)
 
 
-def encode_blocks_batch(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    dls: np.ndarray,
-    seg_starts: np.ndarray,
-    block_size: int = BLOCK_SIZE,
-) -> list[list[Block]]:
-    """Nested view of :func:`encode_blocks_flat` (tests / merge helpers)."""
-    flat = encode_blocks_flat(doc_ids, tfs, dls, seg_starts, block_size)
-    out: list[list[Block]] = [[] for _ in range(seg_starts.size - 1)]
-    for i in range(flat["term_idx"].size):
-        out[int(flat["term_idx"][i])].append(
-            Block(
-                min_doc=int(flat["min_doc"][i]),
-                max_doc=int(flat["max_doc"][i]),
-                n=int(flat["n"][i]),
-                max_tf=int(flat["max_tf"][i]),
-                min_dl=int(flat["min_dl"][i]),
-                docs_payload=flat["docs_payload"][i],
-                tfs_payload=flat["tfs_payload"][i],
-                sky_tfs_payload=flat["sky_tfs_payload"][i],
-                sky_dls_payload=flat["sky_dls_payload"][i],
-            )
-        )
-    return out
-
-
 def decode_block(block: Block | dict) -> tuple[np.ndarray, np.ndarray]:
     """Decode one block → (doc_ids int64, tfs int64). Accepts Row/dict too."""
     if not isinstance(block, Block):

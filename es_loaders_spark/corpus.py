@@ -130,30 +130,3 @@ def synthesize_web_pages(
                 yield generate_pages_pdf(int(start), int(count), seed)
 
     return ranges_df.mapInPandas(gen, WEB_PAGES_SCHEMA)
-
-
-def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-shipped documents table (doc_id, text, lang, source, n_chars)."""
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def documents_as_web_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adapt the driver's documents table to the web_pages shape.
-
-    DocIDs stay the shipped ``doc_id`` (already deterministic); url is a
-    deterministic function of doc_id so extraction/url invariants hold.
-    """
-    from pyspark.sql import functions as F
-
-    docs = load_documents(spark, sf_dir)
-    return docs.select(
-        F.format_string("https://docs.example.org/%012d", F.col("doc_id")).alias("url"),
-        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("warc_ts"),
-        F.encode(
-            F.concat(F.lit("<html><body>"), F.col("text"), F.lit("</body></html>")),
-            "utf-8",
-        ).alias("html"),
-        F.col("text"),
-        F.col("lang"),
-        F.col("doc_id"),
-    )

@@ -550,13 +550,3 @@ def simhash(df: DataFrame, text_col: str = "text", portable: bool = False) -> Da
         term = F.shiftleft(bit, i)
         packed = term if packed is None else packed.bitwiseOR(term)
     return hashed.select("doc_id", packed.alias("simhash"))
-
-
-def simhash_duplicate_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Docs with identical SimHash: (simhash, canonical_id, n_docs)."""
-    return (
-        simhash(df, text_col)
-        .groupBy("simhash")
-        .agg(F.min("doc_id").alias("canonical_id"), F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > 1)
-    )

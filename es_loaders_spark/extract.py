@@ -178,8 +178,8 @@ def with_extracted_text(df, html_col: str = "html", out_col: str = "text"):
       a row-level CASE in its OWN projection: a second scan would re-run
       the whole Python stage (column pruning cannot reach inside it),
       which costs more than the interpreted-eval penalty — interleaved
-      A/B at 60k pages: 3.01 s single-scan vs 3.33 s split
-      (bench/extract_ab.py). The dedicated projection keeps the CASE
+      A/B at 60k pages: 3.01 s single-scan vs 3.33 s split (BENCH.md,
+      "r7: optimization round"). The dedicated projection keeps the CASE
       evaluated once per row even when downstream references ``out_col``
       several times (CollapseProject keeps non-cheap multi-referenced
       expressions split), avoiding the r2 no-CSE re-evaluation trap.
@@ -284,17 +284,3 @@ def _decode_entities_jvm(text: Column) -> Column:
     # fast path: skip the split/transform machinery entirely on rows
     # without '&' (the If evaluates only the taken branch per row)
     return F.when(text.contains("&"), decoded).otherwise(text)
-
-
-def extraction_mismatches(df) -> "pd.DataFrame":
-    """Count rows where extract(html) != text (should be 0).
-
-    Pure-JVM alternative for the simple corpus template is also checked:
-    regexp_extract between body tags — kept as a cross-check that the
-    pandas-UDF path and the Catalyst path agree.
-    """
-    return (
-        df.withColumn("_extracted", extract_text(F.col("html")))
-        .filter(F.col("_extracted") != F.col("text"))
-        .count()
-    )

@@ -35,6 +35,7 @@ import functools
 import operator
 import os
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -125,13 +126,29 @@ class ScoringInputs:
     without a selector), ``dl`` (doc_id, dl), ``tdf`` (term, df) — at
     least every selected term — and ``stats``; and ``positions``
     (term, doc_id, ascending positions with the chain's stop gaps) of
-    the ``phrase_words``, which ``phrase.phrase_ends`` reads."""
+    the ``phrase_words``, which ``phrase.phrase_ends`` reads.
+
+    ``dl``, ``tdf`` and ``stats`` are built on first read (each may cost
+    a Spark job or a file listing), so a caller that reads only
+    ``positions`` or ``tf`` pays for neither."""
 
     tf: DataFrame
-    dl: DataFrame
-    tdf: DataFrame
-    stats: CorpusStats
     positions: DataFrame
+    _dl: Callable[[], DataFrame]
+    _tdf: Callable[[], DataFrame]
+    _stats: Callable[[], CorpusStats]
+
+    @functools.cached_property
+    def dl(self) -> DataFrame:
+        return self._dl()
+
+    @functools.cached_property
+    def tdf(self) -> DataFrame:
+        return self._tdf()
+
+    @functools.cached_property
+    def stats(self) -> CorpusStats:
+        return self._stats()
 
 
 def scan_inputs(
@@ -217,8 +234,9 @@ def scan_inputs(
         )
     else:
         positions = docs.sparkSession.createDataFrame([], _POSITIONS_SCHEMA)
-    return ScoringInputs(tf=tf, dl=dl, tdf=term_df(tf), stats=corpus_stats(dl),
-                         positions=positions)
+    return ScoringInputs(tf=tf, positions=positions, _dl=lambda: dl,
+                         _tdf=lambda: term_df(tf),
+                         _stats=lambda: corpus_stats(dl))
 
 
 def index_inputs(
@@ -250,10 +268,12 @@ def index_inputs(
         tf = spark.createDataFrame([], "term string, doc_id long, tf long")
     return ScoringInputs(
         tf=tf,
-        dl=read_generations(spark, index_dir, "doclens").select("doc_id", "dl"),
-        tdf=spark.read.parquet(os.path.join(index_dir, "terms")),
-        stats=CorpusStats(n_docs=int(st["n_docs"]), avgdl=float(st["avgdl"])),
         positions=index_positions(spark, index_dir, phrase_words),
+        _dl=lambda: read_generations(spark, index_dir, "doclens")
+        .select("doc_id", "dl"),
+        _tdf=lambda: spark.read.parquet(os.path.join(index_dir, "terms")),
+        _stats=lambda: CorpusStats(n_docs=int(st["n_docs"]),
+                                   avgdl=float(st["avgdl"])),
     )
 
 
@@ -264,7 +284,7 @@ def index_positions(
     ``phrase.positional_postings`` decode of the ``phrase_words``,
     persisted through the query-derived pool when it covers more than
     one word (each phrase step reads it). Filters that score nothing
-    call it directly, skipping ``index_inputs``' doclens/terms reads."""
+    call it directly, skipping ``index_inputs``' stats.json read."""
     from .phrase import positional_postings
 
     words = sorted(set(phrase_words))

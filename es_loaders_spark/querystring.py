@@ -97,12 +97,7 @@ from pyspark.sql import functions as F
 
 from .analyze import SPLIT_RE_DUCKDB, tokenize_text
 from .phrase import phrase_ends
-# the scorers' shared pool of tracked persists: the scan input relation
-# and the index side's phrase positions live there
-from .postings import (  # noqa: F401
-    _MAX_TRACKED, _TRACKED_PERSISTS, _persist_tracked, index_inputs,
-    release_scoring_caches as release_query_string_caches, scan_inputs,
-)
+from .postings import index_inputs, scan_inputs
 
 MUST, SHOULD, MUST_NOT = "MUST", "SHOULD", "MUST_NOT"
 MAX_LEAVES = 32  # joined leaf columns; beyond this the query is degenerate

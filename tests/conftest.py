@@ -12,6 +12,18 @@ from es_loaders_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def count_jobs(spark, label, fn) -> int:
+    """Run ``fn()`` under job group ``label``; return the Spark jobs it
+    submitted (the status tracker's count for that group)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(label, label)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(list(sc.statusTracker().getJobIdsForGroup(label)))
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("es-loaders-spark-tests", cores=4, shuffle_partitions=8)

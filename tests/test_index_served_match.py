@@ -14,6 +14,7 @@ from __future__ import annotations
 import contextlib
 
 import pytest
+from conftest import count_jobs
 
 from es_loaders_spark import dsl
 from es_loaders_spark.analyze import AnalysisChain, tokenize_text
@@ -225,25 +226,15 @@ def test_stop_stem_chain_index(spark, docs, tmp_path_factory):
     evict_index(d)
 
 
-def _jobs(spark, label, fn) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(label, label)
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    return len(list(sc.statusTracker().getJobIdsForGroup(label)))
-
-
 def test_warm_driver_site_job_counts(spark, docs, plain_idx):
     warm_index(spark, plain_idx)
     cbody = {"query": {"match": {"text": Q}}}
     fbody = filtered(Q, "term")
     for body in (cbody, fbody):  # first-call planning
         dsl.search(spark, docs, body, index_dir=plain_idx).collect()
-    n_count = _jobs(spark, "served-count-probe", lambda: dsl.count(
+    n_count = count_jobs(spark, "served-count-probe", lambda: dsl.count(
         spark, docs, cbody, index_dir=plain_idx).collect())
     assert n_count == 0
-    n_filtered = _jobs(spark, "served-filter-probe", lambda: dsl.search(
+    n_filtered = count_jobs(spark, "served-filter-probe", lambda: dsl.search(
         spark, docs, fbody, index_dir=plain_idx).collect())
     assert n_filtered == 1  # the allow-list collect

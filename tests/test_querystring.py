@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import duckdb
 import pytest
+from conftest import count_jobs
 from pyspark.sql import functions as F
 
 from es_loaders_spark import dsl
@@ -175,6 +176,29 @@ class TestRankIdentity:
         }
         with pytest.raises(ValueError, match="highlight"):
             dsl.search(spark, documents, body)
+
+
+def test_scan_inputs_build_stats_on_first_read(spark, documents, duck):
+    """A reader of ``scan_inputs``' positions alone submits no Spark job
+    before it collects them; ``stats``, built on first read, equals the
+    long form's, and a query_string body that reads it keeps the
+    oracle's scores."""
+    from es_loaders_spark.postings import corpus_stats, doc_lengths, scan_inputs
+
+    words = ["the", "data"]
+    assert count_jobs(spark, "scan-inputs-positions-probe", lambda: scan_inputs(
+        documents, phrase_words=words).positions) == 0
+    si = scan_inputs(documents, terms=["spark"], phrase_words=words)
+    terms = si.positions.select("term").distinct().collect()
+    assert {r.term for r in terms} == set(words)
+    assert si.stats == corpus_stats(doc_lengths(documents))
+
+    q = 'spark OR "the data"^2'
+    body = {"query": {"query_string": {"query": q}}, "size": 15}
+    got = [(r.doc_id, r.score) for r in dsl.search(spark, documents, body).collect()]
+    want = [(int(a), float(b))
+            for a, b in duck.execute(query_string_oracle_sql(q, k=15)).fetchall()]
+    assert got and got == want
 
 
 # ---------- index-served execution (r5: the scale path) ----------

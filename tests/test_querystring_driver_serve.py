@@ -20,6 +20,7 @@ import duckdb
 import numpy as np
 import pyarrow as pa
 import pytest
+from conftest import count_jobs
 from pyspark.sql import functions as F
 
 from es_loaders_spark import dsl, querystring
@@ -241,16 +242,6 @@ def test_keyword_range_phrase_fuzzy_leaves_take_the_spark_site(spark, docs, plai
             spark, docs, tree, None, index_dir=plain_idx, serve="scan")), q
 
 
-def _jobs(spark, label, fn) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(label, label)
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    return len(list(sc.statusTracker().getJobIdsForGroup(label)))
-
-
 def test_warm_driver_site_job_counts(spark, docs, plain_idx):
     """A warm unfiltered tree submits no Spark job, a filtered one only
     the filter's id collect (the Spark index site submits 9 for
@@ -260,7 +251,7 @@ def test_warm_driver_site_job_counts(spark, docs, plain_idx):
         "spark AND quer*", filters=FILTERS)
     for b in (plain, filtered):  # first-call planning
         dsl.search(spark, docs, b, index_dir=plain_idx).collect()
-    assert _jobs(spark, "qs-driver-probe", lambda: dsl.search(
+    assert count_jobs(spark, "qs-driver-probe", lambda: dsl.search(
         spark, docs, plain, index_dir=plain_idx).collect()) == 0
-    assert _jobs(spark, "qs-driver-filter-probe", lambda: dsl.search(
+    assert count_jobs(spark, "qs-driver-filter-probe", lambda: dsl.search(
         spark, docs, filtered, index_dir=plain_idx).collect()) == 1

@@ -175,18 +175,18 @@ def test_python_source_check_reads_plan_nodes_not_names(spark, tmp_path):
 
 
 def test_tracked_persist_pool_dedupes_and_caps(spark, docs):
-    from es_loaders_spark import querystring as qs
+    from es_loaders_spark import postings
 
-    qs.release_query_string_caches()
-    a = qs._persist_tracked(docs.select("doc_id"))
-    n1 = len(qs._TRACKED_PERSISTS)
+    postings.release_scoring_caches()
+    a = postings._persist_tracked(docs.select("doc_id"))
+    n1 = len(postings._TRACKED_PERSISTS)
     # identical plan re-registers (no duplicate entry, stays cached)
-    b = qs._persist_tracked(docs.select("doc_id"))
-    assert len(qs._TRACKED_PERSISTS) == n1
+    b = postings._persist_tracked(docs.select("doc_id"))
+    assert len(postings._TRACKED_PERSISTS) == n1
     assert b.storageLevel.useMemory or a.storageLevel.useMemory
     # distinct plans add entries; the cap bounds the pool
-    for i in range(qs._MAX_TRACKED + 3):
-        qs._persist_tracked(docs.select("doc_id").filter(F.col("doc_id") > i))
-    assert len(qs._TRACKED_PERSISTS) <= qs._MAX_TRACKED
-    qs.release_query_string_caches()
-    assert not qs._TRACKED_PERSISTS
+    for i in range(postings._MAX_TRACKED + 3):
+        postings._persist_tracked(docs.select("doc_id").filter(F.col("doc_id") > i))
+    assert len(postings._TRACKED_PERSISTS) <= postings._MAX_TRACKED
+    postings.release_scoring_caches()
+    assert not postings._TRACKED_PERSISTS

@@ -26,7 +26,7 @@ def test_default_driver_memory_fits_the_box(monkeypatch):
 _RESTART = textwrap.dedent("""
     import os, sys
     sys.path.insert(0, sys.argv[1])
-    from es_loaders_spark import dedup, dsl, querystring, wand
+    from es_loaders_spark import dedup, dsl, postings, wand
     from es_loaders_spark.build import build_index
     from es_loaders_spark.session import get_spark
 
@@ -50,16 +50,16 @@ _RESTART = textwrap.dedent("""
     for i in range(3):
         qs(spark, docs, f"w{i} OR gamma1")
     dedup.minhash_lsh_pairs(docs, num_hashes=8, bands=4).collect()
-    assert len(querystring._TRACKED_PERSISTS) and len(dedup._TRACKED_PERSISTS)
+    assert len(postings._TRACKED_PERSISTS) and len(dedup._TRACKED_PERSISTS)
     spark.stop()
 
     spark, docs = session()
-    for i in range(querystring._MAX_TRACKED + 4):  # forces pool evictions
+    for i in range(postings._MAX_TRACKED + 4):  # forces pool evictions
         qs(spark, docs, f"v{i % 11} AND gamma{i % 3} OR w{i % 7}")
     assert top(spark) == want  # driver path on the previously warmed index
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     assert top(spark) == want  # mapInPandas path on the same entry
-    querystring.release_query_string_caches()
+    postings.release_scoring_caches()
     dedup.release_dedup_caches()
     wand.evict_index(idx)
     spark.stop()
