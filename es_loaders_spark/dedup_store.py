@@ -65,6 +65,7 @@ from .dedup import (
     hashed_shingle_sets,
     _lsh_candidates,
 )
+from .session import empty_frame
 
 _META = "meta.json"
 
@@ -301,7 +302,7 @@ def append_dedup_store(
     docs = df_new.select("doc_id", F.col(text_col).alias("text"))
     new_min = docs.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
     if new_min[0] is None:
-        return spark.createDataFrame([], "a long, b long, jaccard double")
+        return empty_frame(spark, "a long, b long, jaccard double")
     if int(new_min[0]) <= prev_max:
         raise ValueError(
             f"appended doc_ids must exceed the store's max_doc_id "

@@ -56,6 +56,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .session import empty_frame
+
 
 # ES GeoUtils.EARTH_MEAN_RADIUS — the radius Lucene's haversin uses, so
 # distances agree with what an ES user sees.
@@ -923,7 +925,7 @@ def _combined_fields_topk(
         chain.tokens(text) if chain is not None else tokenize_text(text)
     ))
     if not terms:
-        return spark.createDataFrame([], f"{id_col} long, score double")
+        return empty_frame(spark, f"{id_col} long, score double")
     # weighted per-field token relations -> ONE combined field
     wtf_parts, wdl_parts = [], []
     for fld, boost in fields:
@@ -1154,7 +1156,7 @@ def _sqs_topk(
         cand = cand.join(bad, "doc_id", "left_anti")
     for pairs in phrases:
         if not pairs:  # every word of the phrase was a stopword
-            hits = spark.createDataFrame([], "doc_id long")
+            hits = empty_frame(spark, "doc_id long")
         else:
             hits = phrase_ends(positions, pairs).select("doc_id")
         if on_index:
@@ -4785,7 +4787,7 @@ def more_like_this(
         )
         terms_list = [r.term for r in sel_rows]
         if not terms_list:
-            return spark.createDataFrame([], "doc_id long, score double")
+            return empty_frame(spark, "doc_id long, score double")
         seed_terms = spark.createDataFrame(
             [(t,) for t in terms_list], "term string"
         )

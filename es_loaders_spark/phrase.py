@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from .analyze import tokenize_text
 from .codec import decode_blocks_flat_batch, decode_positions_flat_batch
 from .postings import index_positions
+from .session import empty_frame
 
 
 def positional_postings(
@@ -226,7 +227,7 @@ def phrase_docs(
 
     pairs = _phrase_terms(index_dir, phrase)
     if not pairs:
-        return spark.createDataFrame([], "doc_id long")
+        return empty_frame(spark, "doc_id long")
     pos = index_positions(spark, index_dir, [t for _, t in pairs], table)
     return filter_deleted(
         spark, index_dir, phrase_ends(pos, pairs).select("doc_id")
@@ -284,11 +285,11 @@ def phrase_prefix_docs(
 
     qtoks = _phrase_terms(index_dir, phrase)
     if not qtoks:
-        return spark.createDataFrame([], "doc_id long")
+        return empty_frame(spark, "doc_id long")
     head, (last_pos, last) = qtoks[:-1], qtoks[-1]
     exps = expand_prefix(spark, index_dir, last, max_expansions, table)
     if not exps:
-        return spark.createDataFrame([], "doc_id long")
+        return empty_frame(spark, "doc_id long")
     pos = index_positions(
         spark, index_dir, [t for _, t in head] + exps, table
     )

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .analyze import terms_array, tokens_df
-from .session import PersistPool
+from .session import PersistPool, empty_frame
 
 K1 = 1.2
 B = 0.75
@@ -233,7 +233,7 @@ def scan_inputs(
             "term", "doc_id", "positions"
         )
     else:
-        positions = docs.sparkSession.createDataFrame([], _POSITIONS_SCHEMA)
+        positions = empty_frame(docs.sparkSession, _POSITIONS_SCHEMA)
     return ScoringInputs(tf=tf, positions=positions, _dl=lambda: dl,
                          _tdf=lambda: term_df(tf),
                          _stats=lambda: corpus_stats(dl))
@@ -265,7 +265,7 @@ def index_inputs(
             like_patterns=list(like_patterns) or None,
         )
     else:
-        tf = spark.createDataFrame([], "term string, doc_id long, tf long")
+        tf = empty_frame(spark, "term string, doc_id long, tf long")
     return ScoringInputs(
         tf=tf,
         positions=index_positions(spark, index_dir, phrase_words),
@@ -289,6 +289,6 @@ def index_positions(
 
     words = sorted(set(phrase_words))
     if not words:
-        return spark.createDataFrame([], _POSITIONS_SCHEMA)
+        return empty_frame(spark, _POSITIONS_SCHEMA)
     positions = positional_postings(spark, index_dir, words, table)
     return _persist_tracked(positions) if len(words) > 1 else positions

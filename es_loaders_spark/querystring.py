@@ -98,6 +98,7 @@ from pyspark.sql import functions as F
 from .analyze import SPLIT_RE_DUCKDB, tokenize_text
 from .phrase import phrase_ends
 from .postings import index_inputs, scan_inputs
+from .session import empty_frame
 
 MUST, SHOULD, MUST_NOT = "MUST", "SHOULD", "MUST_NOT"
 MAX_LEAVES = 32  # joined leaf columns; beyond this the query is degenerate
@@ -694,7 +695,7 @@ def execute_tree(
             tree = _chain_tree(tree, chain, text_col)
             if tree is _DROP:
                 # every clause was a stopword — zero hits, like ES
-                return spark.createDataFrame([], "doc_id long, score double")
+                return empty_frame(spark, "doc_id long, score double")
     leaves: list[Leaf] = []
     _collect_leaves(tree, leaves)
     if len(leaves) > MAX_LEAVES:

@@ -2,10 +2,11 @@
 
 ES's ranking-evaluation API takes rated search requests and reports a
 quality metric per request plus the mean. Spark-first shape: ALL rated
-requests execute as ONE ``wand.topk_batch`` — one ``mapInPandas`` stage
-over the warm doclens whose per-shard tasks share decoded blocks
-across queries (a 10k-query evaluation run is one distributed pass,
-not 10k round trips) — the ratings become a small broadcast relation, and every
+requests execute as ONE ``wand.topk_batch`` — a loop over the shards in
+the driver process for a small batch on a small index, else one
+``mapInPandas`` stage over the warm doclens; either way each shard's
+queries share decoded blocks (a 10k-query evaluation run is one
+distributed pass, not 10k round trips) — the ratings become a small broadcast relation, and every
 metric is a groupBy over the joined (results × ratings) frame — no
 driver loops over hits.
 

@@ -117,6 +117,18 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def empty_frame(spark: SparkSession, ddl: str) -> DataFrame:
+    """An empty relation of the DDL schema ``ddl``, built from an empty
+    Arrow table: a LocalRelation that collects with no Spark job, where
+    ``createDataFrame([], ddl)`` goes through an RDD and submits one."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    return spark.createDataFrame(
+        to_arrow_schema(_parse_datatype_string(ddl)).empty_table()
+    )
+
+
 def is_live(df: DataFrame) -> bool:
     """True while ``df``'s SparkContext is running. Checked on the Python
     side only, so it is safe for a DataFrame of a stopped session (any

@@ -46,6 +46,7 @@ from .build import load_stats, union_parquet_dirs
 from .codec import decode_blocks_flat_batch
 from .deletes import filter_deleted
 from .postings import CorpusStats
+from .session import empty_frame
 
 
 def _gen_subset(
@@ -93,7 +94,7 @@ def topk_as_of(
 
     terms = _query_terms(stats, query)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_frame(spark, "doc_id long, score double")
     shards = _gen_subset(spark, index_dir, "shards", g).filter(
         F.col("term").isin(terms)
     )

@@ -19,19 +19,21 @@ scan on the driver (no Spark job). The body runs on two sites:
   ``(doc_id, dl)`` arrays on the driver and ``topk`` loops over the
   shards in-process: no Spark job at all, where a Python-UDF job alone
   costs several hundred ms.
+  A ``topk_batch`` (msearch) of at most ``_DRIVER_BATCH_MAX`` queries
+  takes the same loop with the whole batch.
 - **executors**: otherwise one ``mapInPandas`` stage over the cached,
-  shard-partitioned doclens runs ``_score_shard`` per shard. A
-  ``topk_batch`` (msearch) always runs here; a per-query window then
-  takes each query's global top-k.
+  shard-partitioned doclens runs ``_score_shard`` per shard; for a
+  ``topk_batch`` a per-query window then takes each query's global
+  top-k.
 
 Both sites need the index on storage that the driver and every
-executor can see (POSIX paths), as the build already does. Both round
-in Spark: ``F.round`` renders the double through the JVM's decimal
-conversion (JDK 17's ``Double.toString`` is not the shortest repr), so
-a numpy HALF_UP emulation is not provably identical; on the driver
-path the round runs over a LocalRelation, which the optimizer folds
-without a job. Setting the threshold to -1 forces the executor site
-(its result is then rank- and score-identical — pytest-asserted).
+executor can see (POSIX paths), as the build already does. The
+executor site rounds with Spark's ``F.round``; the driver site rounds
+in numpy (``_round_scores``: HALF_UP, bit-identical to ``F.round``
+except in a band of a few ulps around each half quantum, which still
+goes through ``F.round``), so its answer stays in numpy until one Arrow
+``createDataFrame``. Setting the threshold to -1 forces the executor
+site (its result is then rank- and score-identical — pytest-asserted).
 ``topk_merged`` scores the merged table in a Spark job of its own. The
 DSL's match leaves use the same gate:
 ``topk(allowed=...)`` (filtered and ``operator: "and"`` matches) and
@@ -74,7 +76,7 @@ from .analyze import tokenize_text
 from .bm25 import SCORE_DECIMALS
 from .codec import decode_block, decode_blocks_flat_batch, decode_doc_ids_flat_batch
 from .postings import B, K1
-from .session import is_live, unpersist_quietly
+from .session import empty_frame, is_live, unpersist_quietly
 
 
 def idf(n_docs: int, df: int) -> float:
@@ -592,6 +594,14 @@ _SERVE_COLS = [
 # driver-side bytes per live doc: the (doc_id long, dl int, shard int) row
 _DRIVER_ROW_BYTES = 16
 
+# Largest ``topk_batch`` served on the driver site. One driver thread
+# scores a batch in ~4 ms a query; the executor stage spreads it over
+# the cores after a ~0.45 s job floor. bench/msearch_crossover.py
+# (5k-page index, 4 shards, local[4], medians of 7) measured the driver
+# ahead at 100 queries (535 vs 601 ms) and behind at 150 (718 vs
+# 688 ms).
+_DRIVER_BATCH_MAX = 128
+
 
 def _driver_serves(spark: SparkSession, n_docs: int, gen_dirs: list[str]) -> bool:
     """The driver-side serving gate: the live doclens fit Spark's own
@@ -646,36 +656,100 @@ def _score_shard(
     return found
 
 
+# Half-quantum band, in float64 ulps of |score|·10^SCORE_DECIMALS, whose
+# scores ``_round_half_up`` leaves to the JVM (``_round_scores``)
+_ROUND_BAND_ULPS = 16
+
+
+def _round_half_up(scores: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``F.round(score, SCORE_DECIMALS)`` in numpy, and the mask of the
+    scores it cannot decide.
+
+    Spark rounds a double HALF_UP on its decimal rendering, JDK 17's
+    ``Double.toString``, which is not always the shortest repr
+    (JDK-4511638) but is always a decimal within half an ulp of the
+    double. Unless the double is within an ulp or two of a half quantum,
+    that decimal and the double round the same way. Here
+    ``n = floor(|x|·10^d)``, plus 1 when the fraction is ≥ 0.5, then
+    ``n / 10^d`` with x's sign: IEEE division is correctly rounded, as
+    is the JVM's decimal → double conversion, so the two agree bit for
+    bit (``+ 0.0``: the JVM's decimal has no negative zero). The mask
+    holds the non-finite scores and those within ``_ROUND_BAND_ULPS``
+    ulps of a half quantum, where only the JVM's own rendering decides
+    (tests/test_score_rounding.py)."""
+    scale = 10.0 ** SCORE_DECIMALS
+    with np.errstate(invalid="ignore", over="ignore"):
+        t = np.abs(scores) * scale
+        n = np.floor(t)
+        frac = t - n  # exact: n is t's integer part
+        band = ~np.isfinite(t) | (
+            np.abs(frac - 0.5) <= _ROUND_BAND_ULPS * np.spacing(t)
+        )
+        rounded = np.copysign((n + (frac >= 0.5)) / scale, scores) + 0.0
+    return rounded, band
+
+
+def _round_scores(spark: SparkSession, scores: np.ndarray) -> np.ndarray:
+    """Scores rounded exactly as ``F.round(score, SCORE_DECIMALS)``:
+    numpy for all but ``_round_half_up``'s band, which goes through
+    ``F.round`` over an Arrow LocalRelation (folded without a job; one
+    collect). Real scores almost never fall in the band."""
+    rounded, band = _round_half_up(scores)
+    if band.any():
+        rounded[band] = _jvm_round(spark, scores[band])
+    return rounded
+
+
+def _jvm_round(spark: SparkSession, scores: np.ndarray) -> np.ndarray:
+    """``F.round(score, SCORE_DECIMALS)`` of each score, by the JVM."""
+    rows = spark.createDataFrame(pa.table({
+        "i": pa.array(np.arange(scores.size), pa.int64()),
+        "score": pa.array(scores, pa.float64()),
+    })).select("i", F.round("score", SCORE_DECIMALS)).collect()
+    out = np.empty(scores.size)
+    for i, r in rows:
+        out[i] = r
+    return out
+
+
+def _rank(
+    spark: SparkSession, hits: list[tuple[np.ndarray, np.ndarray]], k: int,
+) -> list[tuple[np.ndarray, np.ndarray]]:
+    """Each query's global top-k of driver-site candidates ``(doc_ids,
+    raw scores)``, as ``(doc_ids, rounded scores)`` ordered by (score
+    desc, doc_id asc) — the order of the executor site.
+
+    Only the candidates that can still reach the top k are rounded:
+    rounding moves a score by at most half a quantum, so a candidate
+    more than two quanta below the k-th raw score cannot tie into the
+    top k (the kernel's guard band, widened). The whole batch rounds in
+    one ``_round_scores`` call."""
+    kept = []
+    for docs, scores in hits:
+        if 0 < k < docs.size:
+            kth = np.partition(scores, docs.size - k)[docs.size - k]
+            keep = scores >= kth - 2 * 10.0 ** (-SCORE_DECIMALS)
+            docs, scores = docs[keep], scores[keep]
+        kept.append((docs, scores))
+    sizes = np.cumsum([docs.size for docs, _ in kept])
+    rounded = _round_scores(
+        spark, np.concatenate([np.empty(0), *(s for _, s in kept)])
+    )
+    out = []
+    for (docs, _), sc in zip(kept, np.split(rounded, sizes[:-1])):
+        top = np.lexsort((docs, -sc))[:k]
+        out.append((docs[top], sc[top]))
+    return out
+
+
 def _local_topk(spark: SparkSession, docs: np.ndarray, scores: np.ndarray,
                 k: int) -> DataFrame:
-    """Global top-k of driver-site candidates, as a LocalRelation.
-
-    Rounding is Spark's ``F.round`` (module docstring: why) over an
-    Arrow-backed LocalRelation, which the optimizer folds
-    (ConvertToLocalRelation) without a job. Only the distinct raw scores
-    that can still reach the top k go through it: rounding moves a score
-    by at most half a quantum, so a candidate more than two quanta below
-    the k-th raw score cannot tie into the top k (the kernel's guard
-    band, widened). The rounded candidates are then ordered by (score
-    desc, doc_id asc) in Python."""
-    if 0 < k < docs.size:
-        kth = np.partition(scores, docs.size - k)[docs.size - k]
-        keep = scores >= kth - 2 * 10.0 ** (-SCORE_DECIMALS)
-        docs, scores = docs[keep], scores[keep]
-    uniq, inv = np.unique(scores, return_inverse=True)
-    rounded = np.empty(uniq.size)
-    if uniq.size:
-        rows = spark.createDataFrame(pa.table({
-            "i": pa.array(np.arange(uniq.size), pa.int64()),
-            "score": pa.array(uniq, pa.float64()),
-        })).select("i", F.round("score", SCORE_DECIMALS)).collect()
-        for i, r in rows:
-            rounded[i] = r
-    sc = rounded[inv]
-    top = np.lexsort((docs, -sc))[:k]
+    """Global top-k of driver-site candidates (``_rank``) as a
+    LocalRelation: one ``createDataFrame`` of an Arrow table, no job."""
+    (docs, scores), = _rank(spark, [(docs, scores)], k)
     return spark.createDataFrame(pa.table({
-        "doc_id": pa.array(docs[top], pa.int64()),
-        "score": pa.array(sc[top], pa.float64()),
+        "doc_id": pa.array(docs, pa.int64()),
+        "score": pa.array(scores, pa.float64()),
     }))
 
 
@@ -764,9 +838,10 @@ def topk(
       ONE ``mapInPandas`` stage over the warm-cached shard-partitioned
       doclens, no shuffle; warm latency is the Spark job floor.
 
-    Both sites round with Spark's ``F.round`` and return identical
-    answers. ``routing`` restricts the search to the routing keys'
-    shards (``_routed_shards``).
+    Both sites round like Spark's ``F.round`` (the driver in numpy,
+    ``_round_scores``) and return identical answers. ``routing``
+    restricts the search to the routing keys' shards
+    (``_routed_shards``).
 
     ``allowed``: a relation with a ``doc_id`` column that restricts the
     candidates (ES filter context — ``dsl.search`` passes a match's
@@ -780,17 +855,16 @@ def topk(
     warm = _WarmIndex.get(spark, index_dir)
     terms = _query_terms(warm.stats, query)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_frame(spark, "doc_id long, score double")
     shard_ids = _routed_shards(warm, routing)
     term_idfs = warm.term_idfs(terms)
     if not term_idfs:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_frame(spark, "doc_id long, score double")
     if allowed is not None:
         allowed = allowed.select("doc_id")
     queries = {query: terms}
 
     if warm.driver_side(spark):
-        avgdl = float(warm.stats["avgdl"])
         shard_dls = warm.live_shards(shard_ids)
         if allowed is not None and shard_dls:
             ids = _collect_ids(allowed)
@@ -799,20 +873,8 @@ def topk(
                 for shard, (doc, dl) in shard_dls.items()
                 if (keep := np.isin(doc, ids, assume_unique=True)).any()
             }
-        found = [
-            hit
-            for shard, (doc_sorted, dl_sorted) in shard_dls.items()
-            for hit in _score_shard(
-                warm.shard_datasets(shard), term_idfs, queries, doc_sorted,
-                dl_sorted, avgdl, k,
-            ).values()
-        ]
-        return _local_topk(
-            spark,
-            np.concatenate([np.empty(0, np.int64), *(d for d, _ in found)]),
-            np.concatenate([np.empty(0), *(s for _, s in found)]),
-            k,
-        )
+        (docs, scores), = _driver_hits(warm, term_idfs, queries, k, shard_dls)
+        return _local_topk(spark, docs, scores, k)
 
     return (
         _executor_candidates(warm, term_idfs, queries, k, shard_ids, allowed)
@@ -820,6 +882,30 @@ def topk(
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
+
+
+def _driver_hits(
+    warm: "_WarmIndex", term_idfs: dict[str, float],
+    queries: dict[str, list[str]], k: int, shard_dls: dict,
+) -> list[tuple[np.ndarray, np.ndarray]]:
+    """The driver site's loop: ``_score_shard`` over ``shard_dls``
+    (shard → sorted live doc ids and dls) with the whole batch, then
+    each query's per-shard top-k candidates concatenated as (doc_ids,
+    raw scores), in ``queries`` order."""
+    found: dict[str, list] = {qid: [] for qid in queries}
+    avgdl = float(warm.stats["avgdl"])
+    for shard, (doc_sorted, dl_sorted) in shard_dls.items():
+        hits = _score_shard(
+            warm.shard_datasets(shard), term_idfs, queries, doc_sorted,
+            dl_sorted, avgdl, k,
+        )
+        for qid, hit in hits.items():
+            found[qid].append(hit)
+    return [
+        (np.concatenate([np.empty(0, np.int64), *(d for d, _ in hs)]),
+         np.concatenate([np.empty(0), *(s for _, s in hs)]))
+        for hs in found.values()
+    ]
 
 
 def _executor_candidates(
@@ -1044,13 +1130,13 @@ def topk_merged(
     stats = warm.stats
     terms = _query_terms(stats, query)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_frame(spark, "doc_id long, score double")
     avgdl = float(stats["avgdl"])
     props = ManifestCatalog(index_dir).load("merged").props
     span = int(props.get("span", max(1, int(stats["n_docs"]))))
     term_idfs = warm.term_idfs(terms)
     if not term_idfs:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_frame(spark, "doc_id long, score double")
 
     merged = (
         spark.read.parquet(os.path.join(index_dir, "merged"))
@@ -1104,18 +1190,25 @@ def topk_batch(
     k: int = 10,
     routing: list | str | None = None,
 ) -> DataFrame:
-    """Batched multi-query BM25 top-k — ONE Spark stage for N queries.
+    """Batched multi-query BM25 top-k — the reference's ES ``msearch``
+    (SURVEY §2.5 A9, mira_loader.py:267-300): N queries in one pass.
 
-    The Spark answer to the reference's ES ``msearch`` batching (SURVEY
-    §2.5 A9, mira_loader.py:267-300): the 7-queries-one-round-trip trick
-    becomes N queries in one ``mapInPandas`` stage over the warm
-    doclens, always on the executor site. Each shard runs ``topk``'s
-    body, ``_score_shard``, over the whole batch: it reads the union of
-    the queries' posting rows once and the queries share one
-    block-decode cache (a hot term decodes once for the whole batch);
-    then a window per query_id takes the global top-k. Each query's
-    answer equals its own ``topk``. ``routing`` restricts every query
-    to the routing keys' shards, as in ``topk``.
+    Each shard runs ``topk``'s body, ``_score_shard``, over the whole
+    batch: it reads the union of the queries' posting rows once and the
+    queries share one block-decode cache (a hot term decodes once for
+    the whole batch). Where it runs:
+
+    - a batch of at most ``_DRIVER_BATCH_MAX`` queries on an index that
+      ``topk`` serves on the driver: the same driver loop and numpy
+      rounding as ``topk``; the answer is one Arrow LocalRelation, and a
+      warm batch submits no Spark job;
+    - otherwise (a larger batch, a large index, or the threshold at -1):
+      ONE ``mapInPandas`` stage over the warm doclens, then a window per
+      query_id takes the global top-k.
+
+    Each query's answer equals its own ``topk`` on both sites.
+    ``routing`` restricts every query to the routing keys' shards, as in
+    ``topk``.
 
     Returns (query_id, rank, doc_id, score).
     """
@@ -1126,11 +1219,25 @@ def topk_batch(
     qterms = {qid: _query_terms(warm.stats, text) for qid, text in queries.items()}
     all_terms = sorted({t for ts in qterms.values() for t in ts})
     if not all_terms:
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     shard_ids = _routed_shards(warm, routing)
     term_idfs = warm.term_idfs(all_terms)
     if not term_idfs:
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
+    if len(qterms) <= _DRIVER_BATCH_MAX and warm.driver_side(spark):
+        ranked = _rank(spark, _driver_hits(
+            warm, term_idfs, qterms, k, warm.live_shards(shard_ids)
+        ), k)
+        sizes = [docs.size for docs, _ in ranked]
+        return spark.createDataFrame(pa.table({
+            "query_id": pa.array(np.repeat(list(qterms), sizes), pa.string()),
+            "rank": pa.array(
+                np.concatenate([np.arange(1, n + 1, dtype=np.int32) for n in sizes]),
+                pa.int32(),
+            ),
+            "doc_id": pa.array(np.concatenate([d for d, _ in ranked]), pa.int64()),
+            "score": pa.array(np.concatenate([s for _, s in ranked]), pa.float64()),
+        }))
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))

@@ -4,9 +4,10 @@ Every query runs twice: on the driver path (the default for an index
 whose live doclens fit ``spark.sql.autoBroadcastJoinThreshold``) and,
 with the threshold at -1, on the ``mapInPandas`` path. Both answers must
 be identical (ids and scores) and equal the exact join scorer
-``bm25.bm25_topk``. A ``topk_batch`` of the same queries, which always
-runs on the executor site, must equal the per-query answers on both
-threshold settings.
+``bm25.bm25_topk``. A ``topk_batch`` of the same queries must equal the
+per-query answers on both threshold settings: with the gate open a
+batch of at most ``wand._DRIVER_BATCH_MAX`` queries runs on the driver
+too, with the gate closed on the executor site.
 """
 
 from __future__ import annotations
@@ -14,14 +15,19 @@ from __future__ import annotations
 import contextlib
 import os
 
+import numpy as np
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import DataFrame
+
+from conftest import count_jobs
 
 from es_loaders_spark.analyze import AnalysisChain
 from es_loaders_spark.bm25 import bm25_topk
 from es_loaders_spark.build import append_documents, build_index, routing_shard_id
 from es_loaders_spark.deletes import delete_by_term, delete_ids, tombstones
 from es_loaders_spark.postings import corpus_stats, doc_lengths, postings_long, term_df
+from es_loaders_spark import wand
 from es_loaders_spark.wand import (
     _WarmIndex, evict_index, term_blocks_from_flat, topk, topk_batch, warm_index,
 )
@@ -102,6 +108,92 @@ def test_warm_driver_topk_submits_no_spark_job(spark, plain_idx):
         sc._jsc.clearJobGroup()
     assert len(got) == 10
     assert list(sc.statusTracker().getJobIdsForGroup("driver-serve-probe")) == []
+
+
+def test_warm_driver_topk_makes_one_relation_and_no_collect(spark, plain_idx, monkeypatch):
+    """Rounding needs no JVM round trip: a warm driver-site ``topk``
+    creates its one result relation and collects nothing itself."""
+    warm_index(spark, plain_idx)
+    topk(spark, plain_idx, "spark data", k=5).collect()  # first-call planning
+    calls = []
+
+    def counting(name, fn):
+        def wrapped(*a, **kw):
+            calls.append(name)
+            return fn(*a, **kw)
+        return wrapped
+
+    monkeypatch.setattr(
+        spark, "createDataFrame", counting("createDataFrame", spark.createDataFrame)
+    )
+    for name in ("collect", "toArrow", "toPandas", "count"):
+        monkeypatch.setattr(DataFrame, name, counting(name, getattr(DataFrame, name)))
+    monkeypatch.setattr(wand, "_jvm_round", counting("_jvm_round", wand._jvm_round))
+    for q in QUERIES:
+        calls.clear()
+        topk(spark, plain_idx, q, k=10)
+        if "_jvm_round" not in calls:  # the rare half-quantum band: F.round
+            assert calls == ["createDataFrame"], q
+
+
+def test_unindexed_queries_submit_no_spark_job(spark, plain_idx):
+    """Empty answers are Arrow LocalRelations (``session.empty_frame``),
+    not RDD-backed ``createDataFrame([], ddl)`` relations."""
+    warm_index(spark, plain_idx)
+    for site in (contextlib.nullcontext, lambda: spark_path(spark)):
+        with site():
+            assert count_jobs(spark, "unindexed-topk", lambda: topk(
+                spark, plain_idx, "zzzq qqqz").collect()) == 0
+            assert count_jobs(spark, "unindexed-batch", lambda: topk_batch(
+                spark, plain_idx, ["zzzq", "qqqz zzzq"]).collect()) == 0
+
+
+def batch_of(documents, n: int, seed: int = 0) -> list[str]:
+    """n queries of 1-4 words drawn from the corpus."""
+    words = sorted({w for r in documents.select("text").limit(100).collect()
+                    for w in r[0].split() if w.isalpha()})
+    rng = np.random.default_rng(seed)
+    return [" ".join(rng.choice(words, 1 + i % 4)) for i in range(n)]
+
+
+def test_warm_driver_batch_submits_no_spark_job(spark, documents, plain_idx):
+    warm_index(spark, plain_idx)
+    batch = batch_of(documents, 50)
+    topk_batch(spark, plain_idx, batch[:5]).collect()  # first-call planning
+    got = []
+    assert count_jobs(spark, "driver-batch", lambda: got.extend(
+        topk_batch(spark, plain_idx, batch, k=10).collect())) == 0
+    assert {r["query_id"] for r in got} == {f"q{i}" for i in range(50)}
+
+
+def test_batch_above_cutoff_runs_the_executor_stage(spark, documents, plain_idx):
+    """A batch over the cutoff submits the executor site's jobs (the
+    ``mapInPandas`` stage, and the window's stage, which AQE runs as a
+    job of its own) even with the driver gate open."""
+    warm_index(spark, plain_idx)
+    assert _WarmIndex.get(spark, plain_idx).driver_side(spark)
+    batch = batch_of(documents, wand._DRIVER_BATCH_MAX + 1, seed=1)
+    with spark_path(spark):
+        topk_batch(spark, plain_idx, batch[:5]).collect()  # first-call planning
+        forced = count_jobs(spark, "forced-batch", lambda: topk_batch(
+            spark, plain_idx, batch, k=3).collect())
+    got = []
+    assert count_jobs(spark, "executor-batch", lambda: got.extend(
+        topk_batch(spark, plain_idx, batch, k=3).collect())) == forced == 2
+    want = [(r["query_id"], r["rank"], r["doc_id"], r["score"])
+            for r in topk_batch(spark, plain_idx, batch[:50], k=3).collect()]
+    assert sorted(want) == sorted(
+        (r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in got
+        if int(r["query_id"][1:]) < 50
+    )
+
+
+def test_batch_mixes_unindexed_queries_and_large_k(spark, plain_idx):
+    batch_matches(
+        spark, plain_idx,
+        ["hash join", "zzzq qqqz", "spark query data", "the of and", "qqqz spark"],
+        k=10_000,
+    )
 
 
 def test_warm_executor_topk_submits_one_spark_job(spark, plain_idx):
