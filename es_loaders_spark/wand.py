@@ -19,8 +19,8 @@ scan on the driver (no Spark job). The body runs on two sites:
   ``(doc_id, dl)`` arrays on the driver and ``topk`` loops over the
   shards in-process: no Spark job at all, where a Python-UDF job alone
   costs several hundred ms.
-  A ``topk_batch`` (msearch) of at most ``_DRIVER_BATCH_MAX`` queries
-  takes the same loop with the whole batch.
+  A ``topk_batch`` (msearch) whose queries × index docs stay within
+  ``_DRIVER_BATCH_QUERY_DOCS`` takes the same loop with the whole batch.
 - **executors**: otherwise one ``mapInPandas`` stage over the cached,
   shard-partitioned doclens runs ``_score_shard`` per shard; for a
   ``topk_batch`` a per-query window then takes each query's global
@@ -594,13 +594,21 @@ _SERVE_COLS = [
 # driver-side bytes per live doc: the (doc_id long, dl int, shard int) row
 _DRIVER_ROW_BYTES = 16
 
-# Largest ``topk_batch`` served on the driver site. One driver thread
-# scores a batch in ~4 ms a query; the executor stage spreads it over
-# the cores after a ~0.45 s job floor. bench/msearch_crossover.py
-# (5k-page index, 4 shards, local[4], medians of 7) measured the driver
-# ahead at 100 queries (535 vs 601 ms) and behind at 150 (718 vs
-# 688 ms).
-_DRIVER_BATCH_MAX = 128
+# Largest ``topk_batch`` served on the driver site, as queries × index
+# docs (``n_docs``, the count the driver gate reads). One driver thread
+# scores a query in time that grows with the index (~5 ms at 5k docs,
+# ~30 ms at 40k); the executor stage spreads the batch over the cores
+# after a ~0.5 s job floor. So the crossover batch shrinks as the index
+# grows, and its product with the docs stays near constant.
+# bench/msearch_crossover.py (local[4], medians of 5, aligned shards)
+# put it at 455k (5k docs, 91 queries), 683k (10k, 68), 665k (20k, 33)
+# and 405k (40k, 10) query-docs; 40k docs in 64 shards, whose job floor
+# is ~4.7 s, at 3.9M (98 queries). The constant sits under the smallest.
+# Above 40k docs it admits fewer than 10 queries, above 400k docs none.
+# The executor stage runs a task per shard, so more cores than the
+# sweep's 4 shorten it, and lower the crossover, only on an index of
+# more than 4 shards; the sweep does not cover that.
+_DRIVER_BATCH_QUERY_DOCS = 400_000
 
 
 def _driver_serves(spark: SparkSession, n_docs: int, gen_dirs: list[str]) -> bool:
@@ -1198,11 +1206,12 @@ def topk_batch(
     queries share one block-decode cache (a hot term decodes once for
     the whole batch). Where it runs:
 
-    - a batch of at most ``_DRIVER_BATCH_MAX`` queries on an index that
-      ``topk`` serves on the driver: the same driver loop and numpy
+    - a batch on an index that ``topk`` serves on the driver, when the
+      batch's queries times the index's docs are at most
+      ``_DRIVER_BATCH_QUERY_DOCS``: the same driver loop and numpy
       rounding as ``topk``; the answer is one Arrow LocalRelation, and a
       warm batch submits no Spark job;
-    - otherwise (a larger batch, a large index, or the threshold at -1):
+    - otherwise (a larger batch or index, or the threshold at -1):
       ONE ``mapInPandas`` stage over the warm doclens, then a window per
       query_id takes the global top-k.
 
@@ -1224,7 +1233,8 @@ def topk_batch(
     term_idfs = warm.term_idfs(all_terms)
     if not term_idfs:
         return empty_frame(spark, schema)
-    if len(qterms) <= _DRIVER_BATCH_MAX and warm.driver_side(spark):
+    if (len(qterms) * int(warm.stats["n_docs"]) <= _DRIVER_BATCH_QUERY_DOCS
+            and warm.driver_side(spark)):
         ranked = _rank(spark, _driver_hits(
             warm, term_idfs, qterms, k, warm.live_shards(shard_ids)
         ), k)

@@ -82,7 +82,9 @@ def test_half_quantum_ties_go_through_the_jvm(spark, monkeypatch):
 def test_jdk_non_shortest_renderings(spark):
     """Doubles whose JVM ``Double.toString`` and Python ``repr`` are
     different decimals (JDK-4511638): found by rendering a sample in one
-    Spark pass, then rounded both ways."""
+    Spark pass, then rounded both ways. JDK 17 renders some; a JVM that
+    renders none has nothing to compare here, and the bit-equality
+    cases above still hold on it."""
     rng = np.random.default_rng(3)
     sample = np.concatenate([
         rng.uniform(0, 50, 100_000),
@@ -96,7 +98,8 @@ def test_jdk_non_shortest_renderings(spark):
         Decimal(j) != Decimal(repr(v)) for j, v in zip(java.to_pylist(), sample)
     ])
     found = sample[differ]
-    assert found.size > 0
+    if found.size == 0:  # JDK 19+ renders the shortest repr (JDK-4511638 fixed)
+        pytest.skip("this JVM renders every sampled double as Python's repr")
     assert_bits_equal(wand._round_scores(spark, found), spark_round(spark, found))
 
 

@@ -6,8 +6,9 @@ with the threshold at -1, on the ``mapInPandas`` path. Both answers must
 be identical (ids and scores) and equal the exact join scorer
 ``bm25.bm25_topk``. A ``topk_batch`` of the same queries must equal the
 per-query answers on both threshold settings: with the gate open a
-batch of at most ``wand._DRIVER_BATCH_MAX`` queries runs on the driver
-too, with the gate closed on the executor site.
+batch whose queries × index docs are at most
+``wand._DRIVER_BATCH_QUERY_DOCS`` runs on the driver too, with the gate
+closed on the executor site.
 """
 
 from __future__ import annotations
@@ -171,15 +172,18 @@ def test_batch_above_cutoff_runs_the_executor_stage(spark, documents, plain_idx)
     ``mapInPandas`` stage, and the window's stage, which AQE runs as a
     job of its own) even with the driver gate open."""
     warm_index(spark, plain_idx)
-    assert _WarmIndex.get(spark, plain_idx).driver_side(spark)
-    batch = batch_of(documents, wand._DRIVER_BATCH_MAX + 1, seed=1)
+    warm = _WarmIndex.get(spark, plain_idx)
+    assert warm.driver_side(spark)
+    n_docs = int(warm.stats["n_docs"])
+    batch = batch_of(documents, wand._DRIVER_BATCH_QUERY_DOCS // n_docs + 1, seed=1)
     with spark_path(spark):
         topk_batch(spark, plain_idx, batch[:5]).collect()  # first-call planning
         forced = count_jobs(spark, "forced-batch", lambda: topk_batch(
             spark, plain_idx, batch, k=3).collect())
     got = []
     assert count_jobs(spark, "executor-batch", lambda: got.extend(
-        topk_batch(spark, plain_idx, batch, k=3).collect())) == forced == 2
+        topk_batch(spark, plain_idx, batch, k=3).collect())) == forced
+    assert forced > 0  # 2 today: AQE runs the window's shuffle as its own job
     want = [(r["query_id"], r["rank"], r["doc_id"], r["score"])
             for r in topk_batch(spark, plain_idx, batch[:50], k=3).collect()]
     assert sorted(want) == sorted(
