@@ -50,7 +50,7 @@ from __future__ import annotations
 
 import json
 import re
-from typing import Any
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -563,11 +563,8 @@ def filter_expr(
         # position (chain-aware) and keep filters to term/range.
         from .analyze import terms_array, tokenize_text
 
-        (field, v), = body.items()
-        op = "or"
-        if isinstance(v, dict):
-            op = str(v.get("operator", "or")).lower()
-            v = v["query"]
+        field, v, opts = _clause_text(body)
+        op = str(opts.get("operator", "or")).lower()
         qterms = tokenize_text(str(v))
         if not qterms:
             return F.lit(False)
@@ -706,13 +703,10 @@ def _indexed_match(
     column — the leaf ``wand.match_docs`` serves — else None."""
     if index_dir is None or len(q) != 1 or "match" not in q:
         return None
-    (fld, v), = q["match"].items()
+    fld, v, opts = _clause_text(q["match"])
     if fld != text_col:
         return None
-    op = "or"
-    if isinstance(v, dict):
-        op = str(v.get("operator", "or")).lower()
-        v = v["query"]
+    op = str(opts.get("operator", "or")).lower()
     return _index_query_terms(index_dir, str(v)), op == "and"
 
 
@@ -748,14 +742,7 @@ def _split_scoring(query: dict | None) -> tuple[dict | None, dict]:
     if not query:
         return None, {}
     (kind, body), = query.items()
-    if kind in (
-        "match", "match_phrase", "match_phrase_prefix", "multi_match",
-        "combined_fields",
-        "match_bool_prefix", "simple_query_string", "query_string",
-        "dis_max", "constant_score", "boosting", "function_score",
-        "script_score", "rank_feature", "terms_set", "span_near",
-        "intervals",
-    ):
+    if kind in _SCORERS:
         return query, {}
     if kind == "bool":
         scoring = None
@@ -763,14 +750,7 @@ def _split_scoring(query: dict | None) -> tuple[dict | None, dict]:
         musts = []
         for sub in _as_list(body.get("must")):
             (k, _), = sub.items()
-            if k in (
-                "match", "match_phrase", "match_phrase_prefix",
-                "multi_match", "combined_fields",
-                "match_bool_prefix", "simple_query_string",
-                "query_string", "dis_max", "constant_score", "boosting",
-                "function_score", "script_score", "rank_feature",
-                "terms_set", "span_near", "intervals",
-            ):
+            if k in _SCORERS:
                 if scoring is not None:
                     # ES SUMS the scores of multiple scoring clauses in
                     # bool.must; demoting the second one to a non-scoring
@@ -1181,9 +1161,6 @@ def _sqs_topk(
     return out, []
 
 
-_COMPOUND_KINDS = ("dis_max", "constant_score", "boosting", "function_score")
-
-
 def _match_scores(
     spark: SparkSession,
     docs: DataFrame,
@@ -1219,11 +1196,9 @@ def _match_scores(
     from .postings import scan_inputs
 
     if field is None:
-        (field, text), = sub.items()
+        field, text, _ = _clause_text(sub)
     else:
-        text = sub
-    if isinstance(text, dict):
-        text = text["query"]
+        text = sub["query"] if isinstance(sub, dict) else sub
     ch = chain if (chain is not None and field == chain_field) else None
     q = ch.tokens(text) if ch is not None else tokenize_text(text)
     si = scan_inputs(docs, text_col=field, id_col=id_col, chain=ch, terms=q)
@@ -1845,25 +1820,55 @@ def search(
         # script parser, so the derived expression stays inside
         # whole-stage codegen (never a Python UDF).
         docs = _apply_runtime_mappings(docs, body["runtime_mappings"])
-    if routing is not None and (
-        "aggs" in body or "knn" in body or body.get("pit") is not None
-    ):
+    _check_body(body, routing)
+    if "knn" in body:
+        return _knn_search(spark, docs, body, id_col, ann_index_dir)
+    if body.get("pit") is not None:
+        return _pit_search(spark, body, index_dir, text_col)
+    if "aggs" in body:
+        return _aggs_search(spark, docs, body, index_dir, text_col, id_col)
+    scoring, filters = _split_scoring(body.get("query"))
+    if routing is not None and (scoring is None or "match" not in scoring):
+        raise ValueError(
+            "routing= supports the index-served plain match path (build "
+            "the index with routing_field= and query match on its column)"
+        )
+    if body.get("post_filter") is not None:
+        # merge into filter context (see _check_body for why this is
+        # hit- and score-identical to ES's post-scoring filter here)
+        both = [qy for qy in (filters, body["post_filter"]) if qy]
+        filters = both[0] if len(both) == 1 else {"bool": {"filter": both}}
+    if scoring is not None:
+        return _scored_page(
+            spark, docs, body, scoring, filters, index_dir, text_col, id_col,
+            routing,
+        )
+    return _filter_page(docs, body, filters, id_col)
+
+
+def _check_body(body: dict[str, Any], routing) -> None:
+    """Refuse the section combinations ``search`` cannot honour: each
+    would otherwise be silently dropped, a wrong answer."""
+    aggs = "aggs" in body
+    pit = body.get("pit") is not None
+    if "aggregations" in body:
+        raise ValueError(
+            "put the search body's aggregations under 'aggs' "
+            "('aggregations' is not supported)"
+        )
+    if routing is not None and (aggs or "knn" in body or pit):
         raise ValueError(
             "routing= serves the indexed match path — aggs/knn/pit "
             "searches don't take routing"
         )
-    if "knn" in body and ("aggs" in body or body.get("track_total_hits")):
-        # the knn branch returns before the aggs/total handling — a
-        # silent drop would be a wrong answer (same standard as the
-        # post_filter/min_score refusals; knn DOES honor min_score)
+    if "knn" in body and (aggs or body.get("track_total_hits")):
+        # the knn section answers alone (knn DOES honor min_score)
         raise ValueError(
             "knn search does not support aggs/track_total_hits here — "
             "run the aggregation as its own request over the knn hits"
         )
-    if body.get("pit") is not None and (
-        "aggs" in body
-        or body.get("min_score") is not None
-        or body.get("track_total_hits")
+    if pit and (
+        aggs or body.get("min_score") is not None or body.get("track_total_hits")
     ):
         raise ValueError(
             "pit search supports the plain as-of match page — "
@@ -1874,656 +1879,151 @@ def search(
         # ES post_filter: restricts HITS without touching aggs or scores.
         # Aggs bodies here are size:0 (no hits), so a post_filter there
         # would silently do nothing — refuse. For hit-returning queries
-        # it merges into filter context below: identical hits AND scores
+        # it merges into filter context: identical hits AND scores
         # (filter context never shifts BM25 stats — corpus stats stay
         # unfiltered), and no aggs exist in that path to diverge.
-        if "aggs" in body:
+        if aggs:
             raise ValueError(
                 "post_filter with a size:0 aggs body has no effect (aggs "
                 "ignore post_filter and no hits are returned) — put the "
                 "condition in the query's bool.filter instead"
             )
-        if "knn" in body or body.get("pit") is not None:
+        if "knn" in body or pit:
             raise ValueError("post_filter is not supported with knn/pit "
                              "search (knn takes a pre-filter)")
-    if "knn" in body:
-        # ES knn search section. With `ann_index_dir`: approximate
-        # serving from a built ANN index (similarity.ann_topk — IVF or
-        # LSH, partition-pruned probes, live tombstones), num_candidates
-        # sizing the probe set exactly as ES sizes its candidate pool;
-        # probing everything reproduces the exact path over the live set
-        # (parity-gated in tests/test_similarity.py). Without it: exact
-        # cosine top-k (the brute-force baseline and the DuckDB oracle
-        # twin), num_candidates accepted and ignored. `filter` is a
-        # PRE-filter in both paths, as in ES. Score = (1+cosine)/2, the
-        # documented ES transform for cosine similarity.
-        knn = body["knn"]
-        qv = [float(x) for x in knn["query_vector"]]
-        k = int(knn.get("k", body.get("size", 10)))
-        flt_clauses = _as_list(knn.get("filter"))
-        cond = None
-        if flt_clauses:
-            cond = F.lit(True)
-            for c in flt_clauses:
-                cond = cond & F.coalesce(filter_expr(c, id_col), F.lit(False))
-        from .similarity import _dot, _norm
-
-        vec_field = knn["field"]
-        if ann_index_dir is not None:
-            from .similarity import ann_candidates
-
-            base, vec_field = ann_candidates(
-                spark, ann_index_dir, qv, k=k,
-                num_candidates=(
-                    int(knn["num_candidates"])
-                    if knn.get("num_candidates") is not None else None
-                ),
-                nprobe=knn.get("nprobe"),
-                probe_hamming=knn.get("probe_hamming"),
-                id_col=id_col,
-                vec_col=vec_field,
-                pre_filter=cond,
-            )
-        else:
-            base = docs if cond is None else docs.filter(cond)
-        q = F.array(*[F.lit(x) for x in qv])
-        vec = F.transform(F.col(vec_field), lambda x: x.cast("double"))
-        sim = _dot(vec, q) / (_norm(vec) * _norm(q))
-        score = (F.lit(1.0) + sim) / F.lit(2.0)
-        scored = base.select(F.col(id_col), F.round(score, 4).alias("score"))
-        if body.get("min_score") is not None:
-            # applied BEFORE the limit, so the page backfills with the
-            # next above-threshold hits exactly as ES does
-            scored = scored.filter(
-                F.col("score") >= F.lit(float(body["min_score"]))
-            )
-        return (
-            scored.orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k)
-        )
-    if body.get("pit") is not None:
-        # ES point-in-time search: results pinned to the index state the
-        # PIT captured, surviving later appends. The PIT id encodes the
-        # generation count at open_pit() time; relevance serves through
-        # timetravel.topk_as_of (as-of dfs/stats from the generation
-        # subset). Subset: one plain match on the indexed column.
-        from .timetravel import topk_as_of
-
-        if index_dir is None:
-            raise ValueError("pit search needs the index_dir the pit was "
-                             "opened on")
-        g = _parse_pit(body["pit"]["id"])
-        scoring, filters = _split_scoring(body.get("query"))
-        if scoring is None or "match" not in scoring:
-            raise ValueError(
-                "pit search supports a plain match query on the indexed "
-                "column (the as-of scorer)"
-            )
-        if filters and any(
-            _as_list(filters.get("bool", {}).get(k))
-            for k in ("must", "filter", "should", "must_not")
-        ):
-            raise ValueError(
-                "pit search does not support filters (deletes already "
-                "apply; as-of scoring is index-served)"
-            )
-        (fld, txt), = scoring["match"].items()
-        if isinstance(txt, dict):
-            txt = txt["query"]
-        if fld != text_col:
-            raise ValueError(
-                f"pit match scores the indexed column {text_col!r}; got "
-                f"{fld!r}"
-            )
-        return topk_as_of(
-            spark, index_dir, txt, k=int(body.get("size", 10)), generations=g
-        )
-    if "aggs" in body:
-        if body.get("min_score") is not None or body.get("track_total_hits"):
-            # ES applies min_score to the docs FEEDING the aggs; this
-            # branch would silently ignore it (same reasoning as the
-            # post_filter refusal above — a silent no-op over a size:0
-            # aggs body is a wrong answer, not a convenience)
-            raise ValueError(
-                "min_score/track_total_hits with an aggs body is not "
-                "supported — filter the scored doc set explicitly (ES "
-                "applies min_score to the docs feeding aggregations)"
-            )
-        qd = body.get("query", {}) or {}
-        base = _parent_child_query(docs, qd, id_col)
-        served = _indexed_match(qd, index_dir, text_col) if base is None else None
-        if served is not None:
-            # Faceted search (aggs restricted by a text query) — the ES
-            # hot path. The match's doc set comes from the index's
-            # postings (wand.match_docs) and semi-joins into docs, instead
-            # of tokenizing the whole corpus per request. Aggregation
-            # itself is unchanged; only the candidate set comes cheaper.
-            from .wand import match_docs
-
-            hits = match_docs(spark, index_dir, *served)
-            base = docs.join(
-                hits.withColumnRenamed("doc_id", id_col), id_col, "left_semi"
-            )
-        if base is None:
-            base = docs.filter(filter_expr(qd, id_col))
-        # background = the UNFILTERED table: significant_terms contrasts
-        # the query's foreground set against it (ES background set)
-        return _aggs(
-            base, body["aggs"], id_col=id_col, background=docs, text_col=text_col
-        )
-
-    scoring, filters = _split_scoring(body.get("query"))
-    if routing is not None and (scoring is None or "match" not in scoring):
+    if aggs and (body.get("min_score") is not None or body.get("track_total_hits")):
+        # ES applies min_score to the docs FEEDING the aggs; the aggs
+        # section would silently ignore it
         raise ValueError(
-            "routing= supports the index-served plain match path (build "
-            "the index with routing_field= and query match on its column)"
+            "min_score/track_total_hits with an aggs body is not "
+            "supported — filter the scored doc set explicitly (ES "
+            "applies min_score to the docs feeding aggregations)"
         )
-    if body.get("post_filter") is not None:
-        # merge into filter context (see the guard above for why this is
-        # hit- and score-identical to ES's post-scoring filter here)
-        pf = body["post_filter"]
-        both = [qy for qy in (filters, pf) if qy]
-        filters = both[0] if len(both) == 1 else {"bool": {"filter": both}}
-    size = int(body.get("size", 10))
-    if scoring is not None:
-        if body.get("track_total_hits"):
-            # a scoring top-k never enumerates the full match set; ES
-            # itself makes exact totals an opt-in extra cost. Use a
-            # filter-context query (exact total attached per row) or
-            # dsl.count() (index-served) for the number.
-            raise ValueError(
-                "track_total_hits is supported for filter-context queries "
-                "— for a scoring query run dsl.count() for the exact total"
-            )
-        if body.get("sort") or body.get("search_after") is not None:
-            # ES would sort ALL matching docs by the sort key (relevance
-            # discarded); that is a filter query here, not a top-k — fail
-            # loudly rather than return a silently mis-ordered page
-            raise ValueError(
-                "sort/search_after with a scoring (match) query is not "
-                "supported — use a filter query with sort, or take the "
-                "relevance-ranked page via from/size"
-            )
-        offset = int(body.get("from", 0))
 
-        def page(
-            scored: DataFrame,
-            hl_terms: list[str] | None = None,
-            hl_phrase: bool = False,
-        ) -> DataFrame:
-            if body.get("min_score") is not None:
-                # every relation reaching page() is a score-desc-ordered
-                # prefix (top offset+size); score ≥ m selects a PREFIX of
-                # that ordering, so filtering after the branch's
-                # truncation equals ES's filter-then-paginate for the
-                # requested page. Compared on the rounded tie surface the
-                # branches already emit (cross-engine-stable).
-                if "score" not in scored.columns:
-                    raise ValueError(
-                        "min_score needs a scored query — this clause "
-                        "pages by doc_id without scores"
-                    )
-                scored = scored.filter(
-                    F.col("score") >= F.lit(float(body["min_score"]))
-                )
-            out = scored.offset(offset) if offset else scored
-            hl = body.get("highlight") or {}
-            hl_fields = list((hl.get("fields") or {}).keys()) if hl_terms else []
-            src = body.get("_source")
-            want_src = src if isinstance(src, list) and src else None
-            need = set(hl_fields) | set(want_src or [])
-            missing = [c for c in need if c not in scored.columns]
-            if missing:
-                # the scorer carries doc_id+score only: join the document
-                # fields back, re-establishing the relevance order the
-                # join loses
-                out = out.join(docs.select(id_col, *missing), id_col)
-                if "score" in scored.columns:
-                    out = out.orderBy(F.desc("score"), F.asc(id_col))
-            hl_cols = []
-            for fld in hl_fields:
-                from .highlight import highlight_expr
 
-                fspec = hl["fields"][fld] or {}
-                out = out.withColumn(
-                    f"highlight_{fld}",
-                    highlight_expr(
-                        fld,
-                        hl_terms,
-                        pre_tag=(hl.get("pre_tags") or ["<em>"])[0],
-                        post_tag=(hl.get("post_tags") or ["</em>"])[0],
-                        number_of_fragments=int(
-                            fspec.get("number_of_fragments", 0)
-                        ),
-                        fragment_size=int(fspec.get("fragment_size", 100)),
-                        phrase=hl_phrase,
-                    ),
-                )
-                hl_cols.append(f"highlight_{fld}")
-            if want_src:
-                out = out.select(*want_src, *hl_cols)
-            elif hl_cols:
-                out = out.select(*scored.columns, *hl_cols)
-            return out
+def _knn_search(spark, docs, body, id_col, ann_index_dir) -> DataFrame:
+    """ES knn search section. With ``ann_index_dir``: approximate serving
+    from a built ANN index (similarity.ann_topk — IVF or LSH,
+    partition-pruned probes, live tombstones), num_candidates sizing the
+    probe set exactly as ES sizes its candidate pool; probing everything
+    reproduces the exact path over the live set (parity-gated in
+    tests/test_similarity.py). Without it: exact cosine top-k (the
+    brute-force baseline and the DuckDB oracle twin), num_candidates
+    accepted and ignored. ``filter`` is a PRE-filter in both paths, as in
+    ES. Score = (1+cosine)/2, the documented ES transform for cosine
+    similarity."""
+    from .similarity import _dot, _norm
 
-        from .analyze import tokenize_text as _hl_tokens
+    knn = body["knn"]
+    qv = [float(x) for x in knn["query_vector"]]
+    k = int(knn.get("k", body.get("size", 10)))
+    flt_clauses = _as_list(knn.get("filter"))
+    cond = None
+    if flt_clauses:
+        cond = F.lit(True)
+        for c in flt_clauses:
+            cond = cond & F.coalesce(filter_expr(c, id_col), F.lit(False))
+    vec_field = knn["field"]
+    if ann_index_dir is not None:
+        from .similarity import ann_candidates
 
-        # ONE stats.json parse per search: every scoring path below that
-        # touches the analyzed column needs the index's chain (compound
-        # scorers must analyze exactly like plain match — review r6)
-        idx_chain = _index_chain(index_dir)
-
-        (kind, sub), = scoring.items()
-        if body.get("highlight") and kind in _COMPOUND_KINDS:
-            # the highlighted terms would be ambiguous across subqueries /
-            # score transforms — require a plain scoring clause
-            raise ValueError(f"highlight is not supported with {kind}")
-        if body.get("collapse") is not None or body.get("rescore") is not None:
-            if kind != "match":
-                raise ValueError(
-                    "collapse/rescore support a plain match scoring clause"
-                )
-            (fld, txt), = sub.items()
-            if isinstance(txt, dict):
-                txt = txt["query"]
-            if body.get("collapse") is not None:
-                # no score transform — the rounded relation is the tie
-                # surface AND the output, exactly like plain match
-                scored_all = _match_scores(spark, docs, sub, filters, id_col,
-                                           chain=idx_chain,
-                                           chain_field=text_col)
-                # ES field collapsing: keep each collapse-key's single
-                # best hit (score desc, doc_id asc), then the global
-                # top-k over the survivors. One window over the full
-                # scored relation — collapsing AFTER a k-truncation
-                # would under-fill the page whenever a key repeats.
-                cfield = body["collapse"]["field"]
-                side = docs.select(
-                    F.col(id_col).alias("doc_id"), F.col(cfield).alias("_ckey")
-                )
-                w = Window.partitionBy("_ckey").orderBy(
-                    F.desc("score"), F.asc("doc_id")
-                )
-                best = (
-                    scored_all.join(side, "doc_id")
-                    .withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                )
-                return page(
-                    best.select(
-                        "doc_id", "score", F.col("_ckey").alias(cfield)
-                    )
-                    .orderBy(F.desc("score"), F.asc("doc_id"))
-                    .limit(offset + size),
-                    hl_terms=_hl_tokens(txt),
-                )
-            # ES rescore: re-rank only the top window_size hits of the
-            # base query with qw·base + rw·rescore_query score; hits
-            # outside the window keep their base order below. Pages are
-            # served from the re-sorted window only, so size (+from)
-            # must fit inside it — refuse rather than silently mix
-            # re-scored and un-rescored tails.
-            rs = body["rescore"]
-            window_size = int(rs.get("window_size", 10))
-            rq = rs["query"]
-            qw = float(rq.get("query_weight", 1.0))
-            rw = float(rq.get("rescore_query_weight", 1.0))
-            (rk, rsub), = rq["rescore_query"].items()
-            if rk != "match":
-                raise ValueError(
-                    f"rescore_query {rk!r} not supported (match)"
-                )
-            if offset + size > window_size:
-                raise ValueError(
-                    f"from+size ({offset + size}) exceeds rescore "
-                    f"window_size ({window_size})"
-                )
-            # window membership is decided on the ROUNDED tie surface
-            # (cross-engine-stable), but the combined score is computed
-            # from the RAW base/rescore sums and rounded once
-            raw_all = _match_scores(
-                spark, docs, sub, filters, id_col, rounded=False,
-                chain=idx_chain, chain_field=text_col,
-            )
-            window = (
-                raw_all.orderBy(
-                    F.desc(F.round(F.col("score"), 4)), F.asc("doc_id")
-                )
-                .limit(window_size)
-                .withColumnRenamed("score", "_base")
-            )
-            resc = _match_scores(
-                spark, docs, rsub, filters, id_col, rounded=False,
-                chain=idx_chain, chain_field=text_col,
-            )
-            combined = window.join(
-                resc.withColumnRenamed("score", "_resc"), "doc_id", "left"
-            ).select(
-                "doc_id",
-                F.round(
-                    F.lit(qw) * F.col("_base")
-                    + F.lit(rw) * F.coalesce(F.col("_resc"), F.lit(0.0)),
-                    4,
-                ).alias("score"),
-            )
-            return page(
-                combined.orderBy(F.desc("score"), F.asc("doc_id")).limit(
-                    offset + size
-                ),
-                hl_terms=_hl_tokens(txt),
-            )
-        if kind == "dis_max":
-            return page(
-                _dis_max_topk(spark, docs, sub, filters, id_col,
-                              k=offset + size,
-                              chain=idx_chain, chain_field=text_col)
-            )
-        if kind == "constant_score":
-            return page(
-                _sub_scores(spark, docs, {kind: sub}, filters, id_col,
-                            chain=idx_chain, chain_field=text_col)
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(offset + size)
-            )
-        if kind == "boosting":
-            return page(
-                _boosting_topk(spark, docs, sub, filters, id_col,
-                               k=offset + size,
-                               chain=idx_chain, chain_field=text_col)
-            )
-        if kind == "function_score":
-            return page(
-                _function_score_topk(
-                    spark, docs, sub, filters, id_col, k=offset + size,
-                    chain=idx_chain, chain_field=text_col,
-                )
-            )
-        if kind == "multi_match":
-            return page(
-                _multi_match_topk(
-                    spark, docs, sub, filters, id_col, text_col,
-                    k=offset + size, chain=idx_chain,
-                ),
-                hl_terms=_hl_tokens(sub["query"]),
-            )
-        if kind == "combined_fields":
-            return page(
-                _combined_fields_topk(
-                    spark, docs, sub, filters, id_col, text_col,
-                    k=offset + size, chain=idx_chain,
-                ),
-                hl_terms=_hl_tokens(sub["query"]),
-            )
-        if kind == "script_score":
-            if body.get("highlight"):
-                raise ValueError("highlight is not supported with script_score")
-            return page(
-                _script_score_topk(spark, docs, sub, filters, id_col,
-                                   k=offset + size,
-                                   chain=idx_chain, chain_field=text_col)
-            )
-        if kind == "rank_feature":
-            return page(
-                _rank_feature_topk(spark, docs, sub, filters, id_col,
-                                   k=offset + size)
-            )
-        if kind == "terms_set":
-            return page(
-                _terms_set_topk(spark, docs, sub, filters, id_col, text_col,
-                                index_dir=index_dir,
-                                k=offset + size)
-            )
-        if kind in ("span_near", "intervals"):
-            # filter-shaped proximity clauses: matching docs paged in
-            # doc_id order (the match_phrase paging convention — Lucene's
-            # span/interval scores are proximity-weighted and are not
-            # reproduced here)
-            if kind == "span_near":
-                # non-ES extension key (query_string convention): force
-                # the scan twin of an index-served proximity query
-                serve = sub.get("serve", "index")
-                terms = []
-                for cl in sub.get("clauses") or []:
-                    (ck, cs), = cl.items()
-                    if ck != "span_term":
-                        raise ValueError(
-                            f"span_near clause {ck!r} not supported (span_term)"
-                        )
-                    (fld, val), = cs.items()
-                    if fld != text_col:
-                        raise ValueError(
-                            f"span_term matches the analyzed column "
-                            f"{text_col!r}; got {fld!r}"
-                        )
-                    terms.append(val if isinstance(val, str) else val["value"])
-                slop = int(sub.get("slop", 0))
-                in_order = bool(sub.get("in_order", True))
-            else:
-                (fld, ispec), = sub.items()
-                if fld != text_col:
-                    raise ValueError(
-                        f"intervals matches the analyzed column {text_col!r};"
-                        f" got {fld!r}"
-                    )
-                rule_kinds = [kk for kk in ("match",) if kk in ispec]
-                if not rule_kinds:
-                    raise ValueError(
-                        "intervals subset: the 'match' rule (all_of/any_of/"
-                        "prefix rules are not supported)"
-                    )
-                m = ispec["match"]
-                from .analyze import tokenize_text as _tt
-
-                serve = m.get("serve", "index")
-                _ch = _index_chain(index_dir)
-                # intervals.match analyzes its query with the search
-                # analyzer (ES parity): over a chained index the chain
-                # maps stems/synonyms and DROPS stopwords — doc-side
-                # gap counting then runs over the index's stop-GAPPED
-                # positions, so "hold the data" max_gaps=0 does NOT
-                # match its own source text (the classic Lucene
-                # stop-filter gotcha, reproduced deliberately)
-                terms = _ch.tokens(m["query"]) if _ch else _tt(m["query"])
-                slop = int(m.get("max_gaps", -1))
-                if slop < 0:
-                    # ES default max_gaps=-1 = unlimited; that is a bag-of-
-                    # words AND, which `match operator=and` already serves
-                    raise ValueError(
-                        "intervals.match needs max_gaps >= 0 (unlimited-gap "
-                        "matching is just match operator=and)"
-                    )
-                in_order = bool(m.get("ordered", False))
-            # Over a chained index: span_term values stay VERBATIM
-            # (ES parity — span_term is a term-level query against the
-            # index vocabulary, so users pass already-stemmed terms; a
-            # surface form or stopword simply matches nothing), while
-            # intervals.match analyzed its query above. Both sides walk
-            # the index's stop-GAPPED positions, exactly Lucene's
-            # SpanNearQuery over a position-increment-preserving stop
-            # filter; the scan twin reproduces those positions via
-            # scan_inputs(chain=...).positions.
-            hits = _proximity_docs(
-                spark, docs, terms, slop, in_order, id_col, text_col,
-                index_dir=index_dir, chain=_index_chain(index_dir),
-                serve=serve,
-            )
-            out = docs.join(
-                hits.withColumnRenamed("doc_id", id_col), id_col, "left_semi"
-            ).filter(filter_expr(filters, id_col))
-            return page(out.orderBy(id_col).limit(offset + size))
-        if kind == "match_bool_prefix":
-            from .querystring import MUST, SHOULD, Clause, Group, Leaf
-            from .querystring import execute_tree
-
-            if body.get("highlight"):
-                raise ValueError(
-                    "highlight is not supported with match_bool_prefix "
-                    "(the last term matches via prefix expansion)"
-                )
-            (fld, spec), = sub.items()
-            opts = spec if isinstance(spec, dict) else {}
-            qtext = spec["query"] if isinstance(spec, dict) else spec
-            if fld != text_col:
-                raise ValueError(
-                    f"match_bool_prefix matches the analyzed column "
-                    f"{text_col!r}; got field {fld!r}"
-                )
-            from .analyze import tokenize_text as _tt
-
-            words = _tt(qtext)
-            if not words:
-                raise ValueError("match_bool_prefix: empty query")
-            operator = str(opts.get("operator", "or")).lower()
-            occur = MUST if operator == "and" else SHOULD
-            clauses = [Clause(occur, Leaf("term", fld, w)) for w in words[:-1]]
-            clauses.append(Clause(occur, Leaf("prefix", fld, words[-1])))
-            # ES match_bool_prefix IS a bool query of term clauses + one
-            # prefix clause on the final (possibly mid-type) term —
-            # executed on the shared boolean-tree engine (querystring.py)
-            return page(
-                execute_tree(
-                    spark, docs, Group(clauses), filters, id_col, text_col,
-                    k=offset + size, index_dir=index_dir,
-                )
-            )
-        if kind == "query_string":
-            from .querystring import query_string_topk
-
-            if body.get("highlight"):
-                # the matched terms depend on which boolean branches each
-                # doc satisfied — per-doc highlight terms are ambiguous
-                raise ValueError("highlight is not supported with query_string")
-            return page(
-                query_string_topk(
-                    spark, docs, sub, filters, id_col, text_col,
-                    k=offset + size, index_dir=index_dir,
-                )
-            )
-        if kind == "simple_query_string":
-            out, sterms = _sqs_topk(
-                spark, docs, sub, filters, id_col, text_col,
-                k=offset + size, index_dir=index_dir,
-            )
-            return page(out, hl_terms=sterms or None)
-        (field, text), = sub.items()
-        opts = text if isinstance(text, dict) else {}
-        if isinstance(text, dict):
-            text = text["query"]
-        if kind == "match_phrase_prefix":
-            if index_dir is None:
-                raise ValueError(
-                    "match_phrase_prefix needs a built index (phrase.py)"
-                )
-            if field != text_col:
-                raise ValueError(
-                    f"match_phrase_prefix matches the indexed column "
-                    f"{text_col!r}; got field {field!r} (build an index over it)"
-                )
-            from .phrase import phrase_prefix_docs
-
-            hits = phrase_prefix_docs(
-                spark, index_dir, text,
-                max_expansions=int(opts.get("max_expansions", 50)),
-            )
-            out = docs.join(hits, id_col, "left_semi").filter(
-                filter_expr(filters, id_col)
-            )
-            if body.get("highlight"):
-                # the matched span ends in an EXPANSION of the prefix, not
-                # the typed prefix itself — a literal-phrase highlight
-                # would silently miss most hits
-                raise ValueError(
-                    "highlight is not supported with match_phrase_prefix"
-                )
-            return page(out.orderBy(id_col).limit(offset + size))
-        if kind == "match_phrase":
-            if index_dir is None:
-                raise ValueError("match_phrase needs a built index (phrase.py)")
-            if field != text_col:
-                raise ValueError(
-                    f"match_phrase scores the indexed column {text_col!r}; "
-                    f"got field {field!r} (build an index over it)"
-                )
-            from .phrase import phrase_docs
-
-            hits = phrase_docs(spark, index_dir, text)
-            out = docs.join(hits, id_col, "left_semi").filter(filter_expr(filters, id_col))
-            # deterministic paging: order by doc_id (ES orders phrase hits
-            # by score; an unordered limit/offset would give overlapping /
-            # skipping pages across jobs).
-            # Highlighting: default grammar marks the literal contiguous
-            # phrase; over a CHAINED index the hit text may carry stem/
-            # synonym variants and stop-gap words the literal pattern
-            # cannot represent, so chain-verified surface forms are
-            # marked term-wise instead (ES's re-analyzing highlighter
-            # marks the same tokens).
-            if idx_chain is not None:
-                hl_terms, hl_phrase_flag = (
-                    _hl_terms_for(index_dir, text, chain=idx_chain), False)
-            else:
-                hl_terms, hl_phrase_flag = _hl_tokens(text), True
-            return page(
-                out.orderBy(id_col).limit(offset + size),
-                hl_terms=hl_terms,
-                hl_phrase=hl_phrase_flag,
-            )
-        # match → BM25 top-k (deep enough for the requested page).
-        # ES scores the field NAMED in the clause; the compressed index
-        # covers text_col, any other field takes the exact join scorer
-        # (previously the clause's field name was silently ignored and
-        # text_col scored — or an AnalysisException for a custom text_col)
-        operator = str(opts.get("operator", "or")).lower()
-        if operator not in ("or", "and"):
-            raise ValueError(f"match operator {operator!r} (use 'or' or 'and')")
-        # ES filter-context semantics: corpus stats / dfs / avgdl come from
-        # the UNFILTERED corpus; the filter and the operator=and
-        # conjunction only restrict the candidate set (ADVICE r02 — stats
-        # over the filtered set shifted idf/avgdl and diverged from ES).
-        # A conjunction keeps scores: BM25 sums the same contributions; a
-        # term absent from the corpus yields zero hits, as in ES.
-        if index_dir is not None and field == text_col:
-            from .wand import match_docs, topk
-
-            allowed = None
-            if filters:
-                allowed = docs.filter(filter_expr(filters, id_col)).select(
-                    F.col(id_col).alias("doc_id")
-                )
-            if operator == "and":
-                have_all = match_docs(
-                    spark, index_dir, _index_query_terms(index_dir, text),
-                    conjunctive=True,
-                )
-                allowed = have_all if allowed is None else allowed.join(
-                    have_all, "doc_id", "left_semi"
-                )
-            return page(
-                topk(spark, index_dir, text, k=offset + size,
-                     routing=routing, allowed=allowed),
-                hl_terms=_hl_terms_for(index_dir, text, chain=idx_chain),
-            )
-        if routing is not None:
-            raise ValueError(
-                "routing= needs the index-served match path (a match on "
-                "the indexed column) — this request would scan every shard"
-            )
-        from .analyze import tokenize_text
-        from .bm25 import bm25_topk
-        from .postings import scan_inputs
-
-        # no index over this field: score from the raw token arrays
-        qterms = sorted(set(tokenize_text(text)))
-        si = scan_inputs(docs, text_col=field, id_col=id_col, terms=qterms)
-        cand = _in_filter(si.tf, docs, filters, id_col)
-        if operator == "and":
-            cand = cand.join(_having_all(si.tf, qterms), "doc_id", "left_semi")
-        return page(
-            bm25_topk(
-                spark, cand, si.dl, si.tdf, si.stats, text, k=offset + size,
+        base, vec_field = ann_candidates(
+            spark, ann_index_dir, qv, k=k,
+            num_candidates=(
+                int(knn["num_candidates"])
+                if knn.get("num_candidates") is not None else None
             ),
-            hl_terms=_hl_tokens(text),
+            nprobe=knn.get("nprobe"),
+            probe_hamming=knn.get("probe_hamming"),
+            id_col=id_col,
+            vec_col=vec_field,
+            pre_filter=cond,
         )
+    else:
+        base = docs if cond is None else docs.filter(cond)
+    q = F.array(*[F.lit(x) for x in qv])
+    vec = F.transform(F.col(vec_field), lambda x: x.cast("double"))
+    sim = _dot(vec, q) / (_norm(vec) * _norm(q))
+    score = (F.lit(1.0) + sim) / F.lit(2.0)
+    scored = base.select(F.col(id_col), F.round(score, 4).alias("score"))
+    if body.get("min_score") is not None:
+        # applied BEFORE the limit, so the page backfills with the next
+        # above-threshold hits exactly as ES does
+        scored = scored.filter(F.col("score") >= F.lit(float(body["min_score"])))
+    return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
+
+def _pit_search(spark, body, index_dir, text_col) -> DataFrame:
+    """ES point-in-time search: results pinned to the index state the PIT
+    captured, surviving later appends. The PIT id encodes the generation
+    count at open_pit() time; relevance serves through
+    timetravel.topk_as_of (as-of dfs/stats from the generation subset).
+    Subset: one plain match on the indexed column."""
+    from .timetravel import topk_as_of
+
+    if index_dir is None:
+        raise ValueError("pit search needs the index_dir the pit was "
+                         "opened on")
+    g = _parse_pit(body["pit"]["id"])
+    scoring, filters = _split_scoring(body.get("query"))
+    if scoring is None or "match" not in scoring:
+        raise ValueError(
+            "pit search supports a plain match query on the indexed "
+            "column (the as-of scorer)"
+        )
+    if filters and any(
+        _as_list(filters.get("bool", {}).get(k))
+        for k in ("must", "filter", "should", "must_not")
+    ):
+        raise ValueError(
+            "pit search does not support filters (deletes already "
+            "apply; as-of scoring is index-served)"
+        )
+    fld, txt, _ = _clause_text(scoring["match"])
+    if fld != text_col:
+        raise ValueError(
+            f"pit match scores the indexed column {text_col!r}; got "
+            f"{fld!r}"
+        )
+    return topk_as_of(
+        spark, index_dir, txt, k=int(body.get("size", 10)), generations=g
+    )
+
+
+def _aggs_search(spark, docs, body, index_dir, text_col, id_col) -> DataFrame:
+    qd = body.get("query", {}) or {}
+    base = _parent_child_query(docs, qd, id_col)
+    served = _indexed_match(qd, index_dir, text_col) if base is None else None
+    if served is not None:
+        # Faceted search (aggs restricted by a text query) — the ES hot
+        # path. The match's doc set comes from the index's postings
+        # (wand.match_docs) and semi-joins into docs, instead of
+        # tokenizing the whole corpus per request. Aggregation itself is
+        # unchanged; only the candidate set comes cheaper.
+        from .wand import match_docs
+
+        hits = match_docs(spark, index_dir, *served)
+        base = docs.join(
+            hits.withColumnRenamed("doc_id", id_col), id_col, "left_semi"
+        )
+    if base is None:
+        base = docs.filter(filter_expr(qd, id_col))
+    # background = the UNFILTERED table: significant_terms contrasts the
+    # query's foreground set against it (ES background set)
+    return _aggs(base, body["aggs"], id_col=id_col, background=docs, text_col=text_col)
+
+
+def _clause_text(sub: dict) -> tuple[str, str, dict]:
+    """(field, query text, options) of a ``{field: text}`` or
+    ``{field: {"query": text, ...}}`` clause body."""
+    (field, text), = sub.items()
+    if isinstance(text, dict):
+        return field, text["query"], text
+    return field, text, {}
+
+
+def _filter_page(docs, body, filters, id_col) -> DataFrame:
+    """The hits of a filter-context query: sorted, paged, projected."""
     if body.get("highlight"):
         # ES highlights filter-context hits too, but the tags would wrap
         # FILTER terms (exact keyword values), which is rarely what a
@@ -2570,11 +2070,7 @@ def search(
         # not supported: any truthy value tracks exactly.
         total = out.agg(F.count(F.lit(1)).alias("total_hits"))
         out = out.crossJoin(total.hint("broadcast"))
-    sort_cols = []
-    for s in _as_list(body.get("sort")):
-        (field, spec), = s.items() if isinstance(s, dict) else ((s, "asc"),)
-        order = spec["order"] if isinstance(spec, dict) else spec
-        sort_cols.append(F.col(field).desc() if order == "desc" else F.col(field).asc())
+    sort_cols = _sort_cols(body.get("sort"))
     if sort_cols:
         # ONE orderBy with all keys: chained orderBy calls each REPLACE the
         # previous Sort, silently keeping only the last field (ADVICE r02)
@@ -2596,14 +2092,10 @@ def search(
                 f"search_after has {len(after)} values but sort has "
                 f"{len(sort_cols)} keys — they must match"
             )
-        specs = []
-        for s, v in zip(_as_list(body.get("sort")), after):
-            (field, spec), = s.items() if isinstance(s, dict) else ((s, "asc"),)
-            order = spec["order"] if isinstance(spec, dict) else spec
-            specs.append((field, order, v))
         cond = F.lit(False)
         eqs = F.lit(True)
-        for field, order, v in specs:
+        for s, v in zip(_as_list(body.get("sort")), after):
+            field, order = _sort_spec(s)
             col = F.col(field)
             strict = col < F.lit(v) if order == "desc" else col > F.lit(v)
             cond = cond | (eqs & strict)
@@ -2614,7 +2106,7 @@ def search(
         # ES from/size pagination. Deterministic only under a sort, same
         # as ES itself; Catalyst plans offset+limit as one GlobalLimit.
         out = out.offset(offset)
-    out = out.limit(size)
+    out = out.limit(int(body.get("size", 10)))
     src = body.get("_source")
     if isinstance(src, list) and src:
         # a requested total must never be silently projected away: ES
@@ -2624,6 +2116,518 @@ def search(
             src = [*src, "total_hits"]
         out = out.select(*src)
     return out
+
+
+# Scoring clauses whose highlight terms would be ambiguous: the terms
+# differ across subqueries / score transforms (the compound kinds and
+# script_score), per doc across boolean branches (query_string), or are
+# expansions of a typed prefix (match_bool_prefix, match_phrase_prefix).
+_NO_HIGHLIGHT = frozenset({
+    "dis_max", "constant_score", "boosting", "function_score", "script_score",
+    "query_string", "match_bool_prefix", "match_phrase_prefix",
+})
+
+
+def _scored_page(
+    spark, docs, body, scoring, filters, index_dir, text_col, id_col, routing
+) -> DataFrame:
+    if body.get("track_total_hits"):
+        # a scoring top-k never enumerates the full match set; ES itself
+        # makes exact totals an opt-in extra cost. Use a filter-context
+        # query (exact total attached per row) or dsl.count()
+        # (index-served) for the number.
+        raise ValueError(
+            "track_total_hits is supported for filter-context queries "
+            "— for a scoring query run dsl.count() for the exact total"
+        )
+    if body.get("sort") or body.get("search_after") is not None:
+        # ES would sort ALL matching docs by the sort key (relevance
+        # discarded); that is a filter query here, not a top-k — fail
+        # loudly rather than return a silently mis-ordered page
+        raise ValueError(
+            "sort/search_after with a scoring (match) query is not "
+            "supported — use a filter query with sort, or take the "
+            "relevance-ranked page via from/size"
+        )
+    s = _Scored(spark, docs, body, filters, index_dir, text_col, id_col, routing)
+    (kind, sub), = scoring.items()
+    if body.get("highlight") and kind in _NO_HIGHLIGHT:
+        raise ValueError(f"highlight is not supported with {kind}")
+    if body.get("collapse") is not None or body.get("rescore") is not None:
+        if kind != "match":
+            raise ValueError(
+                "collapse/rescore support a plain match scoring clause"
+            )
+        if body.get("collapse") is not None:
+            return _collapse(s, sub)
+        return _rescore(s, sub)
+    return _SCORERS[kind](s, sub)
+
+
+class _Scored:
+    """One scored search request: what every scorer reads, and the page
+    it returns."""
+
+    def __init__(self, spark, docs, body, filters, index_dir, text_col, id_col, routing):
+        self.spark, self.docs, self.body, self.filters = spark, docs, body, filters
+        self.index_dir, self.text_col, self.id_col = index_dir, text_col, id_col
+        self.routing = routing
+        self.offset = int(body.get("from", 0))
+        self.k = self.offset + int(body.get("size", 10))
+        # ONE stats.json parse per search: every scoring path that
+        # touches the analyzed column needs the index's chain (compound
+        # scorers must analyze exactly like plain match — review r6)
+        self.chain = _index_chain(index_dir)
+
+    def page(
+        self,
+        scored: DataFrame,
+        hl_terms: list[str] | None = None,
+        hl_phrase: bool = False,
+    ) -> DataFrame:
+        body, docs, id_col = self.body, self.docs, self.id_col
+        if body.get("min_score") is not None:
+            # every relation reaching page() is a score-desc-ordered
+            # prefix (top offset+size); score ≥ m selects a PREFIX of
+            # that ordering, so filtering after the scorer's truncation
+            # equals ES's filter-then-paginate for the requested page.
+            # Compared on the rounded tie surface the scorers already
+            # emit (cross-engine-stable).
+            if "score" not in scored.columns:
+                raise ValueError(
+                    "min_score needs a scored query — this clause "
+                    "pages by doc_id without scores"
+                )
+            scored = scored.filter(
+                F.col("score") >= F.lit(float(body["min_score"]))
+            )
+        out = scored.offset(self.offset) if self.offset else scored
+        hl = body.get("highlight") or {}
+        hl_fields = list((hl.get("fields") or {}).keys()) if hl_terms else []
+        src = body.get("_source")
+        want_src = src if isinstance(src, list) and src else None
+        need = set(hl_fields) | set(want_src or [])
+        missing = [c for c in need if c not in scored.columns]
+        if missing:
+            # the scorer carries doc_id+score only: join the document
+            # fields back, re-establishing the relevance order the join
+            # loses
+            out = out.join(docs.select(id_col, *missing), id_col)
+            if "score" in scored.columns:
+                out = out.orderBy(F.desc("score"), F.asc(id_col))
+        hl_cols = []
+        for fld in hl_fields:
+            from .highlight import highlight_expr
+
+            fspec = hl["fields"][fld] or {}
+            out = out.withColumn(
+                f"highlight_{fld}",
+                highlight_expr(
+                    fld,
+                    hl_terms,
+                    pre_tag=(hl.get("pre_tags") or ["<em>"])[0],
+                    post_tag=(hl.get("post_tags") or ["</em>"])[0],
+                    number_of_fragments=int(fspec.get("number_of_fragments", 0)),
+                    fragment_size=int(fspec.get("fragment_size", 100)),
+                    phrase=hl_phrase,
+                ),
+            )
+            hl_cols.append(f"highlight_{fld}")
+        if want_src:
+            out = out.select(*want_src, *hl_cols)
+        elif hl_cols:
+            out = out.select(*scored.columns, *hl_cols)
+        return out
+
+    def doc_page(self, hits: DataFrame, **hl) -> DataFrame:
+        """Filter-shaped clauses (phrase, proximity): the matching docs
+        paged in doc_id order (ES orders them by score; an unordered
+        limit/offset would give overlapping / skipping pages across
+        jobs)."""
+        out = self.docs.join(hits, self.id_col, "left_semi").filter(
+            filter_expr(self.filters, self.id_col)
+        )
+        return self.page(out.orderBy(self.id_col).limit(self.k), **hl)
+
+
+def _collapse(s: _Scored, sub) -> DataFrame:
+    # ES field collapsing: keep each collapse-key's single best hit
+    # (score desc, doc_id asc), then the global top-k over the survivors.
+    # One window over the full scored relation — collapsing AFTER a
+    # k-truncation would under-fill the page whenever a key repeats. No
+    # score transform, so the rounded relation is the tie surface AND the
+    # output, exactly like plain match.
+    from .analyze import tokenize_text
+
+    scored_all = _match_scores(s.spark, s.docs, sub, s.filters, s.id_col,
+                               chain=s.chain, chain_field=s.text_col)
+    cfield = s.body["collapse"]["field"]
+    side = s.docs.select(
+        F.col(s.id_col).alias("doc_id"), F.col(cfield).alias("_ckey")
+    )
+    w = Window.partitionBy("_ckey").orderBy(F.desc("score"), F.asc("doc_id"))
+    best = (
+        scored_all.join(side, "doc_id")
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+    )
+    return s.page(
+        best.select("doc_id", "score", F.col("_ckey").alias(cfield))
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(s.k),
+        hl_terms=tokenize_text(_clause_text(sub)[1]),
+    )
+
+
+def _rescore(s: _Scored, sub) -> DataFrame:
+    # ES rescore: re-rank only the top window_size hits of the base query
+    # with qw·base + rw·rescore_query score; hits outside the window keep
+    # their base order below. Pages are served from the re-sorted window
+    # only, so size (+from) must fit inside it — refuse rather than
+    # silently mix re-scored and un-rescored tails.
+    from .analyze import tokenize_text
+
+    rs = s.body["rescore"]
+    window_size = int(rs.get("window_size", 10))
+    rq = rs["query"]
+    qw = float(rq.get("query_weight", 1.0))
+    rw = float(rq.get("rescore_query_weight", 1.0))
+    (rk, rsub), = rq["rescore_query"].items()
+    if rk != "match":
+        raise ValueError(f"rescore_query {rk!r} not supported (match)")
+    if s.k > window_size:
+        raise ValueError(
+            f"from+size ({s.k}) exceeds rescore window_size ({window_size})"
+        )
+    # window membership is decided on the ROUNDED tie surface
+    # (cross-engine-stable), but the combined score is computed from the
+    # RAW base/rescore sums and rounded once
+    raw_all = _match_scores(
+        s.spark, s.docs, sub, s.filters, s.id_col, rounded=False,
+        chain=s.chain, chain_field=s.text_col,
+    )
+    window = (
+        raw_all.orderBy(F.desc(F.round(F.col("score"), 4)), F.asc("doc_id"))
+        .limit(window_size)
+        .withColumnRenamed("score", "_base")
+    )
+    resc = _match_scores(
+        s.spark, s.docs, rsub, s.filters, s.id_col, rounded=False,
+        chain=s.chain, chain_field=s.text_col,
+    )
+    combined = window.join(
+        resc.withColumnRenamed("score", "_resc"), "doc_id", "left"
+    ).select(
+        "doc_id",
+        F.round(
+            F.lit(qw) * F.col("_base")
+            + F.lit(rw) * F.coalesce(F.col("_resc"), F.lit(0.0)),
+            4,
+        ).alias("score"),
+    )
+    return s.page(
+        combined.orderBy(F.desc("score"), F.asc("doc_id")).limit(s.k),
+        hl_terms=tokenize_text(_clause_text(sub)[1]),
+    )
+
+
+# scoring clause kind → scorer(_Scored, clause body) -> page
+_SCORERS: dict[str, Callable] = {}
+
+
+def _scorer(*kinds: str):
+    def deco(fn):
+        for k in kinds:
+            _SCORERS[k] = fn
+        return fn
+
+    return deco
+
+
+@_scorer("dis_max")
+def _score_dis_max(s, sub):
+    return s.page(_dis_max_topk(s.spark, s.docs, sub, s.filters, s.id_col,
+                                k=s.k, chain=s.chain, chain_field=s.text_col))
+
+
+@_scorer("constant_score")
+def _score_constant(s, sub):
+    return s.page(
+        _sub_scores(s.spark, s.docs, {"constant_score": sub}, s.filters,
+                    s.id_col, chain=s.chain, chain_field=s.text_col)
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(s.k)
+    )
+
+
+@_scorer("boosting")
+def _score_boosting(s, sub):
+    return s.page(_boosting_topk(s.spark, s.docs, sub, s.filters, s.id_col,
+                                 k=s.k, chain=s.chain, chain_field=s.text_col))
+
+
+@_scorer("function_score")
+def _score_function(s, sub):
+    return s.page(_function_score_topk(
+        s.spark, s.docs, sub, s.filters, s.id_col, k=s.k,
+        chain=s.chain, chain_field=s.text_col,
+    ))
+
+
+@_scorer("multi_match")
+def _score_multi_match(s, sub):
+    from .analyze import tokenize_text
+
+    return s.page(
+        _multi_match_topk(s.spark, s.docs, sub, s.filters, s.id_col,
+                          s.text_col, k=s.k, chain=s.chain),
+        hl_terms=tokenize_text(sub["query"]),
+    )
+
+
+@_scorer("combined_fields")
+def _score_combined_fields(s, sub):
+    from .analyze import tokenize_text
+
+    return s.page(
+        _combined_fields_topk(s.spark, s.docs, sub, s.filters, s.id_col,
+                              s.text_col, k=s.k, chain=s.chain),
+        hl_terms=tokenize_text(sub["query"]),
+    )
+
+
+@_scorer("script_score")
+def _score_script(s, sub):
+    return s.page(_script_score_topk(s.spark, s.docs, sub, s.filters, s.id_col,
+                                     k=s.k, chain=s.chain, chain_field=s.text_col))
+
+
+@_scorer("rank_feature")
+def _score_rank_feature(s, sub):
+    return s.page(_rank_feature_topk(s.spark, s.docs, sub, s.filters, s.id_col,
+                                     k=s.k))
+
+
+@_scorer("terms_set")
+def _score_terms_set(s, sub):
+    return s.page(_terms_set_topk(s.spark, s.docs, sub, s.filters, s.id_col,
+                                  s.text_col, index_dir=s.index_dir, k=s.k))
+
+
+@_scorer("span_near")
+def _score_span_near(s, sub):
+    terms = []
+    for cl in sub.get("clauses") or []:
+        (ck, cs), = cl.items()
+        if ck != "span_term":
+            raise ValueError(f"span_near clause {ck!r} not supported (span_term)")
+        (fld, val), = cs.items()
+        if fld != s.text_col:
+            raise ValueError(
+                f"span_term matches the analyzed column {s.text_col!r}; "
+                f"got {fld!r}"
+            )
+        terms.append(val if isinstance(val, str) else val["value"])
+    # span_term values stay VERBATIM over a chained index (ES parity —
+    # span_term is a term-level query against the index vocabulary, so
+    # users pass already-stemmed terms; a surface form or stopword simply
+    # matches nothing). "serve" is a non-ES extension key
+    # (query_string convention): force the scan twin of an index-served
+    # proximity query.
+    return _proximity_page(s, terms, int(sub.get("slop", 0)),
+                           bool(sub.get("in_order", True)),
+                           sub.get("serve", "index"))
+
+
+@_scorer("intervals")
+def _score_intervals(s, sub):
+    from .analyze import tokenize_text
+
+    (fld, ispec), = sub.items()
+    if fld != s.text_col:
+        raise ValueError(
+            f"intervals matches the analyzed column {s.text_col!r}; got {fld!r}"
+        )
+    if "match" not in ispec:
+        raise ValueError(
+            "intervals subset: the 'match' rule (all_of/any_of/"
+            "prefix rules are not supported)"
+        )
+    m = ispec["match"]
+    # intervals.match analyzes its query with the search analyzer (ES
+    # parity): over a chained index the chain maps stems/synonyms and
+    # DROPS stopwords — doc-side gap counting then runs over the index's
+    # stop-GAPPED positions, so "hold the data" max_gaps=0 does NOT match
+    # its own source text (the classic Lucene stop-filter gotcha,
+    # reproduced deliberately)
+    terms = s.chain.tokens(m["query"]) if s.chain else tokenize_text(m["query"])
+    slop = int(m.get("max_gaps", -1))
+    if slop < 0:
+        # ES default max_gaps=-1 = unlimited; that is a bag-of-words AND,
+        # which `match operator=and` already serves
+        raise ValueError(
+            "intervals.match needs max_gaps >= 0 (unlimited-gap "
+            "matching is just match operator=and)"
+        )
+    return _proximity_page(s, terms, slop, bool(m.get("ordered", False)),
+                           m.get("serve", "index"))
+
+
+def _proximity_page(s, terms, slop, in_order, serve) -> DataFrame:
+    # filter-shaped proximity clauses (Lucene's span/interval scores are
+    # proximity-weighted and are not reproduced here). Both sides walk
+    # the index's stop-GAPPED positions, exactly Lucene's SpanNearQuery
+    # over a position-increment-preserving stop filter; the scan twin
+    # reproduces those positions via scan_inputs(chain=...).positions.
+    hits = _proximity_docs(
+        s.spark, s.docs, terms, slop, in_order, s.id_col, s.text_col,
+        index_dir=s.index_dir, chain=s.chain, serve=serve,
+    )
+    return s.doc_page(hits.withColumnRenamed("doc_id", s.id_col))
+
+
+@_scorer("match_bool_prefix")
+def _score_match_bool_prefix(s, sub):
+    from .analyze import tokenize_text
+    from .querystring import MUST, SHOULD, Clause, Group, Leaf, execute_tree
+
+    fld, qtext, opts = _clause_text(sub)
+    if fld != s.text_col:
+        raise ValueError(
+            f"match_bool_prefix matches the analyzed column "
+            f"{s.text_col!r}; got field {fld!r}"
+        )
+    words = tokenize_text(qtext)
+    if not words:
+        raise ValueError("match_bool_prefix: empty query")
+    operator = str(opts.get("operator", "or")).lower()
+    occur = MUST if operator == "and" else SHOULD
+    clauses = [Clause(occur, Leaf("term", fld, w)) for w in words[:-1]]
+    clauses.append(Clause(occur, Leaf("prefix", fld, words[-1])))
+    # ES match_bool_prefix IS a bool query of term clauses + one prefix
+    # clause on the final (possibly mid-type) term — executed on the
+    # shared boolean-tree engine (querystring.py)
+    return s.page(execute_tree(
+        s.spark, s.docs, Group(clauses), s.filters, s.id_col, s.text_col,
+        k=s.k, index_dir=s.index_dir,
+    ))
+
+
+@_scorer("query_string")
+def _score_query_string(s, sub):
+    from .querystring import query_string_topk
+
+    return s.page(query_string_topk(
+        s.spark, s.docs, sub, s.filters, s.id_col, s.text_col,
+        k=s.k, index_dir=s.index_dir,
+    ))
+
+
+@_scorer("simple_query_string")
+def _score_simple_query_string(s, sub):
+    out, sterms = _sqs_topk(
+        s.spark, s.docs, sub, s.filters, s.id_col, s.text_col,
+        k=s.k, index_dir=s.index_dir,
+    )
+    return s.page(out, hl_terms=sterms or None)
+
+
+def _phrase_field(kind: str, s: _Scored, field: str) -> None:
+    if s.index_dir is None:
+        raise ValueError(f"{kind} needs a built index (phrase.py)")
+    if field != s.text_col:
+        raise ValueError(
+            f"{kind} matches the indexed column {s.text_col!r}; got field "
+            f"{field!r} (build an index over it)"
+        )
+
+
+@_scorer("match_phrase_prefix")
+def _score_match_phrase_prefix(s, sub):
+    from .phrase import phrase_prefix_docs
+
+    field, text, opts = _clause_text(sub)
+    _phrase_field("match_phrase_prefix", s, field)
+    return s.doc_page(phrase_prefix_docs(
+        s.spark, s.index_dir, text,
+        max_expansions=int(opts.get("max_expansions", 50)),
+    ))
+
+
+@_scorer("match_phrase")
+def _score_match_phrase(s, sub):
+    from .analyze import tokenize_text
+    from .phrase import phrase_docs
+
+    field, text, _ = _clause_text(sub)
+    _phrase_field("match_phrase", s, field)
+    # Highlighting: default grammar marks the literal contiguous phrase;
+    # over a CHAINED index the hit text may carry stem/synonym variants
+    # and stop-gap words the literal pattern cannot represent, so
+    # chain-verified surface forms are marked term-wise instead (ES's
+    # re-analyzing highlighter marks the same tokens).
+    if s.chain is not None:
+        hl = {"hl_terms": _hl_terms_for(s.index_dir, text, chain=s.chain)}
+    else:
+        hl = {"hl_terms": tokenize_text(text), "hl_phrase": True}
+    return s.doc_page(phrase_docs(s.spark, s.index_dir, text), **hl)
+
+
+@_scorer("match")
+def _score_match(s, sub):
+    # match → BM25 top-k (deep enough for the requested page). ES scores
+    # the field NAMED in the clause; the compressed index covers
+    # text_col, any other field takes the exact join scorer.
+    field, text, opts = _clause_text(sub)
+    operator = str(opts.get("operator", "or")).lower()
+    if operator not in ("or", "and"):
+        raise ValueError(f"match operator {operator!r} (use 'or' or 'and')")
+    # ES filter-context semantics: corpus stats / dfs / avgdl come from
+    # the UNFILTERED corpus; the filter and the operator=and conjunction
+    # only restrict the candidate set (ADVICE r02 — stats over the
+    # filtered set shifted idf/avgdl and diverged from ES). A conjunction
+    # keeps scores: BM25 sums the same contributions; a term absent from
+    # the corpus yields zero hits, as in ES.
+    if s.index_dir is not None and field == s.text_col:
+        from .wand import match_docs, topk
+
+        allowed = None
+        if s.filters:
+            allowed = s.docs.filter(filter_expr(s.filters, s.id_col)).select(
+                F.col(s.id_col).alias("doc_id")
+            )
+        if operator == "and":
+            have_all = match_docs(
+                s.spark, s.index_dir, _index_query_terms(s.index_dir, text),
+                conjunctive=True,
+            )
+            allowed = have_all if allowed is None else allowed.join(
+                have_all, "doc_id", "left_semi"
+            )
+        return s.page(
+            topk(s.spark, s.index_dir, text, k=s.k,
+                 routing=s.routing, allowed=allowed),
+            hl_terms=_hl_terms_for(s.index_dir, text, chain=s.chain),
+        )
+    if s.routing is not None:
+        raise ValueError(
+            "routing= needs the index-served match path (a match on "
+            "the indexed column) — this request would scan every shard"
+        )
+    from .analyze import tokenize_text
+    from .bm25 import bm25_topk
+    from .postings import scan_inputs
+
+    # no index over this field: score from the raw token arrays
+    qterms = sorted(set(tokenize_text(text)))
+    si = scan_inputs(s.docs, text_col=field, id_col=s.id_col, terms=qterms)
+    cand = _in_filter(si.tf, s.docs, s.filters, s.id_col)
+    if operator == "and":
+        cand = cand.join(_having_all(si.tf, qterms), "doc_id", "left_semi")
+    return s.page(
+        bm25_topk(s.spark, cand, si.dl, si.tdf, si.stats, text, k=s.k),
+        hl_terms=tokenize_text(text),
+    )
 
 
 def multi_index_topk(
@@ -2698,9 +2702,7 @@ def explain(
     (kind, sub), = scoring.items()
     if kind != "match":
         raise ValueError(f"explain supports match only, got {kind!r}")
-    (field, text), = sub.items()
-    if isinstance(text, dict):
-        text = text["query"]
+    field, text, _ = _clause_text(sub)
     from .analyze import tokenize_text
     from .bm25 import bm25_explain
     from .postings import scan_inputs
@@ -2758,29 +2760,6 @@ def count(
             "indexed column) — this request would scan every shard"
         )
     return docs.filter(filter_expr(q, id_col)).agg(F.count(F.lit(1)).alias("n"))
-
-
-# ES pipeline aggregations. Parent pipelines live INSIDE a bucketing
-# agg's sub-aggs and derive per-bucket columns from sibling metrics
-# (window functions over the bucket rows — buckets ≪ docs, so the
-# window is over the already-reduced relation, never the corpus).
-# Sibling pipelines sit NEXT TO a bucketing agg and reduce its bucket
-# stream to one row.
-_PARENT_PIPELINES = (
-    "derivative", "cumulative_sum", "serial_diff", "moving_fn",
-    "bucket_script", "bucket_selector", "bucket_sort", "normalize",
-)
-_SIBLING_PIPELINES = (
-    "avg_bucket", "sum_bucket", "min_bucket", "max_bucket", "stats_bucket",
-    "percentiles_bucket",
-)
-
-
-def _pipeline_kind(spec: dict) -> str | None:
-    for k in _PARENT_PIPELINES + _SIBLING_PIPELINES:
-        if k in spec:
-            return k
-    return None
 
 
 _SCRIPT_TOKEN = re.compile(
@@ -2908,6 +2887,549 @@ def _compile_script(script: str, params: dict[str, Column]) -> Column:
     return out
 
 
+# -- aggregations -------------------------------------------------------------
+#
+# An aggs body parses once into a tree of _Agg nodes. Each level of the
+# tree runs through ONE table, _AGGS: agg type → (kind, handler).
+#
+# - "metric" handlers return aliased aggregate Columns; any number of
+#   sibling metric leaves reduce in ONE pass (the reference's
+#   get_bin_sizes parallel-stats shape, generalized).
+# - "bucket" handlers return their own relation; one per level.
+# - "parent" pipelines live INSIDE a bucketing agg's sub-aggs and derive
+#   per-bucket columns from sibling metrics: window functions over the
+#   already-reduced bucket rows (buckets ≪ docs, never the corpus).
+# - "sibling" pipelines sit NEXT TO one bucketing agg and reduce its
+#   bucket stream to one row.
+
+
+class _Agg(NamedTuple):
+    name: str
+    type: str
+    params: Any
+    children: dict[str, _Agg]
+
+
+_AGGS: dict[str, tuple[str, Callable]] = {}
+
+
+def _handles(kind: str, *types: str):
+    def deco(fn):
+        for t in types:
+            _AGGS[t] = (kind, fn)
+        return fn
+
+    return deco
+
+
+def _parse_aggs(aggs: dict[str, Any]) -> dict[str, _Agg]:
+    """{name: _Agg} for an ES ``aggs`` object. Each spec holds exactly
+    one type key plus an optional ``aggs``, as ES requires ("Found two
+    aggregation type definitions") — running one type and ignoring the
+    other would silently drop a requested result."""
+    out = {}
+    for name, spec in aggs.items():
+        if not isinstance(spec, dict):
+            raise ValueError(f"agg {name!r}: expected an object, got {spec!r}")
+        if "aggregations" in spec:
+            raise ValueError(
+                f"agg {name!r}: put sub-aggregations under 'aggs' "
+                "('aggregations' is not supported)"
+            )
+        types = [k for k in spec if k != "aggs"]
+        if len(types) != 1:
+            raise ValueError(
+                f"agg {name!r} needs exactly one aggregation type besides "
+                f"'aggs'; found {types}"
+            )
+        (t,) = types
+        if t not in _AGGS:
+            raise ValueError(f"unsupported agg: {sorted(spec)}")
+        out[name] = _Agg(name, t, spec[t], _parse_aggs(spec.get("aggs") or {}))
+    return out
+
+
+def _map_aggs(nodes: dict[str, _Agg], f) -> dict[str, _Agg]:
+    """``nodes`` with ``f`` applied to every name and params value."""
+    out = {}
+    for n, a in nodes.items():
+        m = f(n)
+        out[m] = _Agg(m, a.type, f(a.params), _map_aggs(a.children, f))
+    return out
+
+
+def _count_by(df: DataFrame, keys: list, *exprs: Column) -> DataFrame:
+    """``exprs`` and the doc count per bucket of ``keys`` (over the whole
+    relation when ``keys`` is empty)."""
+    return df.groupBy(*keys).agg(*exprs, F.count(F.lit(1)).alias("doc_count"))
+
+
+def _out(name: str, multi: bool):
+    """Output-column names of one metric leaf: a lone leaf keeps ES's
+    bare names ("value", "min", ...); sibling leaves prefix their agg
+    name."""
+    return lambda key="value": f"{name}_{key}" if multi else key
+
+
+def _sort_spec(s) -> tuple[str, str]:
+    """(field, order) of one ES sort entry: ``"f"``, ``{"f": "desc"}`` or
+    ``{"f": {"order": "desc"}}``."""
+    (f, sp), = s.items() if isinstance(s, dict) else ((s, "asc"),)
+    return f, sp["order"] if isinstance(sp, dict) else sp
+
+
+def _sort_cols(sort, col_of=F.col) -> list[Column]:
+    cols = []
+    for s in _as_list(sort):
+        f, order = _sort_spec(s)
+        c = col_of(f)
+        cols.append(c.desc() if order == "desc" else c.asc())
+    return cols
+
+
+def _bucket_col(path: str, b: DataFrame, head: str | None = None) -> Column:
+    """The bucket column a ``buckets_path`` names: "_count", a sibling
+    metric ("sales", or "sales.avg" for a multi-value leaf) or an
+    earlier pipeline's output. A sibling pipeline's path must start with
+    its bucketing agg, ``head`` ("by_month>sales")."""
+    seg = path.split(">")
+    if head is not None and (len(seg) < 2 or seg[0] != head):
+        raise ValueError(
+            f"buckets_path {path!r} must start with the sibling "
+            f"bucket agg {head!r} (e.g. '{head}>metric')"
+        )
+    leaf = seg[-1]
+    if leaf == "_count":
+        return F.col("doc_count")
+    nm, _, metric = leaf.partition(".")
+    cands = [f"{nm}_{metric}", metric] if metric else [f"{nm}_value", nm, "value"]
+    for c in cands:
+        if c in b.columns:
+            return F.col(c)
+    raise ValueError(
+        f"buckets_path {path!r} resolves to none of {cands} "
+        f"(bucket columns: {b.columns})"
+    )
+
+
+class _AggRun:
+    """One aggs request: runs each level of the node tree."""
+
+    def __init__(self, id_col: str, background: DataFrame | None, text_col: str):
+        self.id_col, self.background, self.text_col = id_col, background, text_col
+
+    def run(self, base: DataFrame, nodes: dict[str, _Agg], group_cols: list) -> DataFrame:
+        kind = {n: _AGGS[a.type][0] for n, a in nodes.items()}
+        pipes = [a for a in nodes.values() if kind[a.name] == "parent"]
+        if pipes:
+            if not group_cols:
+                raise ValueError(
+                    f"pipeline aggs {sorted(a.name for a in pipes)} must be "
+                    "nested under a bucketing agg (histogram / "
+                    "date_histogram / terms)"
+                )
+            plain = {n: a for n, a in nodes.items() if kind[n] != "parent"}
+            if any(kind[n] != "metric" for n in plain):
+                raise ValueError(
+                    "pipeline aggs compose with stats/metric sibling leaves "
+                    f"only; got {sorted(plain)}"
+                )
+            # ES pipeline order: windows partition by the enclosing bucket
+            # keys and run over this level's key ascending; declaration
+            # order lets a later pipeline read an earlier one's output
+            # (cumulative_sum over a derivative), as buckets_path chains
+            b = self.metrics(base, plain, group_cols)
+            w = Window.partitionBy(*group_cols[:-1]).orderBy(F.asc(group_cols[-1]))
+            for a in pipes:
+                b = _AGGS[a.type][1](a, b, w, group_cols[:-1])
+            return b
+        sib = [a for a in nodes.values() if kind[a.name] == "sibling"]
+        if sib:
+            others = {n: a for n, a in nodes.items() if kind[n] != "sibling"}
+            if len(others) != 1:
+                raise ValueError(
+                    f"sibling pipeline aggs {sorted(a.name for a in sib)} need "
+                    f"exactly one bucketing sibling; got {sorted(others)}"
+                )
+            bdf = self.run(base, others, group_cols)
+            (head,) = others
+            return bdf.agg(*[
+                e for a in sib for e in _AGGS[a.type][1](
+                    a, _bucket_col(a.params["buckets_path"], bdf, head),
+                    len(sib) > 1,
+                )
+            ])
+        if all(k == "metric" for k in kind.values()):
+            return self.metrics(base, nodes, group_cols)
+        if len(nodes) > 1:
+            raise ValueError(
+                "sibling aggs are supported only for stats/metric leaves; "
+                f"got {sorted(nodes)}"
+            )
+        (a,) = nodes.values()
+        return _AGGS[a.type][1](self, a, base, group_cols)
+
+    def metrics(self, base: DataFrame, nodes: dict[str, _Agg], group_cols: list) -> DataFrame:
+        """Sibling metric leaves in ONE pass; per bucket of ``group_cols``
+        with its doc_count (ES reports it next to the sub-agg values)."""
+        multi = len(nodes) > 1
+        flat = [
+            e for a in nodes.values()
+            for e in _AGGS[a.type][1](self, a, _out(a.name, multi), base)
+        ]
+        return _count_by(base, group_cols, *flat) if group_cols else base.agg(*flat)
+
+    def sub_or_count(self, children: dict[str, _Agg], df: DataFrame, keys: list) -> DataFrame:
+        """Run the sub-aggs per bucket of ``keys``, else count its docs."""
+        return self.run(df, children, keys) if children else _count_by(df, keys)
+
+    def keyed(self, a: _Agg, df: DataFrame, group_cols: list) -> DataFrame:
+        """Buckets of the ``{name}_key`` column. A NULL key means the doc
+        lacks the field: ES drops such docs from bucket aggs (the
+        ``missing`` agg counts them), and a NULL bucket (or, for the geo
+        grids, a corner-cell bucket) would inflate counts."""
+        key = f"{a.name}_key"
+        return self.sub_or_count(
+            a.children, df.filter(F.col(key).isNotNull()), group_cols + [key]
+        )
+
+    def tagged(self, a: _Agg, base: DataFrame, group_cols: list, tags: list) -> DataFrame:
+        """Independent, possibly overlapping buckets (range / ip_range /
+        date_range / geo_distance / filters): one exploded row per
+        matching bucket, one shuffle total."""
+        return self.keyed(
+            a,
+            base.withColumn(f"{a.name}_key", F.explode(F.array_compact(F.array(*tags)))),
+            group_cols,
+        )
+
+    def restricted(
+        self, a: _Agg, base: DataFrame, buckets: DataFrame, group_cols: list, fields: list
+    ) -> DataFrame:
+        """Sub-aggs over only the docs of the surviving buckets: a semi
+        join on the (tiny) broadcast bucket-key set."""
+        if not a.children:
+            return buckets
+        keys = buckets.select(*group_cols, *fields)
+        return self.run(
+            base.join(F.broadcast(keys), [*group_cols, *fields], "left_semi"),
+            a.children, group_cols + fields,
+        )
+
+
+def _aggs(
+    base: DataFrame,
+    aggs: dict[str, Any],
+    *,
+    id_col: str = "doc_id",
+    background: DataFrame | None = None,
+    text_col: str = "text",
+) -> DataFrame:
+    """Compile an aggs dict. Nested histogram▸histogram▸terms supported
+    exactly as the reference composes it (mira_loader.py:262-319)."""
+    return _AggRun(id_col, background, text_col).run(base, _parse_aggs(aggs), [])
+
+
+# -- metric leaves: handler(ctx, agg, out, base) -> [Column] ------------------
+
+_STAT_FNS = {"min": F.min, "max": F.max, "avg": F.avg, "sum": F.sum, "count": F.count}
+_PERCENTS = (1, 5, 25, 50, 75, 95, 99)  # ES percentiles default
+
+
+def _stats(col, out, keys=("min", "max", "avg", "sum", "count")) -> list[Column]:
+    """The ES stats quintuple (stats, extended_stats, stats_bucket)."""
+    return [_STAT_FNS[k](col).alias(out(k)) for k in keys]
+
+
+def _pct_key(q) -> str:
+    return f"p{f'{q:g}'.replace('.', '_')}"
+
+
+@_handles("metric", "stats")
+def _stats_leaf(ctx, a, out, base):
+    return _stats(a.params["field"], out)
+
+
+@_handles("metric", "avg", "sum", "min", "max", "value_count")
+def _value_leaf(ctx, a, out, base):
+    fn = F.count if a.type == "value_count" else _STAT_FNS[a.type]
+    return [fn(a.params["field"]).alias(out())]
+
+
+@_handles("metric", "cardinality")
+def _cardinality(ctx, a, out, base):
+    # ES cardinality is HLL-approximate; at scale use
+    # approx_count_distinct (same sketch family). Exact here so the
+    # result is deterministic and oracle-checkable — swap via
+    # {"cardinality": {"field": f, "approx": true}}.
+    fn = F.approx_count_distinct if a.params.get("approx") else F.count_distinct
+    return [fn(a.params["field"]).alias(out())]
+
+
+@_handles("metric", "extended_stats")
+def _extended_stats(ctx, a, out, base):
+    # ES extended_stats: stats + sum_of_squares, variance (and population
+    # std — ES reports population, not sample)
+    f = a.params["field"]
+    return _stats(f, out, ("count", "min", "max", "avg", "sum")) + [
+        F.sum(F.col(f) * F.col(f)).alias(out("sum_of_squares")),
+        F.var_pop(f).alias(out("variance")),
+        F.stddev_pop(f).alias(out("std_deviation")),
+    ]
+
+
+@_handles("metric", "weighted_avg")
+def _weighted_avg(ctx, a, out, base):
+    v, w = a.params["value"]["field"], a.params["weight"]["field"]
+    return [(F.sum(F.col(v) * F.col(w)) / F.sum(F.col(w))).alias(out())]
+
+
+@_handles("metric", "percentile_ranks")
+def _percentile_ranks(ctx, a, out, base):
+    # ES percentile_ranks: for each given value, the % of docs with
+    # field ≤ value — an exact count ratio (ES interpolates from a
+    # t-digest; exact here so the result is oracle-checkable, same policy
+    # as percentiles/cardinality)
+    f = a.params["field"]
+    total = F.count(f)
+    return [
+        (F.count_if(F.col(f) <= F.lit(float(v))) / total * F.lit(100.0)).alias(
+            out(f"rank_{f'{float(v):g}'.replace('.', '_').replace('-', 'm')}")
+        )
+        for v in a.params["values"]
+    ]
+
+
+@_handles("metric", "boxplot")
+def _boxplot(ctx, a, out, base):
+    # ES boxplot: min/max/q1/q2/q3 — t-digest-approximate in ES; exact by
+    # default here (oracle-checkable), approx: true → percentile_approx
+    # (same policy as percentiles)
+    f = a.params["field"]
+    fn = F.percentile_approx if a.params.get("approx") else F.percentile
+    return [
+        F.min(f).alias(out("min")), F.max(f).alias(out("max")),
+        fn(F.col(f), F.lit(0.25)).alias(out("q1")),
+        fn(F.col(f), F.lit(0.5)).alias(out("q2")),
+        fn(F.col(f), F.lit(0.75)).alias(out("q3")),
+    ]
+
+
+@_handles("metric", "top_metrics")
+def _top_metrics(ctx, a, out, base):
+    # ES top_metrics(size=1): the metric values of the best-sorted doc
+    # per bucket — ONE max_by/min_by pass, no window, no top_hits row
+    # materialization. Ties broken by id_col so the result is
+    # deterministic (ES leaves ties undefined).
+    tm = a.params
+    if int(tm.get("size", 1)) != 1:
+        raise ValueError("top_metrics supports size=1 (use top_hits for row sets)")
+    if ctx.id_col not in base.columns:
+        raise ValueError(
+            f"top_metrics breaks sort ties by {ctx.id_col!r}, which "
+            f"this table lacks — pass id_col= to search() "
+            f"(columns: {base.columns})"
+        )
+    sf_, order = _sort_spec(_as_list(tm["sort"])[0])
+    if order == "desc":
+        key = F.struct(F.col(sf_), (-F.col(ctx.id_col)).alias("_t"))
+        pick = F.max_by
+    else:
+        key = F.struct(F.col(sf_), F.col(ctx.id_col).alias("_t"))
+        pick = F.min_by
+    return [
+        pick(F.col(m["field"]), key).alias(out(m["field"]))
+        for m in _as_list(tm["metrics"])
+    ]
+
+
+@_handles("metric", "reverse_nested")
+def _reverse_nested(ctx, a, out, base):
+    # ES reverse_nested (under a nested context): how many PARENT
+    # documents fall in this bucket. The nested explode keeps the
+    # parent's id column on every nested row, so this is one
+    # count_distinct — no join back to the parent table.
+    if ctx.id_col not in base.columns:
+        raise ValueError(
+            f"reverse_nested counts parents by {ctx.id_col!r}, which "
+            f"this table lacks (columns: {base.columns})"
+        )
+    return [F.count_distinct(F.col(ctx.id_col)).alias(f"{a.name}_doc_count")]
+
+
+@_handles("metric", "geo_bounds")
+def _geo_bounds(ctx, a, out, base):
+    pt = F.col(a.params["field"])
+    lat, lon = pt.getField("lat"), pt.getField("lon")
+    return [
+        F.max(lat).alias(out("top_left_lat")),
+        F.min(lon).alias(out("top_left_lon")),
+        F.min(lat).alias(out("bottom_right_lat")),
+        F.max(lon).alias(out("bottom_right_lon")),
+    ]
+
+
+@_handles("metric", "geo_centroid")
+def _geo_centroid(ctx, a, out, base):
+    # ES geo_centroid: arithmetic mean of lat/lon (ES averages the
+    # coordinates, not the great-circle midpoint) + point count
+    pt = F.col(a.params["field"])
+    lat, lon = pt.getField("lat"), pt.getField("lon")
+    return [
+        F.avg(lat).alias(out("lat")),
+        F.avg(lon).alias(out("lon")),
+        F.count(lat).alias(out("count")),
+    ]
+
+
+@_handles("metric", "percentiles")
+def _percentiles(ctx, a, out, base):
+    # ES percentiles is t-digest-approximate; exact (sort-based, linear
+    # interpolation — numpy/ES 'linear') by default so the values are
+    # deterministic and oracle-checkable; the scale path is
+    # {"percentiles": {..., "approx": true}} → percentile_approx
+    # (Greenwald-Khanna sketch, one pass).
+    pc = a.params
+    fn = F.percentile_approx if pc.get("approx") else F.percentile
+    return [
+        fn(F.col(pc["field"]), F.lit(float(q) / 100.0)).alias(out(_pct_key(q)))
+        for q in pc.get("percents", _PERCENTS)
+    ]
+
+
+@_handles("metric", "rate")
+def _rate(ctx, a, out, base):
+    # ES rate agg (inside a date_histogram): bucket sum (or doc count)
+    # per `unit` of time. DELIBERATE DEVIATION: the enclosing bucket
+    # interval is passed EXPLICITLY as rate.interval (ES infers it from
+    # the parent date_histogram; the leaf compiler here is context-free)
+    # and must be a FIXED-length unit — month/quarter/year refuse,
+    # sidestepping ES's calendar-ratio table entirely.
+    rs = a.params
+    if "interval" not in rs:
+        raise ValueError(
+            "rate needs an explicit 'interval' equal to the "
+            "enclosing date_histogram's fixed interval (this "
+            "engine does not infer it; deviation documented)"
+        )
+    factor = _fixed_interval_ms(rs["interval"]) / _fixed_interval_ms(
+        rs.get("unit", rs["interval"])
+    )
+    val = F.sum(F.col(rs["field"])) if rs.get("field") else F.count(F.lit(1))
+    return [(val / F.lit(float(factor))).alias(out())]
+
+
+@_handles("metric", "matrix_stats")
+def _matrix_stats(ctx, a, out, base):
+    # ES matrix_stats: per-field moments + the pairwise
+    # covariance/correlation matrix over numeric fields, skipping any
+    # document missing ONE of the fields (ES's row-wise completeness
+    # rule — reproduced by null-masking every input on the conjunction,
+    # so sibling aggs over the same pass are unaffected).
+    # variance/covariance are SAMPLE (n-1), ES's normalization;
+    # skewness/kurtosis are the population central-moment forms
+    # m3/m2^1.5 and m4/m2² (kurtosis NON-excess, as ES reports), computed
+    # from raw power sums so the DuckDB twin can run the identical
+    # arithmetic (Spark's builtin skewness/kurtosis and DuckDB's disagree
+    # on sample-bias correction).
+    fields = list(a.params["fields"])
+    if len(fields) < 2:
+        raise ValueError("matrix_stats needs >= 2 fields")
+    valid = F.lit(True)
+    for f in fields:
+        valid = valid & F.col(f).isNotNull()
+    masked = {f: F.when(valid, F.col(f).cast("double")) for f in fields}
+    exprs = []
+    for f in fields:
+        c = masked[f]
+        m1 = F.avg(c)
+        m2 = F.avg(c * c)
+        m3 = F.avg(c * c * c)
+        m4 = F.avg(c * c * c * c)
+        m2c = m2 - m1 * m1
+        m3c = m3 - F.lit(3.0) * m1 * m2 + F.lit(2.0) * m1 * m1 * m1
+        m4c = (
+            m4 - F.lit(4.0) * m1 * m3
+            + F.lit(6.0) * m1 * m1 * m2
+            - F.lit(3.0) * m1 * m1 * m1 * m1
+        )
+        exprs += [
+            F.count(c).alias(out(f"{f}_count")),
+            m1.alias(out(f"{f}_mean")),
+            F.var_samp(c).alias(out(f"{f}_variance")),
+            (m3c / F.pow(m2c, F.lit(1.5))).alias(out(f"{f}_skewness")),
+            (m4c / (m2c * m2c)).alias(out(f"{f}_kurtosis")),
+        ]
+    for i, fi in enumerate(fields):
+        for fj in fields[i + 1:]:
+            exprs += [
+                F.covar_samp(masked[fi], masked[fj]).alias(out(f"{fi}_{fj}_covariance")),
+                F.corr(masked[fi], masked[fj]).alias(out(f"{fi}_{fj}_correlation")),
+            ]
+    return exprs
+
+
+@_handles("metric", "t_test")
+def _t_test(ctx, a, out, base):
+    # ES t_test: two-sample Student's t between populations a and b
+    # ({"field", optional "filter"}), type heteroscedastic (Welch, the ES
+    # default) / homoscedastic (pooled) / paired. DELIBERATE DEVIATION:
+    # ES returns the two-sided p-value; the t→p conversion is an
+    # incomplete-beta special function that neither Spark SQL nor the
+    # DuckDB oracle can express, so the engine returns the t STATISTIC
+    # and the degrees of freedom (Welch–Satterthwaite for
+    # heteroscedastic) — the exact inputs of that textbook conversion.
+    # One pass: populations are null-masked columns over the same scan,
+    # never two jobs.
+    tt = a.params
+    ttype = str(tt.get("type", "heteroscedastic")).lower()
+
+    def _pop(side: dict) -> Column:
+        c = F.col(side["field"]).cast("double")
+        if side.get("filter"):
+            c = F.when(
+                F.coalesce(filter_expr(side["filter"], ctx.id_col), F.lit(False)), c
+            )
+        return c
+
+    ca, cb = _pop(tt["a"]), _pop(tt["b"])
+    if ttype == "paired":
+        if tt["a"].get("filter") or tt["b"].get("filter"):
+            raise ValueError(
+                "paired t_test compares two fields of the SAME "
+                "rows — filters would unpair them (ES rejects "
+                "this too)"
+            )
+        d = F.when(
+            F.col(tt["a"]["field"]).isNotNull() & F.col(tt["b"]["field"]).isNotNull(),
+            ca - cb,
+        )
+        n = F.count(d)
+        t = F.avg(d) / (F.stddev_samp(d) / F.sqrt(n))
+        return [t.alias(out("t")), (n - F.lit(1)).alias(out("df"))]
+    na, nb = F.count(ca).cast("double"), F.count(cb).cast("double")
+    ma, mb = F.avg(ca), F.avg(cb)
+    va, vb = F.var_samp(ca), F.var_samp(cb)
+    if ttype == "homoscedastic":
+        sp2 = ((na - F.lit(1.0)) * va + (nb - F.lit(1.0)) * vb) / (
+            na + nb - F.lit(2.0)
+        )
+        t = (ma - mb) / F.sqrt(sp2 * (F.lit(1.0) / na + F.lit(1.0) / nb))
+        return [t.alias(out("t")), (na + nb - F.lit(2.0)).alias(out("df"))]
+    if ttype != "heteroscedastic":
+        raise ValueError(
+            f"t_test type {ttype!r} (use heteroscedastic / homoscedastic / paired)"
+        )
+    sea, seb = va / na, vb / nb
+    t = (ma - mb) / F.sqrt(sea + seb)
+    df = (sea + seb) * (sea + seb) / (
+        sea * sea / (na - F.lit(1.0)) + seb * seb / (nb - F.lit(1.0))
+    )
+    return [t.alias(out("t")), df.alias(out("df"))]
+
+
+# -- parent pipelines: handler(agg, buckets, window, partition_cols) ----------
+
 # ES moving_fn scripts the docs demonstrate → one window aggregate each
 _MOVING_FNS = {
     "MovingFunctions.unweightedAvg(values)": F.avg,
@@ -2918,1315 +3440,729 @@ _MOVING_FNS = {
 }
 
 
-def _apply_pipelines(
-    b: DataFrame,
-    pipes: dict[str, dict],
-    resolve,
-    partition_cols: list[str],
-    order_col: str,
-) -> DataFrame:
-    """Apply parent pipeline aggs over an already-reduced bucket frame.
-
-    Windows partition by the enclosing bucket keys and order by this
-    level's bucket key ascending (ES pipeline order — histogram /
-    date_histogram buckets are key-ordered). Pipelines are applied in
-    declaration order, so later ones can reference earlier outputs
-    (e.g. cumulative_sum over a derivative), exactly as ES chains
-    buckets_path references.
-    """
-    w = Window.partitionBy(*partition_cols).orderBy(F.asc(order_col))
-    for name, spec in pipes.items():
-        kind = _pipeline_kind(spec)
-        p = spec[kind]
-        if kind == "derivative":
-            col = resolve(p["buckets_path"], b)
-            b = b.withColumn(name, col - F.lag(col).over(w))
-        elif kind == "serial_diff":
-            col = resolve(p["buckets_path"], b)
-            b = b.withColumn(name, col - F.lag(col, int(p.get("lag", 1))).over(w))
-        elif kind == "cumulative_sum":
-            col = resolve(p["buckets_path"], b)
-            b = b.withColumn(
-                name,
-                F.sum(col).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-            )
-        elif kind == "moving_fn":
-            col = resolve(p["buckets_path"], b)
-            window = int(p["window"])
-            shift = int(p.get("shift", 0))
-            fn = _MOVING_FNS.get(str(p.get("script", "")).strip())
-            if fn is None:
-                raise ValueError(
-                    f"moving_fn script {p.get('script')!r} not supported "
-                    f"(use one of {sorted(_MOVING_FNS)})"
-                )
-            # ES window semantics: [i-window+shift, i+shift) — shift=0
-            # EXCLUDES the current bucket (first bucket → null, like ES)
-            b = b.withColumn(
-                name, fn(col).over(w.rowsBetween(shift - window, shift - 1))
-            )
-        elif kind == "bucket_script":
-            cols = {nm: resolve(path, b) for nm, path in p["buckets_path"].items()}
-            b = b.withColumn(name, _compile_script(p["script"], cols))
-        elif kind == "normalize":
-            # ES normalize pipeline: rescale a sibling metric across ALL
-            # buckets of this level. The window frame is the whole
-            # enclosing partition (unordered — every method needs the
-            # full bucket set); bucket frames are already reduced, so the
-            # per-partition row count is the bucket count, not the doc
-            # count. z-score uses population σ (ES's single-pass form).
-            col = resolve(p["buckets_path"], b)
-            wall = (
-                Window.partitionBy(*partition_cols)
-                .rowsBetween(Window.unboundedPreceding,
-                             Window.unboundedFollowing)
-            )
-            method = str(p["method"])
-            if method == "percent_of_sum":
-                expr = col / F.sum(col).over(wall)
-            elif method == "rescale_0_1":
-                expr = (col - F.min(col).over(wall)) / (
-                    F.max(col).over(wall) - F.min(col).over(wall)
-                )
-            elif method == "rescale_0_100":
-                expr = F.lit(100.0) * (col - F.min(col).over(wall)) / (
-                    F.max(col).over(wall) - F.min(col).over(wall)
-                )
-            elif method == "mean":
-                expr = (col - F.avg(col).over(wall)) / (
-                    F.max(col).over(wall) - F.min(col).over(wall)
-                )
-            elif method == "z-score":
-                expr = (col - F.avg(col).over(wall)) / F.stddev_pop(col).over(
-                    wall
-                )
-            elif method == "softmax":
-                # max-shifted (softmax is shift-invariant): e^x overflows
-                # a double past x≈709, which real bucket sums exceed
-                sh = col - F.max(col).over(wall)
-                expr = F.exp(sh) / F.sum(F.exp(sh)).over(wall)
-            else:
-                raise ValueError(
-                    f"normalize method {method!r} (use percent_of_sum / "
-                    "rescale_0_1 / rescale_0_100 / mean / z-score / softmax)"
-                )
-            b = b.withColumn(name, expr)
-        elif kind == "bucket_selector":
-            cols = {nm: resolve(path, b) for nm, path in p["buckets_path"].items()}
-            b = b.filter(
-                F.coalesce(_compile_script(p["script"], cols), F.lit(False))
-            )
-        elif kind == "bucket_sort":
-            sort = _as_list(p.get("sort"))
-            if not sort:
-                # ES allows size-only truncation in bucket order; without
-                # an explicit key that order is nondeterministic here
-                raise ValueError("bucket_sort requires an explicit sort")
-            sort_cols = []
-            for s in sort:
-                (path, sp), = s.items() if isinstance(s, dict) else ((s, "asc"),)
-                order = sp["order"] if isinstance(sp, dict) else sp
-                col = resolve(path, b)
-                sort_cols.append(col.desc() if order == "desc" else col.asc())
-            offset = int(p.get("from", 0))
-            size = p.get("size")
-            if partition_cols:
-                sw = Window.partitionBy(*partition_cols).orderBy(*sort_cols)
-                b = b.withColumn("_bs_rn", F.row_number().over(sw))
-                cond = F.col("_bs_rn") > offset
-                if size is not None:
-                    cond = cond & (F.col("_bs_rn") <= offset + int(size))
-                b = b.filter(cond).drop("_bs_rn")
-            else:
-                b = b.orderBy(*sort_cols)
-                if offset:
-                    b = b.offset(offset)
-                if size is not None:
-                    b = b.limit(int(size))
-        else:  # pragma: no cover - guarded by caller
-            raise ValueError(f"unsupported pipeline agg {kind!r}")
-    return b
+@_handles("parent", "derivative", "serial_diff")
+def _derivative(a, b, w, part):
+    col = _bucket_col(a.params["buckets_path"], b)
+    lag = int(a.params.get("lag", 1)) if a.type == "serial_diff" else 1
+    return b.withColumn(a.name, col - F.lag(col, lag).over(w))
 
 
-def _aggs(
-    base: DataFrame,
-    aggs: dict[str, Any],
-    group_cols: list | None = None,
-    *,
-    id_col: str = "doc_id",
-    background: DataFrame | None = None,
-    text_col: str = "text",
-) -> DataFrame:
-    """Compile an aggs dict. Nested histogram▸histogram▸terms supported
-    exactly as the reference composes it (mira_loader.py:262-319)."""
-    group_cols = group_cols or []
+@_handles("parent", "cumulative_sum")
+def _cumulative_sum(a, b, w, part):
+    col = _bucket_col(a.params["buckets_path"], b)
+    return b.withColumn(
+        a.name, F.sum(col).over(w.rowsBetween(Window.unboundedPreceding, 0))
+    )
 
-    def _recurse(b: DataFrame, a: dict, g: list) -> DataFrame:
-        return _aggs(
-            b, a, g, id_col=id_col, background=background, text_col=text_col
-        )
 
-    metrics = {
-        "avg": F.avg,
-        "sum": F.sum,
-        "min": F.min,
-        "max": F.max,
-        "value_count": F.count,
-    }
-
-    def leaf_exprs(name: str, spec: dict, multi: bool) -> list | None:
-        """Aliased agg expressions for a stats/metric/cardinality leaf
-        (None if the spec is a bucketing agg). Sibling aggs get
-        name-prefixed aliases; a lone agg keeps the bare ES names."""
-        if "stats" in spec:
-            f = spec["stats"]["field"]
-            p = f"{name}_" if multi else ""
-            return [
-                F.min(f).alias(f"{p}min"), F.max(f).alias(f"{p}max"),
-                F.avg(f).alias(f"{p}avg"), F.sum(f).alias(f"{p}sum"),
-                F.count(f).alias(f"{p}count"),
-            ]
-        for m, fn in metrics.items():
-            if m in spec:
-                alias = f"{name}_value" if multi else "value"
-                return [fn(spec[m]["field"]).alias(alias)]
-        if "cardinality" in spec:
-            # ES cardinality is HLL-approximate; at scale use
-            # approx_count_distinct (same sketch family). Exact here so
-            # the result is deterministic and oracle-checkable — swap via
-            # {"cardinality": {"field": f, "approx": true}}.
-            c = spec["cardinality"]
-            fn = F.approx_count_distinct if c.get("approx") else F.count_distinct
-            alias = f"{name}_value" if multi else "value"
-            return [fn(c["field"]).alias(alias)]
-        if "extended_stats" in spec:
-            # ES extended_stats: stats + sum_of_squares, variance (and
-            # population std — ES reports population, not sample)
-            f = spec["extended_stats"]["field"]
-            p = f"{name}_" if multi else ""
-            return [
-                F.count(f).alias(f"{p}count"),
-                F.min(f).alias(f"{p}min"),
-                F.max(f).alias(f"{p}max"),
-                F.avg(f).alias(f"{p}avg"),
-                F.sum(f).alias(f"{p}sum"),
-                F.sum(F.col(f) * F.col(f)).alias(f"{p}sum_of_squares"),
-                F.var_pop(f).alias(f"{p}variance"),
-                F.stddev_pop(f).alias(f"{p}std_deviation"),
-            ]
-        if "weighted_avg" in spec:
-            wa = spec["weighted_avg"]
-            v, w = wa["value"]["field"], wa["weight"]["field"]
-            alias = f"{name}_value" if multi else "value"
-            return [
-                (
-                    F.sum(F.col(v) * F.col(w)) / F.sum(F.col(w))
-                ).alias(alias)
-            ]
-        if "percentile_ranks" in spec:
-            # ES percentile_ranks: for each given value, the % of docs
-            # with field ≤ value — an exact count ratio (ES interpolates
-            # from a t-digest; exact here so the result is
-            # oracle-checkable, same policy as percentiles/cardinality)
-            pr = spec["percentile_ranks"]
-            f = pr["field"]
-            p = f"{name}_" if multi else ""
-            total = F.count(f)
-            return [
-                (
-                    F.count_if(F.col(f) <= F.lit(float(v)))
-                    / total
-                    * F.lit(100.0)
-                ).alias(f"{p}rank_{f'{float(v):g}'.replace('.', '_').replace('-', 'm')}")
-                for v in pr["values"]
-            ]
-        if "boxplot" in spec:
-            # ES boxplot: min/max/q1/q2/q3 — t-digest-approximate in ES;
-            # exact by default here (oracle-checkable), approx: true →
-            # percentile_approx (same policy as percentiles)
-            bx = spec["boxplot"]
-            f = bx["field"]
-            fn = F.percentile_approx if bx.get("approx") else F.percentile
-            p = f"{name}_" if multi else ""
-            return [
-                F.min(f).alias(f"{p}min"), F.max(f).alias(f"{p}max"),
-                fn(F.col(f), F.lit(0.25)).alias(f"{p}q1"),
-                fn(F.col(f), F.lit(0.5)).alias(f"{p}q2"),
-                fn(F.col(f), F.lit(0.75)).alias(f"{p}q3"),
-            ]
-        if "top_metrics" in spec:
-            # ES top_metrics(size=1): the metric values of the best-sorted
-            # doc per bucket — ONE max_by/min_by pass, no window, no
-            # top_hits row materialization. Ties broken by id_col so the
-            # result is deterministic (ES leaves ties undefined).
-            tm = spec["top_metrics"]
-            if int(tm.get("size", 1)) != 1:
-                raise ValueError(
-                    "top_metrics supports size=1 (use top_hits for row sets)"
-                )
-            if id_col not in base.columns:
-                raise ValueError(
-                    f"top_metrics breaks sort ties by {id_col!r}, which "
-                    f"this table lacks — pass id_col= to search() "
-                    f"(columns: {base.columns})"
-                )
-            (sf_, sspec), = _as_list(tm["sort"])[0].items() \
-                if isinstance(_as_list(tm["sort"])[0], dict) \
-                else ((_as_list(tm["sort"])[0], "asc"),)
-            order = sspec["order"] if isinstance(sspec, dict) else sspec
-            if order == "desc":
-                key = F.struct(F.col(sf_), (-F.col(id_col)).alias("_t"))
-                pick = F.max_by
-            else:
-                key = F.struct(F.col(sf_), F.col(id_col).alias("_t"))
-                pick = F.min_by
-            p = f"{name}_" if multi else ""
-            return [
-                pick(F.col(m["field"]), key).alias(f"{p}{m['field']}")
-                for m in _as_list(tm["metrics"])
-            ]
-        if "reverse_nested" in spec:
-            # ES reverse_nested (under a nested context): how many PARENT
-            # documents fall in this bucket. The nested explode keeps the
-            # parent's id column on every nested row, so this is one
-            # count_distinct — no join back to the parent table.
-            if id_col not in base.columns:
-                raise ValueError(
-                    f"reverse_nested counts parents by {id_col!r}, which "
-                    f"this table lacks (columns: {base.columns})"
-                )
-            return [F.count_distinct(F.col(id_col)).alias(f"{name}_doc_count")]
-        if "geo_bounds" in spec:
-            pt = F.col(spec["geo_bounds"]["field"])
-            lat, lon = pt.getField("lat"), pt.getField("lon")
-            p = f"{name}_" if multi else ""
-            return [
-                F.max(lat).alias(f"{p}top_left_lat"),
-                F.min(lon).alias(f"{p}top_left_lon"),
-                F.min(lat).alias(f"{p}bottom_right_lat"),
-                F.max(lon).alias(f"{p}bottom_right_lon"),
-            ]
-        if "geo_centroid" in spec:
-            # ES geo_centroid: arithmetic mean of lat/lon (ES averages the
-            # coordinates, not the great-circle midpoint) + point count
-            pt = F.col(spec["geo_centroid"]["field"])
-            lat, lon = pt.getField("lat"), pt.getField("lon")
-            p = f"{name}_" if multi else ""
-            return [
-                F.avg(lat).alias(f"{p}lat"),
-                F.avg(lon).alias(f"{p}lon"),
-                F.count(lat).alias(f"{p}count"),
-            ]
-        if "percentiles" in spec:
-            # ES percentiles is t-digest-approximate; exact (sort-based,
-            # linear interpolation — numpy/ES 'linear') by default so the
-            # values are deterministic and oracle-checkable; the scale
-            # path is {"percentiles": {..., "approx": true}} →
-            # percentile_approx (Greenwald-Khanna sketch, one pass).
-            pc = spec["percentiles"]
-            f = pc["field"]
-            percents = pc.get("percents", [1, 5, 25, 50, 75, 95, 99])
-            fn = F.percentile_approx if pc.get("approx") else F.percentile
-            p = f"{name}_" if multi else ""
-            return [
-                fn(F.col(f), F.lit(float(q) / 100.0)).alias(
-                    f"{p}p{f'{q:g}'.replace('.', '_')}"
-                )
-                for q in percents
-            ]
-        if "rate" in spec:
-            # ES rate agg (inside a date_histogram): bucket sum (or doc
-            # count) per `unit` of time. DELIBERATE DEVIATION: the
-            # enclosing bucket interval is passed EXPLICITLY as
-            # rate.interval (ES infers it from the parent
-            # date_histogram; the leaf compiler here is context-free)
-            # and must be a FIXED-length unit — month/quarter/year
-            # refuse, sidestepping ES's calendar-ratio table entirely.
-            rs = spec["rate"]
-            if "interval" not in rs:
-                raise ValueError(
-                    "rate needs an explicit 'interval' equal to the "
-                    "enclosing date_histogram's fixed interval (this "
-                    "engine does not infer it; deviation documented)"
-                )
-            factor = _fixed_interval_ms(rs["interval"]) / _fixed_interval_ms(
-                rs.get("unit", rs["interval"])
-            )
-            alias = f"{name}_value" if multi else "value"
-            val = (
-                F.sum(F.col(rs["field"])) if rs.get("field")
-                else F.count(F.lit(1))
-            )
-            return [(val / F.lit(float(factor))).alias(alias)]
-        if "matrix_stats" in spec:
-            # ES matrix_stats: per-field moments + the pairwise
-            # covariance/correlation matrix over numeric fields, skipping
-            # any document missing ONE of the fields (ES's row-wise
-            # completeness rule — reproduced by null-masking every input
-            # on the conjunction, so sibling aggs over the same pass are
-            # unaffected). variance/covariance are SAMPLE (n-1), ES's
-            # normalization; skewness/kurtosis are the population
-            # central-moment forms m3/m2^1.5 and m4/m2² (kurtosis
-            # NON-excess, as ES reports), computed from raw power sums so
-            # the DuckDB twin can run the identical arithmetic (Spark's
-            # builtin skewness/kurtosis and DuckDB's disagree on
-            # sample-bias correction).
-            fields = list(spec["matrix_stats"]["fields"])
-            if len(fields) < 2:
-                raise ValueError("matrix_stats needs >= 2 fields")
-            p = f"{name}_" if multi else ""
-            valid = F.lit(True)
-            for f in fields:
-                valid = valid & F.col(f).isNotNull()
-            masked = {f: F.when(valid, F.col(f).cast("double"))
-                      for f in fields}
-            exprs = []
-            for f in fields:
-                c = masked[f]
-                m1 = F.avg(c)
-                m2 = F.avg(c * c)
-                m3 = F.avg(c * c * c)
-                m4 = F.avg(c * c * c * c)
-                m2c = m2 - m1 * m1
-                m3c = m3 - F.lit(3.0) * m1 * m2 + F.lit(2.0) * m1 * m1 * m1
-                m4c = (
-                    m4 - F.lit(4.0) * m1 * m3
-                    + F.lit(6.0) * m1 * m1 * m2
-                    - F.lit(3.0) * m1 * m1 * m1 * m1
-                )
-                exprs += [
-                    F.count(c).alias(f"{p}{f}_count"),
-                    m1.alias(f"{p}{f}_mean"),
-                    F.var_samp(c).alias(f"{p}{f}_variance"),
-                    (m3c / F.pow(m2c, F.lit(1.5))).alias(f"{p}{f}_skewness"),
-                    (m4c / (m2c * m2c)).alias(f"{p}{f}_kurtosis"),
-                ]
-            for i, fi in enumerate(fields):
-                for fj in fields[i + 1:]:
-                    exprs += [
-                        F.covar_samp(masked[fi], masked[fj]).alias(
-                            f"{p}{fi}_{fj}_covariance"
-                        ),
-                        F.corr(masked[fi], masked[fj]).alias(
-                            f"{p}{fi}_{fj}_correlation"
-                        ),
-                    ]
-            return exprs
-        if "t_test" in spec:
-            # ES t_test: two-sample Student's t between populations a and
-            # b ({"field", optional "filter"}), type heteroscedastic
-            # (Welch, the ES default) / homoscedastic (pooled) / paired.
-            # DELIBERATE DEVIATION: ES returns the two-sided p-value; the
-            # t→p conversion is an incomplete-beta special function that
-            # neither Spark SQL nor the DuckDB oracle can express, so the
-            # engine returns the t STATISTIC and the degrees of freedom
-            # (Welch–Satterthwaite for heteroscedastic) — the exact
-            # inputs of that textbook conversion. One pass: populations
-            # are null-masked columns over the same scan, never two jobs.
-            tt = spec["t_test"]
-            ttype = str(tt.get("type", "heteroscedastic")).lower()
-            p = f"{name}_" if multi else ""
-
-            def _pop(side: dict) -> Column:
-                c = F.col(side["field"]).cast("double")
-                if side.get("filter"):
-                    c = F.when(
-                        F.coalesce(
-                            filter_expr(side["filter"], id_col), F.lit(False)
-                        ),
-                        c,
-                    )
-                return c
-            ca, cb = _pop(tt["a"]), _pop(tt["b"])
-            if ttype == "paired":
-                if tt["a"].get("filter") or tt["b"].get("filter"):
-                    raise ValueError(
-                        "paired t_test compares two fields of the SAME "
-                        "rows — filters would unpair them (ES rejects "
-                        "this too)"
-                    )
-                d = F.when(
-                    F.col(tt["a"]["field"]).isNotNull()
-                    & F.col(tt["b"]["field"]).isNotNull(),
-                    ca - cb,
-                )
-                n = F.count(d)
-                t = F.avg(d) / (F.stddev_samp(d) / F.sqrt(n))
-                return [t.alias(f"{p}t"), (n - F.lit(1)).alias(f"{p}df")]
-            na, nb = F.count(ca).cast("double"), F.count(cb).cast("double")
-            ma, mb = F.avg(ca), F.avg(cb)
-            va, vb = F.var_samp(ca), F.var_samp(cb)
-            if ttype == "homoscedastic":
-                sp2 = ((na - F.lit(1.0)) * va + (nb - F.lit(1.0)) * vb) / (
-                    na + nb - F.lit(2.0)
-                )
-                t = (ma - mb) / F.sqrt(sp2 * (F.lit(1.0) / na + F.lit(1.0) / nb))
-                return [t.alias(f"{p}t"), (na + nb - F.lit(2.0)).alias(f"{p}df")]
-            if ttype != "heteroscedastic":
-                raise ValueError(
-                    f"t_test type {ttype!r} (use heteroscedastic / "
-                    "homoscedastic / paired)"
-                )
-            sea, seb = va / na, vb / nb
-            t = (ma - mb) / F.sqrt(sea + seb)
-            df = (
-                (sea + seb) * (sea + seb)
-                / (sea * sea / (na - F.lit(1.0))
-                   + seb * seb / (nb - F.lit(1.0)))
-            )
-            return [t.alias(f"{p}t"), df.alias(f"{p}df")]
-        return None
-
-    # parent pipeline aggs (derivative/cumulative_sum/…): siblings of the
-    # metric leaves INSIDE a bucketing agg's sub-aggs. The metric pass
-    # reduces docs → buckets first; pipelines are then window functions
-    # over the bucket rows only (ordered by this level's bucket key).
-    pipes = {n: s for n, s in aggs.items() if _pipeline_kind(s) in _PARENT_PIPELINES}
-    if pipes:
-        if not group_cols:
-            raise ValueError(
-                f"pipeline aggs {sorted(pipes)} must be nested under a "
-                "bucketing agg (histogram / date_histogram / terms)"
-            )
-        plain = {n: s for n, s in aggs.items() if n not in pipes}
-        multi = len(plain) > 1
-        per = {n: leaf_exprs(n, s, multi) for n, s in plain.items()}
-        if not all(v is not None for v in per.values()):
-            raise ValueError(
-                "pipeline aggs compose with stats/metric sibling leaves "
-                f"only; got {sorted(plain)}"
-            )
-        flat = [e for v in per.values() for e in v]
-        buckets = base.groupBy(*group_cols).agg(
-            *flat, F.count(F.lit(1)).alias("doc_count")
-        )
-
-        def resolve(path: str, b: DataFrame) -> Column:
-            # buckets_path at this level: "_count", a sibling metric name
-            # ("sales" / "sales.avg" for multi-value leaves), or the name
-            # of an earlier pipeline in the chain
-            leaf = path.split(">")[-1]
-            if leaf == "_count":
-                return F.col("doc_count")
-            nm, _, metric = leaf.partition(".")
-            cands = (
-                [f"{nm}_{metric}", metric] if metric
-                else [f"{nm}_value", nm, "value"]
-            )
-            for c in cands:
-                if c in b.columns:
-                    return F.col(c)
-            raise ValueError(
-                f"buckets_path {path!r} resolves to none of {cands} "
-                f"(bucket columns: {b.columns})"
-            )
-
-        return _apply_pipelines(
-            buckets,
-            {n: s for n, s in aggs.items() if n in pipes},  # declaration order
-            resolve,
-            group_cols[:-1],
-            group_cols[-1],
-        )
-
-    # sibling pipeline aggs (avg_bucket/stats_bucket/…): NEXT TO one
-    # bucketing agg, reducing its bucket stream to a single row
-    sib = {n: s for n, s in aggs.items() if _pipeline_kind(s) in _SIBLING_PIPELINES}
-    if sib:
-        others = {n: s for n, s in aggs.items() if n not in sib}
-        if len(others) != 1:
-            raise ValueError(
-                f"sibling pipeline aggs {sorted(sib)} need exactly one "
-                f"bucketing sibling; got {sorted(others)}"
-            )
-        bdf = _recurse(base, others, group_cols)
-
-        def resolve_sib(path: str) -> Column:
-            seg = path.split(">")
-            (bname,), leaf = others.keys(), seg[-1]
-            if len(seg) < 2 or seg[0] != bname:
-                raise ValueError(
-                    f"buckets_path {path!r} must start with the sibling "
-                    f"bucket agg {bname!r} (e.g. '{bname}>metric')"
-                )
-            if leaf == "_count":
-                return F.col("doc_count")
-            nm, _, metric = leaf.partition(".")
-            cands = (
-                [f"{nm}_{metric}", metric] if metric
-                else [f"{nm}_value", nm, "value"]
-            )
-            for c in cands:
-                if c in bdf.columns:
-                    return F.col(c)
-            raise ValueError(
-                f"buckets_path {path!r} resolves to none of {cands} "
-                f"(bucket columns: {bdf.columns})"
-            )
-
-        exprs: list[Column] = []
-        for n, s in sib.items():
-            kind = _pipeline_kind(s)
-            col = resolve_sib(s[kind]["buckets_path"])
-            if kind == "stats_bucket":
-                exprs += [
-                    F.min(col).alias(f"{n}_min"), F.max(col).alias(f"{n}_max"),
-                    F.avg(col).alias(f"{n}_avg"), F.sum(col).alias(f"{n}_sum"),
-                    F.count(col).alias(f"{n}_count"),
-                ]
-            elif kind == "percentiles_bucket":
-                # ES percentiles_bucket over the sibling bucket metric
-                # stream. DEVIATION (documented, policy-consistent with
-                # the percentiles leaf): linear interpolation
-                # (Spark `percentile` == DuckDB `quantile_cont`), where
-                # ES picks the nearest bucket value without
-                # interpolating; identical whenever (p/100)·(n-1) lands
-                # on an integer rank.
-                percents = s[kind].get(
-                    "percents", [1.0, 5.0, 25.0, 50.0, 75.0, 95.0, 99.0]
-                )
-                exprs += [
-                    F.percentile(col, F.lit(float(qq) / 100.0)).alias(
-                        f"{n}_p{f'{qq:g}'.replace('.', '_')}"
-                    )
-                    for qq in percents
-                ]
-            else:
-                fn = {
-                    "avg_bucket": F.avg, "sum_bucket": F.sum,
-                    "min_bucket": F.min, "max_bucket": F.max,
-                }[kind]
-                exprs.append(fn(col).alias(n if len(sib) > 1 else "value"))
-        return bdf.agg(*exprs)
-
-    # any number of sibling stats/metric/cardinality aggs → ONE pass
-    # (the reference's get_bin_sizes parallel-stats shape, generalized);
-    # honors group_cols so metric sub-aggs nested under histogram /
-    # date_histogram aggregate PER BUCKET, not globally
-    per = {n: leaf_exprs(n, s, len(aggs) > 1) for n, s in aggs.items()}
-    if all(v is not None for v in per.values()):
-        flat = [e for v in per.values() for e in v]
-        if group_cols:
-            # metric sub-aggs nested under a bucketing agg: ES always
-            # reports per-bucket doc_count alongside the sub-agg values
-            # (ADVICE r03 #4 — consumers read bucket.doc_count)
-            return base.groupBy(*group_cols).agg(
-                *flat, F.count(F.lit(1)).alias("doc_count")
-            )
-        return base.agg(*flat)
-    if len(aggs) > 1:
+@_handles("parent", "moving_fn")
+def _moving_fn(a, b, w, part):
+    p = a.params
+    col = _bucket_col(p["buckets_path"], b)
+    window = int(p["window"])
+    shift = int(p.get("shift", 0))
+    fn = _MOVING_FNS.get(str(p.get("script", "")).strip())
+    if fn is None:
         raise ValueError(
-            "sibling aggs are supported only for stats/metric leaves; "
-            f"got {sorted(aggs)}"
+            f"moving_fn script {p.get('script')!r} not supported "
+            f"(use one of {sorted(_MOVING_FNS)})"
         )
-    (name, spec), = aggs.items()
+    # ES window semantics: [i-window+shift, i+shift) — shift=0 EXCLUDES
+    # the current bucket (first bucket → null, like ES)
+    return b.withColumn(a.name, fn(col).over(w.rowsBetween(shift - window, shift - 1)))
 
-    def _keyed_buckets(grouped: DataFrame) -> DataFrame:
-        # shared footer of every keyed bucketing branch below: recurse
-        # into sub-aggs per bucket, else count docs per bucket. A NULL
-        # bucket key = the doc's field was missing — ES drops such docs
-        # from bucket aggs (the `missing` agg counts them); a silent
-        # NULL bucket (or, for the geo grids, a corner-cell bucket)
-        # would inflate counts
-        grouped = grouped.filter(F.col(f"{name}_key").isNotNull())
-        sub = spec.get("aggs")
-        if sub:
-            return _recurse(grouped, sub, group_cols + [f"{name}_key"])
-        return grouped.groupBy(*group_cols, f"{name}_key").agg(
-            F.count(F.lit(1)).alias("doc_count")
-        )
 
-    def _tagged_buckets(tagged: list) -> DataFrame:
-        # exploded-tag buckets (range/ip_range/filters/geo_distance/
-        # date_range): independent, possibly overlapping ranges — one
-        # exploded row per matching bucket, one shuffle total
-        return _keyed_buckets(
-            base.withColumn(
-                f"{name}_key",
-                F.explode(F.array_compact(F.array(*tagged))),
-            )
-        )
+def _script_cols(a, b) -> dict[str, Column]:
+    return {nm: _bucket_col(path, b) for nm, path in a.params["buckets_path"].items()}
 
-    if "date_histogram" in spec:
-        h = spec["date_histogram"]
-        field = h["field"]
-        iv = h.get("calendar_interval") or h.get("fixed_interval") or h["interval"]
-        unit = {
-            "minute": "minute", "1m": "minute",
-            "hour": "hour", "1h": "hour",
-            "day": "day", "1d": "day",
-            "week": "week", "month": "month", "quarter": "quarter",
-            "year": "year", "1y": "year",
-        }.get(iv)
-        if unit is None:
-            raise ValueError(f"unsupported date_histogram interval {iv!r}")
-        bucket = F.date_trunc(unit, F.col(field)).alias(f"{name}_key")
-        return _keyed_buckets(base.withColumn(f"{name}_key", bucket))
-    if "histogram" in spec:
-        h = spec["histogram"]
-        field, interval = h["field"], h["interval"]
-        bucket = (F.floor(F.col(field) / F.lit(interval)) * F.lit(interval)).alias(
-            f"{name}_key"
-        )
-        return _keyed_buckets(base.withColumn(f"{name}_key", bucket))
-    if "range" in spec:
-        # ES range agg: each range is evaluated INDEPENDENTLY (from
-        # inclusive, to exclusive; overlapping ranges each count the doc),
-        # so a doc contributes one exploded row per matching range — one
-        # shuffle total, sub-aggs aggregate per bucket via group_cols.
-        # Bucket keys use explicit "key" when given, else ES's "from-to"
-        # shape with %g number formatting ("*" for an open end).
-        r = spec["range"]
-        field = r["field"]
-        fmt = lambda v: f"{float(v):g}"  # noqa: E731
-        tagged = []
-        for rg in r["ranges"]:
-            frm, to = rg.get("from"), rg.get("to")
-            key = rg.get("key") or (
-                f"{'*' if frm is None else fmt(frm)}-{'*' if to is None else fmt(to)}"
-            )
-            cond = F.lit(True)
-            if frm is not None:
-                cond = cond & (F.col(field) >= F.lit(frm))
-            if to is not None:
-                cond = cond & (F.col(field) < F.lit(to))
-            tagged.append(F.when(cond, F.lit(key)))
-        return _tagged_buckets(tagged)
-    if "ip_range" in spec:
-        # ES ip_range agg: IPv4 ranges (from inclusive, to EXCLUSIVE —
-        # unlike from/to strings in queries, matching ES's range-agg
-        # convention) or CIDR masks ("10.0.0.0/25" → [base, base+2^(32-p))).
-        # Same independent exploded-tag shape as range; the address
-        # compares as its u32 value (split + arithmetic, codegen — the
-        # identical expression is SQL-renderable for the oracle).
-        r = spec["ip_range"]
-        field = r["field"]
-        ipnum = _ipv4_num(F.col(field))
-        tagged = []
-        for rg in r["ranges"]:
-            if "mask" in rg:
-                lo, hi = _cidr_bounds(rg["mask"])
-                key = rg.get("key") or rg["mask"]
-                cond = (ipnum >= F.lit(lo)) & (ipnum < F.lit(hi))
-            else:
-                frm, to = rg.get("from"), rg.get("to")
-                key = rg.get("key") or (
-                    f"{frm if frm is not None else '*'}-"
-                    f"{to if to is not None else '*'}"
-                )
-                cond = F.lit(True)
-                if frm is not None:
-                    cond = cond & (ipnum >= F.lit(_ipv4_int(frm)))
-                if to is not None:
-                    cond = cond & (ipnum < F.lit(_ipv4_int(to)))
-            tagged.append(F.when(cond, F.lit(key)))
-        return _tagged_buckets(tagged)
-    if "filters" in spec:
-        # ES filters agg: named sub-queries, each bucket = docs matching
-        # that filter (independent, overlapping allowed). Same exploded-
-        # tag shape as range: one shuffle, group_cols-compatible sub-aggs.
-        named = spec["filters"]["filters"]
-        tagged = [
-            F.when(
-                F.coalesce(filter_expr(qd, id_col), F.lit(False)), F.lit(nm)
-            )
-            for nm, qd in sorted(named.items())
-        ]
-        return _tagged_buckets(tagged)
-    if "children" in spec:
-        # ES children agg: switch the aggregation context from the
-        # current (parent) docs to their children of the given type —
-        # one equi-join on the parent id (the same key ES routes
-        # parent/child shards by). Parent-level bucket keys ride the
-        # join so sub-aggs stay per-bucket.
-        if background is None:
-            raise ValueError("children agg needs the full table (background)")
-        t = spec["children"]["type"]
-        kids = background.filter(F.col(JOIN_NAME_COL) == F.lit(t))
-        kids = kids.drop(*[c for c in group_cols if c in kids.columns])
-        parent_side = base.select(
-            *group_cols, F.col(id_col).alias(JOIN_PARENT_COL)
-        ).distinct()
-        switched = kids.join(parent_side, JOIN_PARENT_COL)
-        sub = spec.get("aggs")
-        if sub:
-            return _recurse(switched, sub, group_cols)
-        if group_cols:
-            return switched.groupBy(*group_cols).agg(
-                F.count(F.lit(1)).alias("doc_count")
-            )
-        return switched.agg(F.count(F.lit(1)).alias("doc_count"))
-    if "nested" in spec:
-        # ES nested agg: switch the aggregation context from parent docs
-        # to the nested objects under `path`. One explode (nested rows ≈
-        # array elements — this is the ONLY place nested arrays unroll;
-        # filter-context nested queries stay HOF-only), replacing the
-        # array column with the element struct so sub-agg field names
-        # ("items.qty") resolve into it. Parent columns (incl. id_col)
-        # ride along, which is what makes reverse_nested a count_distinct
-        # instead of a join. doc_count = number of nested docs, like ES.
-        path = spec["nested"]["path"]
-        sub = spec.get("aggs")
-        exploded = base.withColumn("__nested_elem", F.explode(F.col(path)))
-        if sub:
-            # Sub-agg specs reference nested fields path-prefixed
-            # ("items.qty"), but downstream agg machinery (groupBy keys,
-            # window sorts) needs plain column names. Rewrite every
-            # prefixed name in the spec to a flat "items__qty" column and
-            # materialize exactly the referenced fields from the exploded
-            # element — projection stays minimal, names stay dot-free.
-            refs: set[str] = set()
 
-            def _rw(obj):
-                if isinstance(obj, dict):
-                    return {_rw(k): _rw(v) for k, v in obj.items()}
-                if isinstance(obj, list):
-                    return [_rw(x) for x in obj]
-                if isinstance(obj, str) and obj.startswith(path + "."):
-                    refs.add(obj)
-                    return obj.replace(".", "__")
-                return obj
+@_handles("parent", "bucket_script")
+def _bucket_script(a, b, w, part):
+    return b.withColumn(a.name, _compile_script(a.params["script"], _script_cols(a, b)))
 
-            sub = _rw(sub)
-            for ref in sorted(refs):
-                col = F.col("__nested_elem")
-                for part in ref[len(path) + 1:].split("."):
-                    col = col.getField(part)
-                exploded = exploded.withColumn(ref.replace(".", "__"), col)
-            return _recurse(exploded.drop("__nested_elem"), sub, group_cols)
-        exploded = exploded.drop("__nested_elem")
-        if group_cols:
-            return exploded.groupBy(*group_cols).agg(
-                F.count(F.lit(1)).alias("doc_count")
-            )
-        return exploded.agg(F.count(F.lit(1)).alias("doc_count"))
-    if "geohash_grid" in spec:
-        # ES geohash_grid: classic geohash cells at `precision` chars —
-        # the same one-groupBy shape as geotile_grid, bucket key from
-        # the unrolled Morton/base32 arithmetic (geohash_key)
-        g = spec["geohash_grid"]
-        pt = F.col(g["field"])
-        grouped = base.withColumn(
-            f"{name}_key",
-            geohash_key(
-                pt.getField("lat"), pt.getField("lon"),
-                int(g.get("precision", 5)),
-            ),
+
+@_handles("parent", "bucket_selector")
+def _bucket_selector(a, b, w, part):
+    cond = _compile_script(a.params["script"], _script_cols(a, b))
+    return b.filter(F.coalesce(cond, F.lit(False)))
+
+
+@_handles("parent", "normalize")
+def _normalize(a, b, w, part):
+    # ES normalize pipeline: rescale a sibling metric across ALL buckets
+    # of this level. The window frame is the whole enclosing partition
+    # (unordered — every method needs the full bucket set); bucket frames
+    # are already reduced, so the per-partition row count is the bucket
+    # count, not the doc count. z-score uses population σ (ES's
+    # single-pass form).
+    col = _bucket_col(a.params["buckets_path"], b)
+    wall = Window.partitionBy(*part).rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    method = str(a.params["method"])
+    if method == "percent_of_sum":
+        expr = col / F.sum(col).over(wall)
+    elif method == "rescale_0_1":
+        expr = (col - F.min(col).over(wall)) / (
+            F.max(col).over(wall) - F.min(col).over(wall)
         )
-        return _keyed_buckets(grouped)
-    if "geotile_grid" in spec:
-        # ES geotile_grid: Web-Mercator map tiles "z/x/y" at the given
-        # precision — pure floor math, whole-stage codegen, one groupBy.
-        g = spec["geotile_grid"]
-        pt = F.col(g["field"])
-        grouped = base.withColumn(
-            f"{name}_key",
-            geotile_key(
-                pt.getField("lat"), pt.getField("lon"),
-                int(g.get("precision", 7)),
-            ),
+    elif method == "rescale_0_100":
+        expr = F.lit(100.0) * (col - F.min(col).over(wall)) / (
+            F.max(col).over(wall) - F.min(col).over(wall)
         )
-        return _keyed_buckets(grouped)
-    if "geo_distance" in spec:
-        # ES geo_distance agg: distance-from-origin range buckets — the
-        # same independent/overlapping bucket semantics as the range agg
-        # (from inclusive, to exclusive), over a haversine expression.
-        g = spec["geo_distance"]
-        pt = F.col(g["field"])
-        olat, olon = _parse_geo_point(g["origin"])
-        unit = _DIST_UNITS_M[g.get("unit", "m")]
-        dist = _haversine_m(
-            pt.getField("lat"), pt.getField("lon"),
-            F.lit(olat), F.lit(olon),
-        ) / F.lit(unit)
-        fmt = lambda v: f"{float(v):g}"  # noqa: E731
-        tagged = []
-        for rg in g["ranges"]:
-            frm, to = rg.get("from"), rg.get("to")
-            key = rg.get("key") or (
-                f"{'*' if frm is None else fmt(frm)}-{'*' if to is None else fmt(to)}"
-            )
-            cond = F.lit(True)
-            if frm is not None:
-                cond = cond & (dist >= F.lit(float(frm)))
-            if to is not None:
-                cond = cond & (dist < F.lit(float(to)))
-            tagged.append(F.when(cond, F.lit(key)))
-        return _tagged_buckets(tagged)
-    if "composite" in spec:
-        # ES composite agg: a FLAT multi-source bucket stream, paginated
-        # by after-key — the scale path for high-cardinality bucket sets
-        # (terms aggs keep global top-n state; composite streams buckets
-        # in key order, so each page is one groupBy + keyset predicate,
-        # same pushdown shape as search_after).
-        if group_cols:
-            raise ValueError("composite under a bucketing agg is not supported")
-        comp = spec["composite"]
-        size = int(comp.get("size", 10))
-        after = comp.get("after")
-        key_cols = []
-        b = base
-        for src in comp["sources"]:
-            (sname, sspec), = src.items()
-            (skind, sdef), = sspec.items()
-            if skind == "terms":
-                expr = F.col(sdef["field"])
-            elif skind == "histogram":
-                iv = float(sdef["interval"])
-                expr = F.floor(F.col(sdef["field"]) / F.lit(iv)) * F.lit(iv)
-            elif skind == "date_histogram":
-                ivs = sdef.get("calendar_interval") or sdef.get(
-                    "fixed_interval"
-                ) or sdef["interval"]
-                unit = {"1d": "day", "day": "day", "1h": "hour",
-                        "hour": "hour", "month": "month",
-                        "week": "week", "year": "year"}.get(ivs)
-                if unit is None:
-                    raise ValueError(f"composite date interval {ivs!r}")
-                expr = F.date_trunc(unit, F.col(sdef["field"]))
-            else:
-                raise ValueError(f"composite source kind {skind!r}")
-            b = b.withColumn(sname, expr)
-            key_cols.append(sname)
-        out = b.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("doc_count"))
-        if after is not None:
-            # strictly-after in the composite key order (lexicographic
-            # over the sources) — the keyset predicate pushes down
-            missing_keys = [c for c in key_cols if c not in after]
-            if missing_keys:
-                raise ValueError(f"after is missing keys {missing_keys}")
-            pred = F.lit(False)
-            for i, c in enumerate(key_cols):
-                eq = F.lit(True)
-                for prev in key_cols[:i]:
-                    eq = eq & (F.col(prev) == F.lit(after[prev]))
-                pred = pred | (eq & (F.col(c) > F.lit(after[c])))
-            out = out.filter(pred)
-        return out.orderBy(*[F.asc(c) for c in key_cols]).limit(size)
-    if "adjacency_matrix" in spec:
-        # ES adjacency_matrix: doc counts for each named filter and each
-        # pairwise intersection ("a&b", ES's key format). The key set is
-        # static at query-build time, so this compiles to ONE conditional
-        # aggregation pass (count_if per key/pair — no explode, no
-        # shuffle beyond the single reduce) followed by an unpivot of
-        # the 1-row result; empty buckets are omitted like ES.
-        if group_cols:
+    elif method == "mean":
+        expr = (col - F.avg(col).over(wall)) / (
+            F.max(col).over(wall) - F.min(col).over(wall)
+        )
+    elif method == "z-score":
+        expr = (col - F.avg(col).over(wall)) / F.stddev_pop(col).over(wall)
+    elif method == "softmax":
+        # max-shifted (softmax is shift-invariant): e^x overflows a
+        # double past x≈709, which real bucket sums exceed
+        sh = col - F.max(col).over(wall)
+        expr = F.exp(sh) / F.sum(F.exp(sh)).over(wall)
+    else:
+        raise ValueError(
+            f"normalize method {method!r} (use percent_of_sum / "
+            "rescale_0_1 / rescale_0_100 / mean / z-score / softmax)"
+        )
+    return b.withColumn(a.name, expr)
+
+
+@_handles("parent", "bucket_sort")
+def _bucket_sort(a, b, w, part):
+    p = a.params
+    if not _as_list(p.get("sort")):
+        # ES allows size-only truncation in bucket order; without an
+        # explicit key that order is nondeterministic here
+        raise ValueError("bucket_sort requires an explicit sort")
+    sort_cols = _sort_cols(p["sort"], lambda path: _bucket_col(path, b))
+    offset = int(p.get("from", 0))
+    size = p.get("size")
+    if part:
+        sw = Window.partitionBy(*part).orderBy(*sort_cols)
+        b = b.withColumn("_bs_rn", F.row_number().over(sw))
+        cond = F.col("_bs_rn") > offset
+        if size is not None:
+            cond = cond & (F.col("_bs_rn") <= offset + int(size))
+        return b.filter(cond).drop("_bs_rn")
+    b = b.orderBy(*sort_cols)
+    if offset:
+        b = b.offset(offset)
+    return b.limit(int(size)) if size is not None else b
+
+
+# -- sibling pipelines: handler(agg, bucket_metric_col, multi) -> [Column] ----
+
+
+@_handles("sibling", "avg_bucket", "sum_bucket", "min_bucket", "max_bucket")
+def _bucket_metric(a, col, multi):
+    fn = _STAT_FNS[a.type[: -len("_bucket")]]
+    return [fn(col).alias(a.name if multi else "value")]
+
+
+@_handles("sibling", "stats_bucket")
+def _stats_bucket(a, col, multi):
+    return _stats(col, _out(a.name, True))
+
+
+@_handles("sibling", "percentiles_bucket")
+def _percentiles_bucket(a, col, multi):
+    # ES percentiles_bucket over the sibling bucket metric stream.
+    # DEVIATION (documented, policy-consistent with the percentiles
+    # leaf): linear interpolation (Spark `percentile` == DuckDB
+    # `quantile_cont`), where ES picks the nearest bucket value without
+    # interpolating; identical whenever (p/100)·(n-1) lands on an integer
+    # rank.
+    return [
+        F.percentile(col, F.lit(float(q) / 100.0)).alias(f"{a.name}_{_pct_key(q)}")
+        for q in a.params.get("percents", _PERCENTS)
+    ]
+
+
+# -- bucket aggs: handler(ctx, agg, base, group_cols) -> DataFrame ------------
+
+_DATE_UNITS = {
+    "minute": "minute", "1m": "minute",
+    "hour": "hour", "1h": "hour",
+    "day": "day", "1d": "day",
+    "week": "week", "month": "month", "quarter": "quarter",
+    "year": "year", "1y": "year",
+}
+
+
+def _date_unit(h: dict) -> str:
+    iv = h.get("calendar_interval") or h.get("fixed_interval") or h["interval"]
+    unit = _DATE_UNITS.get(iv)
+    if unit is None:
+        raise ValueError(f"unsupported date_histogram interval {iv!r}")
+    return unit
+
+
+def _range_bucket(rg: dict, col: Column, bound, label) -> Column:
+    """One range bucket's tag: ``from`` inclusive, ``to`` exclusive, each
+    range independent of the others (ES range-agg semantics). The
+    default key is "from-to" with "*" for an open end."""
+    frm, to = rg.get("from"), rg.get("to")
+    key = rg.get("key") or (
+        f"{'*' if frm is None else label(frm)}-{'*' if to is None else label(to)}"
+    )
+    cond = F.lit(True)
+    if frm is not None:
+        cond = cond & (col >= bound(frm))
+    if to is not None:
+        cond = cond & (col < bound(to))
+    return F.when(cond, F.lit(key))
+
+
+def _num_label(v) -> str:
+    return f"{float(v):g}"
+
+
+@_handles("bucket", "date_histogram")
+def _date_histogram(ctx, a, base, group_cols):
+    unit = _date_unit(a.params)
+    bucket = F.date_trunc(unit, F.col(a.params["field"])).alias(f"{a.name}_key")
+    return ctx.keyed(a, base.withColumn(f"{a.name}_key", bucket), group_cols)
+
+
+@_handles("bucket", "histogram")
+def _histogram(ctx, a, base, group_cols):
+    field, interval = a.params["field"], a.params["interval"]
+    bucket = (F.floor(F.col(field) / F.lit(interval)) * F.lit(interval)).alias(
+        f"{a.name}_key"
+    )
+    return ctx.keyed(a, base.withColumn(f"{a.name}_key", bucket), group_cols)
+
+
+@_handles("bucket", "range")
+def _range(ctx, a, base, group_cols):
+    # ES range agg: a doc contributes one exploded row per matching range
+    # (overlapping ranges each count it); keys use %g number formatting
+    col = F.col(a.params["field"])
+    return ctx.tagged(a, base, group_cols, [
+        _range_bucket(rg, col, F.lit, _num_label) for rg in a.params["ranges"]
+    ])
+
+
+@_handles("bucket", "date_range")
+def _date_range(ctx, a, base, group_cols):
+    # bounds are date strings; default keys use the raw bound strings
+    col = F.col(a.params["field"])
+    return ctx.tagged(a, base, group_cols, [
+        _range_bucket(rg, col, lambda v: F.lit(v).cast("timestamp"), str)
+        for rg in a.params["ranges"]
+    ])
+
+
+@_handles("bucket", "ip_range")
+def _ip_range(ctx, a, base, group_cols):
+    # ES ip_range agg: IPv4 ranges (from inclusive, to EXCLUSIVE — unlike
+    # from/to strings in queries, matching ES's range-agg convention) or
+    # CIDR masks ("10.0.0.0/25" → [base, base+2^(32-p))). The address
+    # compares as its u32 value (split + arithmetic, codegen — the
+    # identical expression is SQL-renderable for the oracle).
+    ipnum = _ipv4_num(F.col(a.params["field"]))
+    tags = []
+    for rg in a.params["ranges"]:
+        if "mask" in rg:
+            lo, hi = _cidr_bounds(rg["mask"])
+            cond = (ipnum >= F.lit(lo)) & (ipnum < F.lit(hi))
+            tags.append(F.when(cond, F.lit(rg.get("key") or rg["mask"])))
+        else:
+            tags.append(_range_bucket(rg, ipnum, lambda v: F.lit(_ipv4_int(v)), str))
+    return ctx.tagged(a, base, group_cols, tags)
+
+
+@_handles("bucket", "geo_distance")
+def _geo_distance(ctx, a, base, group_cols):
+    # ES geo_distance agg: distance-from-origin range buckets over a
+    # haversine expression
+    g = a.params
+    pt = F.col(g["field"])
+    olat, olon = _parse_geo_point(g["origin"])
+    dist = _haversine_m(
+        pt.getField("lat"), pt.getField("lon"), F.lit(olat), F.lit(olon),
+    ) / F.lit(_DIST_UNITS_M[g.get("unit", "m")])
+    return ctx.tagged(a, base, group_cols, [
+        _range_bucket(rg, dist, lambda v: F.lit(float(v)), _num_label)
+        for rg in g["ranges"]
+    ])
+
+
+@_handles("bucket", "filters")
+def _filters(ctx, a, base, group_cols):
+    # ES filters agg: named sub-queries, each bucket = docs matching that
+    # filter (independent, overlapping allowed)
+    named = a.params["filters"]
+    return ctx.tagged(a, base, group_cols, [
+        F.when(F.coalesce(filter_expr(qd, ctx.id_col), F.lit(False)), F.lit(nm))
+        for nm, qd in sorted(named.items())
+    ])
+
+
+@_handles("bucket", "geohash_grid")
+def _geohash_grid(ctx, a, base, group_cols):
+    # ES geohash_grid: classic geohash cells at `precision` chars — the
+    # same one-groupBy shape as geotile_grid, bucket key from the
+    # unrolled Morton/base32 arithmetic (geohash_key)
+    pt = F.col(a.params["field"])
+    key = geohash_key(
+        pt.getField("lat"), pt.getField("lon"), int(a.params.get("precision", 5))
+    )
+    return ctx.keyed(a, base.withColumn(f"{a.name}_key", key), group_cols)
+
+
+@_handles("bucket", "geotile_grid")
+def _geotile_grid(ctx, a, base, group_cols):
+    # ES geotile_grid: Web-Mercator map tiles "z/x/y" at the given
+    # precision — pure floor math, whole-stage codegen, one groupBy.
+    pt = F.col(a.params["field"])
+    key = geotile_key(
+        pt.getField("lat"), pt.getField("lon"), int(a.params.get("precision", 7))
+    )
+    return ctx.keyed(a, base.withColumn(f"{a.name}_key", key), group_cols)
+
+
+@_handles("bucket", "auto_date_histogram")
+def _auto_date_histogram(ctx, a, base, group_cols):
+    # ES auto_date_histogram: pick the smallest calendar interval that
+    # keeps the bucket count within `buckets`. The unit ladder here is the
+    # calendar subset date_histogram supports (ES additionally uses
+    # sub-unit multiples like 5m/10m — documented narrowing). Interval
+    # choice reads min/max(ts) — a METADATA aggregate, like corpus_stats;
+    # the chosen unit is emitted as `{name}_interval` so consumers (and
+    # the oracle) see which rung was picked.
+    field = a.params["field"]
+    target = int(a.params.get("buckets", 10))
+    row = base.agg(F.min(field).alias("_a"), F.max(field).alias("_b")).first()
+    if row["_a"] is None:
+        raise ValueError(f"auto_date_histogram: no non-null values in {field!r}")
+    span = (row["_b"] - row["_a"]).total_seconds()
+    ladder = [
+        ("minute", 60.0), ("hour", 3600.0), ("day", 86400.0),
+        ("week", 7 * 86400.0), ("month", 30 * 86400.0),
+        ("quarter", 91 * 86400.0), ("year", 365 * 86400.0),
+    ]
+    unit = ladder[-1][0]
+    for u, sec in ladder:
+        if span / sec + 1 <= target:
+            unit = u
+            break
+    grouped = base.withColumn(
+        f"{a.name}_key", F.date_trunc(unit, F.col(field))
+    ).withColumn(f"{a.name}_interval", F.lit(unit))
+    return ctx.sub_or_count(
+        a.children, grouped, group_cols + [f"{a.name}_key", f"{a.name}_interval"]
+    )
+
+
+@_handles("bucket", "children")
+def _children(ctx, a, base, group_cols):
+    # ES children agg: switch the aggregation context from the current
+    # (parent) docs to their children of the given type — one equi-join
+    # on the parent id (the same key ES routes parent/child shards by).
+    # Parent-level bucket keys ride the join so sub-aggs stay per-bucket.
+    if ctx.background is None:
+        raise ValueError("children agg needs the full table (background)")
+    kids = ctx.background.filter(F.col(JOIN_NAME_COL) == F.lit(a.params["type"]))
+    kids = kids.drop(*[c for c in group_cols if c in kids.columns])
+    parent_side = base.select(
+        *group_cols, F.col(ctx.id_col).alias(JOIN_PARENT_COL)
+    ).distinct()
+    return ctx.sub_or_count(a.children, kids.join(parent_side, JOIN_PARENT_COL), group_cols)
+
+
+@_handles("bucket", "nested")
+def _nested(ctx, a, base, group_cols):
+    # ES nested agg: switch the aggregation context from parent docs to
+    # the nested objects under `path`. One explode (nested rows ≈ array
+    # elements — this is the ONLY place nested arrays unroll;
+    # filter-context nested queries stay HOF-only), replacing the array
+    # column with the element struct. Parent columns (incl. id_col) ride
+    # along, which is what makes reverse_nested a count_distinct instead
+    # of a join. doc_count = number of nested docs, like ES.
+    path = a.params["path"]
+    exploded = base.withColumn("__nested_elem", F.explode(F.col(path)))
+    children = a.children
+    if children:
+        # Sub-agg specs reference nested fields path-prefixed
+        # ("items.qty"), but downstream agg machinery (groupBy keys,
+        # window sorts) needs plain column names. Rewrite every prefixed
+        # name in the sub-aggs to a flat "items__qty" column and
+        # materialize exactly the referenced fields from the exploded
+        # element — projection stays minimal, names stay dot-free.
+        refs: set[str] = set()
+
+        def _rw(obj):
+            if isinstance(obj, dict):
+                return {_rw(k): _rw(v) for k, v in obj.items()}
+            if isinstance(obj, list):
+                return [_rw(v) for v in obj]
+            if isinstance(obj, str) and obj.startswith(path + "."):
+                refs.add(obj)
+                return obj.replace(".", "__")
+            return obj
+
+        children = _map_aggs(children, _rw)
+        for ref in sorted(refs):
+            col = F.col("__nested_elem")
+            for part in ref[len(path) + 1:].split("."):
+                col = col.getField(part)
+            exploded = exploded.withColumn(ref.replace(".", "__"), col)
+    return ctx.sub_or_count(children, exploded.drop("__nested_elem"), group_cols)
+
+
+@_handles("bucket", "global")
+def _global(ctx, a, base, group_cols):
+    # ES global agg: escapes the query's filter context — sub-aggs run
+    # over the WHOLE table (the `background` relation, the same
+    # unfiltered side significant_terms contrasts against).
+    if group_cols:
+        raise ValueError("global must be a top-level agg (ES likewise)")
+    gbase = ctx.background if ctx.background is not None else base
+    return ctx.sub_or_count(a.children, gbase, [])
+
+
+@_handles("bucket", "sampler", "diversified_sampler")
+def _sampler(ctx, a, base, group_cols):
+    # ES sampler: sub-aggs over the shard_size best-scoring docs per
+    # shard. Aggs here run in filter context (no scores), so the
+    # deterministic analogue is the shard_size LOWEST ids — a TakeOrdered,
+    # not a full sort (documented deviation; ES's own result is unstable
+    # across segment order). diversified_sampler additionally caps docs
+    # per field value BEFORE the size cap.
+    if group_cols:
+        raise ValueError(f"{a.type} must be a top-level agg")
+    sp = a.params or {}
+    shard_size = int(sp.get("shard_size", 100))
+    b = base
+    if ctx.id_col not in b.columns:
+        raise ValueError(
+            f"{a.type} orders its deterministic sample by {ctx.id_col!r}, "
+            f"which this table lacks — pass id_col= to search() "
+            f"(columns: {b.columns})"
+        )
+    if a.type == "diversified_sampler":
+        mpv = int(sp.get("max_docs_per_value", 1))
+        w = Window.partitionBy(sp["field"]).orderBy(F.asc(ctx.id_col))
+        b = (
+            b.withColumn("_dsrn", F.row_number().over(w))
+            .filter(F.col("_dsrn") <= mpv)
+            .drop("_dsrn")
+        )
+    return ctx.sub_or_count(a.children, b.orderBy(F.asc(ctx.id_col)).limit(shard_size), [])
+
+
+@_handles("bucket", "composite")
+def _composite(ctx, a, base, group_cols):
+    # ES composite agg: a FLAT multi-source bucket stream, paginated by
+    # after-key — the scale path for high-cardinality bucket sets (terms
+    # aggs keep global top-n state; composite streams buckets in key
+    # order, so each page is one groupBy + keyset predicate, same
+    # pushdown shape as search_after).
+    if group_cols:
+        raise ValueError("composite under a bucketing agg is not supported")
+    comp = a.params
+    size = int(comp.get("size", 10))
+    after = comp.get("after")
+    key_cols = []
+    b = base
+    for src in comp["sources"]:
+        (sname, sspec), = src.items()
+        (skind, sdef), = sspec.items()
+        if skind == "terms":
+            expr = F.col(sdef["field"])
+        elif skind == "histogram":
+            iv = float(sdef["interval"])
+            expr = F.floor(F.col(sdef["field"]) / F.lit(iv)) * F.lit(iv)
+        elif skind == "date_histogram":
+            expr = F.date_trunc(_date_unit(sdef), F.col(sdef["field"]))
+        else:
+            raise ValueError(f"composite source kind {skind!r}")
+        b = b.withColumn(sname, expr)
+        key_cols.append(sname)
+    out = _count_by(b, key_cols)
+    if after is not None:
+        # strictly-after in the composite key order (lexicographic over
+        # the sources) — the keyset predicate pushes down
+        missing_keys = [c for c in key_cols if c not in after]
+        if missing_keys:
+            raise ValueError(f"after is missing keys {missing_keys}")
+        pred = F.lit(False)
+        for i, c in enumerate(key_cols):
+            eq = F.lit(True)
+            for prev in key_cols[:i]:
+                eq = eq & (F.col(prev) == F.lit(after[prev]))
+            pred = pred | (eq & (F.col(c) > F.lit(after[c])))
+        out = out.filter(pred)
+    return out.orderBy(*[F.asc(c) for c in key_cols]).limit(size)
+
+
+@_handles("bucket", "adjacency_matrix")
+def _adjacency_matrix(ctx, a, base, group_cols):
+    # ES adjacency_matrix: doc counts for each named filter and each
+    # pairwise intersection ("a&b", ES's key format). The key set is
+    # static at query-build time, so this compiles to ONE conditional
+    # aggregation pass (count_if per key/pair — no explode, no shuffle
+    # beyond the single reduce) followed by an unpivot of the 1-row
+    # result; empty buckets are omitted like ES.
+    if group_cols:
+        raise ValueError("adjacency_matrix under a bucketing agg is not supported")
+    named = a.params["filters"]
+    keys = sorted(named)
+    conds = {
+        nm: F.coalesce(filter_expr(named[nm], ctx.id_col), F.lit(False)) for nm in keys
+    }
+    cells: list[tuple[str, Column]] = [(nm, conds[nm]) for nm in keys]
+    for i, k1 in enumerate(keys):
+        for k2 in keys[i + 1:]:
+            cells.append((f"{k1}&{k2}", conds[k1] & conds[k2]))
+    agg_row = base.agg(
+        *[F.count_if(c).alias(f"_c{i}") for i, (_, c) in enumerate(cells)]
+    )
+    pairs = F.array(*[
+        F.struct(F.lit(nm).alias("key"), F.col(f"_c{i}").alias("doc_count"))
+        for i, (nm, _) in enumerate(cells)
+    ])
+    return (
+        agg_row.select(F.explode(pairs).alias("b"))
+        .select("b.key", "b.doc_count")
+        .filter(F.col("doc_count") > 0)
+    )
+
+
+def _top_n(counted: DataFrame, group_cols: list, order: list, n: int) -> DataFrame:
+    """The first ``n`` bucket rows of ``order`` per enclosing bucket."""
+    w = Window.partitionBy(*group_cols).orderBy(*order)
+    return (
+        counted.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= n)
+        .drop("_rn")
+    )
+
+
+@_handles("bucket", "multi_terms")
+def _multi_terms(ctx, a, base, group_cols):
+    # ES multi_terms: composite bucket key over several fields, top-n by
+    # doc_count (desc) then keys asc — exactly the terms plan shape. Keys
+    # are emitted as one column per source field (ES emits a key array;
+    # columns are the relational equivalent).
+    fields = [te["field"] for te in a.params["terms"]]
+    buckets = _top_n(
+        _count_by(base, [*group_cols, *fields]), group_cols,
+        [F.desc("doc_count"), *[F.asc(f) for f in fields]],
+        int(a.params.get("size", 10)),
+    )
+    return ctx.restricted(a, base, buckets, group_cols, fields)
+
+
+@_handles("bucket", "rare_terms")
+def _rare_terms(ctx, a, base, group_cols):
+    # ES rare_terms: the LONG TAIL — values with doc_count ≤
+    # max_doc_count, ordered count asc then key asc. ES bounds memory
+    # with a CuckooFilter and is approximate; exact here (one groupBy +
+    # filter), the same exact-by-default policy as cardinality.
+    field = a.params["field"]
+    maxc = int(a.params.get("max_doc_count", 1))
+    buckets = _count_by(base, [*group_cols, field]).filter(F.col("doc_count") <= maxc)
+    return ctx.restricted(a, base, buckets, group_cols, [field])
+
+
+@_handles("bucket", "terms")
+def _terms(ctx, a, base, group_cols):
+    t = a.params
+    field = t["field"]
+    inc = t.get("include")
+    if isinstance(inc, dict):
+        # ES terms partitioning: a huge-cardinality terms agg pages as
+        # num_partitions disjoint requests, each seeing only the terms
+        # whose hash lands in its partition — the documented ES pattern
+        # for aggregating millions of keys without one response holding
+        # them all. Hash = the portable md5 (dedup.portable_hash60 on the
+        # stringified key), so the partition function is reproducible in
+        # the DuckDB twin and across engines; the predicate applies
+        # BEFORE the count shuffle, so each request aggregates
+        # ~1/num_partitions of the key space.
+        np_, pid = int(inc["num_partitions"]), int(inc["partition"])
+        if not (np_ >= 2 and 0 <= pid < np_):
             raise ValueError(
-                "adjacency_matrix under a bucketing agg is not supported"
+                f"terms include needs 0 <= partition < num_partitions "
+                f"(>= 2); got partition={pid} num_partitions={np_}"
             )
-        named = spec["adjacency_matrix"]["filters"]
-        keys = sorted(named)
-        conds = {
-            nm: F.coalesce(filter_expr(named[nm], id_col), F.lit(False))
-            for nm in keys
-        }
-        cells: list[tuple[str, Column]] = [(nm, conds[nm]) for nm in keys]
-        for i, a in enumerate(keys):
-            for bnm in keys[i + 1:]:
-                cells.append((f"{a}&{bnm}", conds[a] & conds[bnm]))
-        agg_row = base.agg(
-            *[F.count_if(c).alias(f"_c{i}") for i, (_, c) in enumerate(cells)]
-        )
-        pairs = F.array(
-            *[
-                F.struct(
-                    F.lit(nm).alias("key"),
-                    F.col(f"_c{i}").alias("doc_count"),
-                )
-                for i, (nm, _) in enumerate(cells)
-            ]
-        )
-        return (
-            agg_row.select(F.explode(pairs).alias("b"))
-            .select("b.key", "b.doc_count")
-            .filter(F.col("doc_count") > 0)
-        )
-    if "date_range" in spec:
-        # ES date_range agg: same independent-range semantics as range
-        # (from inclusive, to exclusive, overlaps allowed), bounds given
-        # as date strings; default keys use the raw bound strings.
-        r = spec["date_range"]
-        field = r["field"]
-        tagged = []
-        for rg in r["ranges"]:
-            frm, to = rg.get("from"), rg.get("to")
-            key = rg.get("key") or (
-                f"{'*' if frm is None else frm}-{'*' if to is None else to}"
-            )
-            cond = F.lit(True)
-            if frm is not None:
-                cond = cond & (F.col(field) >= F.lit(frm).cast("timestamp"))
-            if to is not None:
-                cond = cond & (F.col(field) < F.lit(to).cast("timestamp"))
-            tagged.append(F.when(cond, F.lit(key)))
-        return _tagged_buckets(tagged)
-    if "auto_date_histogram" in spec:
-        # ES auto_date_histogram: pick the smallest calendar interval that
-        # keeps the bucket count within `buckets`. The unit ladder here is
-        # the calendar subset date_histogram supports (ES additionally
-        # uses sub-unit multiples like 5m/10m — documented narrowing).
-        # Interval choice reads min/max(ts) — a METADATA aggregate, like
-        # corpus_stats; the chosen unit is emitted as `{name}_interval`
-        # so consumers (and the oracle) see which rung was picked.
-        h = spec["auto_date_histogram"]
-        field = h["field"]
-        target = int(h.get("buckets", 10))
-        row = base.agg(
-            F.min(field).alias("_a"), F.max(field).alias("_b")
-        ).first()
-        if row["_a"] is None:
-            raise ValueError(
-                f"auto_date_histogram: no non-null values in {field!r}"
-            )
-        span = (row["_b"] - row["_a"]).total_seconds()
-        ladder = [
-            ("minute", 60.0), ("hour", 3600.0), ("day", 86400.0),
-            ("week", 7 * 86400.0), ("month", 30 * 86400.0),
-            ("quarter", 91 * 86400.0), ("year", 365 * 86400.0),
-        ]
-        unit = ladder[-1][0]
-        for u, sec in ladder:
-            if span / sec + 1 <= target:
-                unit = u
-                break
-        grouped = base.withColumn(
-            f"{name}_key", F.date_trunc(unit, F.col(field))
-        ).withColumn(f"{name}_interval", F.lit(unit))
-        sub = spec.get("aggs")
-        if sub:
-            return _recurse(
-                grouped, sub,
-                group_cols + [f"{name}_key", f"{name}_interval"],
-            )
-        return grouped.groupBy(
-            *group_cols, f"{name}_key", f"{name}_interval"
-        ).agg(F.count(F.lit(1)).alias("doc_count"))
-    if "multi_terms" in spec:
-        # ES multi_terms: composite bucket key over several fields, top-n
-        # by doc_count (desc) then keys asc — one groupBy over the field
-        # tuple + one bucket-level window, exactly the terms plan shape.
-        # Keys are emitted as one column per source field (ES emits a
-        # key array; columns are the relational equivalent).
-        t = spec["multi_terms"]
-        fields = [te["field"] for te in t["terms"]]
-        topn = int(t.get("size", 10))
-        counted = base.groupBy(*group_cols, *fields).agg(
-            F.count(F.lit(1)).alias("doc_count")
-        )
-        w = Window.partitionBy(*group_cols).orderBy(
-            F.desc("doc_count"), *[F.asc(f) for f in fields]
-        )
-        buckets = (
-            counted.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= topn)
-            .drop("_rn")
-        )
-        sub = spec.get("aggs")
-        if sub:
-            keys = buckets.select(*group_cols, *fields)
-            restricted = base.join(
-                F.broadcast(keys), [*group_cols, *fields], "left_semi"
-            )
-            return _recurse(restricted, sub, group_cols + fields)
-        return buckets
-    if "rare_terms" in spec:
-        # ES rare_terms: the LONG TAIL — values with doc_count ≤
-        # max_doc_count, ordered count asc then key asc. ES bounds memory
-        # with a CuckooFilter and is approximate; exact here (one groupBy
-        # + filter), the same exact-by-default policy as cardinality.
-        rt = spec["rare_terms"]
-        field = rt["field"]
-        maxc = int(rt.get("max_doc_count", 1))
-        counted = base.groupBy(*group_cols, field).agg(
-            F.count(F.lit(1)).alias("doc_count")
-        )
-        buckets = counted.filter(F.col("doc_count") <= maxc)
-        sub = spec.get("aggs")
-        if sub:
-            keys = buckets.select(*group_cols, field)
-            restricted = base.join(
-                F.broadcast(keys), [*group_cols, field], "left_semi"
-            )
-            return _recurse(restricted, sub, group_cols + [field])
-        return buckets
-    if "global" in spec:
-        # ES global agg: escapes the query's filter context — sub-aggs
-        # run over the WHOLE table (the `background` relation, the same
-        # unfiltered side significant_terms contrasts against).
-        if group_cols:
-            raise ValueError("global must be a top-level agg (ES likewise)")
-        gbase = background if background is not None else base
-        sub = spec.get("aggs")
-        if sub:
-            return _recurse(gbase, sub, [])
-        return gbase.agg(F.count(F.lit(1)).alias("doc_count"))
-    if "sampler" in spec or "diversified_sampler" in spec:
-        # ES sampler: sub-aggs over the shard_size best-scoring docs per
-        # shard. Aggs here run in filter context (no scores), so the
-        # deterministic analogue is the shard_size LOWEST ids — a
-        # TakeOrdered, not a full sort (documented deviation; ES's own
-        # result is unstable across segment order). diversified_sampler
-        # additionally caps docs per field value BEFORE the size cap.
-        kind = "sampler" if "sampler" in spec else "diversified_sampler"
-        if group_cols:
-            raise ValueError(f"{kind} must be a top-level agg")
-        sp = spec[kind] or {}
-        shard_size = int(sp.get("shard_size", 100))
-        b = base
-        if id_col not in b.columns:
-            raise ValueError(
-                f"{kind} orders its deterministic sample by {id_col!r}, "
-                f"which this table lacks — pass id_col= to search() "
-                f"(columns: {b.columns})"
-            )
-        if kind == "diversified_sampler":
-            fld = sp["field"]
-            mpv = int(sp.get("max_docs_per_value", 1))
-            w = Window.partitionBy(fld).orderBy(F.asc(id_col))
-            b = (
-                b.withColumn("_dsrn", F.row_number().over(w))
-                .filter(F.col("_dsrn") <= mpv)
-                .drop("_dsrn")
-            )
-        b = b.orderBy(F.asc(id_col)).limit(shard_size)
-        sub = spec.get("aggs")
-        if sub:
-            return _recurse(b, sub, [])
-        return b.agg(F.count(F.lit(1)).alias("doc_count"))
-    if "median_absolute_deviation" in spec:
-        # ES MAD: median(|x − median(x)|) — two aggregate passes (the
-        # inner median is itself an aggregate, which no single pass can
-        # nest); per-bucket medians broadcast back onto the rows.
-        # Exact by default, approx: true → percentile_approx.
-        mad = spec["median_absolute_deviation"]
-        f = mad["field"]
-        fn = F.percentile_approx if mad.get("approx") else F.percentile
-        meds = base.groupBy(*group_cols).agg(
-            fn(F.col(f), F.lit(0.5)).alias("_med")
-        )
-        joined = (
-            base.join(F.broadcast(meds), group_cols)
-            if group_cols else base.crossJoin(F.broadcast(meds))
-        )
-        return joined.groupBy(*group_cols).agg(
-            fn(F.abs(F.col(f) - F.col("_med")), F.lit(0.5)).alias("value"),
-            F.count(F.lit(1)).alias("doc_count"),
-        )
-    if "string_stats" in spec:
-        # ES string_stats: count/min_length/max_length/avg_length +
-        # Shannon entropy (bits) over the CHARACTER distribution. Length
-        # stats are one pass; entropy is a char-explode + two bucket-level
-        # aggregates (rows ∝ total characters, the honest lower bound).
-        ss = spec["string_stats"]
-        f = ss["field"]
-        lens = base.groupBy(*group_cols).agg(
-            F.count(f).alias("count"),
-            F.min(F.length(f)).alias("min_length"),
-            F.max(F.length(f)).alias("max_length"),
-            F.avg(F.length(f)).alias("avg_length"),
-        )
-        chars = base.select(
-            *group_cols, F.explode(F.split(F.col(f), "")).alias("_ch")
-        ).filter(F.col("_ch") != "")
-        freq = chars.groupBy(*group_cols, "_ch").agg(
-            F.count(F.lit(1)).alias("_c")
-        )
-        tot = freq.groupBy(*group_cols).agg(F.sum("_c").alias("_t"))
-        j = (
-            freq.join(F.broadcast(tot), group_cols)
-            if group_cols else freq.crossJoin(F.broadcast(tot))
-        )
-        ent = j.groupBy(*group_cols).agg(
-            (-F.sum(
-                (F.col("_c") / F.col("_t"))
-                * F.log2(F.col("_c") / F.col("_t"))
-            )).alias("entropy")
-        )
-        if group_cols:
-            return lens.join(ent, group_cols)
-        return lens.crossJoin(ent)
-    if "missing" in spec:
-        # ES missing agg: docs lacking a value for the field
-        field = spec["missing"]["field"]
-        return base.filter(F.col(field).isNull()).groupBy(*group_cols).agg(
-            F.count(F.lit(1)).alias("doc_count")
-        ) if group_cols else base.agg(
-            F.count_if(F.col(field).isNull()).alias("doc_count")
-        )
-    if "significant_text" in spec:
-        # ES significant_text: significant_terms semantics over text
-        # RE-ANALYZED at query time (which the branch below already does
-        # for analyzed fields — this engine never needs fielddata), plus
-        # the filter_duplicate_text option: drop exact-duplicate
-        # foreground texts before counting, ES's guard against a
-        # boilerplate page dominating the foreground sample. One md5
-        # dedup over the FOREGROUND only (a query-sized set, not the
-        # corpus); background is never deduped, as in ES.
-        st_ = dict(spec["significant_text"])
-        if st_.pop("filter_duplicate_text", False):
-            # survivor = the duplicate group's MIN id (the documented
-            # contract the oracle's min(doc_id) mirrors) — ordering by
-            # base.columns[0] would be nondeterministic on tables whose
-            # first column isn't the unique id (review r6c)
-            w_ = Window.partitionBy(
-                F.md5(F.col(st_["field"]).cast("string"))
-            ).orderBy(F.col(id_col))
-            base = (
-                base.withColumn("_rn_sig", F.row_number().over(w_))
-                .filter(F.col("_rn_sig") == 1)
-                .drop("_rn_sig")
-            )
-        st_["_analyzed"] = True  # a text field analyzes even if ≠ text_col
-        spec = {"significant_terms": st_}
-    if "significant_terms" in spec:
-        # ES significant_terms: terms over-represented in the query's
-        # foreground set vs the whole-index background, scored with ES's
-        # default JLH = (fg% − bg%) · (fg% / bg%), keeping fg% > bg%.
-        # Percentages are DOC frequencies (a doc counts once per term).
-        # field == text_col contrasts analyzed tokens (the classic use);
-        # any other field contrasts raw keyword values. Plan shape: two
-        # grouped doc-frequency counts joined on term (fg ⊂ bg so the
-        # join is inner), scalar totals broadcast via a 1-row crossJoin —
-        # no per-row Python, no driver collect.
-        if group_cols:
-            raise ValueError(
-                "significant_terms under a bucketing agg is not supported"
-            )
-        if background is None:
-            raise ValueError(
-                "significant_terms needs the unfiltered table as background "
-                "(call through dsl.search)"
-            )
-        st = spec["significant_terms"]
-        field = st["field"]
-        analyzed = bool(st.get("_analyzed")) or field == text_col
-        topn = int(st.get("size", 10))
-        min_doc = int(st.get("min_doc_count", 3))  # ES default 3
+        from .dedup import portable_hash60
 
-        def doc_terms(df: DataFrame) -> DataFrame:
-            if analyzed:
-                from .analyze import terms_array
+        base = base.filter(
+            portable_hash60(F.col(field).cast("string")) % F.lit(np_) == F.lit(pid)
+        )
+    elif isinstance(inc, str):
+        # ES include as a string is a WHOLE-TERM regex (Lucene anchors
+        # it) — anchor explicitly, rlike is substring-based
+        base = base.filter(F.col(field).rlike(f"^(?:{inc})$"))
+    elif inc is not None:
+        base = base.filter(F.col(field).isin(_as_list(inc)))
+    exc = t.get("exclude")
+    if exc is not None:
+        if isinstance(exc, str):
+            base = base.filter(~F.col(field).rlike(f"^(?:{exc})$"))
+        else:
+            base = base.filter(~F.col(field).isin(_as_list(exc)))
+    buckets = _top_n(
+        _count_by(base, [*group_cols, field]), group_cols,
+        [F.desc("doc_count"), F.asc(field)], int(t.get("size", 10)),
+    )
+    return ctx.restricted(a, base, buckets, group_cols, [field])
 
-                return df.select(
-                    F.explode(
-                        F.array_distinct(terms_array(F.col(field)))
-                    ).alias("term")
-                )
-            return df.select(F.col(field).alias("term")).where(
-                F.col("term").isNotNull()
-            )
 
-        fg = doc_terms(base).groupBy("term").agg(
-            F.count(F.lit(1)).alias("doc_count")
-        )
-        bg = doc_terms(background).groupBy("term").agg(
-            F.count(F.lit(1)).alias("bg_count")
-        )
-        fg_tot = base.agg(F.count(F.lit(1)).alias("_fg_tot"))
-        bg_tot = background.agg(F.count(F.lit(1)).alias("_bg_tot"))
-        fgp = F.col("doc_count") / F.col("_fg_tot")
-        bgp = F.col("bg_count") / F.col("_bg_tot")
-        return (
-            fg.join(bg, "term")
-            .crossJoin(F.broadcast(fg_tot))
-            .crossJoin(F.broadcast(bg_tot))
-            .filter(F.col("doc_count") >= F.lit(min_doc))
-            .withColumn("score", F.round((fgp - bgp) * (fgp / bgp), 6))
-            .filter(F.col("score") > 0)
-            .select("term", "doc_count", "bg_count", "score")
-            .orderBy(F.desc("score"), F.asc("term"))
-            .limit(topn)
-        )
-    if "top_hits" in spec:
-        # per-bucket example documents (ES top_hits): row_number window
-        # over the enclosing bucket keys — one shuffle on the bucket key,
-        # rank-limited in place, never a per-bucket collect. Tie order on
-        # equal sort keys is unspecified, as in ES — pass a total sort
-        # for deterministic pages.
-        th = spec["top_hits"]
-        size = int(th.get("size", 3))
-        sort_cols = []
-        for s in _as_list(th.get("sort")):
-            (f_, sp), = s.items() if isinstance(s, dict) else ((s, "asc"),)
-            order = sp["order"] if isinstance(sp, dict) else sp
-            sort_cols.append(
-                F.col(f_).desc() if order == "desc" else F.col(f_).asc()
-            )
-        if not sort_cols:
-            sort_cols = [F.col(c).asc() for c in base.columns[:1]]
-        w = Window.partitionBy(*group_cols).orderBy(*sort_cols)
-        out = (
-            base.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= size)
-            .drop("_rn")
-        )
-        src = th.get("_source")
-        if isinstance(src, list) and src:
-            out = out.select(
-                *group_cols, *[c for c in src if c not in group_cols]
-            )
-        return out
-    if "terms" in spec:
-        t = spec["terms"]
-        field, topn = t["field"], int(t.get("size", 10))
-        inc = t.get("include")
-        if isinstance(inc, dict):
-            # ES terms partitioning: a huge-cardinality terms agg pages
-            # as num_partitions disjoint requests, each seeing only the
-            # terms whose hash lands in its partition — the documented ES
-            # pattern for aggregating millions of keys without one
-            # response holding them all. Hash = the portable md5
-            # (dedup.portable_hash60 on the stringified key), so the
-            # partition function is reproducible in the DuckDB twin and
-            # across engines; the predicate applies BEFORE the count
-            # shuffle, so each request aggregates ~1/num_partitions of
-            # the key space.
-            np_, pid = int(inc["num_partitions"]), int(inc["partition"])
-            if not (np_ >= 2 and 0 <= pid < np_):
-                raise ValueError(
-                    f"terms include needs 0 <= partition < num_partitions "
-                    f"(>= 2); got partition={pid} num_partitions={np_}"
-                )
-            from .dedup import portable_hash60
+@_handles("bucket", "top_hits")
+def _top_hits(ctx, a, base, group_cols):
+    # per-bucket example documents (ES top_hits): row_number window over
+    # the enclosing bucket keys — one shuffle on the bucket key,
+    # rank-limited in place, never a per-bucket collect. Tie order on
+    # equal sort keys is unspecified, as in ES — pass a total sort for
+    # deterministic pages.
+    th = a.params
+    sort_cols = _sort_cols(th.get("sort")) or [
+        F.col(c).asc() for c in base.columns[:1]
+    ]
+    out = _top_n(base, group_cols, sort_cols, int(th.get("size", 3)))
+    src = th.get("_source")
+    if isinstance(src, list) and src:
+        out = out.select(*group_cols, *[c for c in src if c not in group_cols])
+    return out
 
-            base = base.filter(
-                portable_hash60(F.col(field).cast("string")) % F.lit(np_)
-                == F.lit(pid)
+
+@_handles("bucket", "missing")
+def _missing(ctx, a, base, group_cols):
+    # ES missing agg: docs lacking a value for the field
+    null = F.col(a.params["field"]).isNull()
+    if group_cols:
+        return _count_by(base.filter(null), group_cols)
+    return base.agg(F.count_if(null).alias("doc_count"))
+
+
+@_handles("bucket", "median_absolute_deviation")
+def _median_absolute_deviation(ctx, a, base, group_cols):
+    # ES MAD: median(|x − median(x)|) — two aggregate passes (the inner
+    # median is itself an aggregate, which no single pass can nest);
+    # per-bucket medians broadcast back onto the rows. Exact by default,
+    # approx: true → percentile_approx.
+    f = a.params["field"]
+    fn = F.percentile_approx if a.params.get("approx") else F.percentile
+    meds = base.groupBy(*group_cols).agg(fn(F.col(f), F.lit(0.5)).alias("_med"))
+    joined = (
+        base.join(F.broadcast(meds), group_cols)
+        if group_cols else base.crossJoin(F.broadcast(meds))
+    )
+    return _count_by(
+        joined, group_cols,
+        fn(F.abs(F.col(f) - F.col("_med")), F.lit(0.5)).alias("value"),
+    )
+
+
+@_handles("bucket", "string_stats")
+def _string_stats(ctx, a, base, group_cols):
+    # ES string_stats: count/min_length/max_length/avg_length + Shannon
+    # entropy (bits) over the CHARACTER distribution. Length stats are
+    # one pass; entropy is a char-explode + two bucket-level aggregates
+    # (rows ∝ total characters, the honest lower bound).
+    f = a.params["field"]
+    lens = base.groupBy(*group_cols).agg(
+        F.count(f).alias("count"),
+        F.min(F.length(f)).alias("min_length"),
+        F.max(F.length(f)).alias("max_length"),
+        F.avg(F.length(f)).alias("avg_length"),
+    )
+    chars = base.select(
+        *group_cols, F.explode(F.split(F.col(f), "")).alias("_ch")
+    ).filter(F.col("_ch") != "")
+    freq = chars.groupBy(*group_cols, "_ch").agg(F.count(F.lit(1)).alias("_c"))
+    tot = freq.groupBy(*group_cols).agg(F.sum("_c").alias("_t"))
+    j = (
+        freq.join(F.broadcast(tot), group_cols)
+        if group_cols else freq.crossJoin(F.broadcast(tot))
+    )
+    ent = j.groupBy(*group_cols).agg(
+        (-F.sum(
+            (F.col("_c") / F.col("_t")) * F.log2(F.col("_c") / F.col("_t"))
+        )).alias("entropy")
+    )
+    return lens.join(ent, group_cols) if group_cols else lens.crossJoin(ent)
+
+
+@_handles("bucket", "significant_terms")
+def _significant_terms(ctx, a, base, group_cols, analyzed=False):
+    # ES significant_terms: terms over-represented in the query's
+    # foreground set vs the whole-index background, scored with ES's
+    # default JLH = (fg% − bg%) · (fg% / bg%), keeping fg% > bg%.
+    # Percentages are DOC frequencies (a doc counts once per term).
+    # field == text_col contrasts analyzed tokens (the classic use); any
+    # other field contrasts raw keyword values. Plan shape: two grouped
+    # doc-frequency counts joined on term (fg ⊂ bg so the join is inner),
+    # scalar totals broadcast via a 1-row crossJoin — no per-row Python,
+    # no driver collect.
+    if group_cols:
+        raise ValueError("significant_terms under a bucketing agg is not supported")
+    if ctx.background is None:
+        raise ValueError(
+            "significant_terms needs the unfiltered table as background "
+            "(call through dsl.search)"
+        )
+    field = a.params["field"]
+    analyzed = analyzed or field == ctx.text_col
+    topn = int(a.params.get("size", 10))
+    min_doc = int(a.params.get("min_doc_count", 3))  # ES default 3
+
+    def doc_terms(df: DataFrame) -> DataFrame:
+        if analyzed:
+            from .analyze import terms_array
+
+            return df.select(
+                F.explode(F.array_distinct(terms_array(F.col(field)))).alias("term")
             )
-        elif isinstance(inc, str):
-            # ES include as a string is a WHOLE-TERM regex (Lucene
-            # anchors it) — anchor explicitly, rlike is substring-based
-            base = base.filter(F.col(field).rlike(f"^(?:{inc})$"))
-        elif inc is not None:
-            base = base.filter(F.col(field).isin(_as_list(inc)))
-        exc = t.get("exclude")
-        if exc is not None:
-            if isinstance(exc, str):
-                base = base.filter(~F.col(field).rlike(f"^(?:{exc})$"))
-            else:
-                base = base.filter(~F.col(field).isin(_as_list(exc)))
-        counted = base.groupBy(*group_cols, field).agg(
-            F.count(F.lit(1)).alias("doc_count")
+        return df.select(F.col(field).alias("term")).where(F.col("term").isNotNull())
+
+    fg = _count_by(doc_terms(base), ["term"])
+    bg = doc_terms(ctx.background).groupBy("term").agg(
+        F.count(F.lit(1)).alias("bg_count")
+    )
+    fg_tot = base.agg(F.count(F.lit(1)).alias("_fg_tot"))
+    bg_tot = ctx.background.agg(F.count(F.lit(1)).alias("_bg_tot"))
+    fgp = F.col("doc_count") / F.col("_fg_tot")
+    bgp = F.col("bg_count") / F.col("_bg_tot")
+    return (
+        fg.join(bg, "term")
+        .crossJoin(F.broadcast(fg_tot))
+        .crossJoin(F.broadcast(bg_tot))
+        .filter(F.col("doc_count") >= F.lit(min_doc))
+        .withColumn("score", F.round((fgp - bgp) * (fgp / bgp), 6))
+        .filter(F.col("score") > 0)
+        .select("term", "doc_count", "bg_count", "score")
+        .orderBy(F.desc("score"), F.asc("term"))
+        .limit(topn)
+    )
+
+
+@_handles("bucket", "significant_text")
+def _significant_text(ctx, a, base, group_cols):
+    # ES significant_text: significant_terms over text RE-ANALYZED at
+    # query time (this engine never needs fielddata), plus
+    # filter_duplicate_text: drop exact-duplicate foreground texts before
+    # counting, ES's guard against a boilerplate page dominating the
+    # foreground sample. One md5 dedup over the FOREGROUND only (a
+    # query-sized set, not the corpus); background is never deduped, as
+    # in ES. The survivor is the duplicate group's MIN id (the contract
+    # the oracle's min(doc_id) mirrors).
+    if a.params.get("filter_duplicate_text"):
+        w_ = Window.partitionBy(
+            F.md5(F.col(a.params["field"]).cast("string"))
+        ).orderBy(F.col(ctx.id_col))
+        base = (
+            base.withColumn("_rn_sig", F.row_number().over(w_))
+            .filter(F.col("_rn_sig") == 1)
+            .drop("_rn_sig")
         )
-        w = Window.partitionBy(*group_cols).orderBy(
-            F.desc("doc_count"), F.asc(field)
-        )
-        buckets = (
-            counted.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= topn)
-            .drop("_rn")
-        )
-        sub = spec.get("aggs")
-        if sub:
-            # sub-aggs run over only the docs of the surviving top-n
-            # buckets: semi join on the (tiny) bucket-key set, broadcast
-            keys = buckets.select(*group_cols, field)
-            restricted = base.join(
-                F.broadcast(keys), [*group_cols, field], "left_semi"
-            )
-            return _recurse(restricted, sub, group_cols + [field])
-        return buckets
-    raise ValueError(f"unsupported agg: {sorted(spec)}")
+    return _significant_terms(ctx, a, base, group_cols, analyzed=True)
 
 
 def delete_by_query(
@@ -4686,11 +4622,7 @@ def scroll(
     size = int(body.get("size", 10))
 
     def sort_vals(row) -> list:
-        vals = []
-        for s in sort:
-            (field, spec), = s.items() if isinstance(s, dict) else ((s, "asc"),)
-            vals.append(row[field])
-        return vals
+        return [row[_sort_spec(s)[0]] for s in sort]
 
     after = None
     while True:

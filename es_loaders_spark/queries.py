@@ -14,6 +14,10 @@ SQL twins; hyperplane LSH serializes its seeded planes into the SQL.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -44,6 +48,25 @@ def q(name: str, oracle: str | None = None, extra: bool = False):
         return fn
 
     return deco
+
+
+_FIXTURES: dict = {}
+
+
+def _memo(kind: str, sf_dir: str, build):
+    """``build()`` once per (kind, sf_dir): the built indexes and trained
+    centroids that several registry rows share."""
+    if (kind, sf_dir) not in _FIXTURES:
+        _FIXTURES[kind, sf_dir] = build()
+    return _FIXTURES[kind, sf_dir]
+
+
+def _fixture_dir(prefix: str) -> str:
+    """A fresh temporary dir for a fixture index, removed at interpreter
+    exit."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, True)
+    return d
 
 
 # ---------------------------------------------------------------------------
@@ -462,7 +485,7 @@ def dsl_date_histogram(spark, sf_dir):
        FROM b WINDOW w AS (ORDER BY per_day_key)""",
 )
 def dsl_pipeline_aggs(spark, sf_dir):
-    """ES parent pipeline aggs (dsl.py _apply_pipelines): derivative,
+    """ES parent pipeline aggs (dsl.py parent pipeline handlers): derivative,
     cumulative_sum and moving_fn riding one date_histogram▸sum pass —
     window functions over the REDUCED bucket frame (buckets ≪ docs),
     ordered by the bucket key exactly as ES orders histogram buckets.
@@ -516,7 +539,7 @@ def dsl_pipeline_aggs(spark, sf_dir):
 )
 def dsl_bucket_script_sort(spark, sf_dir):
     """ES bucket_script + bucket_selector + bucket_sort (dsl.py
-    _compile_script / _apply_pipelines): a safe recursive-descent parse
+    _compile_script / the bucket_script handler): a safe recursive-descent parse
     of the painless arithmetic the ES docs demonstrate — params.x
     references, + - * /, comparisons — straight into Catalyst
     expressions (no eval), then selector-filter and sort-truncate over
@@ -1387,9 +1410,8 @@ def term_filter_indexed(spark, sf_dir):
     (posting-list lookup with parquet term pushdown), not a token scan."""
     from .merge import merged_postings
 
-    _ensure_index(spark, sf_dir)
     return (
-        merged_postings(spark, _WAND_CACHE[sf_dir], ["spark"])
+        merged_postings(spark, _ensure_index(spark, sf_dir), ["spark"])
         .select("doc_id")
         .distinct()
     )
@@ -1402,8 +1424,7 @@ def term_filter_indexed(spark, sf_dir):
 def term_count_indexed(spark, sf_dir):
     """A6 filtered count answered from the term-stats table alone —
     the O(1) metadata lookup ES does for count queries."""
-    _ensure_index(spark, sf_dir)
-    tdf = spark.read.parquet(f"{_WAND_CACHE[sf_dir]}/terms")
+    tdf = spark.read.parquet(f"{_ensure_index(spark, sf_dir)}/terms")
     return tdf.filter(F.col("term") == "spark").select(
         F.col("df").cast("long").alias("n")
     )
@@ -1453,8 +1474,7 @@ def phrase_match_indexed(spark, sf_dir):
     r01 gap #1; ES answers phrases from Lucene's positional index)."""
     from .phrase import phrase_docs
 
-    _ensure_index(spark, sf_dir)
-    return phrase_docs(spark, _WAND_CACHE[sf_dir], "the data")
+    return phrase_docs(spark, _ensure_index(spark, sf_dir), "the data")
 
 
 ORACLES["phrase_match_indexed"] = EXTRA_ORACLES["phrase_match"]
@@ -1488,14 +1508,13 @@ def phrase_prefix_indexed(spark, sf_dir):
     matched positionally — all from compressed postings, no text scan."""
     from . import dsl
 
-    _ensure_index(spark, sf_dir)
     body = {"query": {"match_phrase_prefix": {"text": "the s"}}, "size": 50000,
             "_source": ["doc_id"]}
     return dsl.search(
         spark,
         _T(spark, sf_dir, "documents"),
         body,
-        index_dir=_WAND_CACHE[sf_dir],
+        index_dir=_ensure_index(spark, sf_dir),
     )
 
 
@@ -2084,22 +2103,18 @@ def bm25_topk_filtered_q(spark, sf_dir):
     )
 
 
-_WAND_CACHE: dict = {}
-
-
 def _ensure_index(spark, sf_dir):
     """Build (once per sf_dir) the sharded compressed index + merge."""
-    import tempfile
-
     from .build import build_index
     from .merge import merge_index
 
-    if sf_dir not in _WAND_CACHE:
-        d = tempfile.mkdtemp(prefix="wand_idx_")
+    def build():
+        d = _fixture_dir("wand_idx_")
         build_index(spark, _T(spark, sf_dir, "documents"), d, n_shards=8)
         merge_index(spark, d, n_salts=4, n_buckets=8)
-        _WAND_CACHE[sf_dir] = d
-    return _WAND_CACHE[sf_dir]
+        return d
+
+    return _memo("wand", sf_dir, build)
 
 
 @q("bm25_topk_wand", bm25_topk_oracle_sql(BM25_QUERY, k=BM25_K))
@@ -2497,45 +2512,36 @@ def ann_lsh(spark, sf_dir):
 ORACLES["ann_lsh"] = _ann_lsh_oracle_sql()
 
 
-_ANN_IDX_CACHE: dict = {}
-
-
 @q("ann_lsh_indexed", None, extra=True)  # twin of ann_lsh (same SQL oracle)
 def ann_lsh_indexed(spark, sf_dir):
     """ANN over the PRE-BUCKETED table (similarity.build_ann_index):
     bucket is a partition column computed at ingest, so each probe is a
     partition-pruned scan — the 100 TB path VERDICT r01 flagged as
     missing. Same planes/probes as ann_lsh → identical results."""
-    import tempfile
-
     from .similarity import build_ann_index, lsh_topk_indexed
 
-    if sf_dir not in _ANN_IDX_CACHE:
-        d = tempfile.mkdtemp(prefix="ann_idx_")
+    def build():
+        d = _fixture_dir("ann_idx_")
         emb = _T(spark, sf_dir, "embeddings")
         dim = len(emb.select("embedding").first()["embedding"])
         build_ann_index(emb, d, dim=dim)
-        _ANN_IDX_CACHE[sf_dir] = d
-    return lsh_topk_indexed(spark, _ANN_IDX_CACHE[sf_dir], _query_vec(spark, sf_dir), k=20)
+        return d
+
+    d = _memo("ann", sf_dir, build)
+    return lsh_topk_indexed(spark, d, _query_vec(spark, sf_dir), k=20)
 
 
 EXTRA_ORACLES["ann_lsh_indexed"] = _ann_lsh_oracle_sql()
 
 
-_IVF_CACHE: dict = {}
-
-
 def _ivf_centroids(spark, sf_dir):
     """Train (once per sf_dir) the deterministic spherical-k-means coarse
     quantizer over the embeddings table."""
-    if sf_dir not in _IVF_CACHE:
-        from .similarity import train_ivf_centroids
+    from .similarity import train_ivf_centroids
 
-        emb = _T(spark, sf_dir, "embeddings")
-        _IVF_CACHE[sf_dir] = train_ivf_centroids(
-            emb, n_centroids=8, n_iters=3, seed=42
-        )
-    return _IVF_CACHE[sf_dir]
+    return _memo("ivf", sf_dir, lambda: train_ivf_centroids(
+        _T(spark, sf_dir, "embeddings"), n_centroids=8, n_iters=3, seed=42
+    ))
 
 
 @q(
@@ -3621,24 +3627,20 @@ _CHAIN = AnalysisChain.from_config(CHAIN_CFG)
 # surface forms exercise all three stages: "the" drops (stop), "tbl"
 # maps (synonym), "queries"/"sparks" stem to index terms
 CHAIN_QUERY = "the tbl queries sparks data"
-_CHAIN_IDX_CACHE: dict = {}
-
-
 def _ensure_chain_index(spark, sf_dir):
     """Build (once per sf_dir) the compressed index WITH the analysis
     chain recorded in stats.json (build_index(analysis=...))."""
-    import tempfile
-
     from .build import build_index
 
-    if sf_dir not in _CHAIN_IDX_CACHE:
-        d = tempfile.mkdtemp(prefix="chain_idx_")
+    def build():
+        d = _fixture_dir("chain_idx_")
         build_index(
             spark, _T(spark, sf_dir, "documents"), d, n_shards=8,
             analysis=CHAIN_CFG,
         )
-        _CHAIN_IDX_CACHE[sf_dir] = d
-    return _CHAIN_IDX_CACHE[sf_dir]
+        return d
+
+    return _memo("chain", sf_dir, build)
 
 
 @q(
@@ -3798,24 +3800,20 @@ def dsl_combined_fields(spark, sf_dir):
     return dsl.search(spark, _T(spark, sf_dir, "documents"), body)
 
 
-_MULTI_IDX_CACHE: dict = {}
-
-
 def _ensure_split_indexes(spark, sf_dir):
     """Two indexes over disjoint sub-corpora (lang='en' vs the rest) —
     the multi-index search fixture, built once per sf_dir."""
-    import tempfile
-
     from .build import build_index
 
-    if sf_dir not in _MULTI_IDX_CACHE:
+    def build():
         docs = _T(spark, sf_dir, "documents")
-        den = tempfile.mkdtemp(prefix="mi_en_")
-        dxx = tempfile.mkdtemp(prefix="mi_xx_")
+        den = _fixture_dir("mi_en_")
+        dxx = _fixture_dir("mi_xx_")
         build_index(spark, docs.filter(F.col("lang") == "en"), den, n_shards=4)
         build_index(spark, docs.filter(F.col("lang") != "en"), dxx, n_shards=4)
-        _MULTI_IDX_CACHE[sf_dir] = (den, dxx)
-    return _MULTI_IDX_CACHE[sf_dir]
+        return den, dxx
+
+    return _memo("multi", sf_dir, build)
 
 
 def _multi_index_oracle_sql(k: int = 10) -> str:
@@ -3858,20 +3856,16 @@ def multi_index_search(spark, sf_dir):
     )
 
 
-_ROUTED_CACHE: dict = {}
-
-
-def _ensure_routed_index(spark, sf_dir, n_shards: int = 8):
-    import tempfile
-
+def _ensure_routed_index(spark, sf_dir):
     from .build import build_index
 
-    if sf_dir not in _ROUTED_CACHE:
-        d = tempfile.mkdtemp(prefix="routed_idx_")
+    def build():
+        d = _fixture_dir("routed_idx_")
         build_index(spark, _T(spark, sf_dir, "documents"), d,
-                    n_shards=n_shards, routing_field="source")
-        _ROUTED_CACHE[sf_dir] = d
-    return _ROUTED_CACHE[sf_dir]
+                    n_shards=8, routing_field="source")
+        return d
+
+    return _memo("routed", sf_dir, build)
 
 
 def _routed_oracle_sql() -> str:

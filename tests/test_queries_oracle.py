@@ -153,3 +153,40 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert df.columns == ["doc_id", "score"]
+
+
+def test_fixture_memo_builds_once_per_key():
+    from es_loaders_spark import queries
+
+    calls = []
+
+    def build():
+        calls.append(1)
+        return len(calls)
+
+    assert queries._memo("memo_test", "a", build) == 1
+    assert queries._memo("memo_test", "a", build) == 1
+    assert queries._memo("memo_test", "b", build) == 2
+    assert queries._memo("memo_test_other", "a", build) == 3
+    assert len(calls) == 3
+
+
+def test_fixture_dirs_are_removed_at_exit(tmp_path):
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "from es_loaders_spark import queries\n"
+        "d = queries._fixture_dir('memo_test_')\n"
+        "open(d + '/part-0.parquet', 'w').write('x')\n"
+        "print(d)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, check=True,
+        capture_output=True, text=True,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+    ).stdout.strip()
+    assert out.startswith(str(tmp_path))
+    assert not os.path.exists(out)
